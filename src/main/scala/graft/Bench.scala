@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. Pass scheduling lives in [[BenchProtocol]]
@@ -22,17 +21,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val wallBudget =
       sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET", "2400").toDouble
-    val spark = graft.plans.GraftExtensions.builder(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     Tables.assertEventsTsReadable(spark, sfDir)
     // Optional comma-separated name-prefix filter for focused local
     // runs (e.g. SPARK_GRAFT_QUERIES=q50,q57); the driver sets nothing
@@ -41,15 +32,6 @@ object Bench {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => prefixes.forall(_.exists(n.startsWith)))
-    // Queries that persist or localCheckpoint intermediate frames
-    // (dedup, transcript, listing pipelines) leave cached blocks behind;
-    // over many executions in one JVM that becomes storage-memory
-    // pressure that throttles every later query. Drop them once their
-    // query has finished.
-    def clearCaches(): Unit = {
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long =
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -73,7 +55,7 @@ object Bench {
           case t: Throwable =>
             t.printStackTrace(System.err)
             Some(Option(t.getMessage).getOrElse(t.getClass.getName).take(200))
-        } finally clearCaches()
+        } finally Harness.releaseCaches(spark)
       val dt = (System.nanoTime() - t0) / 1e9
       val gcDt = (gcMillis() - gc0) / 1e3
       val la = loadAvg()

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerStageCompleted}
 
 /** Profiling harness for optimization work: run named queries (warmup
@@ -13,15 +13,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.plans.GraftExtensions.builder(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
 
     case class JobRec(id: Int, start: Long, var end: Long = 0L,
                       var stages: Int = 0, var tasks: Int = 0,
@@ -52,17 +44,12 @@ object BenchOne {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def clearCaches(): Unit = {
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     names.foreach { name =>
       def once(): Double = {
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        clearCaches()
+        Harness.releaseCaches(spark)
         (System.nanoTime() - t0) / 1e9
       }
       val w = once() // warmup

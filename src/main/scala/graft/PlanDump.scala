@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named queries to files — the
@@ -12,15 +11,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val requested = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.plans.GraftExtensions.builder(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 8, logLevel = "ERROR")
     new java.io.File(outDir).mkdirs()
     val names =
       if (requested == Set("all")) SparkEntry.queries.keys.toSeq.sorted
@@ -34,11 +25,7 @@ object PlanDump {
         System.err.println(s"[plandump] $name ok (${txt.length} chars)")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-      } finally {
-        spark.sqlContext.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      } finally Harness.releaseCaches(spark)
     }
     spark.stop()
   }

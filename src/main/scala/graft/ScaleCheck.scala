@@ -230,15 +230,7 @@ object ScaleCheck {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scaleDir =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.plans.GraftExtensions.builder(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     Tables.assertEventsTsReadable(spark, baseDir)
 
     val fs = new org.apache.hadoop.fs.Path(scaleDir)
@@ -258,11 +250,6 @@ object ScaleCheck {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => prefixes.exists(p => n == p || n.startsWith(p + "_")))
 
-    def clearCaches(): Unit = {
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     def timed(name: String, dir: String, tag: String): Double = {
       val t0 = System.nanoTime()
@@ -273,7 +260,7 @@ object ScaleCheck {
           errors(name) =
             Option(t.getMessage).getOrElse(t.getClass.getName).take(200)
           t.printStackTrace(System.err)
-      } finally clearCaches()
+      } finally Harness.releaseCaches(spark)
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[scalecheck:$tag] $name $dt%.2fs" +
         (if (errors.contains(name)) " FAILED" else ""))

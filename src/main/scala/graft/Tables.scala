@@ -67,10 +67,4 @@ object Tables {
           "1000` before trusting any event-time result.")
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` mirrors the
-    * DuckDB oracle's naming.
-    */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => t(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -6,49 +6,37 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.plans.GraftExtensions.builder(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Guard for TIMESTAMP(NANOS) parquet inputs (Spark 4 otherwise
-      // refuses the type outright). Current testdata is TIMESTAMP(MICROS)
-      // — read as TIMESTAMP_NTZ — so this is a no-op there.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 4)
     Tables.assertEventsTsReadable(spark, sfDir)
+    dump(spark, sfDir, outDir, _ => true, "oracle_sql.json")
+    spark.stop()
+  }
+
+  /** Write each selected query's result to `<outDir>/<name>` (parquet)
+    * and the selected oracle SQL to `<outDir>/<jsonName>`. A failing
+    * query is reported on stderr and skipped — its parquet dir stays
+    * missing, so the oracle compare reports it. Shared with
+    * [[VerifyOne]].
+    */
+  private[graft] def dump(spark: SparkSession, sfDir: String,
+                          outDir: String, selected: String => Boolean,
+                          jsonName: String, trace: Boolean = false): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally {
-        // Drop localCheckpoint blocks a query left behind so one long
-        // verify run doesn't accumulate storage-memory pressure.
-        spark.sqlContext.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      if (selected(name))
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          if (trace) e.printStackTrace()
+        }
+        finally Harness.releaseCaches(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+      .map { case (k, v) =>
+        s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}"
+      }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/$jsonName"), json)
   }
 }

@@ -1,52 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 
 /** Single-query variant of [[Verify]] for fast local iteration on a new
   * oracle: writes only the named queries' parquet (into an outDir that
-  * may already hold the rest) and a filtered oracle_sql.json. Usage:
+  * may already hold the rest) and a filtered oracle_one.json. Usage:
   * VerifyOne <sfDir> <outDir> <name> [<name> ...]
   */
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.plans.GraftExtensions.builder(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => names(kv._1)).foreach {
-      case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          e.printStackTrace()
-        }
-        finally {
-          spark.sqlContext.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_one.json"), json)
+    val spark = Harness.session(defaultCpus = 4)
+    Verify.dump(spark, sfDir, outDir, names, "oracle_one.json", trace = true)
     spark.stop()
   }
 }

@@ -44,7 +44,6 @@ final case class AnnIndex(
     planes: Option[Array[Array[Double]]]) {
 
   def intParam(k: String): Int = param(k).toInt
-  def longParam(k: String): Long = param(k).toLong
   def param(k: String): String = params.getOrElse(k,
     throw new IllegalArgumentException(
       s"AnnIndex($method): missing param '$k' — " +

@@ -973,10 +973,8 @@ object Profile {
     * pooled values (the exact audit form — since round 15 the pooled
     * rank runs TWO-PASS via [[Ranks.twoPass]]: partitioned rank +
     * broadcast bucket offsets, no single-task sort of the pooled
-    * per-row frame; [[quantileNormalizeApprox]] remains the
-    * production twin: broadcast GK pooled quantiles into the same
-    * rank map, no global rank at all), then a 1:1 join on the pooled
-    * rank.
+    * per-row frame, so the exact map scales without an approximate
+    * twin), then a 1:1 join on the pooled rank.
     */
   def quantileNormalize(df: DataFrame, groupCol: String,
                         valueCol: String, idCol: String): DataFrame = {
@@ -999,44 +997,6 @@ object Profile {
       .join(pooled, col("__prank") === col("__prn"))
       .select(col("grp").as(groupCol), col("__id").as(idCol),
         col("__c").as(valueCol), col("__nc").as("norm_value"))
-  }
-
-  /** [[quantileNormalize]]'s production twin: the pooled
-    * distribution is summarized ONCE as a `gridBins`-point
-    * Greenwald–Khanna quantile grid (one sketch aggregate → a one-row
-    * broadcast array; GK returns actual pooled data values, so
-    * norm_value stays integral), and each row's within-group rank
-    * r/n_g maps to grid cell ⌈gridBins·r/n_g⌉ — no global window, no
-    * global sort, no pooled-rank join. The within-group rank window
-    * remains (partitioned BY GROUP: groups sort in parallel, the
-    * scale-safe kind). Differs from the exact form by pooled-rank
-    * quantization ≤ N/gridBins + N/accuracy ranks — the spec bounds
-    * the drift; the exact twin stays the oracle/audit form.
-    */
-  def quantileNormalizeApprox(df: DataFrame, groupCol: String,
-                              valueCol: String, idCol: String,
-                              gridBins: Int = 1000,
-                              accuracy: Int = 10000): DataFrame = {
-    require(gridBins >= 1, s"gridBins must be >= 1, got $gridBins")
-    import org.apache.spark.sql.expressions.Window
-    val v = df.select(col(groupCol).as("grp"),
-      col(valueCol).cast("long").as("__c"), col(idCol).as("__id"))
-    val gw = Window.partitionBy(col("grp"))
-      .orderBy(col("__c"), col("__id"))
-    val r = v.withColumn("__rn", row_number().over(gw))
-      .withColumn("__n",
-        count(lit(1)).over(Window.partitionBy(col("grp"))))
-    val ps = (1 to gridBins).map(_.toDouble / gridBins)
-    val grid = v.agg(percentile_approx(col("__c"),
-      array(ps.map(lit): _*), lit(accuracy)).as("__grid"))
-    r.crossJoin(broadcast(grid))
-      .withColumn("__gi",
-        expr(s"CAST(($gridBins * CAST(__rn AS BIGINT) + __n - 1) " +
-          "div __n AS INT)"))
-      .select(col("grp").as(groupCol), col("__id").as(idCol),
-        col("__c").as(valueCol),
-        element_at(col("__grid"), col("__gi")).cast("long")
-          .as("norm_value"))
   }
 
   /** Simpson diversity of a categorical mix per group — the

@@ -27,10 +27,9 @@ object Segments {
     * NTILE grades are TWO-PASS global ranks over the PER-CUSTOMER
     * frame ([[Ranks.ntile]]: partitioned rank + broadcast bucket
     * offsets — bit-equal to the single-partition NTILE window, no
-    * one-task sort) — the exact audit form; at billions of customers
-    * [[rfmApprox]] is the production twin (broadcast GK-sketch
-    * quantile boundaries, value grading, no global rank at all). The
-    * cell report is ≤ 125 rows.
+    * one-task sort), so the exact grading scales with the customer
+    * frame and needs no approximate twin. The cell report is ≤ 125
+    * rows.
     */
   def rfm(tx: DataFrame, custCol: String, tsMicrosCol: String,
           amountCol: String, tiles: Int = 5): DataFrame = {
@@ -65,65 +64,6 @@ object Segments {
         sum(col("m_cents")).cast("long").as("sum_m_cents"))
   }
 
-  /** [[rfm]]'s production twin: the three NTILE global-sort windows
-    * over the customer frame become ONE Greenwald–Khanna
-    * `percentile_approx` aggregate (boundary values at i/tiles,
-    * i = 1..tiles−1, per axis) broadcast back as arrays, and each
-    * customer is graded by counting boundaries on the wrong side of
-    * their value — no global sort anywhere. Semantics differ from
-    * NTILE exactly where value grading must: NTILE forces equal
-    * bucket SIZES (splitting value ties across grades by the tie
-    * order), the boundary grade puts equal values in the same grade
-    * (splitting sizes instead) — the honest distributed behavior;
-    * plus GK rank error ≤ |customers|/accuracy at each boundary. The
-    * spec bounds each axis grade within ±1 of NTILE on tie-free
-    * data; the exact twin stays the oracle/audit form.
-    */
-  def rfmApprox(tx: DataFrame, custCol: String, tsMicrosCol: String,
-                amountCol: String, tiles: Int = 5,
-                accuracy: Int = 10000): DataFrame = {
-    require(tiles >= 1, s"tiles must be >= 1, got $tiles")
-    val per = tx.select(col(custCol).as("__c"),
-        col(tsMicrosCol).cast("long").as("__t"),
-        round(col(amountCol) * 100, 0).cast("long").as("__cents"))
-      .groupBy(col("__c"))
-      .agg(max(col("__t")).as("__last"),
-        count(lit(1)).as("f_n"),
-        sum(col("__cents")).as("m_cents"))
-    val anchor = per.agg(max(col("__last")).as("__a"))
-    val scored = per.crossJoin(broadcast(anchor))
-      .withColumn("r_days", expr("(__a - __last) div 86400000000"))
-    val ps = (1 until tiles).map(_.toDouble / tiles)
-    val bnd =
-      if (ps.isEmpty)
-        scored.agg(lit(1L).as("__one")) // tiles=1: no boundaries
-          .select(array().cast("array<bigint>").as("__rb"),
-            array().cast("array<bigint>").as("__fb"),
-            array().cast("array<bigint>").as("__mb"))
-      else scored.agg(
-        percentile_approx(col("r_days"), array(ps.map(lit): _*),
-          lit(accuracy)).as("__rb"),
-        percentile_approx(col("f_n"), array(ps.map(lit): _*),
-          lit(accuracy)).as("__fb"),
-        percentile_approx(col("m_cents"), array(ps.map(lit): _*),
-          lit(accuracy)).as("__mb"))
-    // recency grades ascending (smallest r_days = grade 1: boundaries
-    // BELOW the value push the grade up); frequency/monetary grade
-    // descending (largest = grade 1: boundaries ABOVE push it up)
-    scored.crossJoin(broadcast(bnd))
-      .select(
-        (lit(1) + size(filter(col("__rb"),
-          b => col("r_days") > b))).cast("long").as("r_q"),
-        (lit(1) + size(filter(col("__fb"),
-          b => b > col("f_n")))).cast("long").as("f_q"),
-        (lit(1) + size(filter(col("__mb"),
-          b => b > col("m_cents")))).cast("long").as("m_q"),
-        col("m_cents"))
-      .groupBy(col("r_q"), col("f_q"), col("m_q"))
-      .agg(count(lit(1)).cast("long").as("n_customers"),
-        sum(col("m_cents")).cast("long").as("sum_m_cents"))
-  }
-
   /** Activity-decile value concentration — "the top 10% of users
     * drive X% of revenue": rank users into `tiles` NTILE buckets by
     * activity (event count desc, tie-free on the user key, decile 1 =
@@ -135,8 +75,7 @@ object Segments {
     * Scale: one user-keyed rollup (map-side combined) then the NTILE
     * grade as a TWO-PASS global rank over the per-USER frame
     * ([[Ranks.ntile]], bit-equal to the window NTILE without the
-    * one-task sort; [[activityDecilesApprox]] is the production
-    * twin); the total rides a one-row broadcast; products in
+    * one-task sort); the total rides a one-row broadcast; products in
     * decimal(38,0). Output is `tiles` rows.
     */
   def activityDeciles(events: DataFrame, userCol: String,
@@ -157,53 +96,6 @@ object Segments {
     val tot = d.agg(sum(col("__rev")).as("__tr"))
     d.crossJoin(broadcast(tot))
       .groupBy(col("decile").cast("long").as("decile"))
-      .agg(count(lit(1)).cast("long").as("n_users"),
-        sum(col("__ne")).cast("long").as("n_events"),
-        sum(col("__rev")).cast("long").as("rev_cents"),
-        when(max(col("__tr")) > 0,
-          expr(s"(CAST(1000000 AS $D) * SUM(__rev)) div MAX(__tr)"))
-          .otherwise(lit(0L)).cast("long").as("rev_share_ppm"))
-  }
-
-  /** [[activityDeciles]]'s production twin: the NTILE global sort
-    * over the per-user frame becomes one Greenwald–Khanna boundary
-    * sketch (activity values at i/tiles) broadcast back; a user's
-    * decile is 1 + the number of boundaries strictly above their
-    * activity (decile 1 = most active, matching the exact twin's
-    * DESC order). Equal-activity users land in the SAME decile here
-    * (NTILE splits ties to force equal sizes) and boundary ranks
-    * carry GK error ≤ |users|/accuracy — the spec bounds both; the
-    * exact twin stays the oracle/audit form. Empty deciles (heavy
-    * activity ties collapsing grades) are absent rather than
-    * zero-row, so the output is ≤ `tiles` rows.
-    */
-  def activityDecilesApprox(events: DataFrame, userCol: String,
-                            typeCol: String, centsCol: String,
-                            conversionType: String = "purchase",
-                            tiles: Int = 10,
-                            accuracy: Int = 10000): DataFrame = {
-    require(tiles >= 1, s"tiles must be >= 1, got $tiles")
-    require(conversionType.nonEmpty, "conversionType must be non-empty")
-    val D = "decimal(38,0)"
-    val act = events.select(col(userCol).as("__u"),
-        col(typeCol).as("__ty"), col(centsCol).cast("long").as("__c"))
-      .groupBy(col("__u"))
-      .agg(count(lit(1)).as("__ne"),
-        sum(when(col("__ty") === conversionType, col("__c"))
-          .otherwise(0L)).as("__rev"))
-    val ps = (1 until tiles).map(_.toDouble / tiles)
-    val bnd =
-      if (ps.isEmpty)
-        act.agg(array().cast("array<bigint>").as("__b"))
-      else act.agg(percentile_approx(col("__ne"),
-        array(ps.map(lit): _*), lit(accuracy)).as("__b"))
-    val d = act.crossJoin(broadcast(bnd))
-      .withColumn("decile",
-        (lit(1) + size(filter(col("__b"), b => b > col("__ne"))))
-          .cast("long"))
-    val tot = d.agg(sum(col("__rev")).as("__tr"))
-    d.crossJoin(broadcast(tot))
-      .groupBy(col("decile"))
       .agg(count(lit(1)).cast("long").as("n_users"),
         sum(col("__ne")).cast("long").as("n_events"),
         sum(col("__rev")).cast("long").as("rev_cents"),

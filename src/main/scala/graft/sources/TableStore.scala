@@ -1,13 +1,18 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.operators.Upsert
+import scala.jdk.CollectionConverters._
 
 /** Another writer committed a manifest between this mutation's read of
-  * the table state and its begin-commit CAS (the Delta/Iceberg
+  * the table state and its commit CAS (the Delta/Iceberg
   * optimistic-concurrency shape): the mutation's inputs are stale.
   * The public mutation methods catch this internally and retry the
   * WHOLE operation against the new generation up to
@@ -25,7 +30,8 @@ final class ConcurrentCommitException(val table: String,
 
 /** Parquet-backed table store: the engine-native replacement for the
   * reference's Postgres/Supabase serving sink (SURVEY.md §2.1 S13,
-  * K2/K3/K7/K8). A table = a parquet directory under `root`.
+  * K2/K3/K7/K8). A table = immutable parquet files under `root/<table>`
+  * plus a sequence of commit manifests beside that directory.
   *
   * Semantics re-expressed as DataFrame algebra:
   *  - append            = K3 plain insert
@@ -33,58 +39,39 @@ final class ConcurrentCommitException(val table: String,
   *  - deleteByKeys      = K8 conditional delete
   *  - updateFlag        = K7 row update (flag flip) as a rewrite
   *
+  * COMMIT PROTOCOL (the Delta/Iceberg shape, manifest-only): every
+  * mutation writes its data files ONCE, into a fresh commit directory
+  * `<table>/<commit-id>/[k=v/]part-….parquet`, then commits by creating
+  * the manifest `<table>._graft_commit.<seq+1>` with CREATE-EXCLUSIVE.
+  * That one manifest lists the whole live file set (relative path and
+  * length), the partition columns and the read schema — it is the only
+  * truth. A replaced or deleted file is simply left out of the next
+  * list: nothing is ever renamed, moved or rewritten in place. A crash
+  * before the CAS leaves only files no manifest lists (orphans, removed
+  * by [[vacuum]]); a crash after it leaves a committed generation.
+  * Reads resolve through the head manifest alone: one file index over
+  * the listed files with the recorded schema and partition values — no
+  * directory listing, no footer inference. Partition- and
+  * stats-targeted mutations list only the files they replace, so
+  * untouched partitions and files keep their identity.
+  *
   * Storage goes through the Hadoop FileSystem API resolved from the
   * root path — the same store code runs on local fs, HDFS, or an
-  * object store (s3a/gs/abfs), not just java.io. Mutations on
-  * PARTITIONED tables are partition-targeted: `updateFlag` /
-  * `deleteByKeys` with `partitionCols` rewrite only the partition
-  * directories that contain affected keys (write to a `__tmp` sibling,
-  * then per-partition rename swap), so a flag flip on one day of a
-  * year-partitioned 100 TB table moves one day's bytes, not the year's,
-  * and a crash at any point leaves each partition wholly old or wholly
-  * new. Unpartitioned tables use the same temp-swap at table
-  * granularity (single-writer assumption, SURVEY.md §7.4).
+  * object store (s3a/gs/abfs). The protocol needs one atomic primitive:
+  * the exclusive create of a small file.
   *
-  * CROSS-partition atomicity comes from a `_graft_commit` manifest (a
-  * tiny sequenced sidecar FILE next to the table dir, so it never moves
-  * with a dir rename): every rewrite records `state=swapping` plus the
-  * touched partition dirs before the first rename and commits with a
-  * `state=clean, generation+1` manifest after the last. [[read]]
-  * resolves a swapping manifest by preferring each touched dir's
-  * `__old` copy — a crash ANYWHERE inside the swap therefore reads as
-  * wholly the previous generation, never a mix — and every mutation
-  * rolls a crashed swap back to that generation before proceeding.
-  * Manifest files are single small writes (atomic create on every FS;
-  * a single PUT on object stores). On stores without atomic dir rename
-  * (raw S3, where a dir rename is a file-by-file copy+delete) the
-  * manifest also records the committed generation's data files PER
-  * touched dir, so a crash inside a single dir's swap — files split
-  * between the live dir and `__old` — still reads and recovers as
-  * wholly the previous generation: individual object writes are atomic
-  * even when dir renames are not, and the per-file list reassembles
-  * exactly the committed files wherever each one landed.
+  * MULTI-WRITER commits are optimistic: a mutation reads the head
+  * manifest, derives its output from that generation and commits at
+  * exactly `seq + 1`. Exactly one writer per sequence number wins; the
+  * loser gets [[ConcurrentCommitException]], deletes its own commit
+  * directory, and the public mutation methods re-derive the whole
+  * operation (re-read, recompute, re-write) against the new generation
+  * up to `maxCommitRetries` times.
   *
-  * MULTI-WRITER commits are optimistic (round 8): every mutation
-  * captures the head manifest sequence when it reads table state,
-  * stages its output in a WRITER-UNIQUE sibling
-  * (`<table>__tmp.<nonce>` / `<table>__add.<nonce>` — two concurrent
-  * writers never share a staging dir), and claims the commit by
-  * creating the swapping manifest at `seq+1` with CREATE-EXCLUSIVE —
-  * the protocol's stated atomic FS primitive. Exactly one writer per
-  * sequence number wins; the loser gets [[ConcurrentCommitException]]
-  * BEFORE any live-tree rename, deletes its staging, and the public
-  * mutation methods re-derive the whole operation (re-read, recompute,
-  * re-stage) against the new generation up to `maxCommitRetries`
-  * times — the Delta/Iceberg commit-CAS shape on the existing
-  * manifest machinery. The swapping manifest doubles as the swap
-  * lock: no competing writer can CAS past it, so the rename phase is
-  * exclusive and `__old` stays single-owner. A retrying LOSER first
-  * waits (`swapWaitMs`) for the winner's in-flight swap to settle, so
-  * an ordinary collision never rolls back a live writer's swap.
-  * Residual caveat: [[recover]] itself still treats a swapping head
-  * as CRASHED — true liveness detection (leases) is out of scope, so
-  * an EXTERNAL recover() run against a live writer, or a winner
-  * stalled past the wait window, remains a protocol violation.
+  * RETENTION: manifests are the snapshots. With `retainGenerations = k`
+  * the last k superseded manifests — and every file they list — stay
+  * readable through [[readAt]] and [[changesBetween]]; each commit
+  * retires older manifests and deletes the files only they listed.
   */
 final class TableStore(spark: SparkSession, root: String,
                        retainGenerations: Int = 0,
@@ -95,69 +82,32 @@ final class TableStore(spark: SparkSession, root: String,
   private def fsOf(p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Fault-injection seam for crash-consistency specs: when >= 0, the
-    * Nth directory rename inside a swap throws, simulating a process
-    * kill mid-swap. Never set outside tests.
-    */
-  private[sources] var failAfterSwaps: Int = -1
-  private def swapFault(done: Int): Unit =
-    if (failAfterSwaps >= 0 && done >= failAfterSwaps)
-      throw new IllegalStateException("injected crash mid-swap")
-
-  /** Second seam: throw AFTER the clean commit manifest but BEFORE the
-    * `__old` sibling is disposed — the post-commit window where a
-    * retained store's history sits in `__old`, not yet archived.
-    */
-  private[sources] var failBeforeDispose: Boolean = false
-  private def disposeFault(): Unit =
-    if (failBeforeDispose)
-      throw new IllegalStateException("injected crash before dispose")
-
-  /** Third seam: throw AFTER a predicate-delete's tombstone commit but
-    * BEFORE its physical settle — the window where reads must exclude
-    * tombstoned files that still exist on disk.
-    */
-  private[sources] var failBeforeSettle: Boolean = false
-  private def settleFault(): Unit =
-    if (failBeforeSettle)
-      throw new IllegalStateException("injected crash before settle")
-
   // ------------------------------------------------------ commit manifest
 
-  /** `dirs` = touched dirs that HAD a committed copy (rollback =
-    * restore `__old`); `fresh` = dirs the swap creates that had NO
-    * prior copy (rollback = delete — without the distinction a crash
-    * after a fresh dir renames in would read/recover new-generation
-    * rows alongside rolled-back old ones: mixed generations, then
-    * duplicates). `files` = the committed generation's data-file names
-    * per touched dir, recorded before the first rename: on stores
-    * whose dir rename is file-by-file (raw S3), a crash INSIDE one
-    * dir's swap strands its files split between the live dir and
-    * `__old` — the per-file list lets [[read]]/[[recover]] reassemble
-    * exactly the committed files wherever each one currently lives
-    * (individual object copies are atomic even when dir renames are
-    * not), closing the last non-atomic window. `adds` = file paths an
-    * in-flight APPEND is moving into the table: they hold only
-    * uncommitted new rows, so a crashed append reads and recovers as
-    * the table WITHOUT them (the inverse of `files`, which lists the
-    * committed inventory of a rewrite).
+  /** One committed generation (the generation number IS the manifest
+    * sequence): the complete live data-file set as (path relative to
+    * the table dir, byte length), the partition columns, the read
+    * schema (data columns, then partition columns), the exactly-once
+    * stream fences, and whether a schema-adding append ever widened
+    * the table.
     */
-  private[sources] case class Manifest(seq: Long, gen: Long,
-                                       swapping: Boolean, dirs: Seq[String],
-                                       fresh: Seq[String],
-                                       files: Map[String, Seq[String]] = Map.empty,
-                                       adds: Seq[String] = Nil,
-                                       tmp: Option[String] = None,
-                                       txns: Map[String, Long] = Map.empty,
-                                       drops: Seq[String] = Nil)
+  private[sources] case class Manifest(seq: Long, schema: StructType,
+                                       partitionCols: Seq[String],
+                                       files: Seq[(String, Long)],
+                                       txns: Map[String, Long],
+                                       evolved: Boolean) {
+    def paths: Seq[String] = files.map(_._1)
+    def dataSchema: StructType =
+      StructType(schema.filterNot(f => partitionCols.contains(f.name)))
+    def partitionSchema: StructType =
+      StructType(schema.filter(f => partitionCols.contains(f.name)))
+  }
 
   private def manifestName(table: String) = s"$table._graft_commit."
 
   /** Targeted glob, not a listing of the whole store root: the
     * manifest check runs on EVERY [[read]], and a root listStatus
-    * would scale with the number of tables in the store. The remaining
-    * cost per read is this one glob plus at most one small GET —
-    * marginal next to the file listing the parquet scan itself does.
+    * would scale with the number of tables in the store.
     */
   private def listManifests(table: String): Seq[(Long, Path)] = {
     val rootP = new Path(root)
@@ -171,179 +121,114 @@ final class TableStore(spark: SparkSession, root: String,
     }
   }
 
-  // Committed-SCHEMA cache, keyed by (table, head manifest sequence):
-  // every mutation consults the committed schema (column-order
-  // normalization, type-conflict validation, assignment checks), and a
-  // parquet schema inference pays a listing + footer read (~90 ms
-  // measured) each time — the dominant fixed cost of small commits.
-  // The committed schema can only change when a commit bumps the head
-  // sequence, and the key is re-read from the ON-DISK head manifest,
-  // so an external writer's commit invalidates naturally (the
-  // Delta/Iceberg metadata-caching norm; data is never cached). One
-  // entry per table: superseded generations evict.
-  private val schemaCache = scala.collection.mutable.HashMap
-    .empty[String, (Long, org.apache.spark.sql.types.StructType)]
-  private def committedSchema(table: String)
-      : org.apache.spark.sql.types.StructType = {
-    val seq = readManifest(table).map(_.seq).getOrElse(-1L)
-    schemaCache.synchronized { schemaCache.get(table) } match {
-      case Some((s, sch)) if s == seq => sch
-      case _ =>
-        val sch = read(table).schema
-        schemaCache.synchronized { schemaCache.update(table, (seq, sch)) }
-        sch
-    }
+  /** One mutation-body attempt (installed by [[retryCommit]],
+    * thread-local). `heads` memoizes each table's head manifest: a
+    * mutation reads the head several times (exists, fence, schema, file
+    * list, the frame it derives), and within one attempt those reads
+    * are BY DESIGN anchored at one head — the commit CAS
+    * (writeManifest, which always lists FRESH) is what detects a
+    * concurrent commit. Every writeManifest invalidates the entry.
+    * `committed` marks an attempt whose CAS won: it is never retried.
+    */
+  private final class Attempt {
+    val heads = new java.util.HashMap[String, Option[Manifest]]()
+    var committed = false
   }
-
-  // Head-manifest MEMO, thread-local and scoped to ONE mutation-body
-  // attempt (installed by [[retryCommit]]): a single append otherwise
-  // re-globs and re-parses the head manifest ~8 times (settle gate,
-  // exists, settleOld, settleDrops, OCC anchor, committedFiles,
-  // committedSchema, vacuum). Within one attempt those reads are BY
-  // DESIGN anchored at one head — the commit CAS (writeManifest with
-  // expectedPrev, which always lists FRESH) is what detects a
-  // concurrent commit, exactly as before. Every writeManifest
-  // invalidates the entry, so loops that re-read after their own
-  // commits (settleDrops, recover) see fresh state; [[awaitSwapSettled]]
-  // polls with the memo explicitly bypassed.
-  private val headMemo =
-    new ThreadLocal[java.util.HashMap[String, Option[Manifest]]]()
-  private def withHeadMemo[T](body: => T): T = {
-    if (headMemo.get != null) body // already installed: nest for free
-    else {
-      headMemo.set(new java.util.HashMap[String, Option[Manifest]]())
-      try body finally headMemo.remove()
-    }
-  }
+  private val attempt = new ThreadLocal[Attempt]()
   private def invalidateHead(table: String): Unit = {
-    val m = headMemo.get
-    if (m != null) m.remove(table)
+    val a = attempt.get
+    if (a != null) a.heads.remove(table)
   }
 
   private[sources] def readManifest(table: String): Option[Manifest] = {
-    val memo = headMemo.get
-    if (memo != null && memo.containsKey(table)) return memo.get(table)
+    val a = attempt.get
+    if (a != null && a.heads.containsKey(table)) return a.heads.get(table)
     val r = readManifestFresh(table)
-    if (memo != null) memo.put(table, r)
+    if (a != null) a.heads.put(table, r)
     r
   }
 
   private def readManifestFresh(table: String): Option[Manifest] = {
-    // a concurrent writer prunes superseded manifests AFTER creating
-    // its successor: the file we globbed can vanish before our open.
-    // Re-list on FileNotFound — by then the successor exists (prune
-    // strictly follows create), so the loop terminates
+    // a committing writer retires superseded manifests AFTER creating
+    // its successor: the head we globbed can vanish before our open.
+    // Re-list on a miss — by then the successor exists, so the loop
+    // terminates
     var attempts = 0
     while (true) {
       val ms = listManifests(table)
       if (ms.isEmpty) return None
-      val (seq, p) = ms.maxBy(_._1)
-      val txt =
-        try {
-          val in = fsOf(p).open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        } catch {
-          case e: java.io.FileNotFoundException =>
-            attempts += 1
-            if (attempts > 50) throw e
-            null
-        }
-      if (txt != null) return Some(parseManifest(seq, txt))
+      val found = manifestAt(table, ms.map(_._1).max)
+      if (found.nonEmpty) return found
+      attempts += 1
+      if (attempts > 50) throw new IllegalStateException(
+        s"table $table: head manifest kept vanishing after $attempts reads")
     }
     None
   }
 
-  private def parseManifest(seq: Long, txt: String): Manifest = {
-    val lines = txt.split("\n").toSeq.filter(_.nonEmpty)
-      def vs(k: String) =
-        lines.filter(_.startsWith(k + "=")).map(_.stripPrefix(k + "="))
-      // `f=` lines belong to the most recent `dir=` line (positional:
-      // file names join their dir without needing an escaped separator)
-      val files = scala.collection.mutable.Map.empty[String, Vector[String]]
-      var curDir: Option[String] = None
-      lines.foreach { l =>
-        if (l.startsWith("dir=")) curDir = Some(l.stripPrefix("dir="))
-        else if (l.startsWith("new=")) curDir = None
-        else if (l.startsWith("f=")) curDir.foreach { d =>
-          files(d) = files.getOrElse(d, Vector.empty) :+ l.stripPrefix("f=")
-        }
-      }
-      val txns = vs("txn").flatMap { t =>
-        val cut = t.lastIndexOf(':')
-        if (cut <= 0) None
-        else t.drop(cut + 1).toLongOption.map(t.take(cut) -> _)
-      }.toMap
-    Manifest(seq, vs("gen").headOption.map(_.toLong).getOrElse(0L),
-      vs("state").headOption.contains("swapping"), vs("dir"), vs("new"),
-      files.toMap, vs("add"), vs("tmp").headOption, txns, vs("drop"))
+  /** The manifest at `seq`, or None once it has been retired. */
+  private def manifestAt(table: String, seq: Long): Option[Manifest] =
+    try Some(parseManifest(seq,
+      readText(new Path(root, manifestName(table) + seq))))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The head manifest of an existing table; loud otherwise. */
+  private def head(table: String): Manifest =
+    readManifest(table).getOrElse(
+      throw new IllegalArgumentException(s"no such table: $table"))
+
+  private def readText(p: Path): String = {
+    val in = fsOf(p).open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
   }
 
-  /** New manifests get a fresh sequence number and older files are
-    * pruned only after the new one exists — a crash between the two
-    * leaves both on disk and readers take the max, so the manifest
-    * itself needs no atomic overwrite.
-    *
-    * With `expectedPrev = Some(s)` this is the COMMIT CAS: the new
-    * manifest is created with CREATE-EXCLUSIVE at exactly `s + 1`, and
-    * a head past `s` (or losing the exclusive create) throws
-    * [[ConcurrentCommitException]] — exactly one writer per sequence
-    * number ever succeeds. Without it (recovery rollbacks), the write
-    * retries fresh sequence numbers until one lands.
-    */
-  private def writeManifest(table: String, gen: Long, swapping: Boolean,
-                            dirs: Seq[String],
-                            fresh: Seq[String] = Nil,
-                            files: Map[String, Seq[String]] = Map.empty,
-                            adds: Seq[String] = Nil,
-                            tmpName: Option[String] = None,
-                            expectedPrev: Option[Long] = None,
-                            txnUpdate: Option[(String, Long)] = None,
-                            drops: Seq[String] = Nil): Unit =
-  // any manifest write (ours, successful or lost) makes a memoed head
-  // stale — invalidate on EVERY exit (the txn carry-forward read below
-  // would otherwise re-cache the pre-write head)
-  try writeManifestBody(table, gen, swapping, dirs, fresh, files, adds,
-    tmpName, expectedPrev, txnUpdate, drops)
-  finally invalidateHead(table)
+  private def parseManifest(seq: Long, txt: String): Manifest = {
+    val lines = txt.split("\n").toSeq.filter(_.nonEmpty)
+    def vs(k: String) =
+      lines.filter(_.startsWith(k + "=")).map(_.stripPrefix(k + "="))
+    // `f=<length> <relative path>`: the length never holds a space
+    val files = vs("f").map { l =>
+      val cut = l.indexOf(' ')
+      l.drop(cut + 1) -> l.take(cut).toLong
+    }
+    val txns = vs("txn").flatMap { t =>
+      val cut = t.lastIndexOf(':')
+      if (cut <= 0) None
+      else t.drop(cut + 1).toLongOption.map(t.take(cut) -> _)
+    }.toMap
+    Manifest(seq, DataType.fromJson(vs("schema").head).asInstanceOf[StructType],
+      vs("part"), files, txns, vs("evolved").nonEmpty)
+  }
 
-  private def writeManifestBody(table: String, gen: Long,
-                            swapping: Boolean,
-                            dirs: Seq[String],
-                            fresh: Seq[String],
-                            files: Map[String, Seq[String]],
-                            adds: Seq[String],
-                            tmpName: Option[String],
-                            expectedPrev: Option[Long],
-                            txnUpdate: Option[(String, Long)],
-                            drops: Seq[String]): Unit = {
-    val fs = fsOf(new Path(root))
-    // stream-fencing records ride EVERY manifest (carried forward from
-    // the head, updated only by an exactly-once commit) — losing one
-    // on an unrelated commit would re-open the replay window
-    val txns = readManifest(table).map(_.txns).getOrElse(Map.empty) ++
-      txnUpdate
-    val body = (Seq(s"gen=$gen",
-      s"state=${if (swapping) "swapping" else "clean"}") ++
-      dirs.flatMap(d => ("dir=" + d) +:
-        files.getOrElse(d, Nil).map("f=" + _)) ++
-      fresh.map("new=" + _) ++ adds.map("add=" + _) ++
-      tmpName.map("tmp=" + _) ++
-      txns.toSeq.sortBy(_._1).map { case (s, b) => s"txn=$s:$b" } ++
-      drops.map("drop=" + _))
-      .mkString("", "\n", "\n")
-    // returns false only when the exclusive create lost a race
-    def create(seq: Long, known: Seq[(Long, Path)]): Boolean = {
-      val p = new Path(root, manifestName(table) + seq)
+  /** The COMMIT CAS: `m` is created with CREATE-EXCLUSIVE at exactly
+    * `m.seq`, and a head other than `m.seq - 1` (or losing the
+    * exclusive create) throws [[ConcurrentCommitException]] — exactly
+    * one writer per sequence number ever succeeds. Superseded
+    * manifests are retired afterwards by [[expire]], never before, so
+    * readers taking the max always find a complete head.
+    */
+  private def writeManifest(table: String, m: Manifest): Unit =
+    try {
+      val fs = fsOf(new Path(root))
+      val body =
+        (Seq(s"schema=${m.schema.json}") ++
+          m.partitionCols.map("part=" + _) ++
+          m.files.map { case (rel, len) => s"f=$len $rel" } ++
+          m.txns.toSeq.sortBy(_._1).map { case (s, b) => s"txn=$s:$b" } ++
+          (if (m.evolved) Seq("evolved=true") else Nil))
+          .mkString("", "\n", "\n")
+      val found = listManifests(table).map(_._1).maxOption.getOrElse(0L)
+      if (found != m.seq - 1)
+        throw new ConcurrentCommitException(table, m.seq - 1, found)
+      val p = new Path(root, manifestName(table) + m.seq)
       val won =
         try {
           val out = fs.create(p, false)
           // from here the path is OURS (create was exclusive): a
           // write/close failure must DELETE the partial file before
-          // escalating — "exists" alone cannot distinguish my
-          // truncated manifest from a competitor's, and a truncated
-          // manifest left as head parses as gen=0 with EMPTY txn
-          // fences (re-opening every exactly-once replay window)
+          // escalating — a truncated head would hide the committed
+          // file list and fences from every reader
           try {
             try out.write(body.getBytes("UTF-8")) finally out.close()
           } catch {
@@ -355,109 +240,46 @@ final class TableStore(spark: SparkSession, root: String,
         } catch {
           case e: java.io.IOException => if (fs.exists(p)) false else throw e
         }
-      if (won) known.foreach { case (s, old) =>
-        if (s < seq) fs.delete(old, false)
-      }
-      won
-    }
-    expectedPrev match {
-      case Some(exp) =>
-        val ms = listManifests(table)
-        val head = ms.map(_._1).maxOption.getOrElse(0L)
-        if (head != exp)
-          throw new ConcurrentCommitException(table, exp, head)
-        if (!create(exp + 1, ms))
-          throw new ConcurrentCommitException(table, exp, exp + 1)
-      case None =>
-        var attempts = 0
-        var done = false
-        while (!done) {
-          val ms = listManifests(table)
-          done = create(ms.map(_._1).maxOption.getOrElse(0L) + 1, ms)
-          attempts += 1
-          if (!done && attempts > 50) throw new IllegalStateException(
-            s"table $table: could not claim a manifest sequence after " +
-              s"$attempts attempts — sustained manifest contention")
-        }
-    }
-  }
-
-  /** Unique per-mutation staging sibling (`<table><kind>.<nonce>`):
-    * concurrent writers stage independently and never rename each
-    * other's files in. Recorded in the swapping manifest (`tmp=`) so
-    * [[recover]] can clear a crashed writer's staging.
-    */
-  private def freshStaging(table: String, kind: String): Path =
-    new Path(path(table) + kind + "." +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12))
-
-  /** How long a retrying loser waits for the WINNING writer's swap
-    * phase (renames + clean commit — normally milliseconds) to settle
-    * before presuming the winner dead. Test seam; production default
-    * is generous because a wrong "dead" call rolls back a live swap.
-    */
-  private[sources] var swapWaitMs: Long = 10000L
-
-  /** After LOSING a commit CAS, the head manifest may be the winner's
-    * LIVE in-flight swap. The body's recover() would treat it as
-    * crashed and roll it back mid-rename — the protocol violation the
-    * class doc forbids (the winner's files orphan, its clean commit
-    * escalates). A loser KNOWS a competitor is alive (it just lost to
-    * one), so it waits for the swap to settle; only a swap that makes
-    * no progress for the full window is presumed crashed and left to
-    * recover(). First-entry mutations (no collision observed) still
-    * recover immediately — crash repair must not wait.
-    */
-  private def awaitSwapSettled(table: String): Unit = {
-    val deadline = System.nanoTime + swapWaitMs * 1000000L
-    while (System.nanoTime < deadline && {
-        invalidateHead(table) // poll the COMPETITOR's progress fresh
-        readManifest(table).exists(_.swapping)
-      }) {
-      Thread.sleep(50)
-    }
-  }
-
-  /** Every mutation's entry gate: if the head manifest is a swapping
-    * one, it may be a LIVE competitor mid-rename — wait for it to
-    * settle (normally milliseconds) before recover() treats whatever
-    * remains as crashed. Zero overhead on the common clean-head path.
-    */
-  private def settleOrRecover(table: String): Unit = {
-    if (readManifest(table).exists(_.swapping)) awaitSwapSettled(table)
-    recover(table)
-  }
+      if (!won) throw new ConcurrentCommitException(table, m.seq - 1, m.seq)
+    } finally invalidateHead(table) // ours or a competitor's: memo stale
 
   /** Retry a whole mutation on optimistic-commit collision: the body
     * must RE-DERIVE everything (re-read table state, recompute frames,
-    * re-stage) each attempt — it runs against a newer generation.
+    * re-write) each attempt — it runs against a newer generation. An
+    * attempt collided when it lost the CAS, or when it failed while a
+    * table it anchored on moved on: the concurrent commit may have
+    * retired the very files the attempt was reading. Nested calls run
+    * inside the outer attempt.
     */
   private def retryCommit[T](body: => T): T = {
-    var attempt = 0
-    var lostTo: String = null
+    if (attempt.get != null) return body
+    var retries = 0
     while (true) {
-      try {
-        if (lostTo != null) awaitSwapSettled(lostTo)
-        return withHeadMemo(body) // fresh memo per ATTEMPT: a retry
-        // re-reads everything against the winner's newer generation
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxCommitRetries) throw e
-          lostTo = e.table
-      }
+      val a = new Attempt
+      attempt.set(a)
+      try return body
+      catch {
+        case e: Exception if !a.committed && (
+            e.isInstanceOf[ConcurrentCommitException] ||
+              a.heads.asScala.exists { case (t, m) =>
+                readManifestFresh(t).map(_.seq) != m.map(_.seq)
+              }) =>
+          retries += 1
+          if (retries > maxCommitRetries) throw e
+      } finally attempt.remove()
     }
     throw new IllegalStateException("unreachable")
   }
 
-  /** Test seam: invoked immediately before a mutation's begin-commit
-    * CAS (after staging is written, before any manifest/rename) — a
-    * spec interleaves a competing writer's full mutation here to force
-    * a deterministic commit collision. Never set outside tests.
+  /** Test seam: invoked immediately before a mutation's commit CAS
+    * (after its data files are written) — a spec interleaves a
+    * competing writer's full mutation here to force a deterministic
+    * commit collision, or throws to crash between the data-file write
+    * and the CAS. Never set outside tests.
     */
   private[sources] var beforeBeginCommit: () => Unit = () => ()
 
-  /** Fifth seam: invoked immediately AFTER a fenced mutation
+  /** Seam: invoked immediately AFTER a fenced mutation
     * ([[appendExactlyOnce]], [[merge]] with `txn`, [[refreshRollup]])
     * reads its txn fence and decides to proceed — a spec interleaves a
     * competing fenced commit here to prove the fence is re-validated
@@ -467,7 +289,7 @@ final class TableStore(spark: SparkSession, root: String,
   private[sources] var afterFenceRead: () => Unit = () => ()
 
   /** Fence re-validation under the CAS anchor: a fenced mutation reads
-    * `lastTxn` BEFORE staging, but only the head manifest captured as
+    * `lastTxn` BEFORE writing, but only the head manifest captured as
     * the commit-CAS anchor is race-free — a zombie writer committing
     * the same fence between the two reads would otherwise be invisible
     * (the anchor sees the newer seq, the CAS succeeds, the batch lands
@@ -484,19 +306,8 @@ final class TableStore(spark: SparkSession, root: String,
           what = s"txn fence $k")
     }
 
-  /** Fourth seam: invoked INSIDE an append's swap window (swapping
-    * manifest committed, renames not yet run) — a spec blocks here to
-    * hold a LIVE swap open while a competing writer collides, proving
-    * the loser waits instead of rolling the live swap back. Never set
-    * outside tests.
-    */
-  private[sources] var midSwapPause: () => Unit = () => ()
+  // ------------------------------------------------ data files and reads
 
-  /** Relative paths of the committed data files under `dir` (recursive:
-    * an unpartitioned touched dir is the whole table tree). Metadata
-    * sidecars (`_SUCCESS`, checksums) are not part of the committed
-    * generation's rows and are skipped.
-    */
   /** Target size for data files this store writes (bytes). Read from
     * `spark.graft.targetFileBytes` with the parquet-standard 128 MiB
     * default — scale-adaptive via conf, never a constant tuned to one
@@ -506,339 +317,251 @@ final class TableStore(spark: SparkSession, root: String,
     spark.conf.getOption("spark.graft.targetFileBytes")
       .map(_.toLong).getOrElse(128L * 1024 * 1024)
 
-  /** Compact a freshly-written FLAT staging dir whose output came out
-    * badly fragmented — many files far below [[targetFileBytes]] (a
-    * frame whose last stage was a 32-partition scan or a frozen cached
-    * partitioning writes one near-empty file per task). Small files
-    * hurt twice (guide: listing/planning per commit, footer-per-file
-    * on every later read of the table), and at lifecycle-query scale
-    * the read-back cost dominates the one extra tiny job this pays.
-    * At production scale files approach the target and this never
-    * triggers. Partitioned layouts pass through untouched (per-dir
-    * sizing is the compact()/z-order path's business). Staging-only:
-    * a crash here aborts cleanly, nothing has touched the live tree.
+  /** Write `frame` ONCE into a fresh commit directory
+    * `<table>/<commit-id>/` and return its data files (paths relative
+    * to the table dir, with lengths). Until a manifest lists them the
+    * files are invisible orphans — all a crash here can leave.
+    *
+    * `compact`: a FLAT output that came out badly fragmented — many
+    * files far below [[targetFileBytes]] (a frame whose last stage was
+    * a 32-partition scan writes one near-empty file per task) — is
+    * rewritten once into a second commit directory and the first is
+    * deleted. Small files hurt twice (planning per commit, a footer
+    * per file on every later read), and at lifecycle-query scale the
+    * read-back cost dominates the one extra tiny job this pays. At
+    * production scale files approach the target and this never
+    * triggers; partitioned layouts pass through untouched (per-dir
+    * sizing is the compact()/z-order path's business).
     */
-  private def compactStaging(tmp: Path, fs: FileSystem,
-                             partitionBy: Seq[String],
-                             schema: Option[
-                               org.apache.spark.sql.types.StructType] =
-                               None): Unit = {
-    if (partitionBy.nonEmpty) return
-    val files = dataFiles(fs, tmp)
-    if (files.size <= 1) return
-    val bytes = files.map(r => fs.getFileStatus(sub(tmp, r)).getLen).sum
-    val ideal = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    if (files.size <= 4 * ideal) return
-    val tmp2 = new Path(tmp.getParent, tmp.getName + ".c")
-    // the caller just WROTE these files and knows their schema — pin
-    // it so the read-back skips a footer inference
-    schema.fold(spark.read)(spark.read.schema)
-      .parquet(tmp.toString).coalesce(ideal.toInt)
-      .write.mode(SaveMode.Overwrite).parquet(tmp2.toString)
-    // a silent delete/rename failure here would leave staging EMPTY and
-    // the enclosing append would commit as a successful no-op — fail the
-    // commit loudly instead (staging-only: nothing touched the live tree)
-    require(fs.delete(tmp, true),
-      s"compactStaging: could not delete fragmented staging $tmp")
-    require(fs.rename(tmp2, tmp),
-      s"compactStaging: could not rename $tmp2 back to $tmp")
+  private def stage(table: String, frame: DataFrame,
+                    partitionBy: Seq[String],
+                    compact: Boolean): Seq[(String, Long)] = {
+    val fs = fsOf(hpath(table))
+    def write(df: DataFrame): Path = {
+      val dir = new Path(hpath(table),
+        java.util.UUID.randomUUID().toString.replace("-", "").take(16))
+      // no `_SUCCESS` marker: the manifest is the commit record
+      val w = df.write
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(dir.toString)
+      dir
+    }
+    var dir = write(frame)
+    var files = dataFiles(fs, dir)
+    if (compact && partitionBy.isEmpty && files.size > 1) {
+      val bytes = files.map(_._2).sum
+      val ideal = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
+      if (files.size > 4 * ideal) {
+        // the caller just WROTE these files and knows their schema —
+        // pin it so the read-back skips a footer inference
+        val packed = write(spark.read.schema(frame.schema)
+          .parquet(dir.toString).coalesce(ideal.toInt))
+        fs.delete(dir, true)
+        dir = packed
+        files = dataFiles(fs, dir)
+      }
+    }
+    if (files.isEmpty) fs.delete(dir, true) // nothing to list, nothing kept
+    files.map { case (rel, len) => s"${dir.getName}/$rel" -> len }
   }
 
-  private def dataFiles(fs: FileSystem, dir: Path, rel: String = ""): Seq[String] =
+  /** Data files under `dir` (recursive) with their lengths; metadata
+    * sidecars (`_`/`.`-prefixed) are skipped.
+    */
+  private def dataFiles(fs: FileSystem, dir: Path,
+                        rel: String = ""): Seq[(String, Long)] =
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.flatMap { st =>
       val name = st.getPath.getName
       val r = if (rel.isEmpty) name else s"$rel/$name"
-      if (st.isDirectory) dataFiles(fs, st.getPath, r)
-      else if (name.startsWith("_") || name.startsWith(".")) Nil
-      else Seq(r)
+      if (name.startsWith("_") || name.startsWith(".")) Nil
+      else if (st.isDirectory) dataFiles(fs, st.getPath, r)
+      else Seq(r -> st.getLen)
     }
 
-  private def sub(base: Path, rel: String): Path =
-    if (rel.isEmpty) base else new Path(base, rel)
+  /** The commit directory a listed file belongs to. */
+  private def commitDir(rel: String): String = rel.takeWhile(_ != '/')
 
-  /** Roll a crashed swap BACK to the manifest generation: every touched
-    * dir whose `__old` copy exists is restored, every `fresh` dir (no
-    * committed copy existed) is DELETED — it holds only uncommitted
-    * new-generation rows — and siblings and the swapping manifest are
-    * cleared. Mutations call this first; reads never mutate (they
-    * resolve the crashed state logically instead).
+  /** The read schema of a frame written to parquet: every field
+    * nullable, recursively — what a parquet scan reports.
     */
-  private[sources] def recover(table: String): Unit =
-    readManifest(table).filter(_.swapping).foreach { m =>
-      val dst = hpath(table)
-      val fs = fsOf(dst)
-      val bak = new Path(path(table) + "__old")
-      val tmp = new Path(path(table) + "__tmp")
-      m.dirs.foreach { rel =>
-        val o = sub(bak, rel)
-        val c = sub(dst, rel)
-        val committed = m.files.getOrElse(rel, Nil)
-        if (committed.nonEmpty) {
-          // per-file rollback: a crash INSIDE this dir's file-by-file
-          // rename may have left committed files split between the
-          // live dir and __old, and uncommitted new-generation files
-          // already renamed in. Restore = drop data files not in the
-          // committed list, then pull each committed file back from
-          // __old wherever the swap had moved it.
-          if (fs.exists(c)) {
-            val keep = committed.toSet
-            dataFiles(fs, c).foreach { rf =>
-              if (!keep.contains(rf)) fs.delete(sub(c, rf), false)
-            }
-          }
-          committed.foreach { rf =>
-            val ob = sub(o, rf)
-            if (fs.exists(ob)) {
-              val cb = sub(c, rf)
-              if (fs.exists(cb)) fs.delete(cb, false)
-              fs.mkdirs(cb.getParent)
-              fs.rename(ob, cb)
-            }
-          }
-        } else if (fs.exists(o)) {
-          // legacy manifest without a file list: whole-dir restore
-          fs.delete(c, true)
-          fs.mkdirs(c.getParent)
-          fs.rename(o, c)
-        }
-      }
-      m.fresh.foreach { rel => fs.delete(sub(dst, rel), true) }
-      // crashed append: drop whichever uncommitted batch files already
-      // moved in; the staging sibling holds the rest
-      m.adds.foreach { rel => fs.delete(sub(dst, rel), false) }
-      // the crashed writer's manifest-recorded staging sibling, plus
-      // the legacy fixed-name siblings pre-unique-staging stores used
-      m.tmp.foreach { name => fs.delete(new Path(root, name), true) }
-      fs.delete(new Path(path(table) + "__add"), true)
-      fs.delete(tmp, true)
-      fs.delete(bak, true)
-      writeManifest(table, m.gen, swapping = false, Nil)
-    }
+  private def scanSchema(s: StructType): StructType =
+    nullable(s).asInstanceOf[StructType]
 
-  def exists(table: String): Boolean = {
-    val p = hpath(table)
-    readManifest(table) match {
-      // crashed FIRST-TIME rewrite: the committed generation is "no
-      // table" even if the renamed-in dir survives on disk
-      case Some(m) if m.swapping && m.fresh.contains("") =>
-        fsOf(p).exists(new Path(path(table) + "__old"))
-      case Some(m) if m.swapping =>
-        fsOf(p).exists(p) ||
-          fsOf(p).exists(new Path(path(table) + "__old"))
-      case _ => fsOf(p).exists(p)
-    }
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
-  /** Table scan. Under a `clean` manifest (or none) this is a plain
-    * parquet read. Under a `swapping` manifest — a rewrite crashed
-    * mid-swap — every touched dir with a surviving `__old` copy reads
-    * from that copy, untouched and not-yet-swapped dirs read in place:
-    * wholly the committed generation, never a mix of old and new.
+  private def qualified(table: String): Path =
+    fsOf(hpath(table)).makeQualified(hpath(table))
+
+  /** A file index over exactly `files` (path, length) whose status
+    * cache is served from memory: no listing — not even Spark's
+    * parallel-listing job past 32 files.
     */
-  def read(table: String): DataFrame = readManifest(table) match {
-    case Some(m) if m.swapping =>
-      val dstS = path(table)
-      val bakS = dstS + "__old"
-      val dst = new Path(dstS)
-      val fs = fsOf(dst)
-      val liveOld = m.dirs.filter(rel => fs.exists(sub(new Path(bakS), rel)))
-      if (m.fresh.contains(""))
-        // crashed first-time rewrite: the committed generation is "no
-        // table"; whatever renamed in is uncommitted
-        throw new IllegalStateException(
-          s"table $table has no committed generation (first-time rewrite " +
-            "crashed mid-swap); run a mutation to recover, or rewrite again")
-      else if (m.adds.nonEmpty) {
-        // crashed append: the committed generation is every data file
-        // EXCEPT the listed uncommitted adds (whichever of them
-        // already moved in)
-        val keep = dataFiles(fs, dst).filterNot(m.adds.toSet)
-        if (keep.isEmpty) throw new IllegalStateException(
-          s"table $table: crashed append left no committed files")
-        rd(table).option("basePath", dstS)
-          .parquet(keep.map(r => s"$dstS/$r"): _*)
-      }
-      else if (m.files.nonEmpty) {
-        // per-file reconstruction: the manifest lists the committed
-        // generation's data files per touched dir, so even a crash
-        // INSIDE one dir's file-by-file rename (raw-S3 semantics —
-        // files split between the live dir and __old) reads as wholly
-        // the committed generation: each listed file is taken from
-        // __old if the swap moved it, else from the live dir, and
-        // nothing not on the list is read from a touched dir.
-        val bakP = new Path(bakS)
-        val fromBak = Seq.newBuilder[String]
-        val fromCur = Seq.newBuilder[String]
-        m.dirs.foreach { rel =>
-          val committed = m.files.getOrElse(rel, Nil)
-          if (committed.isEmpty) {
-            // a touched dir with no recorded files (committed-empty):
-            // contributes no rows
-          } else committed.foreach { rf =>
-            val r = if (rel.isEmpty) rf else s"$rel/$rf"
-            if (fs.exists(new Path(bakP, r))) fromBak += s"$bakS/$r"
-            else fromCur += s"$dstS/$r"
-          }
-        }
-        val touched = (m.dirs ++ m.fresh).toSet
-        if (!touched.contains("")) {
-          val depth = touched.head.count(_ == '/') + 1
-          val allCur = if (fs.exists(dst)) leafDirs(fs, dst, depth, "") else Nil
-          allCur.filterNot(touched).foreach(rel => fromCur += s"$dstS/$rel")
-        }
-        val bakPaths = fromBak.result()
-        val curPaths = fromCur.result()
-        val oldDf =
-          if (bakPaths.isEmpty) None
-          else Some(rd(table).option("basePath", bakS).parquet(bakPaths: _*))
-        val curDf =
-          if (curPaths.isEmpty) None
-          else Some(rd(table).option("basePath", dstS).parquet(curPaths: _*))
-        (oldDf, curDf) match {
-          case (Some(o), Some(c)) => o.unionByName(c)
-          case (Some(o), None)    => o
-          case (None, Some(c))    => c
-          case (None, None)       =>
-            throw new IllegalStateException(
-              s"table $table: crashed swap left no committed partitions")
-        }
-      }
-      else if (liveOld.isEmpty && m.fresh.isEmpty)
-        rd(table).parquet(dstS)
-      else if (liveOld.contains("")) rd(table).parquet(bakS)
+  private def fileIndex(files: Seq[(Path, Long)], options: Map[String, String],
+                        schema: Option[StructType],
+                        spec: Option[PartitionSpec]): InMemoryFileIndex = {
+    val leaves = files.map { case (p, len) =>
+      p -> Array(new FileStatus(len, false, 1, 0L, 0L, p))
+    }.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        leaves.get(p)
+      def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    new InMemoryFileIndex(spark, files.map(_._1), options, schema, cache,
+      spec, None)
+  }
+
+  /** The partition sub-path (`k=v/...`) of a listed file. */
+  private def partitionDir(rel: String): String =
+    rel.split('/').drop(1).dropRight(1).mkString("/")
+
+  /** Typed values of the partition sub-paths `dirs`, parsed by Spark's
+    * own partition-path rules: a probe index rooted at the table dir
+    * over one in-memory placeholder file per sub-path. `types = None`
+    * infers the column types from the names — exactly what a directory
+    * read of the table infers; `Some` casts to the recorded types.
+    */
+  private def partitionValues(table: String, dirs: Seq[String],
+                              types: Option[StructType])
+      : (StructType, Map[String, InternalRow]) = {
+    val base = qualified(table)
+    val byDir = dirs.distinct.map(d => new Path(base, d) -> d).toMap
+    val spec = fileIndex(byDir.keys.toSeq.map(d => new Path(d, "f") -> 1L),
+      Map("basePath" -> base.toString), types, None).partitionSpec()
+    (spec.partitionColumns,
+      spec.partitions.map(p => byDir(p.path) -> p.values).toMap)
+  }
+
+  /** The scan over `rels` ⊆ `m`'s files, resolved through the manifest
+    * alone: one file index over the listed files, with an explicit
+    * partition spec (every commit directory's `k=v` dirs map to their
+    * typed values, so files of many commits read as ONE partitioned
+    * scan) and the recorded schema (no footer inference), wrapped as a
+    * plain parquet relation — partition pruning, `_metadata` and
+    * `input_file_name` behave as on any parquet read.
+    */
+  private def scan(table: String, m: Manifest,
+                   rels: Seq[String]): DataFrame = {
+    val base = qualified(table)
+    val lens = m.files.toMap
+    val partitions =
+      if (m.partitionCols.isEmpty || rels.isEmpty) Nil
       else {
-        val depth = (liveOld ++ m.fresh).head.count(_ == '/') + 1
-        val allCur =
-          if (fs.exists(dst)) leafDirs(fs, dst, depth, "") else Nil
-        // fresh dirs hold ONLY uncommitted new-generation rows — a
-        // crash after their rename-in must not leak them into a read
-        // of the committed generation
-        val curKeep = allCur.filterNot((liveOld ++ m.fresh).toSet)
-        val oldDf =
-          if (liveOld.isEmpty) None
-          else Some(rd(table).option("basePath", bakS)
-            .parquet(liveOld.map(r => s"$bakS/$r"): _*))
-        val curDf =
-          if (curKeep.isEmpty) None
-          else Some(rd(table).option("basePath", dstS)
-            .parquet(curKeep.map(r => s"$dstS/$r"): _*))
-        (oldDf, curDf) match {
-          case (Some(o), Some(c)) => o.unionByName(c)
-          case (Some(o), None)    => o
-          case (None, Some(c))    => c
-          case (None, None)       =>
-            throw new IllegalStateException(
-              s"table $table: crashed swap left no committed partitions")
+        val leaves =
+          rels.map(r => r.take(r.lastIndexOf('/')) -> partitionDir(r)).distinct
+        val values = partitionValues(table, leaves.map(_._2),
+          Some(m.partitionSchema))._2
+        leaves.map { case (leaf, dir) =>
+          PartitionPath(values(dir), new Path(base, leaf))
         }
       }
-    case Some(m) if m.drops.nonEmpty =>
-      // clean manifest with TOMBSTONES: a predicate delete committed
-      // but its dropped files are not yet physically settled — the
-      // committed generation is every data file EXCEPT the drops
-      val dstS = path(table)
-      val fs = fsOf(hpath(table))
-      val keep = dataFiles(fs, hpath(table)).filterNot(m.drops.toSet)
-      if (keep.isEmpty) rd(table).parquet(dstS).limit(0) // all rows deleted
-      else rd(table).option("basePath", dstS)
-        .parquet(keep.map(r => s"$dstS/$r"): _*)
-    case _ => rd(table).parquet(path(table))
+    val index = fileIndex(rels.map(r => new Path(base, r) -> lens(r)),
+      Map.empty, None, Some(PartitionSpec(m.partitionSchema, partitions)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, m.partitionSchema,
+      m.dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** The committed data-file inventory: the physical listing minus any
-    * unsettled tombstones on the head manifest. Every metadata-level
-    * consumer (skipping, rollups, pinned reads) must use THIS, not the
-    * raw listing — a raw listing between a predicate-delete commit and
-    * its physical settle would resurrect deleted rows.
+  /** Commit the live file set `files` as generation `head0.seq + 1`.
+    * `schema` is the read schema; when files are listed, partition
+    * column types are (re)inferred from their directory names, the
+    * rule a directory read applies. Losing the CAS deletes this
+    * attempt's own commit directories (`staged` — no manifest ever
+    * listed them) and rethrows for [[retryCommit]]; winning retires
+    * manifests past the retention window ([[expire]]).
     */
-  private def committedFiles(table: String, fs: FileSystem): Seq[String] = {
-    val all = dataFiles(fs, hpath(table))
-    readManifest(table).filter(!_.swapping).map(_.drops.toSet) match {
-      case Some(d) if d.nonEmpty => all.filterNot(d)
-      case _                     => all
+  private def commit(table: String, head0: Option[Manifest],
+                     files: Seq[(String, Long)], partitionCols: Seq[String],
+                     schema: StructType, staged: Seq[(String, Long)],
+                     txnUpdate: Option[(String, Long)] = None,
+                     widens: Boolean = false): Long = {
+    val parts =
+      if (partitionCols.isEmpty || files.isEmpty)
+        schema.filter(f => partitionCols.contains(f.name))
+      else partitionValues(table, files.map(f => partitionDir(f._1)), None)
+        ._1.toSeq
+    val m = Manifest(head0.map(_.seq).getOrElse(0L) + 1,
+      StructType(schema.filterNot(f => partitionCols.contains(f.name)) ++ parts),
+      partitionCols, files,
+      head0.map(_.txns).getOrElse(Map.empty[String, Long]) ++ txnUpdate,
+      widens || head0.exists(_.evolved))
+    beforeBeginCommit()
+    try {
+      writeManifest(table, m)
+      Option(attempt.get).foreach(_.committed = true)
+    } catch {
+      case e: ConcurrentCommitException =>
+        val fs = fsOf(hpath(table))
+        staged.map(f => commitDir(f._1)).distinct
+          .foreach(d => fs.delete(new Path(hpath(table), d), true))
+        throw e
     }
+    expire(table, m, retainGenerations)
+    m.seq
   }
 
-  /** Physically settle committed tombstones: archive (retention) or
-    * delete the dropped files, then write a fresh dropless clean
-    * manifest at the SAME generation. Idempotent; a crash mid-settle
-    * leaves the drops on the manifest and every read still excludes
-    * them. Mutations call this before proceeding — a later clean
-    * manifest that failed to carry the drops would resurrect the
-    * deleted rows.
+  /** Retire manifests older than `head.seq - keepLast`, then delete the
+    * files only they listed. Manifests go first, so a crash in between
+    * leaves only orphans. A file, once left out of a list, never
+    * returns to one, so "listed by a retired manifest but not by the
+    * oldest retained one" is exactly "listed by no retained manifest";
+    * and since a commit directory's files all arrive in one commit, a
+    * directory the oldest retained manifest lists nothing from is
+    * deleted whole. Files of writers still in flight are never listed
+    * anywhere, so this never touches them.
     */
-  private def settleDrops(table: String, fs: FileSystem): Unit = {
-    var done = false
-    while (!done) {
-      readManifest(table).filter(m => !m.swapping && m.drops.nonEmpty) match {
-        case None => done = true
-        case Some(m) =>
-          val dst = hpath(table)
-          m.drops.foreach { rel =>
-            val p = sub(dst, rel)
-            if (fs.exists(p)) {
-              if (retainGenerations > 0) {
-                // the dropped file belonged to the PREVIOUS generation
-                val dest = new Path(
-                  new Path(archiveRoot(table), s"gen=${m.gen - 1}"), rel)
-                fs.mkdirs(dest.getParent)
-                fs.rename(p, dest)
-              } else fs.delete(p, false)
-            }
-          }
-          // CAS at the observed head, NEVER the blind retry loop: a
-          // concurrent writer may have advanced gen/txn fences while
-          // we deleted — landing this pre-built body at a later
-          // sequence would regress them. On collision, re-read and
-          // re-derive (the physical deletes above are idempotent).
-          try {
-            writeManifest(table, m.gen, swapping = false, Nil,
-              expectedPrev = Some(m.seq))
-            done = true
-          } catch {
-            case _: ConcurrentCommitException => () // re-read, retry
-          }
-      }
-    }
+  private def expire(table: String, head: Manifest, keepLast: Int): Unit = {
+    val fs = fsOf(new Path(root))
+    val (gone, kept) = listManifests(table).partition(_._1 < head.seq - keepLast)
+    if (gone.isEmpty) return
+    val oldest = kept.map(_._1).minOption.getOrElse(head.seq)
+    val live = (if (oldest == head.seq) Some(head) else manifestAt(table, oldest))
+      .map(_.paths.toSet)
+      .getOrElse(return) // a concurrent writer is already retiring it
+    val doomed = gone.flatMap(g => manifestAt(table, g._1)).flatMap(_.paths)
+      .toSet -- live
+    gone.foreach { case (_, p) => fs.delete(p, false) }
+    val liveDirs = live.map(commitDir)
+    val (wholeDirs, single) = doomed.partition(f => !liveDirs(commitDir(f)))
+    wholeDirs.map(commitDir).foreach(d =>
+      fs.delete(new Path(hpath(table), d), true))
+    single.foreach(f => fs.delete(new Path(hpath(table), f), false))
   }
 
-  /** Reader SNAPSHOT against concurrent writers: pin the committed
-    * data-file inventory NOW and return a frame over those explicit
-    * paths. A plain [[read]] lists the directory at plan time and can
-    * pick up a concurrent append's files arriving between planning
-    * and execution (or between two actions on the same frame) —
-    * `readPinned` cannot: the file list is fixed at this call.
-    * Appends never move existing files, so the pinned frame stays
-    * valid for the reader's lifetime under any number of concurrent
-    * appends/upserts. Concurrent REWRITES move the pinned files
-    * themselves: with retention on (`retainGenerations > 0`) replaced
-    * files stay resolvable (archive) — a reader that must survive
-    * rewrites should pin `generations().last` and use [[readAt]],
-    * which re-probes per file. Cost: one recursive listing here.
-    * Under a crashed-swap manifest this delegates to [[read]]'s
-    * committed-generation resolution (already explicit-path-based).
+  def exists(table: String): Boolean = readManifest(table).nonEmpty
+
+  /** Table scan of the head generation, resolved through its manifest. */
+  def read(table: String): DataFrame = {
+    val m = head(table)
+    scan(table, m, m.paths)
+  }
+
+  /** Reader SNAPSHOT against concurrent writers. Every [[read]] is
+    * already pinned: its file list is the head manifest's, fixed when
+    * the frame is created, so a concurrent append's files never leak
+    * into it. Appends never delete files, so the frame stays valid
+    * under any number of concurrent appends/upserts. A concurrent
+    * REWRITE deletes the files it replaced once it commits unless
+    * retention keeps them (`retainGenerations > 0`) — a reader that
+    * must survive rewrites should pin `generations().last` and use
+    * [[readAt]].
     */
-  def readPinned(table: String): DataFrame = readManifest(table) match {
-    case Some(m) if m.swapping => read(table)
-    case _ =>
-      val dstS = path(table)
-      val fs = fsOf(hpath(table))
-      val files = committedFiles(table, fs)
-      if (files.isEmpty) read(table) // empty or all-tombstoned: delegate
-      else rd(table).option("basePath", dstS)
-        .parquet(files.map(f => s"$dstS/$f"): _*)
-  }
+  def readPinned(table: String): DataFrame = read(table)
 
-  /** Manifest-fenced append (K3): the batch lands in an `__add`
-    * sibling first, the incoming file list is recorded in a swapping
-    * manifest, and only then do the files move in (one rename each —
-    * atomic per file on every store). A crash at ANY point reads and
-    * recovers as the table WITHOUT the batch: before the manifest the
-    * files are outside the table; after it, [[read]] excludes the
-    * listed adds and [[recover]] deletes whichever of them already
-    * moved. Without the fence a crash mid-write left a partial batch
-    * VISIBLE (parquet scans do not honor _SUCCESS markers). A
-    * first-time append routes through [[rewrite]]'s fresh-table fence.
+  /** Manifest-fenced append (K3): the batch's files are written into
+    * their own commit directory and the commit lists them next to the
+    * table's existing files. A crash at ANY point before the CAS
+    * leaves the table without the batch (the written files are
+    * orphans). A first-time append routes through [[rewrite]].
     *
     * Returns the COMMITTED generation, taken from this append's own
     * commit CAS — under a concurrent writer on the same table,
@@ -853,213 +576,106 @@ final class TableStore(spark: SparkSession, root: String,
     retryCommit(appendBody(table, df, partitionBy))
 
   /** `df` is BY-NAME on purpose: table-derived frames (an upsert's
-    * anti-join, a dedup screen) pin their file LISTING when the frame
-    * is created, so the frame must be constructed AFTER the CAS
-    * anchor below — a concurrent commit between a pre-anchor listing
-    * and the anchor would slide under the CAS with stale inputs (the
-    * lost-update anomaly OCC exists to prevent). Callers pass the
-    * frame-building EXPRESSION, not a pre-built val.
+    * anti-join, a dedup screen) pin the head manifest's file list when
+    * the frame is created, so the frame must be constructed AFTER the
+    * CAS anchor below — a frame built on an older head would slide
+    * under the CAS with stale inputs (the lost-update anomaly OCC
+    * exists to prevent). Callers pass the frame-building EXPRESSION,
+    * not a pre-built val. `widened` = appendEvolve's widened read
+    * schema.
     */
   private def appendBody(table: String, df: => DataFrame,
                          partitionBy: Seq[String],
                          txnUpdate: Option[(String, Long)] = None,
-                         expectedFence: Option[(String, Long)] = None)
+                         expectedFence: Option[(String, Long)] = None,
+                         widened: Option[StructType] = None)
       : Long = {
-    settleOrRecover(table) // never append into a half-swapped layout
-    if (!exists(table)) {
-      return rewriteBody(table, df, partitionBy, txnUpdate,
-        expectedFence = expectedFence)
+    // the state this mutation is based on; the commit CAS validates
+    // nobody committed past it while we wrote
+    val head0 = readManifest(table) match {
+      case Some(m) => m
+      case None =>
+        return rewriteBody(table, df, partitionBy, txnUpdate,
+          expectedFence = expectedFence)
     }
-    val dst = hpath(table)
-    val fs = fsOf(dst)
-    settleOld(table, fs) // archive (not delete) a post-commit leftover
-    settleDrops(table, fs) // physically retire committed tombstones
-    // the state this mutation is based on; the begin-commit CAS below
-    // validates nobody committed past it while we staged
-    val head0 = readManifest(table)
-    checkFence(table, head0, expectedFence)
-    val seq0 = head0.map(_.seq).getOrElse(0L)
-    val gen = head0.map(_.gen).getOrElse(0L)
+    checkFence(table, Some(head0), expectedFence)
     // layout guard: appending flat files into a partitioned table (or
-    // with a DIFFERENT partitionBy — INCLUDING partitioned files into
-    // a flat non-empty table) commits a mixed directory layout that
-    // breaks partition discovery on every later read — reject BEFORE
-    // staging (a committed layout corruption is not auto-recoverable).
-    // Only a table with NO committed files waives the check: a flat
-    // table's layout is Nil, which must still match the batch's.
-    val committed = committedFiles(table, fs)
-    val existingLayout = partitionLayoutOf(committed, "append")
-    require(committed.isEmpty || existingLayout == partitionBy.toList,
+    // with a DIFFERENT partitionBy — INCLUDING partitioned files into a
+    // flat non-empty table) would commit files that no single
+    // partition spec describes — reject BEFORE writing. Only a table
+    // with NO committed files waives the check: a flat table's layout
+    // is Nil, which must still match the batch's.
+    require(head0.files.isEmpty || head0.partitionCols == partitionBy,
       s"append: table $table is partitioned by " +
-        s"[${existingLayout.mkString("/")}] but the batch uses " +
+        s"[${head0.partitionCols.mkString("/")}] but the batch uses " +
         s"partitionBy=[${partitionBy.mkString("/")}] — layouts must " +
         "match (empty = flat)")
-    val tmp = freshStaging(table, "__add")
-    try {
-      val frame0 = df // listing happens HERE, after the anchor
-      // COLUMN-ORDER normalization (defense in depth; the
-      // Upsert.antiDelete find): parquet resolves a multi-file table's
-      // schema from ONE sampled footer, so files whose columns agree
-      // in NAME but not ORDER make every later read's column order
-      // NONDETERMINISTIC. When the batch carries exactly the committed
-      // columns in a different order, reorder it; a different column
-      // SET is appendEvolve's business and passes through untouched.
-      val frame =
-        if (committed.isEmpty) frame0 // emptied table: no schema to match
-        else scala.util.Try {
-          val committedCols = committedSchema(table).map(_.name)
-          if (committedCols.toSet == frame0.columns.toSet &&
-              committedCols != frame0.columns.toSeq)
-            frame0.select(committedCols.map(
-              org.apache.spark.sql.functions.col): _*)
-          else frame0
-        } match { // best-effort: never block an append — but LOUDLY,
-          // or a persistently unreadable committed schema silently
-          // skips the reorder and writes the exact mis-ordered file
-          // this normalization exists to prevent
-          case scala.util.Success(f) => f
-          case scala.util.Failure(e) =>
-            org.slf4j.LoggerFactory.getLogger(classOf[TableStore]).warn(
-              s"append $table: column-order normalization skipped — " +
-                s"committed schema unreadable " +
-                s"(${e.getClass.getSimpleName}: ${e.getMessage})")
-            frame0
-        }
-      val w = frame.write.mode(SaveMode.Overwrite)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(tmp.toString)
-      compactStaging(tmp, fs, partitionBy, Some(frame.schema))
-      val incoming = dataFiles(fs, tmp)
-      if (incoming.isEmpty) { fs.delete(tmp, true); return gen }
-      beforeBeginCommit()
-      // begin-commit CAS: claims seq0+1 or detects a concurrent commit
-      // BEFORE any live-tree rename (abort is then staging-only)
-      writeManifest(table, gen, swapping = true, Nil, Nil, Map.empty,
-        adds = incoming, tmpName = Some(tmp.getName),
-        expectedPrev = Some(seq0))
-      midSwapPause() // test seam: hold the live swap open
-      snapBeforeMutation(table, fs) // retention: outgoing-gen inventory
-      var moves = 0
-      incoming.foreach { rel =>
-        val to = sub(dst, rel)
-        fs.mkdirs(to.getParent)
-        moves += 1; swapFault(moves)
-        fs.rename(sub(tmp, rel), to)
-      }
-      commitManifest(table, gen + 1, seq0 + 1, txnUpdate)
-      fs.delete(tmp, true)
-      // appends replace nothing, so there is no __old to dispose — but
-      // the retention window must still prune, or an append-only
-      // workload accumulates one snapshot sidecar per batch forever
-      if (retainGenerations > 0) vacuum(table, keepLast = retainGenerations)
-    } catch {
-      case e: ConcurrentCommitException => fs.delete(tmp, true); throw e
-    }
-    gen + 1
+    val frame0 = df // derived frames pin the head HERE, after the anchor
+    // COLUMN-ORDER normalization: a batch carrying exactly the
+    // committed columns in a different order is reordered, so every
+    // file of the table stores one column order (positional consumers
+    // of a single file see the table's order); a different column SET
+    // is appendEvolve's business and passes through untouched. An
+    // emptied table takes the batch's schema, like a first commit.
+    val committedCols = head0.schema.map(_.name)
+    val frame =
+      if (head0.files.nonEmpty && committedCols.toSet == frame0.columns.toSet &&
+          committedCols != frame0.columns.toSeq)
+        frame0.select(committedCols.map(col): _*)
+      else frame0
+    val incoming = stage(table, frame, partitionBy, compact = true)
+    if (incoming.isEmpty) return head0.seq
+    val schema = widened.getOrElse(
+      if (head0.files.isEmpty) scanSchema(frame.schema)
+      else head0.schema)
+    commit(table, Some(head0), head0.files ++ incoming, partitionBy, schema,
+      incoming, txnUpdate, widens = widened.nonEmpty)
   }
 
-  /** The clean generation-bump manifest, CAS'd at `swapSeq + 1`. A
-    * collision HERE is not retryable contention — our swap held the
-    * lock, so a competing manifest means another process recovered a
-    * live swap (protocol violation: [[recover]] run while this writer
-    * was alive). Escalate loudly instead of retrying into a tree two
-    * writers both mutated.
+  /** True once a schema-adding append has widened the table: files
+    * written before the widening lack the added columns, which read
+    * back as NULL under the recorded schema.
     */
-  private def commitManifest(table: String, newGen: Long,
-                             swapSeq: Long,
-                             txnUpdate: Option[(String, Long)] = None,
-                             drops: Seq[String] = Nil): Unit =
-    try writeManifest(table, newGen, swapping = false, Nil,
-      expectedPrev = Some(swapSeq), txnUpdate = txnUpdate, drops = drops)
-    catch {
-      case e: ConcurrentCommitException => throw new IllegalStateException(
-        s"table $table: manifest advanced past this writer's IN-FLIGHT " +
-          "swap — recover() was run against a live writer. The tree " +
-          "holds both writers' renames; inspect manifests and __old " +
-          "before trusting reads.", e)
-    }
-
-  // ---------------------------------------------------- schema evolution
-
-  private def evolvedMarker(table: String) =
-    new Path(root, s"$table._graft_evolved")
-
-  /** True once a schema-adding append has widened the table: reads
-    * must merge footers (files written before the widening lack the
-    * new columns). One existence probe per read — same order of cost
-    * as the manifest glob every read already pays.
-    */
-  def isEvolved(table: String): Boolean = {
-    val p = evolvedMarker(table)
-    fsOf(p).exists(p)
-  }
-
-  /** The store's reader for `table`: parquet with the COMMITTED
-    * schema pinned (skips the per-open footer inference — ~90 ms per
-    * open, the dominant fixed cost of metadata-heavy pipelines; the
-    * committed schema is cached per head sequence, so external
-    * commits invalidate naturally); with footer-merging instead once
-    * the table's schema has evolved (pre-widening files must resolve
-    * added columns as NULL). The schema pin also makes column ORDER
-    * deterministic instead of sampled-footer-dependent. `inferring`
-    * breaks the rd → committedSchema → read → rd recursion: the
-    * inference read itself runs unpinned.
-    */
-  private val inferring = new ThreadLocal[java.util.HashSet[String]] {
-    override def initialValue() = new java.util.HashSet[String]()
-  }
-  private def rd(table: String) = {
-    val r = spark.read
-    if (isEvolved(table)) r.option("mergeSchema", "true")
-    else if (inferring.get.contains(table)) r
-    else {
-      inferring.get.add(table)
-      val sch =
-        try scala.util.Try(committedSchema(table)).toOption
-        finally inferring.get.remove(table)
-      sch.fold(r)(r.schema)
-    }
-  }
+  def isEvolved(table: String): Boolean = readManifest(table).exists(_.evolved)
 
   /** Append with SCHEMA EVOLUTION: batch columns the table lacks are
-    * ADDED (earlier files read them back as NULL via merged footers);
-    * table columns the batch lacks are filled with typed NULLs; shared
-    * columns must match types EXACTLY — a silent cast is how a
-    * corpus-wide column turns to garbage, so mismatches throw. The
-    * widening is recorded in a `._graft_evolved` marker (written
-    * before the append commits: a crash in between costs only an
-    * unnecessary footer merge, never a wrong read).
+    * ADDED to the recorded schema (earlier files read them back as
+    * NULL); table columns the batch lacks are filled with typed NULLs;
+    * shared columns must match types EXACTLY — a silent cast is how a
+    * corpus-wide column turns to garbage, so mismatches throw.
     */
   def appendEvolve(table: String, df: DataFrame,
                    partitionBy: Seq[String] = Nil): Unit = retryCommit {
-    settleOrRecover(table)
-    if (!exists(table)) { rewriteBody(table, df, partitionBy); () }
-    else {
-      val tableSchema = committedSchema(table)
-      val batchSchema = df.schema
-      val conflicts = tableSchema.flatMap { tf =>
-        batchSchema.find(_.name == tf.name)
-          .filter(_.dataType != tf.dataType)
-          .map(bf => s"${tf.name}: table ${tf.dataType.simpleString} " +
-            s"vs batch ${bf.dataType.simpleString}")
-      }
-      require(conflicts.isEmpty,
-        "appendEvolve: column type conflict(s) — a silent cast would " +
-          s"corrupt the corpus: ${conflicts.mkString("; ")}")
-      // table columns first (their canonical order), new columns after
-      val aligned = df.select(
-        tableSchema.map { tf =>
-          if (batchSchema.exists(_.name == tf.name)) col(tf.name)
-          else org.apache.spark.sql.functions.lit(null)
-            .cast(tf.dataType).as(tf.name)
-        } ++ batchSchema.filterNot(bf =>
+    readManifest(table) match {
+      case None => rewriteBody(table, df, partitionBy); ()
+      case Some(m) =>
+        val tableSchema = m.schema
+        val batchSchema = df.schema
+        val conflicts = tableSchema.flatMap { tf =>
+          batchSchema.find(_.name == tf.name)
+            .filter(_.dataType != tf.dataType)
+            .map(bf => s"${tf.name}: table ${tf.dataType.simpleString} " +
+              s"vs batch ${bf.dataType.simpleString}")
+        }
+        require(conflicts.isEmpty,
+          "appendEvolve: column type conflict(s) — a silent cast would " +
+            s"corrupt the corpus: ${conflicts.mkString("; ")}")
+        val added = batchSchema.filterNot(bf =>
           tableSchema.exists(_.name == bf.name))
-          .map(bf => col(bf.name)): _*)
-      val widens = batchSchema.exists(bf =>
-        !tableSchema.exists(_.name == bf.name))
-      if (widens && !isEvolved(table))
-        fsOf(evolvedMarker(table)).create(evolvedMarker(table), true).close()
-      appendBody(table, aligned, partitionBy)
+        // table columns first (their canonical order), new columns after
+        val aligned = df.select(
+          tableSchema.map { tf =>
+            if (batchSchema.exists(_.name == tf.name)) col(tf.name)
+            else org.apache.spark.sql.functions.lit(null)
+              .cast(tf.dataType).as(tf.name)
+          } ++ added.map(bf => col(bf.name)): _*)
+        val widened =
+          if (added.isEmpty) None
+          else Some(StructType(m.dataSchema ++
+            scanSchema(StructType(added)) ++
+            m.partitionSchema))
+        appendBody(table, aligned, partitionBy, widened = widened)
+        ()
     }
   }
 
@@ -1069,17 +685,17 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** EXACTLY-ONCE idempotent append — the Delta txn-version pattern
     * for `foreachBatch` sinks: the (streamId, batchId) fence rides the
-    * SAME clean commit manifest as the append (one atomic CAS commits
-    * data + fence together), and a replayed batch whose id is ≤ the
-    * recorded fence is SKIPPED. A crash between the sink commit and
-    * the checkpoint advance therefore cannot duplicate the batch: the
+    * SAME commit manifest as the append (one atomic CAS commits data +
+    * fence together), and a replayed batch whose id is ≤ the recorded
+    * fence is SKIPPED. A crash between the sink commit and the
+    * checkpoint advance therefore cannot duplicate the batch: the
     * restarted query re-delivers it, the fence rejects it. Fences are
-    * carried forward across every other writer's commits (the manifest
-    * writer preserves `txn=` records), so interleaved non-streaming
-    * mutations never re-open the replay window. Batch ids must be
-    * monotonically increasing per stream (the Structured Streaming
-    * contract). Returns true when the batch appended, false when the
-    * fence skipped a replay.
+    * carried forward across every other writer's commits (every
+    * manifest copies the head's `txn=` records), so interleaved
+    * non-streaming mutations never re-open the replay window. Batch ids
+    * must be monotonically increasing per stream (the Structured
+    * Streaming contract). Returns true when the batch appended, false
+    * when the fence skipped a replay.
     */
   def appendExactlyOnce(table: String, df: DataFrame, streamId: String,
                         batchId: Long,
@@ -1088,7 +704,6 @@ final class TableStore(spark: SparkSession, root: String,
       "streamId must be a non-empty single-line token")
     require(batchId >= 0, s"batchId >= 0, got $batchId")
     retryCommit {
-      settleOrRecover(table)
       val fence = lastTxn(table, streamId)
       if (fence >= batchId) false
       else {
@@ -1114,15 +729,14 @@ final class TableStore(spark: SparkSession, root: String,
              tieBreak: Seq[String], partitionBy: Seq[String] = Nil): Unit =
     retryCommit {
       // the anti-join's table read happens INSIDE the retry: a retry
-      // after a commit collision re-lists and re-reads the winner's
-      // generation, so already-inserted keys are seen and skipped
-      settleOrRecover(table)
+      // after a commit collision re-reads the winner's generation, so
+      // already-inserted keys are seen and skipped
       if (!exists(table)) {
         appendBody(table, Upsert.dedupByKey(incoming, keys, tieBreak),
           partitionBy)
       } else {
-        // frame built INSIDE the by-name argument: its table listing
-        // runs under appendBody's CAS anchor
+        // frame built INSIDE the by-name argument: it pins the head
+        // under appendBody's CAS anchor
         appendBody(table, {
           val existing = read(table)
           Upsert.newRows(existing, incoming, keys, tieBreak)
@@ -1158,7 +772,6 @@ final class TableStore(spark: SparkSession, root: String,
       // side, or this batch re-inserts its dups; building the frame
       // under appendBody's CAS anchor closes the same window against
       // commits that land while THIS attempt derives
-      settleOrRecover(table)
       var out: DataFrame = null
       try {
         appendBody(table, {
@@ -1172,9 +785,9 @@ final class TableStore(spark: SparkSession, root: String,
           // Snapshot BEFORE the append mutates this plan's own input
           // ([[TableStore.snapshot]] rationale): the returned frame
           // must never re-run the anti-join against the table it was
-          // just appended to. Scoped persist: the table is
-          // append-only, so recompute from the pinned splits after
-          // release still yields the pre-append snapshot.
+          // just appended to. Scoped persist: appends delete no files,
+          // so recompute from the pinned splits after release still
+          // yields the pre-append snapshot.
           out = TableStore.snapshot(novel)
           out
         }, partitionBy)
@@ -1185,11 +798,10 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** Rewrite `table` without rows whose key-tuple appears in `toDelete`.
     * With `partitionCols`, only partitions holding a matching key are
-    * rewritten; partitions left empty by the delete are removed.
+    * rewritten; partitions left empty by the delete drop out.
     */
   def deleteByKeys(table: String, toDelete: DataFrame, keys: Seq[String],
                    partitionCols: Seq[String] = Nil): Unit = retryCommit {
-    settleOrRecover(table) // hitParts reads the table lazily — fix layout first
     if (partitionCols.isEmpty)
       rewriteBody(table, Upsert.antiDelete(read(table), toDelete, keys), Nil)
     else
@@ -1209,17 +821,11 @@ final class TableStore(spark: SparkSession, root: String,
     * [[deleteByKeys]]'s unpartitioned path rewrites the table).
     * Rows where `pred` is NULL are KEPT — SQL DELETE semantics.
     *
-    * Protocol (the append fence run in reverse): survivors of the
-    * affected files are staged and fenced in as `add=` entries (a
-    * crash mid-move reads as the table WITHOUT them — wholly the old
-    * generation), and the clean gen+1 manifest carries the affected
-    * files as `drop=` TOMBSTONES in the same commit CAS; reads
-    * exclude tombstoned files immediately, and the physical retire
-    * ([[settleDrops]]: archive under retention, else delete) runs
-    * right after — or at the NEXT mutation if a crash intervenes.
-    * Untouched files never move, so a concurrent [[readPinned]]
-    * stays valid. Returns the number of affected (rewritten) files;
-    * 0 = the stats proved nothing matched and nothing moved.
+    * The survivors of the affected files are written as new files and
+    * ONE commit lists them in place of the affected ones; untouched
+    * files keep their identity. Returns the number of affected
+    * (rewritten) files; 0 = the stats proved nothing matched and
+    * nothing was committed.
     *
     * With `partitionCols` the delete is partition-targeted instead
     * (the [[deleteByKeys]] machinery); returns affected partitions.
@@ -1233,13 +839,13 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   /** PREDICATE UPDATE with FILE-LEVEL targeting — `UPDATE table SET
-    * c = v WHERE pred` through the same stats-pruned
-    * tombstone-and-fence machinery as [[deleteWhere]]: files the
-    * predicate provably cannot touch never move. `assignments` values
-    * are cast to each column's EXISTING type (a predicate update must
-    * never drift the table schema); rows where `pred` is NULL are
-    * unchanged — SQL UPDATE semantics. Returns affected files (or
-    * partitions with `partitionCols`).
+    * c = v WHERE pred` through the same stats-pruned file replacement
+    * as [[deleteWhere]]: files the predicate provably cannot touch
+    * are never read. `assignments` values are cast to each column's
+    * EXISTING type (a predicate update must never drift the table
+    * schema); rows where `pred` is NULL are unchanged — SQL UPDATE
+    * semantics. Returns affected files (or partitions with
+    * `partitionCols`).
     */
   def updateWhere(table: String, pred: org.apache.spark.sql.Column,
                   assignments: Seq[(String, org.apache.spark.sql.Column)],
@@ -1248,7 +854,7 @@ final class TableStore(spark: SparkSession, root: String,
     require(assignments.nonEmpty, "updateWhere: name at least one assignment")
     require(assignments.map(_._1).distinct.size == assignments.size,
       "updateWhere: duplicate assignment targets")
-    val schema = committedSchema(table)
+    val schema = head(table).schema
     assignments.foreach { case (c, _) =>
       require(schema.exists(_.name == c),
         s"updateWhere: column $c not in ${schema.map(_.name).mkString(",")}")
@@ -1281,11 +887,11 @@ final class TableStore(spark: SparkSession, root: String,
     * cannot contain a match, so a small keyed batch merged into a
     * clustered 100 TB table moves the files holding its key range,
     * not the table. Unmatched source rows are inserted (they ride the
-    * same staged `add=` files as the rewritten survivors — one commit
-    * CAS covers updates, deletes, and inserts atomically). Source
-    * keys must be unique and non-null (checked loudly: a duplicate
-    * source key makes "the matched row's new value" ambiguous).
-    * Returns the number of table files rewritten (0 = pure insert).
+    * same new files as the rewritten survivors — one commit CAS covers
+    * updates, deletes, and inserts atomically). Source keys must be
+    * unique and non-null (checked loudly: a duplicate source key makes
+    * "the matched row's new value" ambiguous). Returns the number of
+    * table files rewritten (0 = pure insert).
     *
     * `source` must carry `keyCol` plus every column a `MergeUpdate`
     * names; inserted rows take the table's schema with NULLs for
@@ -1302,7 +908,6 @@ final class TableStore(spark: SparkSession, root: String,
             insertNotMatched: Boolean = true,
             txn: Option[(String, Long)] = None): Long = retryCommit {
     import org.apache.spark.sql.functions._
-    settleOrRecover(table)
     // exactly-once fence (the appendExactlyOnce pattern): a replayed
     // batch id at-or-below the recorded fence is SKIPPED — the fence
     // advances atomically with the merge's own commit below, and the
@@ -1342,7 +947,7 @@ final class TableStore(spark: SparkSession, root: String,
       } finally srcAll.unpersist(blocking = false)
       return 0L
     }
-    val tableSchema = committedSchema(table)
+    val tableSchema = head(table).schema
     require(tableSchema.exists(_.name == keyCol),
       s"merge: key $keyCol not in table")
     require(source.columns.contains(keyCol),
@@ -1435,26 +1040,11 @@ final class TableStore(spark: SparkSession, root: String,
     } finally srcAll.unpersist(blocking = false)
   }
 
-  /** Partition column names implied by the committed files' directory
-    * structure (empty = unpartitioned or no files); inconsistent
-    * layouts fail loudly.
-    */
-  private def partitionLayoutOf(files: Seq[String],
-                                op: String): List[String] =
-    if (files.isEmpty) Nil
-    else {
-      val shapes = files.map(_.split("/").dropRight(1)
-        .map(_.takeWhile(_ != '=')).toList).distinct
-      require(shapes.size == 1,
-        s"$op: inconsistent partition layouts: " +
-          shapes.map(_.mkString("/")).mkString(" vs "))
-      shapes.head
-    }
-
   /** The shared stats-targeted mutation engine behind [[deleteWhere]] /
-    * [[updateWhere]]: select affected files by the predicate's stats
-    * window, replace them with `transform`(affected rows), tombstone
-    * the originals. See [[deleteWhere]] for the crash protocol.
+    * [[updateWhere]] / [[merge]]: select affected files by the
+    * predicate's stats window, write `transform`(affected rows) as new
+    * files, and commit the file list with the new files in place of
+    * the affected ones.
     */
   private def predicateMutation(table: String,
                                 pred: org.apache.spark.sql.Column,
@@ -1464,113 +1054,54 @@ final class TableStore(spark: SparkSession, root: String,
                                 commitOnEmpty: Boolean = false,
                                 expectedFence: Option[(String, Long)] = None)
       : Long = {
-    settleOrRecover(table)
     require(this.exists(table), s"$op: table $table does not exist")
     require(txnUpdate.isEmpty || partitionCols.isEmpty,
       s"$op: txn fences ride the file-level commit path only")
     if (partitionCols.nonEmpty) {
-      // hit-partition frame passed BY-NAME: its listing runs under
+      // hit-partition frame passed BY-NAME: it pins the head under
       // rewriteAffectedBody's CAS anchor, never before it
       rewriteAffectedBody(table, partitionCols,
         readWhere(table, pred)
           .select(partitionCols.map(col): _*).distinct(),
         transform)
     } else {
-      val dst = hpath(table)
-      val fs = fsOf(dst)
-      settleOld(table, fs)
-      settleDrops(table, fs)
-      // capture the CAS anchor BEFORE any state read: a concurrent
-      // commit landing between a later listing and the CAS would
-      // otherwise pass the CAS with stale inputs (its files missing
-      // from `all`/`affected` — silently skipped rows, or duplicate
-      // merge inserts). Captured first, any such commit fails the CAS
-      // and the whole mutation re-derives.
-      val head0 = readManifest(table)
-      checkFence(table, head0, expectedFence)
-      val seq0 = head0.map(_.seq).getOrElse(0L)
-      val gen = head0.map(_.gen).getOrElse(0L)
-      val dstS = path(table)
-      val all = committedFiles(table, fs)
+      // the CAS anchor: every state read below derives from this head,
+      // and a commit landing after it fails the CAS and re-derives the
+      // whole mutation (no silently skipped rows, no duplicate merge
+      // inserts)
+      val head0 = head(table)
+      checkFence(table, Some(head0), expectedFence)
+      val all = head0.paths
       if (all.isEmpty && !commitOnEmpty) return 0L
       var sidecarCols: Seq[String] = Nil
       val affected: Seq[String] = readStatsSidecar(table) match {
         case None => all
         case Some(stats) =>
           sidecarCols = stats.values.flatMap(_.cols.keys).toSeq.distinct
-          val conds = read(table).filter(pred)
-            .queryExecution.optimizedPlan.collect {
-              case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-                f.condition
-            }
+          val conds = conditions(read(table).filter(pred))
           all.filter(rel => stats.get(rel).forall(pf =>
             conds.forall(c => FileStats.mayMatch(c, pf))))
       }
       if (affected.isEmpty && !commitOnEmpty) return 0L
-      // a PARTITIONED layout must be preserved: survivors are written
-      // with the same partitionBy (derived from the dir structure the
-      // files live in), so replacement files land INSIDE partition
-      // dirs — a flat write would leave mixed root/partition files
-      // and break partition discovery
-      val layoutCols: Seq[String] = partitionLayoutOf(all, op)
-      val tmp = freshStaging(table, "__add")
-      try {
-        // `commitOnEmpty` with no affected files still runs transform
-        // (over zero rows) — merge's insert-only case commits its
-        // inserts under THIS anchor, so a key committed concurrently
-        // can never be insert-duplicated by a stale no-match decision
-        val affectedFrame =
-          if (affected.isEmpty) read(table).limit(0)
-          else rd(table).option("basePath", dstS)
-            .parquet(affected.map(r => s"$dstS/$r"): _*)
-        val survivors = transform(affectedFrame)
-        val w0 = survivors.write.mode(SaveMode.Overwrite)
-        (if (layoutCols.isEmpty) w0 else w0.partitionBy(layoutCols: _*))
-          .parquet(tmp.toString)
-        var incoming = dataFiles(fs, tmp)
-        if (incoming.isEmpty && affected.size == all.size) {
-          // every row deleted: keep one empty schema-bearing file so
-          // the settled table still reads (with its schema) as empty
-          survivors.repartition(1).write.mode(SaveMode.Overwrite)
-            .parquet(tmp.toString)
-          incoming = dataFiles(fs, tmp)
-        }
-        beforeBeginCommit()
-        // retention inventory BEFORE any commit: the outgoing
-        // generation still owns every affected file here (a lost CAS
-        // leaves an orphan snapshot that the retry overwrites)
-        snapBeforeMutation(table, fs)
-        if (incoming.isEmpty) {
-          // no surviving bytes to move: the tombstone commit IS the CAS
-          writeManifest(table, gen + 1, swapping = false, Nil,
-            expectedPrev = Some(seq0), txnUpdate = txnUpdate,
-            drops = affected)
-          fs.delete(tmp, true)
-        } else {
-          writeManifest(table, gen, swapping = true, Nil, Nil, Map.empty,
-            adds = incoming, tmpName = Some(tmp.getName),
-            expectedPrev = Some(seq0))
-          var moves = 0
-          incoming.foreach { rel =>
-            val to = sub(dst, rel)
-            fs.mkdirs(to.getParent)
-            moves += 1; swapFault(moves)
-            fs.rename(sub(tmp, rel), to)
-          }
-          commitManifest(table, gen + 1, seq0 + 1, txnUpdate = txnUpdate,
-            drops = affected)
-          fs.delete(tmp, true)
-        }
-        settleFault()
-        settleDrops(table, fs)
-        if (retainGenerations > 0) vacuum(table, keepLast = retainGenerations)
-        // keep skipping fresh: drop tombstoned entries, stat survivors
-        // (the NEXT targeted delete would otherwise conservatively
-        // rewrite every statless survivor file)
-        if (sidecarCols.nonEmpty) analyzeIncremental(table, sidecarCols)
-      } catch {
-        case e: ConcurrentCommitException => fs.delete(tmp, true); throw e
-      }
+      // `commitOnEmpty` with no affected files still runs transform
+      // (over zero rows) — merge's insert-only case commits its
+      // inserts under THIS anchor, so a key committed concurrently can
+      // never be insert-duplicated by a stale no-match decision. A
+      // partitioned layout is preserved: the new files are written
+      // with the table's partition columns.
+      val affectedFrame =
+        if (affected.isEmpty) read(table).limit(0)
+        else scan(table, head0, affected)
+      val incoming = stage(table, transform(affectedFrame),
+        head0.partitionCols, compact = false)
+      val gone = affected.toSet
+      commit(table, Some(head0),
+        head0.files.filterNot(f => gone(f._1)) ++ incoming,
+        head0.partitionCols, head0.schema, incoming, txnUpdate)
+      // keep skipping fresh: drop replaced entries, stat the new files
+      // (the NEXT targeted delete would otherwise conservatively
+      // rewrite every statless file)
+      if (sidecarCols.nonEmpty) analyzeIncremental(table, sidecarCols)
       affected.size.toLong
     }
   }
@@ -1583,7 +1114,6 @@ final class TableStore(spark: SparkSession, root: String,
   def updateFlag(table: String, keysDf: DataFrame, keys: Seq[String],
                  flagCol: String, value: Int,
                  partitionCols: Seq[String] = Nil): Unit = retryCommit {
-    settleOrRecover(table) // hitParts reads the table lazily — fix layout first
     import org.apache.spark.sql.functions._
     def flip(df: DataFrame): DataFrame =
       df.join(keysDf.select(keys.map(col): _*).distinct()
@@ -1606,11 +1136,9 @@ final class TableStore(spark: SparkSession, root: String,
     * Partitioned tables rewrite ONLY the partitions holding more than
     * `maxFiles` part-files (found with one metadata-cheap
     * `input_file_name` aggregation), one output file per partition
-    * value, through the same per-partition temp-swap as
-    * [[rewriteAffected]] — contents unchanged, untouched partitions
-    * never move, a crash leaves each partition wholly old or new.
-    * Unpartitioned tables rewrite into `targetFiles` files via the
-    * [[rewrite]] temp-swap.
+    * value, through [[rewriteAffected]] — contents unchanged,
+    * untouched partitions keep their files. Unpartitioned tables
+    * rewrite into `targetFiles` files via [[rewrite]].
     *
     * `sortBy` additionally CLUSTERS each written file on the given
     * columns (`sortWithinPartitions` — no extra exchange beyond the
@@ -1624,7 +1152,6 @@ final class TableStore(spark: SparkSession, root: String,
   def compact(table: String, partitionCols: Seq[String] = Nil,
               maxFiles: Int = 1, targetFiles: Int = 8,
               sortBy: Seq[String] = Nil): Unit = retryCommit {
-    settleOrRecover(table)
     import org.apache.spark.sql.functions._
     // the dynamic-partition writer inserts its own task-local sort on
     // the partition columns; prefixing them keeps that sort satisfied
@@ -1642,8 +1169,8 @@ final class TableStore(spark: SparkSession, root: String,
       // before the aggregate; the scan reads no data columns (footer
       // metadata + partition values only)
       // repartition BY the partition columns: each partition value
-      // lands wholly in one task, so each swapped dir gets one file;
-      // the hit frame is by-name — listed under the body's CAS anchor
+      // lands wholly in one task, so each rewritten partition gets one
+      // file; the hit frame is by-name — it pins the body's CAS anchor
       rewriteAffectedBody(table, partitionCols,
         read(table)
           .select(partitionCols.map(col) :+ input_file_name().as("__f"): _*)
@@ -1675,7 +1202,6 @@ final class TableStore(spark: SparkSession, root: String,
   def compactZOrder(table: String, zCols: Seq[String],
                     targetFiles: Int = 8,
                     partitionCols: Seq[String] = Nil): Unit = retryCommit {
-    settleOrRecover(table)
     import org.apache.spark.sql.functions._
     def clustered(df: DataFrame): DataFrame = {
       val z = ZOrder.zColumn(df, zCols)
@@ -1701,12 +1227,10 @@ final class TableStore(spark: SparkSession, root: String,
     }
   }
 
-  /** Full-table rewrite via temp dir + rename through the table's
-    * FileSystem (single writer), manifest-fenced: `state=swapping` is
-    * recorded before the first rename and the generation commits only
-    * after the swap, so a crash between the two renames (the window on
-    * stores without atomic dir rename) still [[read]]s as wholly the
-    * old table — never missing, never mixed.
+  /** Full-table rewrite: the frame's files are written into a fresh
+    * commit directory and the commit lists ONLY them, so the table is
+    * wholly the old generation until the CAS and wholly the new one
+    * after it — never missing, never mixed.
     *
     * Returns the COMMITTED generation from this rewrite's own commit
     * CAS (see [[append]] — a post-call `generations().last` can race
@@ -1717,85 +1241,41 @@ final class TableStore(spark: SparkSession, root: String,
     // preSized: a public rewrite loads EXACTLY the caller's frame —
     // its partitioning (a repartitionByRange clustering, a bucketing
     // precursor) is deliberate layout, not accidental fragmentation,
-    // so staging compaction keeps out; append/upsert/merge layouts
+    // so write-time compaction keeps out; append/upsert/merge layouts
     // are store-owned and do compact
     retryCommit(rewriteBody(table, df, partitionBy, preSized = true))
 
   /** `df` BY-NAME for the same reason as [[appendBody]]: a rewrite
     * derived from the table's own state (deleteByKeys, updateFlag,
-    * compact) must list files AFTER the CAS anchor.
-    *
-    * `preCommit` runs AFTER the begin-commit CAS claims the sequence
-    * (swap lock held — no competing writer can commit) and BEFORE any
-    * live-tree rename: side-effect writes that must pair atomically
-    * with this commit (a rollup's folded-file sidecar) go here, where
-    * a concurrent loser can never clobber them. A failure inside it
-    * leaves a swapping manifest with zero renames done — recover()
-    * rolls back cleanly and the orphan side effect is overwritten on
-    * the next attempt.
+    * compact) must pin the head AFTER the CAS anchor.
     */
   private def rewriteBody(table: String, df: => DataFrame,
                           partitionBy: Seq[String],
                           txnUpdate: Option[(String, Long)] = None,
                           expectedFence: Option[(String, Long)] = None,
-                          preCommit: () => Unit = () => (),
                           preSized: Boolean = false): Long = {
-    settleOrRecover(table)
-    val dst = hpath(table)
-    val tmp = freshStaging(table, "__tmp")
-    val bak = new Path(path(table) + "__old")
-    val fs = fsOf(dst)
-    settleOld(table, fs) // archive (not delete) a post-commit leftover
-    settleDrops(table, fs) // physically retire committed tombstones
-    // CAS anchor BEFORE the staging write: the write EXECUTES the
-    // caller's frame (and its file listing) — state reads after this
-    // line are covered by the CAS, reads before it are not
+    // CAS anchor BEFORE the write: the write EXECUTES the caller's
+    // frame — state reads after this line are covered by the CAS,
+    // reads before it are not
     val head0 = readManifest(table)
     checkFence(table, head0, expectedFence)
-    val seq0 = head0.map(_.seq).getOrElse(0L)
-    val gen = head0.map(_.gen).getOrElse(0L)
-    val frame = df // by-name: construct ONCE (listing anchors here)
-    val w = frame.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.toString)
+    val frame = df // by-name: construct ONCE (pins the head here)
     // callers that SIZE their output deliberately (compact/z-order's
-    // targetFiles) opt out of staging compaction
-    if (!preSized) compactStaging(tmp, fs, partitionBy, Some(frame.schema))
-    try {
-      // a first-time rewrite has no committed copy to fall back to: the
-      // whole table is `fresh` (rollback = delete), not a swapped dir
-      val firstTime = !fs.exists(dst)
-      beforeBeginCommit()
-      writeManifest(table, gen, swapping = true,
-        if (firstTime) Nil else Seq(""),
-        if (firstTime) Seq("") else Nil,
-        // committed file inventory, recorded while dst is still intact
-        if (firstTime) Map.empty else Map("" -> dataFiles(fs, dst)),
-        tmpName = Some(tmp.getName), expectedPrev = Some(seq0))
-      preCommit() // sequence claimed: paired side effects are exclusive
-      snapBeforeMutation(table, fs) // retention: outgoing-gen inventory
-      if (!firstTime) fs.rename(dst, bak)
-      swapFault(1)
-      fs.rename(tmp, dst)
-      swapFault(2)
-      commitManifest(table, gen + 1, seq0 + 1, txnUpdate)
-      disposeOld(table, bak, gen, fs)
-    } catch {
-      case e: ConcurrentCommitException => fs.delete(tmp, true); throw e
-    }
-    gen + 1
+    // targetFiles) opt out of write-time compaction
+    val files = stage(table, frame, partitionBy, compact = !preSized)
+    commit(table, head0, files, partitionBy,
+      scanSchema(frame.schema), files, txnUpdate)
   }
 
-  /** Rewrite ONLY the partitions in `hitParts`, write-then-swap:
-    * the transformed rows land in a sibling `<table>__tmp` first (the
-    * live table is never an input AND an output of the same job, so no
-    * lineage break is needed — and nothing fault-tolerance-critical
-    * lives in executor storage, unlike a `localCheckpoint` pivot), then
-    * each written partition dir is swapped into place with per-dir
-    * `FileSystem.rename`. A crash leaves every partition wholly old or
-    * wholly new — the same temp-swap guarantee as [[rewrite]], at
-    * partition granularity. Affected partitions the transform emptied
-    * are deleted; untouched partition dirs never move.
+  /** Rewrite ONLY the partitions in `hitParts`: the transformed rows
+    * of those partitions are written as new files and the commit lists
+    * them in place of every file of the hit partitions. The live table
+    * is never an input AND an output of the same job (the new files go
+    * to their own commit directory), so no lineage break is needed.
+    * Hit partitions the transform emptied drop out; untouched
+    * partitions keep their files; rows the transform moves into other
+    * partition values (a flag flip ON a partition column) land next to
+    * those partitions' existing files.
     */
   private[sources] def rewriteAffected(table: String,
                                        partitionCols: Seq[String],
@@ -1812,19 +1292,13 @@ final class TableStore(spark: SparkSession, root: String,
                                   partitionCols: Seq[String],
                                   hitParts: => DataFrame,
                                   transform: DataFrame => DataFrame): Long = {
-    settleOrRecover(table)
-    val dst = hpath(table)
-    val tmp = freshStaging(table, "__tmp")
-    val bak = new Path(path(table) + "__old")
-    val fs = fsOf(dst)
-    settleOld(table, fs) // archive (not delete) a post-commit leftover
-    settleDrops(table, fs) // physically retire committed tombstones
-    // CAS anchor BEFORE the hit-partition collect and the staging
-    // write: both read table state, and a commit landing after either
-    // must fail the CAS, not slide under it
-    val head0 = readManifest(table)
-    val seq0 = head0.map(_.seq).getOrElse(0L)
-    val gen = head0.map(_.gen).getOrElse(0L)
+    // CAS anchor BEFORE the hit-partition collect and the write: both
+    // read table state, and a commit landing after either must fail
+    // the CAS, not slide under it
+    val head0 = head(table)
+    require(head0.partitionCols == partitionCols,
+      s"table $table is partitioned by [${head0.partitionCols.mkString("/")}]," +
+        s" not [${partitionCols.mkString("/")}]")
     val affected = hitParts.collect()
     if (affected.isEmpty) return 0L
     val affectedDf = broadcast(
@@ -1832,87 +1306,22 @@ final class TableStore(spark: SparkSession, root: String,
         hitParts.schema))
     val updated = transform(
       read(table).join(affectedDf, partitionCols, "left_semi"))
-    // phase 1: job output goes to the tmp sibling; a failure anywhere
-    // in here leaves the live table byte-identical
-    updated.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(tmp.toString)
-    try {
-
-    // leaf partition dirs the job actually wrote (a transform may also
-    // emit rows into partition values outside `affected`, e.g. a flag
-    // flip on a partition column; one that empties a partition writes
-    // no dir at all)
-    val written = leafDirs(fs, tmp, partitionCols.length, "").toSet
-    val affectedRels = affected.map { row =>
-      partitionCols.zipWithIndex.map { case (c, i) =>
-        val v = row.get(i)
-        val s = if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-                else ExternalCatalogUtils.escapePathName(v.toString)
-        s"${ExternalCatalogUtils.escapePathName(c)}=$s"
-      }.mkString("/")
-    }.toSet
-    val emptied = affectedRels -- written
-
-    // manifest fence: record the touched dirs BEFORE the first rename;
-    // until the clean generation-bump manifest lands after the last
-    // rename, reads resolve every touched dir to its __old copy — a
-    // crash anywhere in phase 2 reads as wholly the old generation.
-    // Written dirs with NO committed copy in the live table (a brand-new
-    // partition value, e.g. a flag flip ON a partition column) go in as
-    // `fresh`: they have no __old to restore, so rollback deletes them
-    // and crash-window reads exclude them
-    val freshRels = written.filter(rel => !fs.exists(new Path(dst, rel)))
-    val touchedCommitted = ((written -- freshRels) ++ emptied).toSeq.sorted
-    beforeBeginCommit()
-    writeManifest(table, gen, swapping = true,
-      touchedCommitted,
-      freshRels.toSeq.sorted,
-      // committed file inventory per touched dir, recorded while every
-      // live dir is still intact (before the first rename)
-      touchedCommitted.map(rel =>
-        rel -> dataFiles(fs, new Path(dst, rel))).toMap,
-      tmpName = Some(tmp.getName), expectedPrev = Some(seq0))
-    snapBeforeMutation(table, fs) // retention: outgoing-gen inventory
-
-    // phase 2: per-partition swap. Old data moves to the OUTSIDE
-    // sibling `__old` (an `…__old` dir inside the table would read as
-    // a bogus partition value if a crash stranded it), new dir renames
-    // in — each dir is old or new at every instant, never truncated.
-    var swaps = 0
-    written.foreach { rel =>
-      val cur = new Path(dst, rel)
-      val old = new Path(bak, rel)
-      if (fs.exists(cur)) {
-        fs.mkdirs(old.getParent)
-        fs.rename(cur, old)
-      }
-      swaps += 1; swapFault(swaps)
-      fs.mkdirs(cur.getParent)
-      fs.rename(new Path(tmp, rel), cur)
+    val incoming = stage(table, updated, partitionCols, compact = false)
+    // every file of a hit partition leaves the list: compare the typed
+    // partition values the read itself resolves, not path strings
+    val toRow =
+      CatalystTypeConverters.createToScalaConverter(head0.partitionSchema)
+    val values = partitionValues(table, head0.paths.map(partitionDir),
+      Some(head0.partitionSchema))._2
+    val hit = affected.toSet[Row]
+    val kept = head0.files.filterNot { case (rel, _) =>
+      hit(toRow(values(partitionDir(rel))).asInstanceOf[Row])
     }
-    // affected partitions the transform emptied: moved aside, not
-    // deleted, so rollback can restore them; cleanup removes __old
-    emptied.foreach { rel =>
-      val cur = new Path(dst, rel)
-      if (fs.exists(cur)) {
-        val old = new Path(bak, rel)
-        fs.mkdirs(old.getParent)
-        fs.rename(cur, old)
-      }
-      swaps += 1; swapFault(swaps)
-    }
-    commitManifest(table, gen + 1, seq0 + 1)
-    fs.delete(tmp, true)
-    disposeOld(table, bak, gen, fs)
-    } catch {
-      case e: ConcurrentCommitException => fs.delete(tmp, true); throw e
-    }
+    commit(table, Some(head0), kept ++ incoming, partitionCols, head0.schema,
+      incoming)
     affected.length.toLong
   }
 
-  /** Leaf partition dirs (relative `col=v/...` paths) `depth` levels
-    * under `base`.
-    */
   // ------------------------------------------------- file statistics
 
   private def statsPath(table: String) =
@@ -1953,9 +1362,6 @@ final class TableStore(spark: SparkSession, root: String,
   def analyze(table: String, statsCols: Seq[String],
               bloomCols: Seq[String], bloomBits: Int = 8192): Unit = {
     require(statsCols.nonEmpty, "analyze: name at least one column")
-    require(readManifest(table).forall(!_.swapping),
-      s"table $table: crashed swap pending — run recover()/a mutation " +
-        "before analyze")
     val stats = statsOf(readPinned(table), table, statsCols, bloomCols,
       bloomBits)
     writeStatsSidecar(table, stats)
@@ -2161,15 +1567,12 @@ final class TableStore(spark: SparkSession, root: String,
                          bloomCols: Seq[String],
                          bloomBits: Int = 8192): Unit = {
     require(statsCols.nonEmpty, "analyzeIncremental: name at least one column")
-    require(readManifest(table).forall(!_.swapping),
-      s"table $table: crashed swap pending — run recover()/a mutation " +
-        "before analyze")
-    val fs = fsOf(hpath(table))
     val prior = readStatsSidecar(table) match {
       case Some(st) => st
       case None     => analyze(table, statsCols, bloomCols, bloomBits); return
     }
-    val current = committedFiles(table, fs)
+    val m = head(table)
+    val current = m.paths
     val currentSet = current.toSet
     val missing = current.filterNot(prior.contains)
     val live = prior.view.filterKeys(currentSet).toMap
@@ -2178,10 +1581,7 @@ final class TableStore(spark: SparkSession, root: String,
         writeStatsSidecar(table, live)
       return
     }
-    val dstS = path(table)
-    val delta = statsOf(
-      rd(table).option("basePath", dstS)
-        .parquet(missing.map(r => s"$dstS/$r"): _*),
+    val delta = statsOf(scan(table, m, missing),
       table, statsCols, bloomCols, bloomBits)
     writeStatsSidecar(table, live ++ delta)
   }
@@ -2204,13 +1604,7 @@ final class TableStore(spark: SparkSession, root: String,
     // fails to open/parse logs one warning per table.
     try {
       if (!fs.exists(sp)) None
-      else {
-        val in = fs.open(sp)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        Some(FileStats.deserialize(txt))
-      }
+      else Some(FileStats.deserialize(readText(sp)))
     } catch {
       case scala.util.control.NonFatal(e) =>
         if (TableStore.sidecarWarned.add(sp.toString))
@@ -2223,42 +1617,40 @@ final class TableStore(spark: SparkSession, root: String,
     }
   }
 
+  /** The predicate's RESOLVED, constant-folded form: analyze+optimize
+    * the filtered frame (driver-side, no job) and collect every Filter
+    * condition — typed literals, no unresolved nodes, the optimizer's
+    * implied-IsNotNull conjuncts included. A predicate the optimizer
+    * folds away entirely leaves no Filter: no pruning.
+    */
+  private def conditions(filtered: DataFrame) =
+    filtered.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition
+    }
+
   /** Predicate read with FILE-LEVEL skipping: files whose analyzed
     * [min,max]/null stats prove the predicate empty are excluded from
     * the scan — no task, no footer read — and the full predicate is
     * re-applied to the survivors, so pruning is invisible to results.
     * Files without stats (appended since the last [[analyze]], or a
     * column the analyze didn't cover) are always scanned. With no
-    * sidecar, or under a crashed swap, this is exactly
-    * `read(table).filter(pred)`.
+    * sidecar this is exactly `read(table).filter(pred)`.
     */
   def readWhere(table: String, pred: org.apache.spark.sql.Column): DataFrame = {
-    def plain = read(table).filter(pred)
-    if (readManifest(table).exists(_.swapping)) return plain
+    val m = head(table)
+    val plain = scan(table, m, m.paths).filter(pred)
     val stats = readStatsSidecar(table) match {
-      case Some(st) => st
-      case None     => return plain
+      case Some(st) if m.files.nonEmpty => st
+      case _                            => return plain
     }
-    val fs = fsOf(hpath(table))
-    val files = committedFiles(table, fs)
-    if (files.isEmpty) return plain
-    // the predicate's RESOLVED, constant-folded form: analyze+optimize
-    // the filtered frame (driver-side, no job) and collect every
-    // Filter condition — typed literals, no unresolved nodes, the
-    // optimizer's implied-IsNotNull conjuncts included. A predicate
-    // the optimizer folds away entirely leaves no Filter: no pruning.
-    val conds = plain.queryExecution.optimizedPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-    }
-    val kept = files.filter(rel =>
+    val conds = conditions(plain)
+    val kept = m.paths.filter(rel =>
       stats.get(rel).forall(pf =>
         conds.forall(c => FileStats.mayMatch(c, pf))))
-    if (kept.size == files.size) plain
+    if (kept.size == m.files.size) plain
     else if (kept.isEmpty) plain.limit(0) // no file can match
-    else rd(table).option("basePath", path(table))
-      .parquet(kept.map(r => s"${path(table)}/$r"): _*)
-      .filter(pred)
+    else scan(table, m, kept).filter(pred)
   }
 
   /** Predicate COUNT answered from METADATA wherever the stats sidecar
@@ -2272,10 +1664,10 @@ final class TableStore(spark: SparkSession, root: String,
     * ALL/NONE proofs are [[FileStats.allMatch]]/[[FileStats.mayMatch]]
     * (both conservative, SQL null semantics), and stale-stats files
     * simply classify BOUNDARY and get read. Falls back to a plain
-    * filtered count with no sidecar, under a live swap, or when the
-    * optimizer folds the predicate away entirely (no Filter conjuncts
-    * to prove against — including a literal-false predicate whose
-    * plan collapses to an empty relation).
+    * filtered count with no sidecar, or when the optimizer folds the
+    * predicate away entirely (no Filter conjuncts to prove against —
+    * including a literal-false predicate whose plan collapses to an
+    * empty relation).
     */
   def countWhere(table: String, pred: org.apache.spark.sql.Column): Long =
     countWhereDetail(table, pred)._1
@@ -2286,20 +1678,16 @@ final class TableStore(spark: SparkSession, root: String,
   private[graft] def countWhereDetail(
       table: String, pred: org.apache.spark.sql.Column)
       : (Long, Int, Int, Int) = {
-    def plain = read(table).filter(pred)
+    val m = head(table)
+    val plain = scan(table, m, m.paths).filter(pred)
     def fallback = (plain.count(), 0, 0, -1)
-    if (readManifest(table).exists(_.swapping)) return fallback
     val stats = readStatsSidecar(table) match {
       case Some(st) => st
       case None     => return fallback
     }
-    val fs = fsOf(hpath(table))
-    val files = committedFiles(table, fs)
+    val files = m.paths
     if (files.isEmpty) return (0L, 0, 0, 0)
-    val conds = plain.queryExecution.optimizedPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-    }
+    val conds = conditions(plain)
     // no Filter left: the optimizer folded the predicate — true AND
     // false both land here, so the metadata path cannot distinguish
     // them; execute the plain count (correctness over cleverness)
@@ -2313,9 +1701,7 @@ final class TableStore(spark: SparkSession, root: String,
     val metaCount = provedAll.map(stats(_).rows).sum
     val scanCount =
       if (scanned.isEmpty) 0L
-      else rd(table).option("basePath", path(table))
-        .parquet(scanned.map(r => s"${path(table)}/$r"): _*)
-        .filter(pred).count()
+      else scan(table, m, scanned).filter(pred).count()
     (metaCount + scanCount, provedAll.size, provedNone.size,
       scanned.size)
   }
@@ -2349,7 +1735,8 @@ final class TableStore(spark: SparkSession, root: String,
       valueCol: String): (TableStore.AggWhere, Int, Int, Int) = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val schema = committedSchema(table)
+    val m = head(table)
+    val schema = m.schema
     require(schema.exists(_.name == valueCol),
       s"aggWhere: column $valueCol not in " +
         schema.map(_.name).mkString(","))
@@ -2375,22 +1762,17 @@ final class TableStore(spark: SparkSession, root: String,
         sm.getOrElse(java.math.BigDecimal.ZERO), mn,
         Option(r.getAs[java.math.BigDecimal](3)))
     }
-    def fallback = (aggOf(read(table).filter(pred)), 0, 0, -1)
-    if (readManifest(table).exists(_.swapping)) return fallback
+    val plain = scan(table, m, m.paths).filter(pred)
+    def fallback = (aggOf(plain), 0, 0, -1)
     val stats = readStatsSidecar(table) match {
       case Some(st) => st
       case None     => return fallback
     }
-    val fs = fsOf(hpath(table))
-    val files = committedFiles(table, fs)
+    val files = m.paths
     if (files.isEmpty)
       return (TableStore.AggWhere(0L, java.math.BigDecimal.ZERO, None,
         None), 0, 0, 0)
-    val conds = read(table).filter(pred)
-      .queryExecution.optimizedPlan.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition
-      }
+    val conds = conditions(plain)
     if (conds.isEmpty) return fallback
     // a proved-all file is metadata-usable only with a recorded sum
     // for valueCol (all-null files carry sum 0)
@@ -2413,16 +1795,14 @@ final class TableStore(spark: SparkSession, root: String,
         TableStore.minOpt(acc.min, bd(cs.min)),
         TableStore.maxOpt(acc.max, bd(cs.max)))
     }
-    val scan =
+    val scanAgg =
       if (scanned.isEmpty)
         TableStore.AggWhere(0L, java.math.BigDecimal.ZERO, None, None)
-      else aggOf(rd(table).option("basePath", path(table))
-        .parquet(scanned.map(r => s"${path(table)}/$r"): _*)
-        .filter(pred))
-    (TableStore.AggWhere(meta.count + scan.count,
-      meta.sum.add(scan.sum),
-      TableStore.minOpt(meta.min, scan.min),
-      TableStore.maxOpt(meta.max, scan.max)),
+      else aggOf(scan(table, m, scanned).filter(pred))
+    (TableStore.AggWhere(meta.count + scanAgg.count,
+      meta.sum.add(scanAgg.sum),
+      TableStore.minOpt(meta.min, scanAgg.min),
+      TableStore.maxOpt(meta.max, scanAgg.max)),
       provedAll.size, provedNone.size, scanned.size)
   }
 
@@ -2432,19 +1812,15 @@ final class TableStore(spark: SparkSession, root: String,
   private def rollupSidecar(rollup: String, seq: Long) =
     new Path(root, s"$rollup._graft_rollup.$seq")
 
-  private def readRollupSidecar(rollup: String, seq: Long): Set[String] = {
-    val p = rollupSidecar(rollup, seq)
-    val fs = fsOf(p)
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"rollup $rollup: folded-file sidecar seq $seq is missing — " +
-        "state is unrecoverable incrementally; delete the rollup table " +
-        "and refresh to rebuild")
-    val in = fs.open(p)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.split("\n").filter(_.startsWith("f=")).map(_.stripPrefix("f=")).toSet
-  }
+  /** The folded-file list committed with fence `seq`, or None when
+    * its sidecar is missing (a crash between the rollup commit and the
+    * sidecar write, or a concurrent refresh already retired it).
+    */
+  private def readRollupSidecar(rollup: String,
+                                seq: Long): Option[Set[String]] =
+    try Some(readText(rollupSidecar(rollup, seq)).split("\n")
+      .filter(_.startsWith("f=")).map(_.stripPrefix("f=")).toSet)
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** INCREMENTAL AGGREGATE MAINTENANCE — keep `rollup` equal to
     * `src.groupBy(groupCols).agg(...)` by folding in ONLY the files
@@ -2457,24 +1833,21 @@ final class TableStore(spark: SparkSession, root: String,
     *
     * Protocol (exactly-once under crashes AND concurrent refreshes,
     * the txn-fence shape): the whole derivation — fence read, folded
-    * list, delta — runs inside the commit retry, the fence value it
-    * observed is RE-VALIDATED under the rewrite's CAS anchor
-    * (`expectedFence`), and the cumulative folded-file list is
-    * written to its SEQUENCED sidecar only AFTER the begin-commit CAS
-    * claims the sequence (`preCommit`) — so two overlapping refreshes
-    * can never both fold the same delta (the loser's fence check
-    * fails and it re-derives against the winner's state, normally a
-    * no-op) and a loser can never clobber the winner's sidecar (it
-    * never reaches the claimed region). A crash between the sidecar
-    * write and the clean commit rolls back via recover(): the fence
-    * stays at the old sequence, the next refresh re-derives the same
-    * delta and overwrites the orphan sidecar; double-folding a file
-    * is impossible because the list and the fence advance together.
-    * A REWRITE/compaction of `src` (folded file names vanish from its
-    * inventory) triggers a loud full rebuild — file identity is the
-    * incremental contract, and silently treating renamed files as new
-    * would double-count every row. Returns the number of source
-    * files folded this call (0 = no-op).
+    * list, delta — runs inside the commit retry, and the fence value
+    * it observed is RE-VALIDATED under the rewrite's CAS anchor
+    * (`expectedFence`), so two overlapping refreshes can never both
+    * fold the same delta (the loser's fence check fails and it
+    * re-derives against the winner's state, normally a no-op). The
+    * cumulative folded-file list goes to a sidecar named by the new
+    * fence value, written by the one writer whose commit advanced the
+    * fence, AFTER that commit. A missing sidecar (crash between the
+    * two) makes the next refresh rebuild from the whole source — the
+    * same exact path a source rewrite takes. A REWRITE/compaction of
+    * `src` (folded file names vanish from its inventory) triggers that
+    * full rebuild too — file identity is the incremental contract, and
+    * silently treating renamed files as new would double-count every
+    * row. Returns the number of source files folded this call
+    * (0 = no-op).
     */
   def refreshRollup(src: String, rollup: String, groupCols: Seq[String],
                     aggs: Seq[(String, String, String)]): Long = {
@@ -2487,37 +1860,20 @@ final class TableStore(spark: SparkSession, root: String,
     require(this.exists(src),
       s"refreshRollup: source table $src does not exist")
     retryCommit {
-    settleOrRecover(src)
-    settleOrRecover(rollup)
-    val fs = fsOf(hpath(src))
-    val current = committedFiles(src, fs).toSet
+    val srcHead = head(src)
+    val current = srcHead.paths.toSet
     val n = lastTxn(rollup, rollupKey(src))
     afterFenceRead() // test seam: concurrent-refresh TOCTOU window
-    val folded: Set[String] =
-      if (n < 0) Set.empty
-      else try readRollupSidecar(rollup, n) catch {
-        // a concurrent refresh that advanced the fence past n also
-        // prunes the seq-n sidecar — for a stale reader that is a
-        // collision (re-derive against the new fence), not the
-        // unrecoverable-state error a genuinely missing sidecar is
-        case e: IllegalStateException =>
-          // freshness probe, not an anchored read: a concurrent
-          // refresh's commit must be visible here or a collision is
-          // misdiagnosed as corruption — bypass the head memo
-          invalidateHead(rollup)
-          val now = lastTxn(rollup, rollupKey(src))
-          if (now != n)
-            throw new ConcurrentCommitException(rollup, n, now,
-              what = s"txn fence ${rollupKey(src)}")
-          else throw e
-      }
-    val rebuild = (folded -- current).nonEmpty // src was rewritten
-    val base = if (rebuild) Set.empty[String] else folded
+    val folded =
+      if (n < 0) Some(Set.empty[String]) else readRollupSidecar(rollup, n)
+    // src rewritten (a folded file vanished) or the list lost: rebuild
+    val rebuild = folded.forall(f => (f -- current).nonEmpty)
+    val base = if (rebuild) Set.empty[String] else folded.get
     val newFiles = (current -- base).toSeq.sorted
     if (newFiles.isEmpty && !rebuild && n >= 0) 0L
     else {
     def widenSum(c: String): org.apache.spark.sql.Column =
-      committedSchema(src).find(_.name == c).map(_.dataType) match {
+      srcHead.schema.find(_.name == c).map(_.dataType) match {
         case Some(d: org.apache.spark.sql.types.DecimalType) =>
           col(c).cast(org.apache.spark.sql.types.DecimalType(38, d.scale))
         case _ => col(c)
@@ -2534,14 +1890,12 @@ final class TableStore(spark: SparkSession, root: String,
       case (o, "min", _)   => min(col(o)).as(o)
       case (o, "max", _)   => max(col(o)).as(o)
     }
-    val srcS = path(src)
     def partial(df: DataFrame): DataFrame =
       df.groupBy(groupCols.map(col): _*)
         .agg(partialAggs.head, partialAggs.tail: _*)
     val delta =
       if (newFiles.isEmpty) None
-      else Some(partial(rd(src).option("basePath", srcS)
-        .parquet(newFiles.map(r => s"$srcS/$r"): _*)))
+      else Some(partial(scan(src, srcHead, newFiles)))
     def prior =
       if (rebuild || n < 0 || !this.exists(rollup)) None
       else Some(read(rollup))
@@ -2557,180 +1911,72 @@ final class TableStore(spark: SparkSession, root: String,
       case (Some(p), None) => p // rebuild with zero files cannot happen
       case (None, None)    => partial(read(src).limit(0))
     }
-    // sidecar written INSIDE the claimed commit window (preCommit):
-    // after the begin-commit CAS no competing refresh can reach this
-    // point at the same sequence, so the winner's sidecar can never
-    // be clobbered by a stale loser — and the fence value observed
-    // above is re-validated under the same anchor (expectedFence),
-    // closing the read-fence/commit TOCTOU (double-fold) window
-    val cum = (if (rebuild) Set.empty[String] else base) ++ newFiles
-    val sp = rollupSidecar(rollup, n + 1)
     rewriteBody(rollup, combined, Nil,
       txnUpdate = Some(rollupKey(src) -> (n + 1)),
-      expectedFence = Some(rollupKey(src) -> n),
-      preCommit = () => {
-        val out = fsOf(sp).create(sp, true)
-        try out.write(cum.toSeq.sorted.map("f=" + _)
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-        finally out.close()
-      })
+      expectedFence = Some(rollupKey(src) -> n))
+    // only the writer whose commit advanced the fence to n+1 gets here,
+    // so no other writer ever writes this sidecar
+    val sp = rollupSidecar(rollup, n + 1)
+    val fs = fsOf(sp)
+    val out = fs.create(sp, true)
+    try out.write((base ++ newFiles).toSeq.sorted.map("f=" + _)
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
     // prune superseded sidecars (crash before this is harmless)
-    val done = fsOf(sp)
-    val old = done.globStatus(new Path(root, s"$rollup._graft_rollup.*"))
+    val old = fs.globStatus(new Path(root, s"$rollup._graft_rollup.*"))
     if (old != null) old.foreach { st =>
       val s = st.getPath.getName.stripPrefix(s"$rollup._graft_rollup.")
-      if (s.toLongOption.exists(_ < n + 1)) done.delete(st.getPath, false)
+      if (s.toLongOption.exists(_ < n + 1)) fs.delete(st.getPath, false)
     }
     newFiles.size.toLong
     }
     }
   }
 
-  private def leafDirs(fs: FileSystem, base: Path, depth: Int,
-                       rel: String): Seq[String] =
-    if (depth == 0) Seq(rel)
-    else fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .flatMap(s => leafDirs(fs, s.getPath, depth - 1,
-        if (rel.isEmpty) s.getPath.getName
-        else s"$rel/${s.getPath.getName}"))
-
   // ------------------------------------------- generation retention
   //
-  // Opt-in time travel (`retainGenerations > 0`): every mutation first
-  // writes a SNAPSHOT manifest (`<table>._graft_snap.<gen>`) listing
-  // the outgoing generation's complete data-file inventory, and the
-  // cleanup phase ARCHIVES replaced files (one rename of the `__old`
-  // sibling into `<table>__archive/gen=<g>/`) instead of deleting
-  // them. Because Spark part-file names are UUID-unique, every file of
-  // every generation exists at exactly one location forever — live
-  // until replaced, then in the archive of the generation whose
-  // mutation replaced it — so [[readAt]] resolves a past generation by
-  // probing archives gen..current (then the in-flight `__old`, then
-  // the live dir) per inventoried file. The archive sibling sits
-  // OUTSIDE the table dir: live scans, `dataFiles`, and the commit
-  // manifests never see it. Appends replace nothing, so a retained
-  // append costs one inventory listing and no data movement; retention
-  // is bounded — archives and snapshots older than
-  // `current − retainGenerations` are pruned at each cleanup (or
-  // explicitly via [[vacuum]]).
+  // Opt-in time travel (`retainGenerations > 0`): the retained
+  // manifests ARE the snapshots. Each lists its generation's complete
+  // file set, and a file is deleted only once no retained manifest
+  // lists it, so [[readAt]] reads a past generation exactly as its
+  // manifest describes it — with that generation's own schema.
+  // Retention is bounded: every commit retires manifests older than
+  // `current − retainGenerations` ([[expire]]), as does [[vacuum]].
 
-  private def archiveRoot(table: String) = new Path(path(table) + "__archive")
-  private def snapName(table: String) = s"$table._graft_snap."
-
-  private def writeSnap(table: String, gen: Long,
-                        files: Seq[String]): Unit = {
-    val p = new Path(root, snapName(table) + gen)
-    val fs = fsOf(p)
-    val out = fs.create(p, true) // overwrite: a rolled-back retry re-lists
-    try out.write(files.map("f=" + _).mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readSnap(table: String, gen: Long): Option[Seq[String]] = {
-    val p = new Path(root, snapName(table) + gen)
-    val fs = fsOf(p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(txt.split("\n").toSeq.filter(_.startsWith("f="))
-        .map(_.stripPrefix("f=")))
-    }
-  }
-
-  /** Record the outgoing generation's inventory (no-op when retention
-    * is off or the table does not exist yet). Call AFTER [[recover]]
-    * and BEFORE the first rename of a mutation — the live tree is
-    * still exactly the committed generation there.
-    */
-  private def snapBeforeMutation(table: String, fs: FileSystem): Unit =
-    if (retainGenerations > 0 && fs.exists(hpath(table))) {
-      val gen = readManifest(table).map(_.gen).getOrElse(0L)
-      writeSnap(table, gen, dataFiles(fs, hpath(table)))
-    }
-
-  /** Cleanup-phase disposal of the `__old` sibling: archive under the
-    * outgoing generation when retaining, delete otherwise. Prunes
-    * archives/snapshots past the retention window either way.
-    */
-  private def disposeOld(table: String, bak: Path, outgoingGen: Long,
-                         fs: FileSystem): Unit = {
-    disposeFault()
-    if (retainGenerations > 0 && fs.exists(bak)) {
-      val dest = new Path(archiveRoot(table), s"gen=$outgoingGen")
-      fs.delete(dest, true) // a rolled-back earlier attempt's leftovers
-      fs.mkdirs(dest.getParent)
-      fs.rename(bak, dest)
-    } else fs.delete(bak, true)
-    if (retainGenerations > 0)
-      vacuum(table, keepLast = retainGenerations)
-  }
-
-  /** Settle a `__old` sibling left by a crash BETWEEN a clean commit
-    * and its [[disposeOld]]: under a clean manifest the leftover holds
-    * exactly the files the last mutation replaced (outgoing generation
-    * = current − 1), so a retained store must ARCHIVE it — the
-    * unconditional delete the mutation paths previously ran here
-    * silently destroyed retained history in that window. [[readAt]]
-    * already resolves from `__old` while the leftover sits unsettled.
-    * Under a swapping manifest [[recover]] owns `__old`; no-op here.
-    */
-  private def settleOld(table: String, fs: FileSystem): Unit = {
-    val bak = new Path(path(table) + "__old")
-    if (fs.exists(bak) && readManifest(table).forall(!_.swapping)) {
-      val cur = readManifest(table).map(_.gen).getOrElse(0L)
-      disposeOld(table, bak, cur - 1, fs)
-    }
-  }
-
-  /** Drop retained generations older than the last `keepLast`:
-    * archives and snapshot manifests both. The live generation is
-    * never touched.
+  /** Drop retained generations older than the last `keepLast` (their
+    * manifests, and the files no remaining manifest lists), then
+    * delete every file under the table that no retained manifest
+    * lists ([[cleanStaging]]) — the orphans a crash before a commit
+    * CAS leaves behind. The live generation is never touched.
     */
   def vacuum(table: String, keepLast: Int): Unit = {
     require(keepLast >= 0, s"keepLast >= 0, got $keepLast")
-    val cur = readManifest(table).map(_.gen).getOrElse(0L)
-    val cutoff = cur - keepLast
-    val ar = archiveRoot(table)
-    val fs = fsOf(ar)
-    if (fs.exists(ar)) fs.listStatus(ar).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("gen=") &&
-          name.stripPrefix("gen=").toLongOption.exists(_ < cutoff))
-        fs.delete(st.getPath, true)
-    }
-    val snaps = fs.globStatus(new Path(new Path(root),
-      snapName(table) + "*"))
-    if (snaps != null) snaps.foreach { st =>
-      val g = st.getPath.getName.stripPrefix(snapName(table)).toLongOption
-      if (g.exists(_ < cutoff)) fs.delete(st.getPath, false)
+    readManifest(table).foreach { m =>
+      expire(table, m, keepLast)
+      cleanStaging(table)
     }
   }
 
-  /** Delete orphaned staging siblings (`<table>__tmp.*` /
-    * `<table>__add.*`) not referenced by the head manifest — leftovers
-    * of writers that died BEFORE their begin-commit CAS (after the
-    * CAS, [[recover]] owns cleanup via the manifest's `tmp=` record).
-    * Run only when no writer is active on the table: a LIVE writer's
-    * in-flight staging is indistinguishable from an orphan.
+  /** Delete every file and commit directory under the table that no
+    * retained manifest lists — leftovers of writers that died (or
+    * failed) BEFORE their commit CAS. Run only when no writer is
+    * active on the table: a LIVE writer's files are indistinguishable
+    * from an orphan until its commit lands.
     */
   def cleanStaging(table: String): Unit = {
-    val rootP = new Path(root)
-    val fs = fsOf(rootP)
-    val live = readManifest(table).flatMap(_.tmp).toSet
-    Seq("__tmp.*", "__add.*").foreach { pat =>
-      val st = fs.globStatus(new Path(rootP, table + pat))
-      if (st != null) st.foreach { s =>
-        if (!live.contains(s.getPath.getName)) fs.delete(s.getPath, true)
+    val fs = fsOf(hpath(table))
+    val listed = listManifests(table)
+      .flatMap(s => manifestAt(table, s._1)).flatMap(_.paths).toSet
+    val listedDirs = listed.map(commitDir)
+    if (fs.exists(hpath(table))) fs.listStatus(hpath(table)).foreach { st =>
+      val name = st.getPath.getName
+      if (!listedDirs(name)) fs.delete(st.getPath, true)
+      else dataFiles(fs, st.getPath, name).foreach { case (rel, _) =>
+        if (!listed(rel)) fs.delete(new Path(hpath(table), rel), false)
       }
     }
   }
 
-  /** Retained generations currently resolvable, ascending. */
   // ------------------------------------------------------ named tags
 
   private def tagPath(table: String, name: String) =
@@ -2753,7 +1999,7 @@ final class TableStore(spark: SparkSession, root: String,
   def tag(table: String, name: String,
           gen: Option[Long] = None): Long = {
     requireTagName(name)
-    val cur = readManifest(table).map(_.gen).getOrElse(
+    val cur = readManifest(table).map(_.seq).getOrElse(
       throw new IllegalArgumentException(s"no such table: $table"))
     val g = gen.getOrElse(cur)
     if (g != cur) readAt(table, g) // loud existence/retention probe
@@ -2778,15 +2024,9 @@ final class TableStore(spark: SparkSession, root: String,
   def tagGeneration(table: String, name: String): Option[Long] = {
     requireTagName(name)
     val p = tagPath(table, name)
-    val fs = fsOf(p)
     try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim finally in.close()
-        txt.toLongOption
-      }
+      if (!fsOf(p).exists(p)) None
+      else readText(p).trim.toLongOption
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -2818,16 +2058,16 @@ final class TableStore(spark: SparkSession, root: String,
     ()
   }
 
-  def generations(table: String): Seq[Long] = {
-    val fs = fsOf(new Path(root))
-    val snaps = fs.globStatus(new Path(new Path(root),
-      snapName(table) + "*"))
-    val past =
-      if (snaps == null) Nil
-      else snaps.toSeq.flatMap(
-        _.getPath.getName.stripPrefix(snapName(table)).toLongOption)
-    (past ++ readManifest(table).map(_.gen)).distinct.sorted
-  }
+  /** Retained generations currently resolvable, ascending. */
+  def generations(table: String): Seq[Long] =
+    listManifests(table).map(_._1).sorted
+
+  /** The retained manifest of generation `gen` (loud otherwise). */
+  private def generation(table: String, gen: Long): Manifest =
+    manifestAt(table, gen).getOrElse(
+      throw new IllegalArgumentException(
+        s"table $table: generation $gen is not retained — " +
+          "retention off, vacuumed, or never committed"))
 
   /** Time-travel read: the table exactly as of generation `asOfGen` —
     * the reproducible-corpus contract (pin the generation a training
@@ -2835,55 +2075,17 @@ final class TableStore(spark: SparkSession, root: String,
     * matter what has been upserted, deleted, or compacted since).
     * `asOfGen == current` is the live [[read]]; past generations need
     * retention ([[TableStore]] built with `retainGenerations > 0`) and
-    * fail loudly when the snapshot has been vacuumed or never existed.
-    * Resolution cost: one existence probe per inventoried file per
-    * archive generation in [gen, current) — bounded by the retention
-    * window.
+    * fail loudly when the manifest has been retired or never existed.
+    * A past generation reads with its own recorded schema; an emptied
+    * one reads back as zero rows.
     */
   def readAt(table: String, asOfGen: Long): DataFrame = {
-    val cur = readManifest(table).map(_.gen).getOrElse(0L)
+    val cur = readManifest(table).map(_.seq).getOrElse(0L)
     if (asOfGen == cur) return read(table)
     require(asOfGen < cur,
       s"table $table: generation $asOfGen is in the future (current $cur)")
-    val files = readSnap(table, asOfGen).getOrElse(
-      throw new IllegalArgumentException(
-        s"table $table: generation $asOfGen is not retained — " +
-          "retention off, vacuumed, or never committed"))
-    // a legitimately empty generation (every row deleted) must read
-    // back as zero rows, not an error; parquet files carry the schema,
-    // so an empty generation borrows the live table's (documented: a
-    // later schema-changing rewrite changes what an empty pin reads
-    // back with — there are no rows for it to matter)
-    if (files.isEmpty) return read(table).limit(0)
-    readFilesResolved(table, files, asOfGen, cur)
-  }
-
-  /** Read `files` (relative paths) of generation `asOfGen`: each file
-    * may sit in the live tree, a pending `__old` sibling, or any
-    * retained `gen=h` archive for h in [asOfGen, cur) — a file
-    * archived by a later rewrite landed under the generation it was
-    * dropped FROM. Shared by [[readAt]] and [[changesBetween]].
-    */
-  private def readFilesResolved(table: String, files: Seq[String],
-                                asOfGen: Long, cur: Long): DataFrame = {
-    val dstS = path(table)
-    val fs = fsOf(hpath(table))
-    val bases: Seq[String] =
-      (asOfGen until cur).map(h =>
-        new Path(archiveRoot(table), s"gen=$h").toString) ++
-        Seq(dstS + "__old", dstS)
-    val byBase = scala.collection.mutable.LinkedHashMap
-      .empty[String, Vector[String]]
-    files.foreach { rel =>
-      val base = bases.find(b => fs.exists(new Path(b, rel))).getOrElse(
-        throw new IllegalStateException(
-          s"table $table: file $rel of generation $asOfGen is missing " +
-            "from the live tree and every retained archive"))
-      byBase(base) = byBase.getOrElse(base, Vector.empty) :+ s"$base/$rel"
-    }
-    byBase.map { case (base, paths) =>
-      rd(table).option("basePath", base).parquet(paths: _*)
-    }.reduce(_ unionByName _)
+    val m = generation(table, asOfGen)
+    scan(table, m, m.paths)
   }
 
   /** CHANGE FEED between two committed generations: every row that is
@@ -2902,10 +2104,11 @@ final class TableStore(spark: SparkSession, root: String,
     * and re-adds the same ROWS in different files, so both sides
     * cancel and the feed is EMPTY — consumers see data changes, never
     * layout changes. (Duplicate rows are handled as multisets:
-    * going 3 copies → 1 copy feeds 2 deletes.)
+    * going 3 copies → 1 copy feeds 2 deletes.) Both sides read with
+    * the live schema.
     *
     * `fromGen`/`toGen` must be committed generations with retained
-    * inventories ([[generations]]); `toGen` may be the live one.
+    * manifests ([[generations]]); `toGen` may be the live one.
     * `fromGen == toGen` returns the empty feed.
     */
   def changesBetween(table: String, fromGen: Long, toGen: Long)
@@ -2913,27 +2116,22 @@ final class TableStore(spark: SparkSession, root: String,
     import org.apache.spark.sql.functions.lit
     require(fromGen <= toGen,
       s"changesBetween: fromGen $fromGen > toGen $toGen")
-    val cur = readManifest(table).map(_.gen).getOrElse(0L)
+    val live = head(table)
+    val cur = live.seq
     require(toGen <= cur,
       s"table $table: generation $toGen is in the future (current $cur)")
-    def filesOf(gen: Long): Seq[String] =
-      if (gen == cur) committedFiles(table, fsOf(hpath(table)))
-      else readSnap(table, gen).getOrElse(
-        throw new IllegalArgumentException(
-          s"table $table: generation $gen is not retained — " +
-            "retention off, vacuumed, or never committed"))
+    def at(gen: Long) =
+      (if (gen == cur) live else generation(table, gen))
+        .copy(schema = live.schema, partitionCols = live.partitionCols)
     val empty = read(table).limit(0)
       .withColumn("__change_type", lit("insert"))
     if (fromGen == toGen) return empty
-    val from = filesOf(fromGen).toSet
-    val to = filesOf(toGen).toSet
-    val added = (to -- from).toSeq.sorted
-    val removed = (from -- to).toSeq.sorted
-    def rowsOf(rels: Seq[String], gen: Long): DataFrame =
-      if (rels.isEmpty) read(table).limit(0)
-      else readFilesResolved(table, rels, gen, cur)
-    val ins = rowsOf(added, toGen)
-    val del = rowsOf(removed, fromGen)
+    val from = at(fromGen)
+    val to = at(toGen)
+    val fromSet = from.paths.toSet
+    val toSet = to.paths.toSet
+    val ins = scan(table, to, to.paths.filterNot(fromSet).sorted)
+    val del = scan(table, from, from.paths.filterNot(toSet).sorted)
     ins.exceptAll(del).withColumn("__change_type", lit("insert"))
       .unionByName(
         del.exceptAll(ins).withColumn("__change_type", lit("delete")))
@@ -2986,8 +2184,9 @@ object TableStore {
     * scan to the file splits planned here. Unlike `localCheckpoint`,
     * whose blocks die with their executors and can never be rebuilt,
     * lineage stays recomputable from the pre-mutation files for the
-    * whole write phase (every rewrite is write-then-swap, so the old
-    * files outlive the job that reads them).
+    * whole write phase (a mutation deletes the files it replaced only
+    * after its commit, so the old files outlive the job that reads
+    * them).
     *
     * The frame comes back `persist()`ed but lazily materialized: run
     * the durable WRITE first (its job fills the cache while the old

@@ -152,84 +152,6 @@ class ApproxStatsSpec extends SparkSpec {
       Profile.weightedMedianBucketed(df, "source", "v", "w"))
   }
 
-  test("quantileNormalizeApprox: no global window, pooled rank within grid tol") {
-    val df = docs.select($"source", $"doc_id", $"n_chars")
-    val exact = Profile.quantileNormalize(df, "source", "n_chars",
-      "doc_id").select($"doc_id", $"norm_value")
-      .as[(Long, Long)].collect().toMap
-    val aDf = Profile.quantileNormalizeApprox(df, "source", "n_chars",
-      "doc_id")
-    assertNoGlobalWindow(aDf)
-    val approx = aDf.select($"doc_id", $"norm_value")
-      .as[(Long, Long)].collect().toMap
-    assert(approx.keySet == exact.keySet)
-    // pooled CDF positions: |F(approx) - F(exact)| <= 1/gridBins + eps
-    val pooled = df.select($"n_chars".cast("long")).as[Long]
-      .collect().sorted
-    val n = pooled.length.toDouble
-    def cdf(v: Long) = pooled.count(_ <= v) / n
-    val drifts = exact.map { case (id, ev) =>
-      math.abs(cdf(approx(id)) - cdf(ev)) }
-    assert(drifts.max <= 1.0 / 1000 + 1e-4 + 2 / n,
-      s"max pooled-CDF drift ${drifts.max}")
-  }
-
-  test("rfmApprox: no global sort; grades within ±1 of NTILE on tie-free axes") {
-    // orders as transactions: custkey, a synthetic micros ts spread
-    // tie-free by orderkey, amount = totalprice
-    val tx = orders.select($"o_custkey".as("cust"),
-      ($"o_orderdate".cast("timestamp").cast("long") * 1000000L +
-        $"o_orderkey" % 86400 * 1000000L).as("ts"),
-      ($"o_totalprice" + $"o_orderkey" % 100 / 100.0).as("amt"))
-    val aDf = Segments.rfmApprox(tx, "cust", "ts", "amt")
-    assertNoGlobalWindow(aDf)
-    assert(!plan(aDf).contains("CartesianProduct"), plan(aDf))
-    val exactCells = Segments.rfm(tx, "cust", "ts", "amt")
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .map(r => (r._1, r._2, r._3) -> (r._4, r._5)).toMap
-    val approxCells = aDf
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .map(r => (r._1, r._2, r._3) -> (r._4, r._5)).toMap
-    // same customer mass, same monetary mass
-    assert(approxCells.values.map(_._1).sum ==
-      exactCells.values.map(_._1).sum)
-    assert(approxCells.values.map(_._2).sum ==
-      exactCells.values.map(_._2).sum)
-    // every approx cell is within the ±1-per-axis neighborhood of an
-    // exact cell (NTILE equal-size vs boundary-value grading)
-    val exactKeys = exactCells.keySet
-    for (k @ (r, f, m) <- approxCells.keys) {
-      val near = exactKeys.exists { case (re, fe, me) =>
-        math.abs(re - r) <= 1 && math.abs(fe - f) <= 1 &&
-          math.abs(me - m) <= 1 }
-      assert(near, s"approx cell $k has no exact cell within ±1")
-    }
-    // grade range sanity
-    assert(approxCells.keys.forall { case (r, f, m) =>
-      Seq(r, f, m).forall(g => g >= 1 && g <= 5) })
-  }
-
-  test("activityDecilesApprox: no global sort; mass conserved, deciles track") {
-    val ev = events.select($"user_id", $"event_type",
-      ($"value" * 100).cast("long").as("cents"))
-    val aDf = Segments.activityDecilesApprox(ev, "user_id",
-      "event_type", "cents")
-    assertNoGlobalWindow(aDf)
-    val exact = Segments.activityDeciles(ev, "user_id", "event_type",
-      "cents").as[(Long, Long, Long, Long, Long)].collect()
-    val approx = aDf.as[(Long, Long, Long, Long, Long)].collect()
-    assert(approx.map(_._2).sum == exact.map(_._2).sum) // users
-    assert(approx.map(_._3).sum == exact.map(_._3).sum) // events
-    assert(approx.map(_._4).sum == exact.map(_._4).sum) // cents
-    assert(approx.forall(r => r._1 >= 1 && r._1 <= 10))
-    // decile 1 (most active) must hold at least the exact decile-1
-    // user count minus the tie slack: activity counts tie heavily, so
-    // only assert the top decile's mean activity dominates the bottom
-    val top = approx.minBy(_._1); val bot = approx.maxBy(_._1)
-    assert(top._3.toDouble / top._2 >= bot._3.toDouble / bot._2,
-      s"decile 1 mean activity below bottom decile")
-  }
-
   test("equiDepthBinsApprox: windowless; mass conserved, sizes track exact") {
     val df = orders.select($"o_custkey".cast("string").as("seg"),
       ($"o_totalprice" * 100).cast("long").as("v"), $"o_orderkey")

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Predicate delete with file-level targeting: only files whose stats
-  * window may match are rewritten; tombstoned files disappear from
-  * reads atomically with the commit and are physically retired by the
-  * settle; NULL predicates keep rows (SQL DELETE semantics).
+  * window may match are rewritten; replaced files leave the live file
+  * list in the same commit that lists their survivors; NULL predicates
+  * keep rows (SQL DELETE semantics).
   */
 class DeleteWhereSpec extends SparkSpec {
   import spark.implicits._
@@ -19,6 +19,11 @@ class DeleteWhereSpec extends SparkSpec {
 
   private def names(ts: TableStore): Set[String] =
     ts.read("t").inputFiles.map(_.split("/").last).toSet
+
+  /** Live part-file names of one partition. */
+  private def files(ts: TableStore, day: String): Set[String] =
+    ts.read("t").inputFiles.filter(_.contains(s"/day=$day/"))
+      .map(_.split("/").last).toSet
 
   test("stats-targeted: only files that may match are rewritten") {
     val (ts, _) = fresh()
@@ -62,35 +67,6 @@ class DeleteWhereSpec extends SparkSpec {
     // table remains fully mutable afterwards
     ts.append("t", Seq(7L).toDF("k"))
     assert(ts.read("t").as[Long].collect().toSeq == Seq(7L))
-  }
-
-  test("crash before settle: tombstones exclude files from every read path; next mutation settles") {
-    val (ts, root) = fresh()
-    ts.rewrite("t", spark.range(100).toDF("k").repartitionByRange(2, $"k"))
-    ts.analyze("t", Seq("k"))
-    val before = names(ts)
-    // a REAL deleteWhere that dies after its tombstone commit, before
-    // the physical settle
-    ts.failBeforeSettle = true
-    intercept[IllegalStateException] {
-      ts.deleteWhere("t", $"k" < 10)
-    }
-    ts.failBeforeSettle = false
-    // the commit happened: reads exclude the affected file and see the
-    // post-delete rows — through read, readPinned, AND readWhere
-    assert(ts.read("t").count() == 90)
-    assert(ts.readPinned("t").count() == 90)
-    assert(ts.readWhere("t", $"k" >= 0).count() == 90)
-    // at least one tombstoned original file is still physically present
-    val stranded = before.filter(f =>
-      new java.io.File(s"$root/t/$f").exists() &&
-        !names(ts).contains(f))
-    assert(stranded.nonEmpty)
-    // any mutation settles: stranded files physically gone afterwards
-    ts.append("t", Seq(500L).toDF("k"))
-    stranded.foreach(f =>
-      assert(!new java.io.File(s"$root/t/$f").exists(), f))
-    assert(ts.read("t").count() == 91)
   }
 
   test("retention: readAt resolves the pre-delete generation from the archive") {
@@ -161,19 +137,16 @@ class DeleteWhereSpec extends SparkSpec {
   }
 
   test("updateWhere partition-targeted; unknown column rejected") {
-    val (ts, root) = fresh()
+    val (ts, _) = fresh()
     ts.append("t", spark.range(60)
       .select($"id".as("k"), lit(0).as("flag"),
         concat(lit("d"), $"id" % 3).as("day")),
       partitionBy = Seq("day"))
-    def files(day: String) =
-      new java.io.File(s"$root/t/day=$day").listFiles()
-        .map(_.getName).filter(_.startsWith("part-")).toSet
-    val d0 = files("d0")
+    val d0 = files(ts, "d0")
     val hit = ts.updateWhere("t", $"day" === "d1" && $"k" < 10,
       Seq("flag" -> lit(5)), partitionCols = Seq("day"))
     assert(hit == 1L)
-    assert(files("d0") == d0)
+    assert(files(ts, "d0") == d0)
     assert(ts.read("t").filter($"flag" === 5).select($"k")
       .as[Long].collect().toSet == Set(1L, 4L, 7L))
     intercept[IllegalArgumentException] {
@@ -183,7 +156,7 @@ class DeleteWhereSpec extends SparkSpec {
 
 
   test("file-level mutations preserve a PARTITIONED layout") {
-    val (ts, root) = fresh()
+    val (ts, _) = fresh()
     ts.append("t", spark.range(120)
       .select($"id".as("k"), ($"id" * 2).as("v"),
         concat(lit("d"), $"id" % 3).as("day")),
@@ -193,9 +166,8 @@ class DeleteWhereSpec extends SparkSpec {
     // replacement files must land INSIDE partition dirs
     val touched = ts.deleteWhere("t", $"k" >= 30 && $"k" < 40)
     assert(touched >= 1)
-    assert(!new java.io.File(s"$root/t").listFiles()
-      .exists(f => f.isFile && f.getName.startsWith("part-")),
-      "replacement files leaked to the table root")
+    assert(ts.read("t").inputFiles.forall(_.contains("/day=")),
+      "replacement files landed outside the partition dirs")
     val t = ts.read("t")
     assert(t.count() == 110)
     assert(t.filter($"k".between(30, 39)).count() == 0)
@@ -216,23 +188,19 @@ class DeleteWhereSpec extends SparkSpec {
     assert(after.filter($"k" === 60).select($"v").as[Long].head() == -5L)
     assert(after.filter($"k" === 2000).count() == 1)
     assert(after.count() == 111)
-    assert(!new java.io.File(s"$root/t").listFiles()
-      .exists(f => f.isFile && f.getName.startsWith("part-")))
+    assert(ts.read("t").inputFiles.forall(_.contains("/day=")))
   }
 
   test("partition-targeted deleteWhere rewrites only hit partitions") {
-    val (ts, root) = fresh()
+    val (ts, _) = fresh()
     ts.append("t", spark.range(90)
       .select($"id".as("k"), concat(lit("d"), $"id" % 3).as("day")),
       partitionBy = Seq("day"))
-    def files(day: String) =
-      new java.io.File(s"$root/t/day=$day").listFiles()
-        .map(_.getName).filter(_.startsWith("part-")).toSet
-    val d0 = files("d0"); val d1 = files("d1")
+    val d0 = files(ts, "d0"); val d1 = files(ts, "d1")
     val hit = ts.deleteWhere("t", $"day" === "d2" && $"k" > 50,
       partitionCols = Seq("day"))
     assert(hit == 1L)
-    assert(files("d0") == d0 && files("d1") == d1) // untouched dirs
+    assert(files(ts, "d0") == d0 && files(ts, "d1") == d1) // untouched dirs
     assert(ts.read("t").count() == 90 - (51 to 89 by 1)
       .count(k => k % 3 == 2))
   }

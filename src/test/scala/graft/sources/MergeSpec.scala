@@ -126,7 +126,6 @@ class MergeSpec extends SparkSpec {
     assert(got.length == 101) // no duplicate key 300
     val m = got.toMap
     assert(m(50L) == -1L && m(300L) == -2L && m(49L) == 98L)
-    assert(!w1.readManifest("t").get.swapping)
   }
 
 
@@ -163,7 +162,6 @@ class MergeSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_mgfence").toString
     val w1 = new TableStore(spark, root)
     val w2 = new TableStore(spark, root)
-    w1.swapWaitMs = 0L; w2.swapWaitMs = 0L
     // batch 1 creates the table (fence cdc:1)
     assert(w1.merge("t", Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), "k",
       TableStore.MergeUpdate(Seq("v")), txn = Some("cdc" -> 1L)) == 0L)

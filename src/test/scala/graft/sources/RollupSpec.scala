@@ -116,7 +116,6 @@ class RollupSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_rucc").toString
     val a = new TableStore(spark, root)
     val b = new TableStore(spark, root)
-    a.swapWaitMs = 0L; b.swapWaitMs = 0L
     a.append("src", batch(0, 30))
     a.refreshRollup("src", "rollup", Seq("g"), aggs)
     a.append("src", batch(30, 45))
@@ -145,15 +144,14 @@ class RollupSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_rucc2").toString
     val a = new TableStore(spark, root)
     val b = new TableStore(spark, root)
-    a.swapWaitMs = 0L; b.swapWaitMs = 0L
     a.append("src", batch(0, 30))
     a.refreshRollup("src", "rollup", Seq("g"), aggs)
     a.append("src", batch(30, 45))
     // here the competing refresh lands after a's anchor but before its
-    // begin-commit CAS: a loses the SEQUENCE race instead of the fence
-    // check — and, because the folded-file sidecar is written inside
-    // the claimed commit window, a's aborted attempt can never clobber
-    // the sidecar b committed.
+    // commit CAS: a loses the SEQUENCE race instead of the fence check
+    // — and, because only the writer whose commit advanced the fence
+    // writes that fence's folded-file sidecar, a's aborted attempt can
+    // never clobber the sidecar b committed.
     var fired = false
     a.beforeBeginCommit = () => if (!fired) {
       fired = true

@@ -12,25 +12,16 @@ import java.nio.file.Files
 class TableStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  /** part-file names per partition dir — the "did this dir get
-    * rewritten" fingerprint (Spark part-file names are unique per job).
+  /** Live part-file names per partition dir (`day=d0` → names) — the
+    * "was this partition rewritten" fingerprint: Spark part-file names
+    * are unique per job, and the live set is exactly what a read scans.
     */
-  private def partFiles(dir: String): Map[String, Set[String]] = {
-    val d = new java.io.File(dir)
-    d.listFiles().filter(f => f.isDirectory && f.getName.contains("="))
-      .map(p => p.getName ->
-        p.listFiles().map(_.getName).filter(_.startsWith("part-")).toSet)
-      .toMap
-  }
+  private def partFiles(ts: TableStore, table: String): Map[String, Set[String]] =
+    ts.read(table).inputFiles.toSeq.map(_.split('/').takeRight(2))
+      .groupBy(_.head).map { case (d, fs) => d -> fs.map(_.last).toSet }
 
-  private def freshStore() = {
-    val ts =
-      new TableStore(spark, Files.createTempDirectory("graft_ts").toString)
-    // crash-injection specs leave swapping manifests deliberately; the
-    // live-swap patience window would add swapWaitMs per recover here
-    ts.swapWaitMs = 0L
-    ts
-  }
+  private def freshStore() =
+    new TableStore(spark, Files.createTempDirectory("graft_ts").toString)
 
   private def seedPartitioned(ts: TableStore, table: String): Unit =
     ts.append(table,
@@ -42,13 +33,11 @@ class TableStoreSpec extends SparkSpec {
   test("K7 partitioned updateFlag rewrites ONLY affected partition dirs") {
     val ts = freshStore()
     seedPartitioned(ts, "t")
-    val dir = ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/day=.*", "")
-    val before = partFiles(dir)
+    val before = partFiles(ts, "t")
     // ids 2,7 both live in day=d2 (id%5==2) — only that dir may change
     ts.updateFlag("t", Seq(2L, 7L).toDF("id"), Seq("id"), "flag", 1,
       partitionCols = Seq("day"))
-    val after = partFiles(dir)
+    val after = partFiles(ts, "t")
     for (d <- Seq("day=d0", "day=d1", "day=d3", "day=d4"))
       assert(after(d) == before(d), s"$d was rewritten")
     assert(after("day=d2") != before("day=d2"), "day=d2 not rewritten")
@@ -61,14 +50,12 @@ class TableStoreSpec extends SparkSpec {
   test("K8 partitioned deleteByKeys removes an emptied partition dir") {
     val ts = freshStore()
     seedPartitioned(ts, "t")
-    val dir = ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/day=.*", "")
-    val before = partFiles(dir)
+    val before = partFiles(ts, "t")
     // delete ALL of day=d1 (ids ≡ 1 mod 5) plus one row of d3
     val doomed = ((0L until 100L).filter(_ % 5 == 1) :+ 3L).toDF("id")
     ts.deleteByKeys("t", doomed, Seq("id"), partitionCols = Seq("day"))
-    val after = partFiles(dir)
-    assert(!after.contains("day=d1"), "emptied partition dir not deleted")
+    val after = partFiles(ts, "t")
+    assert(!after.contains("day=d1"), "emptied partition still listed")
     for (d <- Seq("day=d0", "day=d2", "day=d4"))
       assert(after(d) == before(d), s"$d was rewritten")
     assert(after("day=d3") != before("day=d3"))
@@ -81,12 +68,10 @@ class TableStoreSpec extends SparkSpec {
   test("no-hit keyed mutation touches nothing") {
     val ts = freshStore()
     seedPartitioned(ts, "t")
-    val dir = ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/day=.*", "")
-    val before = partFiles(dir)
+    val before = partFiles(ts, "t")
     ts.updateFlag("t", Seq(1234L).toDF("id"), Seq("id"), "flag", 1,
       partitionCols = Seq("day"))
-    assert(partFiles(dir) == before)
+    assert(partFiles(ts, "t") == before)
   }
 
   test("unpartitioned rewrite/updateFlag via Hadoop FS still round-trips") {
@@ -118,9 +103,7 @@ class TableStoreSpec extends SparkSpec {
   test("mid-write failure leaves every partition intact (write-then-swap)") {
     val ts = freshStore()
     seedPartitioned(ts, "t")
-    val dir = ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/day=.*", "")
-    val before = partFiles(dir)
+    val before = partFiles(ts, "t")
     // transform that fails mid-job, after some tasks have written rows
     val boom = intercept[Exception] {
       ts.rewriteAffected("t", Seq("day"),
@@ -131,9 +114,9 @@ class TableStoreSpec extends SparkSpec {
             .otherwise($"flag")))
     }
     assert(boom != null)
-    // the failed job only ever touched the __tmp sibling: the live
-    // table's every partition dir still has its exact part-files
-    assert(partFiles(dir) == before)
+    // the failed job only ever wrote its own commit dir: the live
+    // table's every partition still has its exact part-files
+    assert(partFiles(ts, "t") == before)
     assert(ts.read("t").count() == 100)
     assert(ts.read("t").filter($"flag" =!= 0).count() == 0)
   }
@@ -168,16 +151,14 @@ class TableStoreSpec extends SparkSpec {
           .repartition($"day"),
         partitionBy = Seq("day"))
     }
-    val dir = ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/day=.*", "")
-    val before = partFiles(dir)
+    val before = partFiles(ts, "t")
     assert(before("day=d0").size == 3)
     assert(before("day=d2").size == 1) // only seeded once
     val rowsBefore = ts.read("t").orderBy($"id")
       .as[(Long, Int, String)].collect().toSeq
 
     ts.compact("t", partitionCols = Seq("day"))
-    val after = partFiles(dir)
+    val after = partFiles(ts, "t")
     // multi-file partitions collapsed to one file each
     assert(after("day=d0").size == 1)
     assert(after("day=d1").size == 1)
@@ -190,22 +171,17 @@ class TableStoreSpec extends SparkSpec {
       .as[(Long, Int, String)].collect().toSeq == rowsBefore)
     // idempotent: a second compact is a no-op (no dirs move)
     ts.compact("t", partitionCols = Seq("day"))
-    assert(partFiles(dir) == after)
+    assert(partFiles(ts, "t") == after)
   }
 
   test("compact rewrites an unpartitioned table into targetFiles files") {
     val ts = freshStore()
     (0 until 4).foreach(i => ts.append("t",
       spark.range(10L * i, 10L * i + 10).toDF("id").repartition(3)))
-    assert(new java.io.File(ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/[^/]*$", ""))
-      .listFiles().count(_.getName.startsWith("part-")) >= 12)
+    assert(ts.read("t").inputFiles.length >= 12)
     val before = ts.read("t").orderBy($"id").as[Long].collect().toSeq
     ts.compact("t", targetFiles = 2)
-    val files = new java.io.File(ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/[^/]*$", ""))
-      .listFiles().count(_.getName.startsWith("part-"))
-    assert(files == 2)
+    assert(ts.read("t").inputFiles.length == 2)
     assert(ts.read("t").orderBy($"id").as[Long].collect().toSeq == before)
   }
 
@@ -230,210 +206,6 @@ class TableStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       ts.dedupAppend("corpus", clash, "doc_id", "text")
     }
-  }
-
-  test("crash between the two renames of a full rewrite reads wholly-old") {
-    val ts = freshStore()
-    ts.append("u", (1L to 10L).toDF("id").withColumn("flag", lit(0)))
-    ts.failAfterSwaps = 1 // kill after rename(dst -> old), before tmp -> dst
-    val boom = intercept[IllegalStateException] {
-      ts.updateFlag("u", Seq(4L).toDF("id"), Seq("id"), "flag", 9)
-    }
-    assert(boom.getMessage.contains("injected"))
-    ts.failAfterSwaps = -1
-    // the live dir is GONE at this instant — the manifest resolves the
-    // read to the __old copy: wholly the previous generation
-    assert(ts.exists("u"))
-    assert(ts.read("u").filter($"flag" === 9).count() == 0)
-    assert(ts.read("u").select($"id").as[Long].collect().toSet ==
-      (1L to 10L).toSet)
-    // the next mutation recovers the layout and applies cleanly
-    ts.updateFlag("u", Seq(4L).toDF("id"), Seq("id"), "flag", 9)
-    assert(ts.read("u").filter($"flag" === 9).select($"id")
-      .as[Long].collect().toSeq == Seq(4L))
-    assert(ts.readManifest("u").exists(m => !m.swapping))
-  }
-
-  test("crash mid multi-partition swap reads wholly-old, never mixed") {
-    val ts = freshStore()
-    seedPartitioned(ts, "t")
-    // flag flip hits d1 AND d3; crash after d1's pair fully swapped,
-    // mid-way through the second dir's pair
-    ts.failAfterSwaps = 2
-    intercept[IllegalStateException] {
-      ts.updateFlag("t", Seq(1L, 3L).toDF("id"), Seq("id"), "flag", 1,
-        partitionCols = Seq("day"))
-    }
-    ts.failAfterSwaps = -1
-    // one partition already carries generation N+1 bytes in place — the
-    // manifest must still resolve BOTH touched dirs to the old copies
-    val rows = ts.read("t")
-    assert(rows.count() == 100)
-    assert(rows.filter($"flag" === 1).count() == 0, "mixed-generation read")
-    // recovery (first op of the next mutation) rolls back, then the
-    // retried mutation lands
-    ts.updateFlag("t", Seq(1L, 3L).toDF("id"), Seq("id"), "flag", 1,
-      partitionCols = Seq("day"))
-    val after = ts.read("t")
-    assert(after.count() == 100)
-    assert(after.filter($"flag" === 1).select($"id")
-      .as[Long].collect().toSet == Set(1L, 3L))
-    // gen 1 = the seed append's first-time fenced rewrite; gen 2 = the
-    // successfully retried flag flip
-    assert(ts.readManifest("t").exists(m => !m.swapping && m.gen == 2L))
-  }
-
-  test("crash after a brand-new partition dir swaps in reads wholly-old") {
-    val ts = freshStore()
-    // table partitioned BY the flag column: flipping it writes a
-    // brand-new flag=1 dir that has no committed copy (fresh)
-    ts.append("t", spark.range(10).select($"id", lit(0).as("flag")),
-      partitionBy = Seq("flag"))
-    // flip ALL rows: written = {flag=1} (fresh), emptied = {flag=0};
-    // crash lands after flag=1 renamed in AND flag=0 moved aside
-    ts.failAfterSwaps = 2
-    intercept[IllegalStateException] {
-      ts.updateFlag("t", (0L until 10L).toDF("id"), Seq("id"), "flag", 1,
-        partitionCols = Seq("flag"))
-    }
-    ts.failAfterSwaps = -1
-    // the fresh dir holds only uncommitted generation-N+1 rows — a read
-    // must exclude it or every row comes back twice (old + flipped)
-    val rows = ts.read("t")
-    assert(rows.count() == 10, "uncommitted fresh partition leaked")
-    assert(rows.filter($"flag" === 1).count() == 0, "mixed-generation read")
-    // recovery deletes the fresh dir and restores flag=0; the retried
-    // flip then lands exactly once
-    ts.updateFlag("t", (0L until 10L).toDF("id"), Seq("id"), "flag", 1,
-      partitionCols = Seq("flag"))
-    assert(ts.read("t").count() == 10, "duplicates after rollback")
-    assert(ts.read("t").filter($"flag" === 1).count() == 10)
-    assert(ts.readManifest("t").exists(m => !m.swapping))
-  }
-
-  test("crash after a FIRST-TIME rewrite renames in commits nothing") {
-    val ts = freshStore()
-    val df = (1L to 5L).toDF("id")
-    ts.failAfterSwaps = 2 // after rename(tmp -> dst), before the commit
-    intercept[IllegalStateException] { ts.rewrite("v", df) }
-    ts.failAfterSwaps = -1
-    // the committed generation is "no table" even though the renamed-in
-    // dir survives on disk
-    assert(!ts.exists("v"), "uncommitted first-time rewrite visible")
-    intercept[IllegalStateException] { ts.read("v") }
-    // the retried rewrite recovers (deletes the stranded dir) and lands
-    ts.rewrite("v", df)
-    assert(ts.exists("v"))
-    assert(ts.read("v").count() == 5)
-    assert(ts.readManifest("v").exists(m => !m.swapping && m.gen == 1L))
-  }
-
-  test("crash INSIDE one dir's file-by-file swap reads wholly-old (per-file manifest)") {
-    val ts = freshStore()
-    seedPartitioned(ts, "t")
-    // second append makes day=d2 multi-file, so a partial per-file
-    // rename is representable
-    ts.append("t",
-      spark.range(100, 140)
-        .select($"id", lit(0).as("flag"), lit("d2").as("day")),
-      partitionBy = Seq("day"))
-    val dir = ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/day=.*", "")
-    val committedIds = ts.read("t").select($"id").as[Long].collect().toSet
-    assert(partFiles(dir)("day=d2").size >= 2)
-    // crash right after d2's whole-dir move-aside (local rename is
-    // atomic; the raw-S3 partial state is constructed below)
-    ts.failAfterSwaps = 1
-    intercept[IllegalStateException] {
-      ts.updateFlag("t", Seq(2L).toDF("id"), Seq("id"), "flag", 9,
-        partitionCols = Seq("day"))
-    }
-    ts.failAfterSwaps = -1
-    // the manifest recorded d2's committed files
-    val m = ts.readManifest("t").get
-    assert(m.swapping && m.files("day=d2").nonEmpty)
-    // construct the raw-S3 mid-rename state: a dir rename there is a
-    // file-by-file copy+delete, so a crash strands committed files
-    // SPLIT between the live dir and __old — move one back — and may
-    // already have renamed uncommitted new-generation files in — copy
-    // one from the still-present __tmp
-    val bakD2 = new java.io.File(s"${dir}__old/day=d2")
-    val curD2 = new java.io.File(s"$dir/day=d2")
-    curD2.mkdirs()
-    val split = bakD2.listFiles().filter(_.getName.startsWith("part-")).head
-    java.nio.file.Files.move(split.toPath,
-      new java.io.File(curD2, split.getName).toPath)
-    // staging is writer-unique since round 8 — resolve the crashed
-    // writer's staging sibling from the manifest's tmp= record
-    val stagingName = m.tmp.get
-    val tmpD2 = new java.io.File(
-      new java.io.File(dir).getParent, s"$stagingName/day=d2")
-    val leaked = tmpD2.listFiles().filter(_.getName.startsWith("part-")).head
-    java.nio.file.Files.copy(leaked.toPath,
-      new java.io.File(curD2, leaked.getName).toPath)
-    // wholly-old read: every committed row exactly once (reassembled
-    // from both halves of the split), no new-generation row
-    val rows = ts.read("t")
-    assert(rows.select($"id").as[Long].collect().toSet == committedIds)
-    assert(rows.count() == committedIds.size, "duplicate rows from split dir")
-    assert(rows.filter($"flag" === 9).count() == 0, "uncommitted rows leaked")
-    // recovery reassembles the committed dir and drops the leaked file;
-    // the retried mutation lands exactly once
-    ts.updateFlag("t", Seq(2L).toDF("id"), Seq("id"), "flag", 9,
-      partitionCols = Seq("day"))
-    val after = ts.read("t")
-    assert(after.select($"id").as[Long].collect().toSet == committedIds)
-    assert(after.filter($"flag" === 9).select($"id")
-      .as[Long].collect().toSeq == Seq(2L))
-    assert(ts.readManifest("t").exists(m2 => !m2.swapping))
-  }
-
-  test("crash mid-append leaves the batch invisible; retry lands once") {
-    val ts = freshStore()
-    seedPartitioned(ts, "t") // 100 committed rows
-    def batch() = spark.range(200, 240)
-      .select($"id", lit(0).as("flag"), concat(lit("d"), $"id" % 5).as("day"))
-    // crash after ONE incoming file already moved into the table
-    ts.failAfterSwaps = 2
-    intercept[IllegalStateException] {
-      ts.append("t", batch(), partitionBy = Seq("day"))
-    }
-    ts.failAfterSwaps = -1
-    // uncommitted batch files sit inside the table dir, but the
-    // manifest's add-list keeps them out of the committed read
-    val rows = ts.read("t")
-    assert(rows.count() == 100, "partial append leaked into a read")
-    assert(rows.filter($"id" >= 200).count() == 0)
-    // the retried append recovers first, then lands exactly once
-    ts.append("t", batch(), partitionBy = Seq("day"))
-    val after = ts.read("t")
-    assert(after.count() == 140, "duplicates or losses after recovery")
-    assert(after.filter($"id" >= 200).count() == 40)
-    assert(after.select($"id").distinct().count() == 140)
-    assert(ts.readManifest("t").exists(m => !m.swapping))
-  }
-
-  test("crash while removing an emptied partition restores it on recovery") {
-    val ts = freshStore()
-    seedPartitioned(ts, "t")
-    // delete all of d1 (emptied partition -> rename-aside, not delete)
-    val doomed = (0L until 100L).filter(_ % 5 == 1).toDF("id")
-    ts.failAfterSwaps = 1
-    intercept[IllegalStateException] {
-      ts.deleteByKeys("t", doomed, Seq("id"), partitionCols = Seq("day"))
-    }
-    ts.failAfterSwaps = -1
-    // wholly-old: the emptied partition is still visible pre-recovery
-    assert(ts.read("t").count() == 100)
-    // and still there after a recovery triggered by an unrelated no-op
-    ts.updateFlag("t", Seq(9999L).toDF("id"), Seq("id"), "flag", 1,
-      partitionCols = Seq("day"))
-    assert(ts.read("t").count() == 100)
-    assert(ts.read("t").filter($"day" === "d1").count() == 20)
-    // the retried delete then completes
-    ts.deleteByKeys("t", doomed, Seq("id"), partitionCols = Seq("day"))
-    assert(ts.read("t").count() == 80)
-    assert(ts.read("t").filter($"day" === "d1").count() == 0)
   }
 
   private def retainedStore(keep: Int) =
@@ -504,31 +276,6 @@ class TableStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException](off.readAt("t", 1))
   }
 
-  test("time travel: a crash BETWEEN commit and dispose cannot destroy history") {
-    // the post-commit window: the clean manifest has landed but __old
-    // is not yet archived — the next mutation must SETTLE it into the
-    // archive, not delete it (the pre-review code deleted it)
-    val ts = retainedStore(10)
-    seedPartitioned(ts, "t") // gen 1
-    val g1 = ts.read("t").count()
-    ts.failBeforeDispose = true
-    intercept[IllegalStateException] {
-      ts.deleteByKeys("t", Seq(1L).toDF("id"), Seq("id"),
-        partitionCols = Seq("day"))
-    }
-    ts.failBeforeDispose = false
-    // the delete COMMITTED (gen 2); gen-1 history resolves from __old
-    assert(ts.read("t").count() == g1 - 1)
-    assert(ts.readAt("t", 1).count() == g1)
-    // the next mutation settles __old into the archive instead of
-    // deleting it; history stays intact afterwards
-    ts.updateFlag("t", Seq(2L).toDF("id"), Seq("id"), "flag", 3,
-      partitionCols = Seq("day")) // gen 3
-    assert(ts.generations("t") == Seq(1L, 2L, 3L))
-    assert(ts.readAt("t", 1).count() == g1)
-    assert(ts.readAt("t", 2).count() == g1 - 1)
-  }
-
   test("time travel: an emptied generation reads back as zero rows") {
     val ts = retainedStore(10)
     seedPartitioned(ts, "t") // gen 1
@@ -550,45 +297,6 @@ class TableStoreSpec extends SparkSpec {
     assert(ts.generations("t") == Seq(3L, 4L, 5L))
   }
 
-  test("time travel: a crash mid-swap neither corrupts past generations nor leaks") {
-    val ts = retainedStore(10)
-    seedPartitioned(ts, "t") // gen 1
-    val g1 = ts.readAt("t", 1).count() // forces snap resolution later
-    ts.deleteByKeys("t", Seq(1L).toDF("id"), Seq("id"),
-      partitionCols = Seq("day")) // gen 2
-    ts.failAfterSwaps = 1
-    intercept[IllegalStateException] {
-      ts.updateFlag("t", Seq(2L).toDF("id"), Seq("id"), "flag", 5,
-        partitionCols = Seq("day"))
-    }
-    ts.failAfterSwaps = -1
-    // mid-crash: past generations still resolve (touched files sit in
-    // __old, which readAt probes after the archives)
-    assert(ts.readAt("t", 1).count() == g1)
-    assert(ts.readAt("t", 2).count() == g1 - 1)
-    // the retried mutation completes and history is intact
-    ts.updateFlag("t", Seq(2L).toDF("id"), Seq("id"), "flag", 5,
-      partitionCols = Seq("day")) // gen 3
-    assert(ts.generations("t") == Seq(1L, 2L, 3L))
-    assert(ts.readAt("t", 1).count() == g1)
-    assert(ts.readAt("t", 2).count() == g1 - 1)
-    assert(ts.read("t").filter($"flag" === 5).count() == 1)
-  }
-
-  /** Root-dir inventory: no staging (`__tmp.*`/`__add.*`), no `__old`,
-    * exactly one commit manifest — the no-file-leaks check for the
-    * optimistic-concurrency cases.
-    */
-  private def assertNoLeaks(root: String, table: String): Unit = {
-    val names = new java.io.File(root).listFiles().map(_.getName).toSeq
-    assert(!names.exists(_.contains("__tmp")), s"staging leak: $names")
-    assert(!names.exists(_.contains("__add")), s"staging leak: $names")
-    assert(!names.exists(_.contains("__old")), s"__old leak: $names")
-    assert(names.count(_.startsWith(s"$table._graft_commit.")) == 1,
-      s"manifest leak: $names")
-  }
-
-
   test("append with a mismatched partition layout is rejected before commit") {
     val ts = freshStore()
     seedPartitioned(ts, "t")
@@ -607,38 +315,39 @@ class TableStoreSpec extends SparkSpec {
     assert(ts.read("t").count() == 101)
   }
 
-  test("OCC: a loser WAITS for the winner's live mid-swap instead of recovering it") {
-    val root = Files.createTempDirectory("graft_liveswap").toString
-    val a = new TableStore(spark, root)
-    val b = new TableStore(spark, root)
-    b.swapWaitMs = 15000L
-    a.rewrite("t", Seq((1L, "seed")).toDF("k", "v"))
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val inSwap = new java.util.concurrent.CountDownLatch(1)
-    a.midSwapPause = () => { inSwap.countDown(); gate.await() }
-    val winner = new Thread(() =>
-      a.append("t", Seq((2L, "winner")).toDF("k", "v")))
-    winner.start()
-    inSwap.await() // A holds a LIVE swapping manifest, renames pending
-    // release the winner shortly after B starts waiting on its retry
-    val releaser = new Thread(() => { Thread.sleep(800); gate.countDown() })
-    releaser.start()
-    // B collides with A's swapping head, must WAIT (not recover), then
-    // land on top of A's commit
-    b.append("t", Seq((3L, "loser")).toDF("k", "v"))
-    winner.join(30000); releaser.join(30000)
-    a.midSwapPause = () => ()
-    // BOTH appends survived — the loser did not roll back the live swap
-    assert(a.read("t").as[(Long, String)].collect().toSet ==
-      Set((1L, "seed"), (2L, "winner"), (3L, "loser")))
-    assert(!a.readManifest("t").get.swapping)
+  /** Files under `root/table` that no retained manifest lists (local
+    * checksum sidecars aside) — the orphan inventory.
+    */
+  private def unlisted(ts: TableStore, root: String,
+                       table: String): Set[String] = {
+    val base = new java.io.File(root, table).getCanonicalFile.toPath
+    val listed = ts.generations(table).flatMap(g =>
+      ts.readAt(table, g).inputFiles.map(f =>
+        base.relativize(java.nio.file.Paths.get(new java.net.URI(f))).toString))
+      .toSet
+    val all = if (!base.toFile.exists()) Set.empty[String]
+      else Files.walk(base).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(p => Files.isRegularFile(p) && !p.toString.endsWith(".crc"))
+        .map(p => base.relativize(p).toString).toSet
+    all -- listed
+  }
+
+  /** No orphaned data files under the table and exactly one commit
+    * manifest beside it — the no-leaks check for the
+    * optimistic-concurrency cases (a loser deletes its own files).
+    */
+  private def assertNoLeaks(ts: TableStore, root: String,
+                            table: String): Unit = {
+    assert(unlisted(ts, root, table).isEmpty, "orphaned files")
+    val names = new java.io.File(root).listFiles().map(_.getName).toSeq
+    assert(names.count(_.startsWith(s"$table._graft_commit.")) == 1,
+      s"manifest leak: $names")
   }
 
   test("OCC: interleaved upsert+upsert — exactly one winner per sequence, loser retries clean") {
     val root = Files.createTempDirectory("graft_occ").toString
     val w1 = new TableStore(spark, root)
     val w2 = new TableStore(spark, root)
-    w1.swapWaitMs = 0L; w2.swapWaitMs = 0L
     w1.rewrite("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v")) // gen 1
     // w2 stages its batch, then w1 commits an OVERLAPPING upsert first:
     // w2's begin-commit CAS must lose, clean its staging, and retry
@@ -658,9 +367,8 @@ class TableStoreSpec extends SparkSpec {
     assert(w1.read("t").as[(Long, String)].collect().toMap ==
       Map(1L -> "a", 2L -> "b", 3L -> "w1", 4L -> "w1", 5L -> "w2"))
     // one generation per commit — the two upserts serialized as 2 and 3
-    assert(w1.readManifest("t").get.gen == 3)
-    assert(!w1.readManifest("t").get.swapping)
-    assertNoLeaks(root, "t")
+    assert(w1.generations("t").last == 3)
+    assertNoLeaks(w1, root, "t")
     // every data file on disk is referenced by the read (none orphaned
     // by the loser's aborted first attempt)
     def dataFilesOnDisk(d: java.io.File): Seq[String] =
@@ -678,7 +386,6 @@ class TableStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_occ2").toString
     val w1 = new TableStore(spark, root)
     val w2 = new TableStore(spark, root)
-    w1.swapWaitMs = 0L; w2.swapWaitMs = 0L
     w1.rewrite("t", Seq((1L, "a")).toDF("k", "v")) // gen 1
     var fired = false
     w2.beforeBeginCommit = () => if (!fired) {
@@ -690,8 +397,8 @@ class TableStoreSpec extends SparkSpec {
     // the append retried ON TOP of the rewrite — not lost, not doubled
     assert(w1.read("t").as[(Long, String)].collect().toSet ==
       Set((10L, "rw"), (20L, "ap")))
-    assert(w1.readManifest("t").get.gen == 3)
-    assertNoLeaks(root, "t")
+    assert(w1.generations("t").last == 3)
+    assertNoLeaks(w1, root, "t")
   }
 
   test("OCC: retries exhausted surfaces ConcurrentCommitException; staging cleaned") {
@@ -711,29 +418,7 @@ class TableStoreSpec extends SparkSpec {
     // the loser's batch is NOT in the table; the winner's is; no staging
     assert(w1.read("t").as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (9L, "x")))
-    assertNoLeaks(root, "t")
-  }
-
-  test("OCC: crash between begin-commit CAS and first rename recovers; staging cleared") {
-    val root = Files.createTempDirectory("graft_occ4").toString
-    val ts = new TableStore(spark, root)
-    ts.append("t", Seq((1L, "a")).toDF("k", "v"))
-    ts.failAfterSwaps = 1 // throw AFTER the CAS, before any rename
-    intercept[IllegalStateException] {
-      ts.append("t", Seq((2L, "b")).toDF("k", "v"))
-    }
-    ts.failAfterSwaps = -1
-    // the claimed-but-dead commit: swapping manifest with the staging
-    // sibling recorded, batch invisible to reads
-    val m = ts.readManifest("t").get
-    assert(m.swapping && m.tmp.nonEmpty)
-    assert(ts.read("t").count() == 1)
-    // next mutation recovers: rollback manifest, staging deleted, then
-    // the new batch lands exactly once
-    ts.append("t", Seq((3L, "c")).toDF("k", "v"))
-    assert(ts.read("t").as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (3L, "c")))
-    assertNoLeaks(root, "t")
+    assertNoLeaks(w1, root, "t")
   }
 
   test("readPinned: snapshot against concurrent appends; read sees them") {
@@ -844,11 +529,11 @@ class TableStoreSpec extends SparkSpec {
     // batch 1 lands once; crash MID-APPEND of batch 2 leaves the fence
     // at 1, so the retried delivery of batch 2 appends exactly once
     assert(ts.appendExactlyOnce("t", batch(3), "sA", 1))
-    ts.failAfterSwaps = 1
+    ts.beforeBeginCommit = () => throw new IllegalStateException("crash")
     intercept[IllegalStateException] {
       ts.appendExactlyOnce("t", batch(4), "sA", 2)
     }
-    ts.failAfterSwaps = -1
+    ts.beforeBeginCommit = () => ()
     assert(ts.lastTxn("t", "sA") == 1L, "crashed batch advanced the fence")
     assert(ts.read("t").filter($"k" === 4L).count() == 0)
     assert(ts.appendExactlyOnce("t", batch(4), "sA", 2))
@@ -861,25 +546,28 @@ class TableStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_occ5").toString
     val ts = new TableStore(spark, root)
     ts.append("t", Seq((1L, "a")).toDF("k", "v"))
-    // fabricate a pre-CAS orphan (writer died before its manifest)
-    val orphan = new java.io.File(root, "t__add.deadbeef0000")
+    ts.append("t", Seq((2L, "b")).toDF("k", "v"))
+    // fabricate an orphan commit dir (a writer died before its CAS)
+    val orphan = new java.io.File(root, "t/deadbeef00000000")
     orphan.mkdirs()
     new java.io.File(orphan, "part-orphan.parquet").createNewFile()
-    // and a live crashed-after-CAS staging (manifest-recorded)
-    ts.failAfterSwaps = 1
+    // and a real writer that dies between its data-file write and CAS
+    ts.beforeBeginCommit = () => throw new IllegalStateException("crash")
     intercept[IllegalStateException] {
-      ts.append("t", Seq((2L, "b")).toDF("k", "v"))
+      ts.append("t", Seq((3L, "c")).toDF("k", "v"))
     }
-    ts.failAfterSwaps = -1
-    val recorded = ts.readManifest("t").get.tmp.get
+    ts.beforeBeginCommit = () => ()
+    assert(unlisted(ts, root, "t").size >= 2)
+    val live = ts.read("t").inputFiles.toSet
     ts.cleanStaging("t")
-    val names = new java.io.File(root).listFiles().map(_.getName).toSet
-    assert(!names.contains("t__add.deadbeef0000"), "orphan survived")
-    assert(names.contains(recorded),
-      "cleanStaging deleted the manifest-recorded (recover-owned) staging")
-    // recover still owns the recorded staging
+    // every orphan is gone; every file the manifest lists survives
+    assert(!orphan.exists(), "orphan survived")
+    assert(unlisted(ts, root, "t").isEmpty)
+    assert(ts.read("t").inputFiles.toSet == live)
+    assert(ts.read("t").as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
     ts.append("t", Seq((3L, "c")).toDF("k", "v"))
-    assertNoLeaks(root, "t")
+    assertNoLeaks(ts, root, "t")
   }
 
   test("append layout guard: partitioned batch into a FLAT non-empty table rejects") {
@@ -909,7 +597,6 @@ class TableStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_fence").toString
     val w1 = new TableStore(spark, root)
     val w2 = new TableStore(spark, root)
-    w1.swapWaitMs = 0L; w2.swapWaitMs = 0L
     w1.append("t", Seq((1L, "seed")).toDF("k", "v"))
     assert(w1.appendExactlyOnce("t", Seq((2L, "b5")).toDF("k", "v"),
       "s", 5L))
@@ -932,7 +619,7 @@ class TableStoreSpec extends SparkSpec {
     // batch 6 landed EXACTLY once
     assert(w1.read("t").count() == 3)
     assert(w1.lastTxn("t", "s") == 6L)
-    assertNoLeaks(root, "t")
+    assertNoLeaks(w1, root, "t")
   }
 
   test("column order stays uniform across files: reordered appends and key deletes") {
@@ -1024,5 +711,136 @@ class TableStoreSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         bare.tag("u", "gone", Some(old))
       }
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, String)] =
+    df.select($"id", $"flag", $"day").as[(Long, Int, String)].collect()
+      .toSeq.sorted
+
+  /** Two generations, every partition multi-file (compact has work). */
+  private def seedCrashTable(ts: TableStore): Unit = {
+    seedPartitioned(ts, "t")
+    ts.append("t", spark.range(100, 120)
+      .select($"id", lit(0).as("flag"), concat(lit("d"), $"id" % 5).as("day")),
+      partitionBy = Seq("day"))
+  }
+
+  /** One row per mutation that writes data files before its commit. */
+  private val crashCases: Seq[(String, TableStore => Any)] = Seq(
+    "append" -> (_.append("t", spark.range(200, 210).select($"id",
+      lit(0).as("flag"), concat(lit("d"), $"id" % 5).as("day")),
+      partitionBy = Seq("day"))),
+    "upsert" -> (_.upsert("t",
+      Seq((5L, 9, "d0"), (300L, 9, "d0")).toDF("id", "flag", "day"),
+      Seq("id"), Seq("flag"), partitionBy = Seq("day"))),
+    "rewrite" -> (_.rewrite("t", spark.range(400, 420).select($"id",
+      lit(1).as("flag"), concat(lit("d"), $"id" % 2).as("day")),
+      partitionBy = Seq("day"))),
+    "updateFlag (partitioned)" -> (_.updateFlag("t",
+      Seq(2L, 7L).toDF("id"), Seq("id"), "flag", 1,
+      partitionCols = Seq("day"))),
+    "deleteByKeys (partitioned, empties a partition)" -> (_.deleteByKeys("t",
+      ((0L until 120L).filter(_ % 5 == 1) :+ 3L).toDF("id"), Seq("id"),
+      partitionCols = Seq("day"))),
+    "deleteWhere" -> (_.deleteWhere("t", $"id" < 10)),
+    "merge" -> (_.merge("t",
+      Seq((3L, 7, "d3"), (500L, 7, "d0")).toDF("id", "flag", "day"), "id",
+      TableStore.MergeUpdate(Seq("flag")))),
+    "compact" -> (_.compact("t", partitionCols = Seq("day"))),
+    "appendExactlyOnce" -> (_.appendExactlyOnce("t",
+      Seq((600L, 0, "d1")).toDF("id", "flag", "day"), "s", 0,
+      partitionBy = Seq("day"))))
+
+  test("crash between data-file write and manifest CAS") {
+    for ((name, op) <- crashCases) withClue(s"[$name] ") {
+      val root = Files.createTempDirectory("graft_crash").toString
+      val ts = new TableStore(spark, root, retainGenerations = 1)
+      seedCrashTable(ts)
+      val before = rows(ts.read("t"))
+      val gen = ts.generations("t").last
+      ts.beforeBeginCommit =
+        () => throw new IllegalStateException("injected crash before commit")
+      intercept[IllegalStateException](op(ts))
+      ts.beforeBeginCommit = () => ()
+      // the table still IS the previous generation; the crash left only
+      // data files no manifest lists
+      assert(ts.generations("t").last == gen)
+      assert(rows(ts.read("t")) == before)
+      assert(unlisted(ts, root, "t").nonEmpty, "no data files were written")
+      // the retry lands exactly once: it equals the same mutation on an
+      // uncrashed twin, one generation later, with the old one intact
+      op(ts)
+      val twin = new TableStore(spark,
+        Files.createTempDirectory("graft_twin").toString, retainGenerations = 1)
+      seedCrashTable(twin)
+      op(twin)
+      val after = rows(twin.read("t"))
+      assert(ts.generations("t").last == gen + 1)
+      assert(rows(ts.read("t")) == after)
+      assert(rows(ts.readAt("t", gen)) == before)
+      // vacuum removes the orphans and nothing the retained manifests list
+      ts.vacuum("t", keepLast = 1)
+      assert(unlisted(ts, root, "t").isEmpty)
+      assert(rows(ts.read("t")) == after)
+      assert(rows(ts.readAt("t", gen)) == before)
+    }
+  }
+
+  test("partitioned updateFlag ON the partition column keeps the target partition's rows") {
+    val ts = freshStore()
+    ts.append("t", spark.range(15).select($"id",
+      when($"id" >= 10, 1).otherwise(0).as("flag")), partitionBy = Seq("flag"))
+    // rows 0 and 1 move from flag=0 into the existing flag=1 partition
+    ts.updateFlag("t", Seq(0L, 1L).toDF("id"), Seq("id"), "flag", 1,
+      partitionCols = Seq("flag"))
+    val got = ts.read("t").select($"id", $"flag").as[(Long, Int)].collect()
+    assert(got.length == 15)
+    assert(got.filter(_._2 == 1).map(_._1).toSet ==
+      Set(0L, 1L, 10L, 11L, 12L, 13L, 14L))
+  }
+
+  test("reads resolve through the manifest: directory-read schema, one scan, no listing") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    val root = Files.createTempDirectory("graft_scan").toString
+    val ts = new TableStore(spark, root)
+    val df = spark.range(60).select($"id",
+      ($"id" % 3).as("n"), // a long written as n=0..2 reads back as INT
+      concat(lit("d"), $"id" % 2).as("day"),
+      struct($"id".as("a"), lit("x").as("b")).as("s"),
+      array($"id").as("arr"), ($"id" * 1.5).as("x"))
+    ts.append("t", df.repartition(7), partitionBy = Seq("n", "day"))
+    // the first commit records the schema a directory read of the same
+    // files infers: data columns nullable, partition types from names
+    val dir = new java.io.File(root, "t").listFiles().filter(_.isDirectory).head
+    val dirSchema = spark.read.parquet(dir.getPath).schema
+    assert(ts.read("t").schema == dirSchema)
+    assert(dirSchema("n").dataType == org.apache.spark.sql.types.IntegerType)
+    // more commits, more than 32 files: still ONE partitioned scan
+    ts.append("t", df.filter($"id" < 30).repartition(6),
+      partitionBy = Seq("n", "day"))
+    ts.append("t", df.filter($"id" >= 30).repartition(6),
+      partitionBy = Seq("n", "day"))
+    val t = ts.read("t")
+    assert(t.inputFiles.length > 32)
+    assert(t.schema == dirSchema)
+    val discovered = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    val listingJobs = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+    val pruned = ts.read("t").filter($"n" === 1 && $"day" === "d0")
+    val scanExec = pruned.queryExecution.executedPlan.collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.get
+    // the one leaf dir per commit that holds n=1/day=d0, nothing else
+    assert(scanExec.selectedPartitions.partitionCount == 3)
+    assert(scanExec.selectedPartitions.filePartitionIterator
+      .forall(_.values.getInt(0) == 1))
+    assert(pruned.count() == 20)
+    assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount == discovered,
+      "a manifest read listed files")
+    assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount ==
+      listingJobs)
+    // the counter does see a directory read
+    spark.read.parquet(dir.getPath).count()
+    assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount > discovered)
+    assert(ts.read("t").count() == 120)
   }
 }
