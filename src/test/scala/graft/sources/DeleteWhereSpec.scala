@@ -9,7 +9,7 @@ import java.nio.file.Files
   * list in the same commit that lists their survivors; NULL predicates
   * keep rows (SQL DELETE semantics).
   */
-class DeleteWhereSpec extends SparkSpec {
+class DeleteWhereSpec extends SparkSpec with StoreCrashChecks {
   import spark.implicits._
 
   private def fresh(retain: Int = 0) = {
@@ -67,6 +67,28 @@ class DeleteWhereSpec extends SparkSpec {
     // table remains fully mutable afterwards
     ts.append("t", Seq(7L).toDF("k"))
     assert(ts.read("t").as[Long].collect().toSeq == Seq(7L))
+  }
+
+  test("crash before settle: tombstones exclude files from every read path; next mutation settles") {
+    def seed(ts: TableStore): Unit = {
+      ts.rewrite("t", spark.range(100).toDF("k").repartitionByRange(2, $"k"))
+      ts.analyze("t", Seq("k"))
+    }
+    // a REAL deleteWhere that dies after writing its survivors, before
+    // its commit: every read path still sees the pre-delete table
+    val ts = crashBeforeCas("t", seed)(_.deleteWhere("t", $"k" < 10),
+      crashed => {
+        assert(crashed.read("t").count() == 100)
+        assert(crashed.readPinned("t").count() == 100)
+        assert(crashed.readWhere("t", $"k" >= 0).count() == 100)
+      })
+    // the retried delete commits: all three paths see the post-delete rows
+    assert(ts.read("t").count() == 90)
+    assert(ts.readPinned("t").count() == 90)
+    assert(ts.readWhere("t", $"k" >= 0).count() == 90)
+    // the next mutation lands on the post-delete table
+    ts.append("t", Seq(500L).toDF("k"))
+    assert(ts.read("t").count() == 91)
   }
 
   test("retention: readAt resolves the pre-delete generation from the archive") {

@@ -9,7 +9,7 @@ import java.nio.file.Files
   * partitioned table may only move bytes in partitions that contain an
   * affected key.
   */
-class TableStoreSpec extends SparkSpec {
+class TableStoreSpec extends SparkSpec with StoreCrashChecks {
   import spark.implicits._
 
   /** Live part-file names per partition dir (`day=d0` → names) — the
@@ -313,23 +313,6 @@ class TableStoreSpec extends SparkSpec {
     ts.append("t", Seq((500L, 1, "d9")).toDF("id", "flag", "day"),
       partitionBy = Seq("day"))
     assert(ts.read("t").count() == 101)
-  }
-
-  /** Files under `root/table` that no retained manifest lists (local
-    * checksum sidecars aside) — the orphan inventory.
-    */
-  private def unlisted(ts: TableStore, root: String,
-                       table: String): Set[String] = {
-    val base = new java.io.File(root, table).getCanonicalFile.toPath
-    val listed = ts.generations(table).flatMap(g =>
-      ts.readAt(table, g).inputFiles.map(f =>
-        base.relativize(java.nio.file.Paths.get(new java.net.URI(f))).toString))
-      .toSet
-    val all = if (!base.toFile.exists()) Set.empty[String]
-      else Files.walk(base).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(p => Files.isRegularFile(p) && !p.toString.endsWith(".crc"))
-        .map(p => base.relativize(p).toString).toSet
-    all -- listed
   }
 
   /** No orphaned data files under the table and exactly one commit
@@ -713,16 +696,114 @@ class TableStoreSpec extends SparkSpec {
       }
   }
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, String)] =
-    df.select($"id", $"flag", $"day").as[(Long, Int, String)].collect()
-      .toSeq.sorted
-
   /** Two generations, every partition multi-file (compact has work). */
   private def seedCrashTable(ts: TableStore): Unit = {
     seedPartitioned(ts, "t")
     ts.append("t", spark.range(100, 120)
       .select($"id", lit(0).as("flag"), concat(lit("d"), $"id" % 5).as("day")),
       partitionBy = Seq("day"))
+  }
+
+  private def flagged(ts: TableStore, table: String, flag: Int): Set[Long] =
+    ts.read(table).filter($"flag" === flag).select($"id").as[Long]
+      .collect().toSet
+
+  test("crash between the two renames of a full rewrite reads wholly-old") {
+    // an unpartitioned updateFlag rewrites the whole table
+    val u = crashBeforeCas("u",
+      _.append("u", (1L to 10L).toDF("id").withColumn("flag", lit(0))))(
+      _.updateFlag("u", Seq(4L).toDF("id"), Seq("id"), "flag", 9),
+      ts => assert(flagged(ts, "u", 9).isEmpty))
+    assert(flagged(u, "u", 9) == Set(4L))
+    assert(u.read("u").count() == 10)
+    // and so does rewrite, here onto a different partition set
+    val t = crashBeforeCas("t", seedPartitioned(_, "t"))(
+      _.rewrite("t", spark.range(400, 420).select($"id", lit(1).as("flag"),
+        concat(lit("d"), $"id" % 2).as("day")), partitionBy = Seq("day")))
+    assert(t.read("t").select($"id").as[Long].collect().toSet ==
+      (400L until 420L).toSet)
+  }
+
+  test("crash after a FIRST-TIME rewrite renames in commits nothing") {
+    val root = Files.createTempDirectory("graft_first").toString
+    val ts = new TableStore(spark, root)
+    val df = (1L to 5L).toDF("id")
+    ts.beforeBeginCommit =
+      () => throw new IllegalStateException("injected crash before commit")
+    intercept[IllegalStateException] { ts.rewrite("v", df) }
+    ts.beforeBeginCommit = () => ()
+    // the committed generation is "no table" even though the crashed
+    // writer's data files survive on disk
+    assert(!ts.exists("v"), "uncommitted first-time rewrite visible")
+    intercept[IllegalArgumentException] { ts.read("v") }
+    assert(ts.generations("v").isEmpty)
+    assert(unlisted(ts, root, "v").nonEmpty, "no data files were written")
+    // the retried rewrite lands as the first generation
+    ts.rewrite("v", df)
+    assert(ts.exists("v"))
+    assert(ts.read("v").as[Long].collect().toSet == (1L to 5L).toSet)
+    assert(ts.generations("v") == Seq(1L))
+    // the stranded files are orphans: cleanStaging drops them all
+    ts.cleanStaging("v")
+    assert(unlisted(ts, root, "v").isEmpty)
+    assert(ts.read("v").count() == 5)
+  }
+
+  test("crash mid multi-partition swap reads wholly-old, never mixed") {
+    // the flag flip hits d1 AND d3
+    val ts = crashBeforeCas("t", seedPartitioned(_, "t"))(
+      _.updateFlag("t", Seq(1L, 3L).toDF("id"), Seq("id"), "flag", 1,
+        partitionCols = Seq("day")),
+      crashed => assert(flagged(crashed, "t", 1).isEmpty,
+        "mixed-generation read"))
+    assert(ts.read("t").count() == 100)
+    assert(flagged(ts, "t", 1) == Set(1L, 3L))
+  }
+
+  test("crash after a brand-new partition dir swaps in reads wholly-old") {
+    // table partitioned BY the flag column: flipping every row writes a
+    // brand-new flag=1 partition and empties flag=0
+    val ts = crashBeforeCas("t", _.append("t",
+      spark.range(10).select($"id", lit(0).as("flag")),
+      partitionBy = Seq("flag")))(
+      _.updateFlag("t", (0L until 10L).toDF("id"), Seq("id"), "flag", 1,
+        partitionCols = Seq("flag")),
+      crashed => {
+        // the new partition's files hold only uncommitted rows; a read
+        // must exclude them or every row comes back twice
+        assert(crashed.read("t").count() == 10,
+          "uncommitted fresh partition leaked")
+        assert(flagged(crashed, "t", 1).isEmpty, "mixed-generation read")
+      })
+    assert(ts.read("t").count() == 10, "duplicates after the retry")
+    assert(flagged(ts, "t", 1) == (0L until 10L).toSet)
+  }
+
+  test("crash mid-append leaves the batch invisible; retry lands once") {
+    val ts = crashBeforeCas("t", seedPartitioned(_, "t"))( // 100 rows
+      _.append("t", spark.range(200, 240).select($"id", lit(0).as("flag"),
+        concat(lit("d"), $"id" % 5).as("day")), partitionBy = Seq("day")),
+      crashed => assert(crashed.read("t").filter($"id" >= 200).count() == 0,
+        "partial append leaked into a read"))
+    val after = ts.read("t")
+    assert(after.count() == 140, "duplicates or losses after the retry")
+    assert(after.select($"id").distinct().count() == 140)
+  }
+
+  test("crash while removing an emptied partition restores it on recovery") {
+    // delete all of d1 (plus one row of d3): d1 leaves the live list
+    val doomed = ((0L until 100L).filter(_ % 5 == 1) :+ 3L).toDF("id")
+    val ts = crashBeforeCas("t", seedPartitioned(_, "t"))(
+      _.deleteByKeys("t", doomed, Seq("id"), partitionCols = Seq("day")),
+      crashed => {
+        // wholly-old: the emptied partition is still visible, also
+        // after an unrelated no-op mutation
+        crashed.updateFlag("t", Seq(9999L).toDF("id"), Seq("id"), "flag", 1,
+          partitionCols = Seq("day"))
+        assert(crashed.read("t").filter($"day" === "d1").count() == 20)
+      })
+    assert(ts.read("t").count() == 79)
+    assert(ts.read("t").filter($"day" === "d1").count() == 0)
   }
 
   /** One row per mutation that writes data files before its commit. */
@@ -753,37 +834,61 @@ class TableStoreSpec extends SparkSpec {
 
   test("crash between data-file write and manifest CAS") {
     for ((name, op) <- crashCases) withClue(s"[$name] ") {
-      val root = Files.createTempDirectory("graft_crash").toString
-      val ts = new TableStore(spark, root, retainGenerations = 1)
-      seedCrashTable(ts)
-      val before = rows(ts.read("t"))
-      val gen = ts.generations("t").last
-      ts.beforeBeginCommit =
-        () => throw new IllegalStateException("injected crash before commit")
-      intercept[IllegalStateException](op(ts))
-      ts.beforeBeginCommit = () => ()
-      // the table still IS the previous generation; the crash left only
-      // data files no manifest lists
-      assert(ts.generations("t").last == gen)
-      assert(rows(ts.read("t")) == before)
-      assert(unlisted(ts, root, "t").nonEmpty, "no data files were written")
-      // the retry lands exactly once: it equals the same mutation on an
-      // uncrashed twin, one generation later, with the old one intact
-      op(ts)
-      val twin = new TableStore(spark,
-        Files.createTempDirectory("graft_twin").toString, retainGenerations = 1)
-      seedCrashTable(twin)
-      op(twin)
-      val after = rows(twin.read("t"))
-      assert(ts.generations("t").last == gen + 1)
-      assert(rows(ts.read("t")) == after)
-      assert(rows(ts.readAt("t", gen)) == before)
-      // vacuum removes the orphans and nothing the retained manifests list
-      ts.vacuum("t", keepLast = 1)
-      assert(unlisted(ts, root, "t").isEmpty)
-      assert(rows(ts.read("t")) == after)
-      assert(rows(ts.readAt("t", gen)) == before)
+      crashBeforeCas("t", seedCrashTable)(op)
     }
+  }
+
+  test("time travel: a crash mid-swap neither corrupts past generations nor leaks") {
+    val root = Files.createTempDirectory("graft_tt").toString
+    val ts = new TableStore(spark, root, retainGenerations = 10)
+    seedPartitioned(ts, "t") // gen 1
+    val g1 = ts.readAt("t", 1).count()
+    ts.deleteByKeys("t", Seq(1L).toDF("id"), Seq("id"),
+      partitionCols = Seq("day")) // gen 2
+    ts.beforeBeginCommit = () => throw new IllegalStateException("crash")
+    intercept[IllegalStateException] {
+      ts.updateFlag("t", Seq(2L).toDF("id"), Seq("id"), "flag", 5,
+        partitionCols = Seq("day"))
+    }
+    ts.beforeBeginCommit = () => ()
+    // mid-crash: past generations still resolve
+    assert(ts.generations("t") == Seq(1L, 2L))
+    assert(ts.readAt("t", 1).count() == g1)
+    assert(ts.readAt("t", 2).count() == g1 - 1)
+    // the retried mutation completes and history is intact
+    ts.updateFlag("t", Seq(2L).toDF("id"), Seq("id"), "flag", 5,
+      partitionCols = Seq("day")) // gen 3
+    assert(ts.generations("t") == Seq(1L, 2L, 3L))
+    assert(ts.readAt("t", 1).count() == g1)
+    assert(ts.readAt("t", 2).count() == g1 - 1)
+    assert(ts.read("t").filter($"flag" === 5).count() == 1)
+    // no leak: vacuum drops the dead writer's files and keeps history
+    ts.vacuum("t", keepLast = 10)
+    assert(unlisted(ts, root, "t").isEmpty)
+    assert(ts.readAt("t", 1).count() == g1)
+  }
+
+  test("OCC: crash between begin-commit CAS and first rename recovers; staging cleared") {
+    val root = Files.createTempDirectory("graft_occ4").toString
+    val ts = new TableStore(spark, root)
+    ts.append("t", Seq((1L, "a")).toDF("k", "v"))
+    ts.beforeBeginCommit = () => throw new IllegalStateException("crash")
+    intercept[IllegalStateException] {
+      ts.append("t", Seq((2L, "b")).toDF("k", "v"))
+    }
+    ts.beforeBeginCommit = () => ()
+    // the dead commit claimed nothing: batch invisible, head unchanged
+    assert(ts.generations("t") == Seq(1L))
+    assert(ts.read("t").count() == 1)
+    assert(unlisted(ts, root, "t").nonEmpty)
+    // the next mutation lands exactly once on top of it
+    ts.append("t", Seq((3L, "c")).toDF("k", "v"))
+    assert(ts.read("t").as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (3L, "c")))
+    // and the dead writer's staging is cleared without touching it
+    ts.cleanStaging("t")
+    assertNoLeaks(ts, root, "t")
+    assert(ts.read("t").count() == 2)
   }
 
   test("partitioned updateFlag ON the partition column keeps the target partition's rows") {
