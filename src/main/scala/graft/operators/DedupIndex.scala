@@ -60,7 +60,8 @@ object DedupIndex {
     * recorded anchor exactly). `indexFiles` > 0 fixes the band-range
     * file count (size files so a screen's pruned read stays I/O-lean;
     * 0 lets AQE pick — small corpora coalesce to one file and every
-    * screen reads it). Returns the committed index generation.
+    * screen reads it). Returns the generation of the index's
+    * [[TableStore.analyze]] commit, so a pin covers the stats too.
     */
   def buildFromCorpus(store: TableStore, corpusTable: String,
                       indexTable: String, idCol: String, textCol: String,
@@ -79,12 +80,10 @@ object DedupIndex {
       else rows.repartitionByRange(col("component"), col("band"))
     val clustered = ranged
       .sortWithinPartitions(col("component"), col("band"), col("doc_id"))
-    val committed =
-      store.rewrite(indexTable, clustered) // layout-preserving even
-      // first-time (see LexIndex.buildFrom)
+    store.rewrite(indexTable, clustered) // layout-preserving even
+    // first-time (see LexIndex.buildFrom)
     store.analyze(indexTable, Seq("component", "band", "doc_id"),
       bloomCols = Seq("band"))
-    committed
   }
 
   /** (shingleN, k, bands, corpus_gen) from the pinned stats row. */

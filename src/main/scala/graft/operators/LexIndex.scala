@@ -65,8 +65,9 @@ object LexIndex {
 
   /** Tokenize `corpus` and persist the full index (postings + doclen +
     * stats) into `store.table`, replacing any previous build; returns
-    * the committed generation (pin it for reproducible serving via
-    * [[topKAt]]). One corpus scan; the posting aggregate is the same
+    * the generation of the build's [[TableStore.analyze]] commit (pin
+    * it for reproducible serving via [[topKAt]]; the pin covers the
+    * stats too). One corpus scan; the posting aggregate is the same
     * (doc, term) exchange [[Bm25.topK]] runs per call, paid once.
     */
   def buildAndSave(store: TableStore, table: String, corpus: DataFrame,
@@ -106,7 +107,7 @@ object LexIndex {
                         corpusGen: Option[Long]): Long = {
     val df = indexRows(tf, corpusGen)
     // range-cluster by (component, term): tight per-file term windows
-    // make the analyze() sidecar (and parquet row-group stats)
+    // make the analyze() file stats (and parquet row-group stats)
     // actually selective for term-IN-vocab serving reads. Default file
     // count is AQE's (coalesces a small build, splits a 100 TB one);
     // clusterFiles pins it (an explicit count bypasses AQE coalescing)
@@ -117,16 +118,15 @@ object LexIndex {
     }
     val clustered = ranged
       .sortWithinPartitions(col("component"), col("term"), col("doc_id"))
-    // pin the generation from the commit itself — a post-commit
+    store.rewrite(table, clustered) // rewrite even first-time:
+    // the caller OWNS this range-clustered layout (rewrite is the
+    // layout-preserving op; a first-time append would compact it)
+    // pin the generation the stats commit returns — a post-commit
     // generations().last could observe a concurrent writer's LATER
-    // generation and anchor the wrong snapshot
-    val committedGen =
-      store.rewrite(table, clustered) // rewrite even first-time:
-      // the caller OWNS this range-clustered layout (rewrite is the
-      // layout-preserving op; a first-time append would compact it)
+    // generation and anchor the wrong snapshot, and the rewrite's own
+    // generation retires once analyze commits past it
     store.analyze(table, Seq("component", "term", "doc_id"),
       bloomCols = Seq("term"))
-    committedGen
   }
 
   /** INCREMENTAL index maintenance from a corpus CHANGE FEED
@@ -246,7 +246,7 @@ object LexIndex {
 
   /** Serve BM25 top-k from the LIVE index with FILE-LEVEL pruning:
     * postings read through [[TableStore.readWhere]] under a
-    * `term IN vocab` predicate, so the analyze() sidecar drops every
+    * `term IN vocab` predicate, so the analyze() stats drop every
     * file whose term range misses the query vocabulary. Output
     * matches [[Bm25.topK]] on the indexed corpus bit-for-bit.
     */
@@ -266,7 +266,7 @@ object LexIndex {
     * results no matter how many refreshes have committed since.
     * (Generation reads are plain file unions; pruning here is
     * parquet row-group stats under the pushed `term IN vocab` filter
-    * rather than the live sidecar.)
+    * rather than the manifest's file stats.)
     */
   def topKAt(store: TableStore, table: String, gen: Long,
              queries: Seq[(Long, String)], k: Int,

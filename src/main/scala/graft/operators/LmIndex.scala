@@ -73,7 +73,8 @@ object LmIndex {
     * its current generation (readAt — consumed data == recorded
     * anchor exactly). One tokenize pass feeds the three model-scale
     * count exchanges; N/V cost one extra bounded aggregate. Returns
-    * the committed model generation.
+    * the generation of the model's [[TableStore.analyze]] commit, so a
+    * pin covers the stats too.
     */
   def buildFromCorpus(store: TableStore, corpusTable: String,
                       modelTable: String, textCol: String): Long = {
@@ -93,11 +94,9 @@ object LmIndex {
       .unionByName(statsRow(target, n, v, gen))
     val clustered = rows.repartitionByRange(col("mkey"))
       .sortWithinPartitions(col("mkey"))
-    val committed =
-      store.rewrite(modelTable, clustered) // layout-preserving even
-      // first-time (see LexIndex.buildFrom)
+    store.rewrite(modelTable, clustered) // layout-preserving even
+    // first-time (see LexIndex.buildFrom)
     store.analyze(modelTable, Seq("mkey", "component"))
-    committed
   }
 
   /** (n, v, corpus_gen) from the pinned stats row. */
@@ -187,15 +186,16 @@ object LmIndex {
 
   /** Rewrite the model without its cnt=0 rows (refresh leaves them —
     * a single merge commit cannot both update and delete). Pure
-    * storage reclamation: serves filter cnt > 0 either way.
+    * storage reclamation: serves filter cnt > 0 either way. Returns
+    * the generation of the re-analyze's commit, so a pin covers the
+    * stats too.
     */
   def compactModel(store: TableStore, modelTable: String): Long = {
     val kept = store.read(modelTable)
       .filter(col("component") === "stats" || col("cnt") > 0L)
       .repartitionByRange(col("mkey")).sortWithinPartitions(col("mkey"))
-    val committed = store.rewrite(modelTable, kept)
+    store.rewrite(modelTable, kept)
     store.analyze(modelTable, Seq("mkey", "component"))
-    committed
   }
 
   /** [[Lm.LmFrames]] from the persisted components (cnt=0 tombstones

@@ -59,7 +59,8 @@ object TokenizerIndex {
 
   /** Build the candidate-frequency table over a CORPUS TABLE at its
     * current generation, pinning `vocabSize` and the generation in
-    * the stats row. Returns the committed artifact generation.
+    * the stats row. Returns the generation of the artifact's
+    * [[TableStore.analyze]] commit, so a pin covers the stats too.
     */
   def buildUnigramFromCorpus(store: TableStore, corpusTable: String,
                              table: String, textCol: String,
@@ -71,11 +72,9 @@ object TokenizerIndex {
       .unionByName(uniStatsRow(corpus, vocabSize, gen))
     val clustered = rows.repartitionByRange(col("mkey"))
       .sortWithinPartitions(col("mkey"))
-    val committed =
-      store.rewrite(table, clustered) // layout-preserving even
-      // first-time (see LexIndex.buildFrom)
+    store.rewrite(table, clustered) // layout-preserving even
+    // first-time (see LexIndex.buildFrom)
     store.analyze(table, Seq("mkey", "component"))
-    committed
   }
 
   /** (vocabSize, corpus_gen) from the pinned stats row. */

@@ -62,7 +62,8 @@ object WinnowIndex {
   /** Build the fingerprint index over a CORPUS TABLE in the same
     * store, pinning the corpus generation consumed. `indexFiles` > 0
     * fixes the fp-range file count (0 lets AQE pick). Returns the
-    * committed index generation.
+    * generation of the index's [[TableStore.analyze]] commit, so a
+    * pin covers the stats too.
     */
   def buildFromCorpus(store: TableStore, corpusTable: String,
                       indexTable: String, idCol: String, textCol: String,
@@ -78,12 +79,10 @@ object WinnowIndex {
       else rows.repartitionByRange(col("component"), col("fp"))
     val clustered = ranged
       .sortWithinPartitions(col("component"), col("fp"), col("doc_id"))
-    val committed =
-      store.rewrite(indexTable, clustered) // layout-preserving even
-      // first-time (see LexIndex.buildFrom)
+    store.rewrite(indexTable, clustered) // layout-preserving even
+    // first-time (see LexIndex.buildFrom)
     store.analyze(indexTable, Seq("component", "fp", "doc_id"),
       bloomCols = Seq("fp"))
-    committed
   }
 
   /** (k, w, salt, corpus_gen) from the pinned stats row. */

@@ -699,7 +699,7 @@ object MiscQueries {
   /** q148 — METADATA-ONLY predicate aggregates
     * ([[graft.sources.TableStore.aggWhere]], round 11): a key-window
     * revenue total over a range-clustered store table settles
-    * interior files from the stats sidecar's exact per-file sums —
+    * interior files from the manifest's exact per-file sums —
     * zero I/O — and reads only the boundary files; this gate builds
     * the table from orders in-query and certifies the metadata path's
     * (count, sum, min, max) against DuckDB's full aggregate over the

@@ -66,8 +66,8 @@ object FileStats {
     * for integral/decimal columns (float/double sums are
     * order-dependent, so a metadata sum would not equal a scan) —
     * the [[TableStore.aggWhere]] metadata-aggregate input; None on
-    * sidecars written before the field existed or for sum-unsafe
-    * types (degrades to scanning, never to a wrong total).
+    * lines written before the field existed or for sum-unsafe types
+    * (degrades to scanning, never to a wrong total).
     */
   final case class ColStats(rows: Long, nulls: Long,
                             min: Option[Any], max: Option[Any],
@@ -130,12 +130,12 @@ object FileStats {
       Some(Bloom(m, k, words))
     }
 
-  /** `file rel path → PerFile` as sidecar lines, one per (file, col):
+  /** `file rel path → PerFile` as commit-manifest lines, one per
+    * (file, col):
     * `s=<rel>\t<col>\t<rows>\t<nulls>\t<min>\t<max>[\t<bloom>[\t<sum>]]`
     * plus a bare `r=<rel>\t<rows>` row-count line per file. The bloom
-    * and sum fields are optional both ways: older sidecars parse
-    * (field = None) and older readers ignore the extra fields —
-    * staleness of the sidecar only ever degrades skipping.
+    * and sum fields are optional: a line without them parses with
+    * field = None, which only ever degrades skipping.
     */
   def serialize(stats: Map[String, PerFile]): String = {
     val sb = new StringBuilder
@@ -149,6 +149,12 @@ object FileStats {
     }
     sb.toString
   }
+
+  /** The file a [[serialize]]d line describes, without decoding the
+    * rest of the line (a bloom can be kilobytes).
+    */
+  def fileOf(line: String): String =
+    dec(line.substring(2, line.indexOf('\t')))
 
   def deserialize(txt: String): Map[String, PerFile] = {
     val rows = scala.collection.mutable.Map.empty[String, Long]

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -44,11 +45,13 @@ final class ConcurrentCommitException(val table: String,
   * `<table>/<commit-id>/[k=v/]part-….parquet`, then commits by creating
   * the manifest `<table>._graft_commit.<seq+1>` with CREATE-EXCLUSIVE.
   * That one manifest lists the whole live file set (relative path and
-  * length), the partition columns and the read schema — it is the only
-  * truth. A replaced or deleted file is simply left out of the next
-  * list: nothing is ever renamed, moved or rewritten in place. A crash
-  * before the CAS leaves only files no manifest lists (orphans, removed
-  * by [[vacuum]]); a crash after it leaves a committed generation.
+  * length), the partition columns, the read schema, the stream fences
+  * and the per-file stats of [[analyze]] — it is the only truth
+  * (named [[tag]]s aside). A replaced or deleted file is simply left
+  * out of the next list: nothing is ever renamed, moved or rewritten
+  * in place. A crash before the CAS leaves only files no manifest
+  * lists (orphans, removed by [[vacuum]]); a crash after it leaves a
+  * committed generation.
   * Reads resolve through the head manifest alone: one file index over
   * the listed files with the recorded schema and partition values — no
   * directory listing, no footer inference. Partition- and
@@ -71,7 +74,9 @@ final class ConcurrentCommitException(val table: String,
   * RETENTION: manifests are the snapshots. With `retainGenerations = k`
   * the last k superseded manifests — and every file they list — stay
   * readable through [[readAt]] and [[changesBetween]]; each commit
-  * retires older manifests and deletes the files only they listed.
+  * retires older manifests and deletes the files only they listed. An
+  * [[analyze]] is a commit too (same files, stats attached), so it
+  * uses one retention slot.
   */
 final class TableStore(spark: SparkSession, root: String,
                        retainGenerations: Int = 0,
@@ -88,15 +93,22 @@ final class TableStore(spark: SparkSession, root: String,
     * sequence): the complete live data-file set as (path relative to
     * the table dir, byte length), the partition columns, the read
     * schema (data columns, then partition columns), the exactly-once
-    * stream fences, and whether a schema-adding append ever widened
-    * the table.
+    * stream fences, whether a schema-adding append ever widened the
+    * table, the [[analyze]]d stats of listed files (the raw `r=`/`s=`
+    * lines of [[FileStats.serialize]]) and, for a rollup table, the
+    * source files each `__rollup:<src>` fence has folded.
     */
   private[sources] case class Manifest(seq: Long, schema: StructType,
                                        partitionCols: Seq[String],
                                        files: Seq[(String, Long)],
                                        txns: Map[String, Long],
-                                       evolved: Boolean) {
+                                       evolved: Boolean,
+                                       statLines: Seq[String],
+                                       folds: Map[String, Set[String]]) {
     def paths: Seq[String] = files.map(_._1)
+    /** Decoded on first use: a plain read never decodes a bloom. */
+    lazy val stats: Map[String, FileStats.PerFile] =
+      FileStats.deserialize(statLines.mkString("\n"))
     def dataSchema: StructType =
       StructType(schema.filterNot(f => partitionCols.contains(f.name)))
     def partitionSchema: StructType =
@@ -197,8 +209,15 @@ final class TableStore(spark: SparkSession, root: String,
       if (cut <= 0) None
       else t.drop(cut + 1).toLongOption.map(t.take(cut) -> _)
     }.toMap
+    // `fold=<src>\t<relative path>`: Spark escapes tabs in partition
+    // directory names, and commit ids and part names hold none
+    val folds = vs("fold").map { l =>
+      val cut = l.indexOf('\t')
+      l.take(cut) -> l.drop(cut + 1)
+    }.groupMap(_._1)(_._2).map { case (s, fs) => s -> fs.toSet }
     Manifest(seq, DataType.fromJson(vs("schema").head).asInstanceOf[StructType],
-      vs("part"), files, txns, vs("evolved").nonEmpty)
+      vs("part"), files, txns, vs("evolved").nonEmpty,
+      lines.filter(l => l.startsWith("r=") || l.startsWith("s=")), folds)
   }
 
   /** The COMMIT CAS: `m` is created with CREATE-EXCLUSIVE at exactly
@@ -216,7 +235,10 @@ final class TableStore(spark: SparkSession, root: String,
           m.partitionCols.map("part=" + _) ++
           m.files.map { case (rel, len) => s"f=$len $rel" } ++
           m.txns.toSeq.sortBy(_._1).map { case (s, b) => s"txn=$s:$b" } ++
-          (if (m.evolved) Seq("evolved=true") else Nil))
+          (if (m.evolved) Seq("evolved=true") else Nil) ++
+          m.folds.toSeq.sortBy(_._1).flatMap { case (s, fs) =>
+            fs.toSeq.sorted.map(f => s"fold=$s\t$f")
+          } ++ m.statLines)
           .mkString("", "\n", "\n")
       val found = listManifests(table).map(_._1).maxOption.getOrElse(0L)
       if (found != m.seq - 1)
@@ -367,7 +389,7 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   /** Data files under `dir` (recursive) with their lengths; metadata
-    * sidecars (`_`/`.`-prefixed) are skipped.
+    * files (`_`/`.`-prefixed) are skipped.
     */
   private def dataFiles(fs: FileSystem, dir: Path,
                         rel: String = ""): Seq[(String, Long)] =
@@ -474,26 +496,36 @@ final class TableStore(spark: SparkSession, root: String,
   /** Commit the live file set `files` as generation `head0.seq + 1`.
     * `schema` is the read schema; when files are listed, partition
     * column types are (re)inferred from their directory names, the
-    * rule a directory read applies. Losing the CAS deletes this
-    * attempt's own commit directories (`staged` — no manifest ever
-    * listed them) and rethrows for [[retryCommit]]; winning retires
-    * manifests past the retention window ([[expire]]).
+    * rule a directory read applies. The head's stats of every file
+    * still listed carry forward (a file is immutable, so its stats
+    * never go stale), overridden per file by `stats`; fences and fold
+    * lists carry forward, updated by `txnUpdate` and `fold`. Losing
+    * the CAS deletes this attempt's own commit directories (`staged` —
+    * no manifest ever listed them) and rethrows for [[retryCommit]];
+    * winning retires manifests past the retention window ([[expire]]).
     */
   private def commit(table: String, head0: Option[Manifest],
                      files: Seq[(String, Long)], partitionCols: Seq[String],
                      schema: StructType, staged: Seq[(String, Long)],
                      txnUpdate: Option[(String, Long)] = None,
-                     widens: Boolean = false): Long = {
+                     widens: Boolean = false,
+                     stats: Map[String, FileStats.PerFile] = Map.empty,
+                     fold: Option[(String, Set[String])] = None): Long = {
     val parts =
       if (partitionCols.isEmpty || files.isEmpty)
         schema.filter(f => partitionCols.contains(f.name))
       else partitionValues(table, files.map(f => partitionDir(f._1)), None)
         ._1.toSeq
+    val keepStats = files.map(_._1).toSet -- stats.keys
     val m = Manifest(head0.map(_.seq).getOrElse(0L) + 1,
       StructType(schema.filterNot(f => partitionCols.contains(f.name)) ++ parts),
       partitionCols, files,
       head0.map(_.txns).getOrElse(Map.empty[String, Long]) ++ txnUpdate,
-      widens || head0.exists(_.evolved))
+      widens || head0.exists(_.evolved),
+      head0.toSeq.flatMap(_.statLines)
+        .filter(l => keepStats(FileStats.fileOf(l))) ++
+        FileStats.serialize(stats).split("\n").filter(_.nonEmpty),
+      head0.map(_.folds).getOrElse(Map.empty[String, Set[String]]) ++ fold)
     beforeBeginCommit()
     try {
       writeManifest(table, m)
@@ -539,23 +571,20 @@ final class TableStore(spark: SparkSession, root: String,
 
   def exists(table: String): Boolean = readManifest(table).nonEmpty
 
-  /** Table scan of the head generation, resolved through its manifest. */
+  /** Table scan of the head generation, resolved through its manifest.
+    * The frame is a reader SNAPSHOT against concurrent writers: its
+    * file list is the head manifest's, fixed when the frame is
+    * created, so a concurrent append's files never leak into it.
+    * Appends never delete files, so the frame stays valid under any
+    * number of concurrent appends/upserts. A concurrent REWRITE
+    * deletes the files it replaced once it commits unless retention
+    * keeps them (`retainGenerations > 0`) — a reader that must survive
+    * rewrites should pin `generations().last` and use [[readAt]].
+    */
   def read(table: String): DataFrame = {
     val m = head(table)
     scan(table, m, m.paths)
   }
-
-  /** Reader SNAPSHOT against concurrent writers. Every [[read]] is
-    * already pinned: its file list is the head manifest's, fixed when
-    * the frame is created, so a concurrent append's files never leak
-    * into it. Appends never delete files, so the frame stays valid
-    * under any number of concurrent appends/upserts. A concurrent
-    * REWRITE deletes the files it replaced once it commits unless
-    * retention keeps them (`retainGenerations > 0`) — a reader that
-    * must survive rewrites should pin `generations().last` and use
-    * [[readAt]].
-    */
-  def readPinned(table: String): DataFrame = read(table)
 
   /** Manifest-fenced append (K3): the batch's files are written into
     * their own commit directory and the commit lists them next to the
@@ -1044,7 +1073,11 @@ final class TableStore(spark: SparkSession, root: String,
     * [[updateWhere]] / [[merge]]: select affected files by the
     * predicate's stats window, write `transform`(affected rows) as new
     * files, and commit the file list with the new files in place of
-    * the affected ones.
+    * the affected ones. On an analyzed table the same commit carries
+    * stats for every listed file that has none (the new files, and
+    * any appended since the last analyze), on the columns the table's
+    * stats already cover — the NEXT targeted mutation would otherwise
+    * conservatively rewrite every statless file.
     */
   private def predicateMutation(table: String,
                                 pred: org.apache.spark.sql.Column,
@@ -1073,15 +1106,10 @@ final class TableStore(spark: SparkSession, root: String,
       checkFence(table, Some(head0), expectedFence)
       val all = head0.paths
       if (all.isEmpty && !commitOnEmpty) return 0L
-      var sidecarCols: Seq[String] = Nil
-      val affected: Seq[String] = readStatsSidecar(table) match {
-        case None => all
-        case Some(stats) =>
-          sidecarCols = stats.values.flatMap(_.cols.keys).toSeq.distinct
-          val conds = conditions(read(table).filter(pred))
-          all.filter(rel => stats.get(rel).forall(pf =>
-            conds.forall(c => FileStats.mayMatch(c, pf))))
-      }
+      val affected =
+        if (head0.stats.isEmpty) all
+        else all.filter(mayMatch(head0.stats,
+          conditions(scan(table, head0, all).filter(pred))))
       if (affected.isEmpty && !commitOnEmpty) return 0L
       // `commitOnEmpty` with no affected files still runs transform
       // (over zero rows) — merge's insert-only case commits its
@@ -1095,13 +1123,16 @@ final class TableStore(spark: SparkSession, root: String,
       val incoming = stage(table, transform(affectedFrame),
         head0.partitionCols, compact = false)
       val gone = affected.toSet
-      commit(table, Some(head0),
-        head0.files.filterNot(f => gone(f._1)) ++ incoming,
-        head0.partitionCols, head0.schema, incoming, txnUpdate)
-      // keep skipping fresh: drop replaced entries, stat the new files
-      // (the NEXT targeted delete would otherwise conservatively
-      // rewrite every statless file)
-      if (sidecarCols.nonEmpty) analyzeIncremental(table, sidecarCols)
+      val next = head0.copy(
+        files = head0.files.filterNot(f => gone(f._1)) ++ incoming)
+      val statsCols = head0.stats.values.flatMap(_.cols.keys).toSeq.distinct
+      val statless = next.paths.filterNot(head0.stats.contains)
+      val fresh =
+        if (statsCols.isEmpty || statless.isEmpty)
+          Map.empty[String, FileStats.PerFile]
+        else statsOf(scan(table, next, statless), table, statsCols)
+      commit(table, Some(head0), next.files, head0.partitionCols,
+        head0.schema, incoming, txnUpdate, stats = fresh)
       affected.size.toLong
     }
   }
@@ -1253,7 +1284,8 @@ final class TableStore(spark: SparkSession, root: String,
                           partitionBy: Seq[String],
                           txnUpdate: Option[(String, Long)] = None,
                           expectedFence: Option[(String, Long)] = None,
-                          preSized: Boolean = false): Long = {
+                          preSized: Boolean = false,
+                          fold: Option[(String, Set[String])] = None): Long = {
     // CAS anchor BEFORE the write: the write EXECUTES the caller's
     // frame — state reads after this line are covered by the CAS,
     // reads before it are not
@@ -1264,7 +1296,7 @@ final class TableStore(spark: SparkSession, root: String,
     // targetFiles) opt out of write-time compaction
     val files = stage(table, frame, partitionBy, compact = !preSized)
     commit(table, head0, files, partitionBy,
-      scanSchema(frame.schema), files, txnUpdate)
+      scanSchema(frame.schema), files, txnUpdate, fold = fold)
   }
 
   /** Rewrite ONLY the partitions in `hitParts`: the transformed rows
@@ -1324,26 +1356,26 @@ final class TableStore(spark: SparkSession, root: String,
 
   // ------------------------------------------------- file statistics
 
-  private def statsPath(table: String) =
-    new Path(root, s"$table._graft_stats")
-
-  /** Compute and persist per-FILE min/max/null-count statistics for
-    * `statsCols` — the store-level data-skipping index
-    * ([[FileStats]]; Delta/Iceberg's file-stats shape on this store's
-    * sidecar machinery). One metadata-bounded aggregate job: the scan
-    * groups by `_metadata.file_path`, so the collected result is one
-    * row per data file regardless of table size. Stats are keyed by
-    * file name (Spark part names are UUID-unique), so entries for
-    * files a later rewrite replaced are simply never consulted, and
-    * files appended after the analyze are scanned unconditionally —
-    * staleness degrades SKIPPING, never correctness. Timestamp
-    * columns are projected to epoch micros before aggregation
-    * (monotonic; assumes the engine's UTC-pinned session for NTZ).
-    * Supported column types: integral, float/double (non-finite
-    * boundaries drop that file's entry — conservative), decimal,
-    * string, boolean, date, timestamp.
+  /** Compute per-FILE min/max/null-count statistics for `statsCols`
+    * and commit them — the store-level data-skipping index
+    * ([[FileStats]]; Delta/Iceberg's file-stats shape: a file's stats
+    * ride the manifest that lists it). One metadata-bounded aggregate
+    * job: the scan groups by `_metadata.file_path`, so the collected
+    * result is one row per data file regardless of table size. The
+    * commit lists the unchanged file set with the stats attached, so
+    * an analyze uses one retention slot; a concurrent commit makes it
+    * re-derive against the new head like any mutation. Later commits
+    * carry each kept file's stats forward and drop a replaced file's
+    * with it; files appended after the analyze carry none and are
+    * scanned unconditionally — staleness degrades SKIPPING, never
+    * correctness. Timestamp columns are projected to epoch micros
+    * before aggregation (monotonic; assumes the engine's UTC-pinned
+    * session for NTZ). Supported column types: integral, float/double
+    * (non-finite boundaries drop that file's entry — conservative),
+    * decimal, string, boolean, date, timestamp. Returns the committed
+    * generation.
     */
-  def analyze(table: String, statsCols: Seq[String]): Unit =
+  def analyze(table: String, statsCols: Seq[String]): Long =
     analyze(table, statsCols, Nil)
 
   /** [[analyze]] with per-file BLOOM filters on `bloomCols` (⊆
@@ -1355,56 +1387,26 @@ final class TableStore(spark: SparkSession, root: String,
     * handful of files that might hold x (the 100 TB point-read shape).
     * `bloomBits` sizes each filter (k = 4 double-hashed probes;
     * ~1% false-positive rate at bits/12 distinct values per file —
-    * false positives cost I/O, never rows). Cost: `bloomBits/8` bytes
-    * per (file, col) in the sidecar and k bounded collect_sets riding
-    * the same one stats job.
+    * false positives cost I/O, never rows). Cost: `bloomBits/4` hex
+    * characters per (file, col) in the manifest and k bounded
+    * collect_sets riding the same one stats job.
     */
   def analyze(table: String, statsCols: Seq[String],
-              bloomCols: Seq[String], bloomBits: Int = 8192): Unit = {
+              bloomCols: Seq[String], bloomBits: Int = 8192): Long = {
     require(statsCols.nonEmpty, "analyze: name at least one column")
-    val stats = statsOf(readPinned(table), table, statsCols, bloomCols,
-      bloomBits)
-    writeStatsSidecar(table, stats)
-  }
-
-  /** Atomic (write-temp-then-rename) stats-sidecar replacement: an
-    * in-place overwrite would let a concurrent [[readWhere]] /
-    * predicate mutation open the sidecar mid-write and parse a
-    * truncated line — an exception where the contract promises
-    * "staleness degrades skipping, never correctness". The rename
-    * leaves at most a brief no-sidecar window (dst deleted, rename
-    * pending), which readers already degrade through (scan
-    * everything); [[readStatsSidecar]] additionally treats any parse
-    * failure as no-sidecar for stores whose rename is not atomic.
-    */
-  private def writeStatsSidecar(table: String,
-                                stats: Map[String, FileStats.PerFile])
-      : Unit = {
-    val p = statsPath(table)
-    val fs = fsOf(p)
-    // prune temps orphaned by a crash between create and rename (or a
-    // failed rename): nothing else ever reads or deletes them, so
-    // repeated crashes would otherwise accumulate files forever
-    try {
-      fs.globStatus(new Path(p.toString + ".tmp.*")) match {
-        case null => ()
-        case stale => stale.foreach(s => fs.delete(s.getPath, false))
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-    val tmp = new Path(p.toString + ".tmp." +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12))
-    val out = fs.create(tmp, true)
-    try out.write(FileStats.serialize(stats).getBytes("UTF-8"))
-    finally out.close()
-    // HDFS/local rename-onto-existing fails: clear dst first. The gap
-    // between the two is the degrade-only no-sidecar window.
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(
-        s"analyze: could not move stats sidecar into place for $table")
+    retryCommit {
+      val m = head(table)
+      commitStats(table, m, m.paths, statsCols, bloomCols, bloomBits)
     }
   }
+
+  /** Commit `m`'s unchanged file list with fresh stats for `rels`. */
+  private def commitStats(table: String, m: Manifest, rels: Seq[String],
+                          statsCols: Seq[String], bloomCols: Seq[String],
+                          bloomBits: Int): Long =
+    commit(table, Some(m), m.files, m.partitionCols, m.schema, Nil,
+      stats = statsOf(scan(table, m, rels), table, statsCols, bloomCols,
+        bloomBits))
 
   /** The stats aggregation behind [[analyze]]/[[analyzeIncremental]]:
     * one job over `df` grouped by `_metadata.file_path`, collected as
@@ -1543,18 +1545,17 @@ final class TableStore(spark: SparkSession, root: String,
     stats
   }
 
-  /** INCREMENTAL [[analyze]]: compute stats ONLY for committed files
-    * the sidecar does not know yet (appended since the last analyze)
-    * and merge them in — the steady-state maintenance call for an
-    * append-heavy corpus: cost scales with the NEW bytes, not the
-    * table. Entries for files a rewrite replaced are pruned from the
-    * sidecar (their names are gone from the inventory). `statsCols`
-    * must match the previous analyze's columns for uniform skipping
-    * (not enforced — files analyzed with fewer columns simply prune
-    * on fewer; correctness is unaffected either way). No-op when
-    * nothing is new.
+  /** INCREMENTAL [[analyze]]: compute stats ONLY for listed files
+    * that have none yet (appended since the last analyze) and commit
+    * them — the steady-state maintenance call for an append-heavy
+    * corpus: cost scales with the NEW bytes, not the table. With no
+    * stats at all it is a full [[analyze]]. `statsCols` must match the
+    * previous analyze's columns for uniform skipping (not enforced —
+    * files analyzed with fewer columns simply prune on fewer;
+    * correctness is unaffected either way). No-op when nothing is new:
+    * nothing is committed. Returns the head generation afterwards.
     */
-  def analyzeIncremental(table: String, statsCols: Seq[String]): Unit =
+  def analyzeIncremental(table: String, statsCols: Seq[String]): Long =
     analyzeIncremental(table, statsCols, Nil)
 
   /** [[analyzeIncremental]] with BLOOM filters on `bloomCols` for the
@@ -1565,57 +1566,22 @@ final class TableStore(spark: SparkSession, root: String,
     */
   def analyzeIncremental(table: String, statsCols: Seq[String],
                          bloomCols: Seq[String],
-                         bloomBits: Int = 8192): Unit = {
+                         bloomBits: Int = 8192): Long = {
     require(statsCols.nonEmpty, "analyzeIncremental: name at least one column")
-    val prior = readStatsSidecar(table) match {
-      case Some(st) => st
-      case None     => analyze(table, statsCols, bloomCols, bloomBits); return
+    retryCommit {
+      val m = head(table)
+      val missing = m.paths.filterNot(m.stats.contains)
+      if (missing.isEmpty && m.stats.nonEmpty) m.seq
+      else commitStats(table, m, missing, statsCols, bloomCols, bloomBits)
     }
-    val m = head(table)
-    val current = m.paths
-    val currentSet = current.toSet
-    val missing = current.filterNot(prior.contains)
-    val live = prior.view.filterKeys(currentSet).toMap
-    if (missing.isEmpty) {
-      if (live.size != prior.size) // rewrite pruned files: shrink sidecar
-        writeStatsSidecar(table, live)
-      return
-    }
-    val delta = statsOf(scan(table, m, missing),
-      table, statsCols, bloomCols, bloomBits)
-    writeStatsSidecar(table, live ++ delta)
   }
 
-  /** The stats sidecar, if one exists (shared by [[readWhere]],
-    * [[analyzeIncremental]], and the predicate mutations).
+  /** Whether a file may hold rows matching every one of `conds`: only
+    * a file whose stats prove a condition empty is ruled out.
     */
-  private def readStatsSidecar(table: String)
-      : Option[Map[String, FileStats.PerFile]] = {
-    val sp = statsPath(table)
-    val fs = fsOf(sp)
-    // ANY failure here — vanished between exists and open (concurrent
-    // [[writeStatsSidecar]] replacement), or a truncated/garbled body
-    // on a store without atomic rename — degrades to "no sidecar"
-    // (scan everything): staleness may cost skipping, never
-    // correctness, and never an exception in a reader. But the
-    // degrade must stay OBSERVABLE: a persistent IO/permission
-    // problem silently disabling skipping on every read would be an
-    // invisible performance regression, so a sidecar that EXISTS yet
-    // fails to open/parse logs one warning per table.
-    try {
-      if (!fs.exists(sp)) None
-      else Some(FileStats.deserialize(readText(sp)))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (TableStore.sidecarWarned.add(sp.toString))
-          org.slf4j.LoggerFactory.getLogger(classOf[TableStore]).warn(
-            s"stats sidecar for table $table exists but failed to " +
-              s"open/parse (${e.getClass.getSimpleName}: ${e.getMessage}); " +
-              "file skipping disabled for this table until a successful " +
-              "analyze() — results remain correct, reads scan everything")
-        None
-    }
-  }
+  private def mayMatch(stats: Map[String, FileStats.PerFile],
+                       conds: Seq[Expression])(rel: String): Boolean =
+    stats.get(rel).forall(pf => conds.forall(c => FileStats.mayMatch(c, pf)))
 
   /** The predicate's RESOLVED, constant-folded form: analyze+optimize
     * the filtered frame (driver-side, no job) and collect every Filter
@@ -1635,36 +1601,30 @@ final class TableStore(spark: SparkSession, root: String,
     * re-applied to the survivors, so pruning is invisible to results.
     * Files without stats (appended since the last [[analyze]], or a
     * column the analyze didn't cover) are always scanned. With no
-    * sidecar this is exactly `read(table).filter(pred)`.
+    * stats this is exactly `read(table).filter(pred)`.
     */
   def readWhere(table: String, pred: org.apache.spark.sql.Column): DataFrame = {
     val m = head(table)
     val plain = scan(table, m, m.paths).filter(pred)
-    val stats = readStatsSidecar(table) match {
-      case Some(st) if m.files.nonEmpty => st
-      case _                            => return plain
-    }
-    val conds = conditions(plain)
-    val kept = m.paths.filter(rel =>
-      stats.get(rel).forall(pf =>
-        conds.forall(c => FileStats.mayMatch(c, pf))))
+    if (m.stats.isEmpty) return plain
+    val kept = m.paths.filter(mayMatch(m.stats, conditions(plain)))
     if (kept.size == m.files.size) plain
     else if (kept.isEmpty) plain.limit(0) // no file can match
     else scan(table, m, kept).filter(pred)
   }
 
-  /** Predicate COUNT answered from METADATA wherever the stats sidecar
+  /** Predicate COUNT answered from METADATA wherever the file stats
     * can prove it: each file is classified ALL (every row provably
-    * matches — contributes its sidecar row count, zero I/O), NONE
+    * matches — contributes its recorded row count, zero I/O), NONE
     * (provably empty under the predicate — contributes 0), or
     * BOUNDARY (indeterminate — read and counted). At 100 TB a
     * time-range or partition-key count touches only the files
     * straddling the range edges; the interior — almost everything —
-    * is settled from the sidecar. Exactness is unconditional: the
+    * is settled from the manifest. Exactness is unconditional: the
     * ALL/NONE proofs are [[FileStats.allMatch]]/[[FileStats.mayMatch]]
     * (both conservative, SQL null semantics), and stale-stats files
     * simply classify BOUNDARY and get read. Falls back to a plain
-    * filtered count with no sidecar, or when the optimizer folds the
+    * filtered count with no stats, or when the optimizer folds the
     * predicate away entirely (no Filter conjuncts to prove against —
     * including a literal-false predicate whose plan collapses to an
     * empty relation).
@@ -1681,10 +1641,8 @@ final class TableStore(spark: SparkSession, root: String,
     val m = head(table)
     val plain = scan(table, m, m.paths).filter(pred)
     def fallback = (plain.count(), 0, 0, -1)
-    val stats = readStatsSidecar(table) match {
-      case Some(st) => st
-      case None     => return fallback
-    }
+    val stats = m.stats
+    if (stats.isEmpty) return fallback
     val files = m.paths
     if (files.isEmpty) return (0L, 0, 0, 0)
     val conds = conditions(plain)
@@ -1695,9 +1653,7 @@ final class TableStore(spark: SparkSession, root: String,
     val (provedAll, rest) = files.partition(rel =>
       stats.get(rel).exists(pf =>
         conds.forall(c => FileStats.allMatch(c, pf))))
-    val (scanned, provedNone) = rest.partition(rel =>
-      stats.get(rel).forall(pf =>
-        conds.forall(c => FileStats.mayMatch(c, pf))))
+    val (scanned, provedNone) = rest.partition(mayMatch(stats, conds))
     val metaCount = provedAll.map(stats(_).rows).sum
     val scanCount =
       if (scanned.isEmpty) 0L
@@ -1708,15 +1664,15 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** METADATA-ONLY predicate AGGREGATES — [[countWhere]] extended to
     * (count, sum, min, max) of an integral/decimal `valueCol`: files
-    * the stats sidecar PROVES all-matching contribute their recorded
+    * the file stats PROVE all-matching contribute their recorded
     * row count, exact column total, and [min,max] with ZERO I/O;
     * provably-empty files are skipped; only BOUNDARY files (range
     * edges) are read, filtered, and aggregated — so a time-window
     * revenue total over a clustered 100 TB table touches the two edge
-    * files, not the window. A proved-all file whose sidecar predates
-    * the sum field (or whose `valueCol` was not analyzed) is demoted
-    * to scanning — staleness degrades I/O, never totals. Falls back
-    * to a full filtered aggregate when there is no usable sidecar or
+    * files, not the window. A proved-all file whose stats lack the
+    * sum field (or whose `valueCol` was not analyzed) is demoted to
+    * scanning — staleness degrades I/O, never totals. Falls back to a
+    * full filtered aggregate when the table has no stats or
     * the optimizer folded the predicate (the [[countWhere]]
     * contract). SUM/MIN/MAX skip NULLs; COUNT counts matching ROWS
     * (so it always equals [[countWhere]]). Float/double value columns
@@ -1764,10 +1720,8 @@ final class TableStore(spark: SparkSession, root: String,
     }
     val plain = scan(table, m, m.paths).filter(pred)
     def fallback = (aggOf(plain), 0, 0, -1)
-    val stats = readStatsSidecar(table) match {
-      case Some(st) => st
-      case None     => return fallback
-    }
+    val stats = m.stats
+    if (stats.isEmpty) return fallback
     val files = m.paths
     if (files.isEmpty)
       return (TableStore.AggWhere(0L, java.math.BigDecimal.ZERO, None,
@@ -1781,9 +1735,7 @@ final class TableStore(spark: SparkSession, root: String,
         .exists(_.sum.isDefined) &&
         conds.forall(c => FileStats.allMatch(c, pf)))
     val (provedAll, rest) = files.partition(metaUsable)
-    val (scanned, provedNone) = rest.partition(rel =>
-      stats.get(rel).forall(pf =>
-        conds.forall(c => FileStats.mayMatch(c, pf))))
+    val (scanned, provedNone) = rest.partition(mayMatch(stats, conds))
     val meta = provedAll.foldLeft(TableStore.AggWhere(0L,
       java.math.BigDecimal.ZERO, None, None)) { (acc, rel) =>
       val pf = stats(rel); val cs = pf.cols(valueCol)
@@ -1809,18 +1761,6 @@ final class TableStore(spark: SparkSession, root: String,
   // ---------------------------------------------- incremental rollups
 
   private def rollupKey(src: String) = s"__rollup:$src"
-  private def rollupSidecar(rollup: String, seq: Long) =
-    new Path(root, s"$rollup._graft_rollup.$seq")
-
-  /** The folded-file list committed with fence `seq`, or None when
-    * its sidecar is missing (a crash between the rollup commit and the
-    * sidecar write, or a concurrent refresh already retired it).
-    */
-  private def readRollupSidecar(rollup: String,
-                                seq: Long): Option[Set[String]] =
-    try Some(readText(rollupSidecar(rollup, seq)).split("\n")
-      .filter(_.startsWith("f=")).map(_.stripPrefix("f=")).toSet)
-    catch { case _: java.io.FileNotFoundException => None }
 
   /** INCREMENTAL AGGREGATE MAINTENANCE — keep `rollup` equal to
     * `src.groupBy(groupCols).agg(...)` by folding in ONLY the files
@@ -1838,16 +1778,14 @@ final class TableStore(spark: SparkSession, root: String,
     * (`expectedFence`), so two overlapping refreshes can never both
     * fold the same delta (the loser's fence check fails and it
     * re-derives against the winner's state, normally a no-op). The
-    * cumulative folded-file list goes to a sidecar named by the new
-    * fence value, written by the one writer whose commit advanced the
-    * fence, AFTER that commit. A missing sidecar (crash between the
-    * two) makes the next refresh rebuild from the whole source — the
-    * same exact path a source rewrite takes. A REWRITE/compaction of
-    * `src` (folded file names vanish from its inventory) triggers that
-    * full rebuild too — file identity is the incremental contract, and
-    * silently treating renamed files as new would double-count every
-    * row. Returns the number of source files folded this call
-    * (0 = no-op).
+    * cumulative folded-file list rides the rollup's manifest beside
+    * the fence and advances in the SAME commit CAS, so a crash leaves
+    * either both old or both new. A REWRITE/compaction of `src` (folded
+    * file names vanish from its inventory) triggers a full rebuild
+    * from the whole source — file identity is the incremental
+    * contract, and silently treating renamed files as new would
+    * double-count every row. Returns the number of source files folded
+    * this call (0 = no-op).
     */
   def refreshRollup(src: String, rollup: String, groupCols: Seq[String],
                     aggs: Seq[(String, String, String)]): Long = {
@@ -1864,11 +1802,12 @@ final class TableStore(spark: SparkSession, root: String,
     val current = srcHead.paths.toSet
     val n = lastTxn(rollup, rollupKey(src))
     afterFenceRead() // test seam: concurrent-refresh TOCTOU window
-    val folded =
-      if (n < 0) Some(Set.empty[String]) else readRollupSidecar(rollup, n)
-    // src rewritten (a folded file vanished) or the list lost: rebuild
-    val rebuild = folded.forall(f => (f -- current).nonEmpty)
-    val base = if (rebuild) Set.empty[String] else folded.get
+    // read from the same memoized head as the fence
+    val folded = readManifest(rollup).flatMap(_.folds.get(src))
+      .getOrElse(Set.empty[String])
+    // src rewritten (a folded file vanished): rebuild
+    val rebuild = (folded -- current).nonEmpty
+    val base = if (rebuild) Set.empty[String] else folded
     val newFiles = (current -- base).toSeq.sorted
     if (newFiles.isEmpty && !rebuild && n >= 0) 0L
     else {
@@ -1913,21 +1852,8 @@ final class TableStore(spark: SparkSession, root: String,
     }
     rewriteBody(rollup, combined, Nil,
       txnUpdate = Some(rollupKey(src) -> (n + 1)),
-      expectedFence = Some(rollupKey(src) -> n))
-    // only the writer whose commit advanced the fence to n+1 gets here,
-    // so no other writer ever writes this sidecar
-    val sp = rollupSidecar(rollup, n + 1)
-    val fs = fsOf(sp)
-    val out = fs.create(sp, true)
-    try out.write((base ++ newFiles).toSeq.sorted.map("f=" + _)
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    // prune superseded sidecars (crash before this is harmless)
-    val old = fs.globStatus(new Path(root, s"$rollup._graft_rollup.*"))
-    if (old != null) old.foreach { st =>
-      val s = st.getPath.getName.stripPrefix(s"$rollup._graft_rollup.")
-      if (s.toLongOption.exists(_ < n + 1)) fs.delete(st.getPath, false)
-    }
+      expectedFence = Some(rollupKey(src) -> n),
+      fold = Some(src -> (base ++ newFiles)))
     newFiles.size.toLong
     }
     }
@@ -1987,14 +1913,15 @@ final class TableStore(spark: SparkSession, root: String,
       s"tag name must be [A-Za-z0-9_-]+ (no dots — they would collide with temp files), got '$name'")
 
   /** Name a generation — the human handle on [[readAt]]'s pins
-    * (release "v12" instead of generation 847): writes a tiny
-    * sidecar file via the stats sidecar's write-temp-then-rename, so
-    * a tag is always wholly old or wholly new. Re-tagging an existing
-    * name moves it (documented: tags are mutable refs, generations
-    * are the immutable truth); the tagged generation must be readable
-    * NOW (current, or retained) — tagging the unretainable fails
-    * loudly rather than minting a dangling name. Returns the tagged
-    * generation.
+    * (release "v12" instead of generation 847): writes a tiny tag
+    * file by write-temp-then-rename, so a tag is always wholly old or
+    * wholly new. Tags are the only store metadata outside the commit
+    * manifests, and this is the store's only rename. Re-tagging an
+    * existing name moves it (documented: tags are mutable refs,
+    * generations are the immutable truth); the tagged generation must
+    * be readable NOW (current, or retained) — tagging the unretainable
+    * fails loudly rather than minting a dangling name. Returns the
+    * tagged generation.
     */
   def tag(table: String, name: String,
           gen: Option[Long] = None): Long = {
@@ -2019,7 +1946,7 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   /** The generation a tag names, or None. A torn/corrupt tag file
-    * reads as None (the sidecar degrade rule — never a crash).
+    * reads as None (degrade, never a crash).
     */
   def tagGeneration(table: String, name: String): Option[Long] = {
     requireTagName(name)
@@ -2139,13 +2066,6 @@ final class TableStore(spark: SparkSession, root: String,
 }
 
 object TableStore {
-
-  /** Sidecar paths that already logged a read-degrade warning — keeps
-    * [[TableStore.readStatsSidecar]]'s failure path observable without
-    * flooding the log once per read.
-    */
-  private[sources] val sidecarWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** What [[TableStore.merge]] does to a matched row. */
   sealed trait MergeAction

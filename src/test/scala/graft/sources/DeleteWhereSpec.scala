@@ -53,7 +53,7 @@ class DeleteWhereSpec extends SparkSpec with StoreCrashChecks {
       (3L, "b"), (4L, "a")).toDF("k", "s").repartition(2))
     // s === "a" is NULL for row 2: DELETE must keep it
     val touched = ts.deleteWhere("t", $"s" === "a")
-    assert(touched >= 1) // no sidecar: every file counts as affected
+    assert(touched >= 1) // no stats: every file counts as affected
     assert(ts.read("t").select("k").as[Long].collect().toSet ==
       Set(2L, 3L))
   }
@@ -79,12 +79,10 @@ class DeleteWhereSpec extends SparkSpec with StoreCrashChecks {
     val ts = crashBeforeCas("t", seed)(_.deleteWhere("t", $"k" < 10),
       crashed => {
         assert(crashed.read("t").count() == 100)
-        assert(crashed.readPinned("t").count() == 100)
         assert(crashed.readWhere("t", $"k" >= 0).count() == 100)
       })
-    // the retried delete commits: all three paths see the post-delete rows
+    // the retried delete commits: both paths see the post-delete rows
     assert(ts.read("t").count() == 90)
-    assert(ts.readPinned("t").count() == 90)
     assert(ts.readWhere("t", $"k" >= 0).count() == 90)
     // the next mutation lands on the post-delete table
     ts.append("t", Seq(500L).toDF("k"))
@@ -132,7 +130,8 @@ class DeleteWhereSpec extends SparkSpec with StoreCrashChecks {
       Seq("flag" -> lit(1)))
     assert(t2 >= 1)
     assert(ts.read("t").filter($"s".isNull && $"flag" === 1).count() == 0)
-    // consecutive targeted updates stay targeted (sidecar auto-refresh)
+    // consecutive targeted updates stay targeted (each commit carries
+    // stats for its new files)
     val b3 = names(ts)
     val t3 = ts.updateWhere("t", $"k" === 120, Seq("flag" -> lit(2)))
     assert(t3 == 1L, s"expected 1 targeted file, got $t3")

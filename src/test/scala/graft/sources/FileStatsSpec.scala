@@ -147,7 +147,7 @@ class FileStatsSpec extends SparkSpec {
     ts.append("t", Seq(1000L, 1001L).toDF("k"))
     val got = ts.readWhere("t", $"k" >= 1000)
     assert(got.as[Long].collect().toSet == Set(1000L, 1001L))
-    // and the analyzed files still prune underneath the stale sidecar
+    // and the analyzed files still prune underneath the stale stats
     assert(got.inputFiles.length < ts.read("t").inputFiles.length)
   }
 
@@ -169,18 +169,21 @@ class FileStatsSpec extends SparkSpec {
     val high = ts.readWhere("t", $"k" >= 1000)
     assert(high.inputFiles.length == 1 &&
       high.as[Long].collect().toSet == Set(1000L, 1001L))
-    // no-op when nothing is new (sidecar content stable)
-    val sidecar = new java.io.File(ts.read("t").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/t/.*", "") +
-      "/t._graft_stats")
-    val before = java.nio.file.Files.readAllBytes(sidecar.toPath).toSeq
-    ts.analyzeIncremental("t", Seq("k"))
-    assert(java.nio.file.Files.readAllBytes(sidecar.toPath).toSeq == before)
-    // a rewrite drops vanished files from the sidecar on the next pass
+    // no-op when nothing is new: nothing is committed
+    val gens = ts.generations("t")
+    assert(ts.analyzeIncremental("t", Seq("k")) == gens.last)
+    assert(ts.generations("t") == gens)
+    // a rewrite replaces every analyzed file and their stats go with
+    // them: the next read scans everything, and with no prior stats
+    // analyzeIncremental runs a full analyze, after which readWhere
+    // prunes again (3 round-robin files, only 2 rows >= 1000)
     ts.compact("t", targetFiles = 3)
+    val files = ts.read("t").inputFiles.length
+    assert(ts.readWhere("t", $"k" >= 1000).inputFiles.length == files)
     ts.analyzeIncremental("t", Seq("k"))
     val again = ts.readWhere("t", $"k" >= 1000)
     assert(again.as[Long].collect().toSet == Set(1000L, 1001L))
+    assert(again.inputFiles.length < files)
   }
 
   test("analyze + readWhere prune all-null and partitioned layouts") {
@@ -199,36 +202,73 @@ class FileStatsSpec extends SparkSpec {
     assert(ts.readWhere("t", $"v".isNotNull).count() == 30)
   }
 
-  test("corrupt/truncated stats sidecar degrades to full scan — never a reader exception") {
-    val root = Files.createTempDirectory("graft_fscorrupt").toString
-    val ts = new TableStore(spark, root)
-    ts.rewrite("t", spark.range(100).toDF("k")
-      .withColumn("v", $"k" * 3).repartitionByRange(4, $"k"))
-    ts.analyze("t", Seq("k"))
-    assert(ts.readWhere("t", $"k" === 5).count() == 1)
-    // clobber the sidecar the way a torn concurrent overwrite would:
-    // a numeric field truncated mid-line (the in-place-write hazard
-    // the atomic-rename write now prevents; non-atomic-rename stores
-    // can still surface this, so the reader must degrade, not throw)
-    val sp = new java.io.File(root, "t._graft_stats")
-    assert(sp.exists())
-    val w = new java.io.PrintWriter(sp)
-    w.print("file=part-0000\nrows=12\ncol=k rows=12 nulls=")
-    w.close()
-    // readers: full scan, exact results, zero exceptions
-    val r = ts.readWhere("t", $"k" >= 10 && $"k" < 20)
-    assert(r.count() == 10)
-    assert(r.inputFiles.length == ts.read("t").inputFiles.length,
-      "corrupt sidecar must disable skipping, not break the read")
-    // predicate mutations: conservative all-file targeting, correct
-    assert(ts.deleteWhere("t", $"k" === 50) >= 1)
-    assert(ts.read("t").count() == 99)
-    // analyzeIncremental self-heals: corrupt parses as no-sidecar →
-    // full re-analyze, after which skipping works again
-    ts.analyzeIncremental("t", Seq("k"))
+  test("crash before analyze's CAS leaves the head generation; the retry lands stats") {
+    val ts = freshStore()
+    ts.rewrite("t", spark.range(100).toDF("k").repartitionByRange(4, $"k"))
+    val gen = ts.generations("t").last
+    val files = ts.read("t").inputFiles.length
+    ts.beforeBeginCommit =
+      () => throw new IllegalStateException("injected crash before commit")
+    intercept[IllegalStateException](ts.analyze("t", Seq("k")))
+    ts.beforeBeginCommit = () => ()
+    // nothing committed: same head, and no stats to prune with
+    assert(ts.generations("t") == Seq(gen))
+    assert(ts.readWhere("t", $"k" === 5).inputFiles.length == files)
+    // the retry commits the same files with stats one generation later
+    assert(ts.analyze("t", Seq("k")) == gen + 1)
+    assert(ts.generations("t") == Seq(gen + 1))
     val pruned = ts.readWhere("t", $"k" === 5)
-    assert(pruned.count() == 1)
-    assert(pruned.inputFiles.length < ts.read("t").inputFiles.length)
+    assert(pruned.count() == 1 && pruned.inputFiles.length < files)
+    assert(ts.read("t").inputFiles.length == files)
+  }
+
+  test("analyze racing a commit re-derives and covers the concurrent file") {
+    val root = Files.createTempDirectory("graft_fsrace").toString
+    val a = new TableStore(spark, root)
+    val b = new TableStore(spark, root)
+    a.rewrite("t", spark.range(100).toDF("k").repartitionByRange(2, $"k"))
+    val seeded = a.read("t").inputFiles.toSet
+    // b's append lands between a's stats job and a's commit CAS
+    var fired = 0
+    a.beforeBeginCommit = () => {
+      fired += 1
+      if (fired == 1) b.append("t", Seq(1000L, 1001L).toDF("k").coalesce(1))
+    }
+    val gen = a.analyze("t", Seq("k"))
+    a.beforeBeginCommit = () => ()
+    assert(fired == 2, "analyze must lose the CAS once and retry")
+    assert(gen == a.generations("t").last)
+    val appended = a.read("t").inputFiles.toSet -- seeded
+    assert(appended.size == 1)
+    // the retry analyzed b's file too: a predicate outside its window
+    // prunes it
+    val low = a.readWhere("t", $"k" < 50)
+    assert(low.count() == 50)
+    assert(!low.inputFiles.exists(appended))
+  }
+
+  test("stats ride the manifest: a never-analyzed table's manifest lists only its files") {
+    val root = Files.createTempDirectory("graft_fsman").toString
+    val ts = new TableStore(spark, root)
+    ts.rewrite("t", spark.range(100).toDF("k").repartitionByRange(2, $"k"))
+    ts.append("t", Seq(1000L).toDF("k"))
+    def manifest() = scala.io.Source.fromFile(
+      s"$root/t._graft_commit.${ts.generations("t").last}").mkString
+      .split("\n").toSeq
+    val plain = manifest()
+    assert(plain.forall(l => l.startsWith("schema=") || l.startsWith("f=")),
+      plain.mkString("\n"))
+    assert(plain.count(_.startsWith("f=")) == 3)
+    // analyze adds one r= line per file and one s= line per (file, col)
+    ts.analyze("t", Seq("k"))
+    val analyzed = manifest()
+    assert(analyzed.filterNot(l => l.startsWith("r=") || l.startsWith("s=")) ==
+      plain)
+    assert(analyzed.count(_.startsWith("r=")) == 3 &&
+      analyzed.count(_.startsWith("s=")) == 3)
+    // a rewrite drops the replaced files' stats with them
+    ts.rewrite("t", spark.range(10).toDF("k"))
+    assert(!manifest().exists(l => l.startsWith("r=") || l.startsWith("s=")))
   }
 
   // ------------------------------------------------------ bloom skipping
@@ -309,7 +349,7 @@ class FileStatsSpec extends SparkSpec {
     assert(mayMatch(EqualTo(a("k"), Literal(42L)), pf))
     assert(!mayMatch(EqualTo(a("k"), Literal(43L)), pf))
     assert(!mayMatch(EqualTo(a("k"), Literal(101L)), pf)) // range proof
-    // a pre-bloom 6-field sidecar line parses with bloom = None
+    // a pre-bloom 6-field stats line parses with bloom = None
     val legacy = "r=f.parquet\t5\ns=f.parquet\tk\t5\t0\tn:0\tn:100\n"
     val old = deserialize(legacy)
     assert(old("f.parquet").cols("k").bloom.isEmpty)
@@ -441,12 +481,12 @@ class FileStatsSpec extends SparkSpec {
       None, None) && none._3 == 4, none.toString)
     // un-analyzed predicate shape: correct via fallback
     check($"k" % 7 === 3)
-    // stale stats: appended file has no sidecar entry -> scanned
+    // stale stats: appended file has no stats entry -> scanned
     ts.append("t", Seq((1001L, java.lang.Long.valueOf(9L)))
       .toDF("k", "v"))
     val stale = check($"k" >= 1000)
     assert(stale._1.sum == new java.math.BigDecimal(9L), stale.toString)
-    // legacy sidecar lines without the sum field parse to sum=None —
+    // legacy stats lines without the sum field parse to sum=None —
     // aggWhere then DEMOTES proved-all files to scanning (wrong
     // totals impossible, only I/O degrades); new lines round-trip
     val legacy = FileStats.deserialize(

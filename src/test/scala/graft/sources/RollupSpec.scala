@@ -6,9 +6,10 @@ import java.nio.file.Files
 
 /** Incremental aggregate maintenance: `refreshRollup` must equal the
   * full recompute after ANY append sequence while folding only the new
-  * files, survive crash-shaped interleavings via the sidecar+fence
-  * protocol, and rebuild loudly-but-correctly when the source is
-  * compacted (file identity broken).
+  * files, survive crash-shaped interleavings because the fence and the
+  * folded-file list advance in one manifest commit, and rebuild
+  * loudly-but-correctly when the source is compacted (file identity
+  * broken).
   */
 class RollupSpec extends SparkSpec {
   import spark.implicits._
@@ -76,21 +77,22 @@ class RollupSpec extends SparkSpec {
     val ts = freshStore()
     ts.append("src", batch(0, 30))
     ts.refreshRollup("src", "rollup", Seq("g"), aggs)
+    val foldedBefore = ts.read("src").inputFiles.toSet
     ts.append("src", batch(30, 45))
-    // simulate the crash window: the NEXT refresh writes sidecar seq+1
-    // then dies before the rewrite — model by writing an orphan sidecar
-    // claiming everything is folded, with the fence still at the old seq
-    val root = ts.read("rollup").inputFiles.head
-      .replaceFirst("file:", "").replaceFirst("/rollup/.*", "")
-    val orphan = new java.io.File(s"$root/rollup._graft_rollup.9")
-    val w = new java.io.PrintWriter(orphan)
-    ts.read("src").inputFiles.foreach(f =>
-      w.println("f=" + f.substring(f.lastIndexOf('/') + 1)))
-    w.close()
-    // the fence ignores the orphan (its seq is not the committed one):
-    // refresh folds the true delta and the rollup stays exact
-    val folded = ts.refreshRollup("src", "rollup", Seq("g"), aggs)
-    assert(folded >= 1)
+    val delta = (ts.read("src").inputFiles.toSet -- foldedBefore).size
+    val gen = ts.generations("rollup").last
+    // the refresh dies after writing its new rollup files, just before
+    // the CAS that would advance the fence and the folded-file list
+    ts.beforeBeginCommit =
+      () => throw new IllegalStateException("injected crash before commit")
+    intercept[IllegalStateException](
+      ts.refreshRollup("src", "rollup", Seq("g"), aggs))
+    ts.beforeBeginCommit = () => ()
+    assert(ts.generations("rollup").last == gen)
+    // the next refresh folds the true delta exactly once, incrementally
+    assert(ts.refreshRollup("src", "rollup", Seq("g"), aggs) == delta)
+    assertEqual(ts)
+    assert(ts.refreshRollup("src", "rollup", Seq("g"), aggs) == 0L)
     assertEqual(ts)
   }
 
@@ -149,9 +151,9 @@ class RollupSpec extends SparkSpec {
     a.append("src", batch(30, 45))
     // here the competing refresh lands after a's anchor but before its
     // commit CAS: a loses the SEQUENCE race instead of the fence check
-    // — and, because only the writer whose commit advanced the fence
-    // writes that fence's folded-file sidecar, a's aborted attempt can
-    // never clobber the sidecar b committed.
+    // — and, because the folded-file list rides the same commit as the
+    // fence, a's aborted attempt can never clobber the list b
+    // committed.
     var fired = false
     a.beforeBeginCommit = () => if (!fired) {
       fired = true
@@ -162,13 +164,13 @@ class RollupSpec extends SparkSpec {
     assert(fired)
     assert(folded == 0L, "loser's retry must see b's fold and no-op")
     assertEqual(a)
-    // sidecar must pair with b's commit: a further incremental refresh
-    // folds ONLY the genuinely new files (a corrupt/clobbered sidecar
-    // would force a rebuild or double-fold here)
+    // the folded-file list must pair with b's commit: a further
+    // incremental refresh folds ONLY the genuinely new files (a
+    // clobbered list would force a rebuild or double-fold here)
     a.append("src", batch(45, 60))
     val next = a.refreshRollup("src", "rollup", Seq("g"), aggs)
     assert(next >= 1 && next < a.read("src").inputFiles.length,
-      s"folded $next — sidecar lost incremental identity")
+      s"folded $next — folded-file list lost incremental identity")
     assertEqual(a)
   }
 }

@@ -409,7 +409,7 @@ class TableStoreSpec extends SparkSpec with StoreCrashChecks {
     val w = new TableStore(spark, root)
     w.append("t", Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("k", "v", "day"),
       partitionBy = Seq("day"))
-    val pinned = w.readPinned("t")
+    val pinned = w.read("t")
     assert(pinned.as[(Long, String, String)].collect().toSet ==
       Set((1L, "a", "d1"), (2L, "b", "d2")))
     // a concurrent writer appends — the PINNED frame must not see it,
@@ -421,8 +421,8 @@ class TableStoreSpec extends SparkSpec with StoreCrashChecks {
       "pinned snapshot leaked a concurrent append")
     assert(w.read("t").as[(Long, String, String)].collect().toSet ==
       Set((1L, "a", "d1"), (2L, "b", "d2"), (3L, "c", "d1")))
-    // a new pin picks up the appended generation
-    assert(w.readPinned("t").count() == 3)
+    // a new read picks up the appended generation
+    assert(w.read("t").count() == 3)
   }
 
   test("compact(sortBy): files come back clustered; contents unchanged") {
@@ -477,8 +477,8 @@ class TableStoreSpec extends SparkSpec with StoreCrashChecks {
     assert(ts.read("t").filter($"k" === 4L)
       .select($"v", $"score").as[(Option[String], Option[Double])]
       .collect().toSeq == Seq((None, Some(0.5))))
-    // readPinned and readAt-independent plain read agree post-evolution
-    assert(ts.readPinned("t").count() == 4)
+    // a plain read sees every row post-evolution
+    assert(ts.read("t").count() == 4)
     // type conflict: loud, nothing written
     val e = intercept[IllegalArgumentException] {
       ts.appendEvolve("t", Seq((5L, 7)).toDF("k", "score"))
