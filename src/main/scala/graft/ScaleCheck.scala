@@ -102,8 +102,8 @@ object ScaleCheck {
     val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(out, true)
     fs.mkdirs(out)
-    val baseDocs = spark.read.parquet(s"$baseDir/documents.parquet")
-    val baseEmb = spark.read.parquet(s"$baseDir/embeddings.parquet")
+    val baseDocs = Tables.t(spark, baseDir, "documents")
+    val baseEmb = Tables.t(spark, baseDir, "embeddings")
     // vocabulary derived from the base corpus: top-30 tokens by count
     // (ties by token) — matches the generator's 30-word vocab without
     // hardcoding it
@@ -143,7 +143,7 @@ object ScaleCheck {
     // out 10× on copy-duplicated names and read as a false quadratic
     def replicate(t: String, uniquify: Seq[String],
                   keyOffsets: (String, Long)*): Unit = {
-      val base = spark.read.parquet(s"$baseDir/$t.parquet")
+      val base = Tables.t(spark, baseDir, t)
       val off = keyOffsets.toMap
       val outCols = base.columns.map { c =>
         off.get(c) match {
@@ -157,17 +157,17 @@ object ScaleCheck {
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
     val custOff = keyMax(
-      spark.read.parquet(s"$baseDir/customer.parquet"), "c_custkey")
+      Tables.t(spark, baseDir, "customer"), "c_custkey")
     val suppOff = keyMax(
-      spark.read.parquet(s"$baseDir/supplier.parquet"), "s_suppkey")
+      Tables.t(spark, baseDir, "supplier"), "s_suppkey")
     val partOff = keyMax(
-      spark.read.parquet(s"$baseDir/part.parquet"), "p_partkey")
+      Tables.t(spark, baseDir, "part"), "p_partkey")
     val orderOff = keyMax(
-      spark.read.parquet(s"$baseDir/orders.parquet"), "o_orderkey")
+      Tables.t(spark, baseDir, "orders"), "o_orderkey")
     val evOff = keyMax(
-      spark.read.parquet(s"$baseDir/events.parquet"), "event_id")
+      Tables.t(spark, baseDir, "events"), "event_id")
     val userOff = keyMax(
-      spark.read.parquet(s"$baseDir/events.parquet"), "user_id")
+      Tables.t(spark, baseDir, "events"), "user_id")
     replicate("customer", Seq("c_name"), "c_custkey" -> custOff)
     replicate("supplier", Seq("s_name"), "s_suppkey" -> suppOff)
     replicate("part", Nil, "p_partkey" -> partOff)

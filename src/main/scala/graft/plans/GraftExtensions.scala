@@ -89,7 +89,17 @@ object GraftExtensions {
   def install(ext: SparkSessionExtensions): Unit =
     functions.foreach(ext.injectFunction)
 
+  /** Entries of Spark's generated-class cache (default 100). One
+    * benchmark pass of the three lifecycle queries generates about 92
+    * distinct classes, so at the default every warm pass recompiles
+    * some of them with Janino; at this size a warm pass compiles none.
+    * A static conf: it takes effect only when set before the session
+    * (and the first code generation) exists.
+    */
+  private val codegenCacheEntries = 200
+
   /** Attach to the builder (the engine's standard session setup). */
   def builder(b: SparkSession.Builder): SparkSession.Builder =
     b.withExtensions(install)
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toLong)
 }

@@ -4,11 +4,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileStatusCache,
-  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{PartitionPath,
+  PartitionSpec}
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.operators.Upsert
 import scala.jdk.CollectionConverters._
 
@@ -405,43 +404,14 @@ final class TableStore(spark: SparkSession, root: String,
   /** The commit directory a listed file belongs to. */
   private def commitDir(rel: String): String = rel.takeWhile(_ != '/')
 
-  /** The read schema of a frame written to parquet: every field
-    * nullable, recursively — what a parquet scan reports.
-    */
-  private def scanSchema(s: StructType): StructType =
-    nullable(s).asInstanceOf[StructType]
-
-  private def nullable(t: DataType): DataType = t match {
-    case s: StructType => StructType(s.map(f =>
-      f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
-      valueContainsNull = true)
-    case other => other
-  }
-
   private def qualified(table: String): Path =
     fsOf(hpath(table)).makeQualified(hpath(table))
 
-  /** A file index over exactly `files` (path, length) whose status
-    * cache is served from memory: no listing — not even Spark's
-    * parallel-listing job past 32 files.
-    */
-  private def fileIndex(files: Seq[(Path, Long)], options: Map[String, String],
-                        schema: Option[StructType],
-                        spec: Option[PartitionSpec]): InMemoryFileIndex = {
-    val leaves = files.map { case (p, len) =>
-      p -> Array(new FileStatus(len, false, 1, 0L, 0L, p))
-    }.toMap
-    val cache = new FileStatusCache {
-      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
-        leaves.get(p)
-      def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
-      def invalidateAll(): Unit = ()
+  /** `files` (path, length) as the statuses a [[FileScan]] index serves. */
+  private def statuses(files: Seq[(Path, Long)]): Seq[(Path, Seq[FileStatus])] =
+    files.map { case (p, len) =>
+      p -> Seq(new FileStatus(len, false, 1, 0L, 0L, p))
     }
-    new InMemoryFileIndex(spark, files.map(_._1), options, schema, cache,
-      spec, None)
-  }
 
   /** The partition sub-path (`k=v/...`) of a listed file. */
   private def partitionDir(rel: String): String =
@@ -458,8 +428,9 @@ final class TableStore(spark: SparkSession, root: String,
       : (StructType, Map[String, InternalRow]) = {
     val base = qualified(table)
     val byDir = dirs.distinct.map(d => new Path(base, d) -> d).toMap
-    val spec = fileIndex(byDir.keys.toSeq.map(d => new Path(d, "f") -> 1L),
-      Map("basePath" -> base.toString), types, None).partitionSpec()
+    val spec = FileScan.index(spark,
+      statuses(byDir.keys.toSeq.map(d => new Path(d, "f") -> 1L)),
+      Map("basePath" -> base.toString), types).partitionSpec()
     (spec.partitionColumns,
       spec.partitions.map(p => byDir(p.path) -> p.values).toMap)
   }
@@ -487,10 +458,10 @@ final class TableStore(spark: SparkSession, root: String,
           PartitionPath(values(dir), new Path(base, leaf))
         }
       }
-    val index = fileIndex(rels.map(r => new Path(base, r) -> lens(r)),
-      Map.empty, None, Some(PartitionSpec(m.partitionSchema, partitions)))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, m.partitionSchema,
-      m.dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+    val index = FileScan.index(spark,
+      statuses(rels.map(r => new Path(base, r) -> lens(r))),
+      spec = Some(PartitionSpec(m.partitionSchema, partitions)))
+    FileScan.parquet(spark, index, m.dataSchema, m.partitionSchema)
   }
 
   /** Commit the live file set `files` as generation `head0.seq + 1`.
@@ -655,7 +626,7 @@ final class TableStore(spark: SparkSession, root: String,
     val incoming = stage(table, frame, partitionBy, compact = true)
     if (incoming.isEmpty) return head0.seq
     val schema = widened.getOrElse(
-      if (head0.files.isEmpty) scanSchema(frame.schema)
+      if (head0.files.isEmpty) FileScan.nullable(frame.schema)
       else head0.schema)
     commit(table, Some(head0), head0.files ++ incoming, partitionBy, schema,
       incoming, txnUpdate, widens = widened.nonEmpty)
@@ -701,7 +672,7 @@ final class TableStore(spark: SparkSession, root: String,
         val widened =
           if (added.isEmpty) None
           else Some(StructType(m.dataSchema ++
-            scanSchema(StructType(added)) ++
+            FileScan.nullable(StructType(added)) ++
             m.partitionSchema))
         appendBody(table, aligned, partitionBy, widened = widened)
         ()
@@ -1296,7 +1267,7 @@ final class TableStore(spark: SparkSession, root: String,
     // targetFiles) opt out of write-time compaction
     val files = stage(table, frame, partitionBy, compact = !preSized)
     commit(table, head0, files, partitionBy,
-      scanSchema(frame.schema), files, txnUpdate, fold = fold)
+      FileScan.nullable(frame.schema), files, txnUpdate, fold = fold)
   }
 
   /** Rewrite ONLY the partitions in `hitParts`: the transformed rows
