@@ -98,17 +98,15 @@ object QualityRules {
     * ([[graft.plans.PlanShape.hoistFilter]] — without it Catalyst
     * substitutes the hoisted aliases into the predicate and
     * re-tokenizes the document once per measure reference), then drop
-    * the aux columns. `keepNorm` retains `__nrm` for callers that
-    * fingerprint the normalized text next (the streaming ingest).
+    * the aux columns.
     */
-  def gate(df: DataFrame, textCol: String, cfg: Config = Config(),
-           keepNorm: Boolean = false): DataFrame = {
-    val gated = graft.plans.PlanShape.hoistFilter(df,
+  def gate(df: DataFrame, textCol: String,
+           cfg: Config = Config()): DataFrame =
+    graft.plans.PlanShape.hoistFilter(df,
       Seq("__nrm" -> TextFunctions.normalizeText(col(textCol)),
         "__toks" -> TextFunctions.tokens(col(textCol))),
       keepOf(col(textCol), col("__nrm"), col("__toks"), cfg))
-    if (keepNorm) gated.drop("__toks") else gated.drop("__nrm", "__toks")
-  }
+      .drop("__nrm", "__toks")
 
   /** Measures + per-rule flags (1/0 longs — portable hashing) + overall
     * `keep`. Tokenization/normalization run once in their own

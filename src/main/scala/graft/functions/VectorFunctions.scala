@@ -50,18 +50,13 @@ object VectorFunctions {
   /** L2-normalize a vector (double array out). Note: `transform` is an
     * interpreted higher-order function, so the embedded norm is
     * re-evaluated per ELEMENT (O(d²) per row) — in hot paths compute
-    * [[norm2]] in its own projection and use [[normalizeBy]].
+    * [[norm2]] in its own projection and divide by that column inside
+    * the `transform` (the hoisting pattern of [[i8Quantize]]'s scale).
     */
   def normalize(a: Column): Column = {
     val n = norm2(a)
     transform(a, x => x.cast("double") / n)
   }
-
-  /** [[normalize]] against a pre-computed norm column (the hoisted
-    * form — same pattern as [[i8Quantize]]'s scale).
-    */
-  def normalizeBy(a: Column, norm: Column): Column =
-    transform(a, x => x.cast("double") / norm)
 
   // ------------------------------------------------- int8 quantization
 

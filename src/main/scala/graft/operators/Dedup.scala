@@ -167,14 +167,13 @@ object Dedup {
           .otherwise(lit(0L)).as("dup_ppm"))
   }
 
-  /** The ONE bloom-screen construction [[newAgainstCorpus]] and the
-    * streaming twin (`Streams.screenAgainstCorpus`) share: fold the
+  /** [[newAgainstCorpus]]'s bloom-screen construction: fold the
     * corpus fingerprints into a mergeable bloom, return the
     * `might_contain` predicate over `textCol`'s fingerprint. None =
     * empty corpus (nothing can be a dup).
     */
-  private[graft] def corpusBloomScreen(corpus: DataFrame, textCol: String,
-                                       estItems: Long): Option[Column] = {
+  private def corpusBloomScreen(corpus: DataFrame, textCol: String,
+                                estItems: Long): Option[Column] = {
     require(estItems > 0, s"estItems > 0, got $estItems")
     val fp = TextFunctions.fingerprint(col(textCol))
     val bloomBytes = corpus

@@ -258,9 +258,7 @@ object Multimodal {
   /** Typed output rows for the header decoders: field order and names
     * are the oracle contract (q78/q79/q80); Options surface as
     * nullable columns. Case classes (not Row+schema) so the operators
-    * run on a typed `mapPartitions` — legal in Structured Streaming,
-    * where `.rdd` is not, so one implementation serves batch AND a
-    * streaming ingest.
+    * run on a typed `mapPartitions`.
     */
   final case class ImgRow(doc_id: Long, format: Option[String],
                           width: Option[Int], height: Option[Int],
@@ -275,8 +273,8 @@ object Multimodal {
                           duration_ms: Option[Long], ok: Boolean)
 
   /** Container-header fields of (idCol: long, payloadCol: binary) as
-    * real columns — batched per partition like [[extractFeatures]],
-    * and streaming-legal (typed mapPartitions, no `.rdd`).
+    * real columns — batched per partition like [[extractFeatures]]
+    * (typed mapPartitions, no `.rdd`).
     * Unparseable payloads are QUARANTINED as (ok=false, null fields)
     * rows, never thrown: filter `ok` downstream, audit `!ok`.
     */
@@ -626,7 +624,7 @@ object Multimodal {
     * columns — the decoded-pixel quality-filter stage (mean/variance
     * per channel, all-black/all-white detection) of a multimodal
     * corpus pipeline. Same execution contract as [[imageHeaders]]:
-    * typed `mapPartitions` (streaming-legal), linear scan, corrupt /
+    * typed `mapPartitions`, linear scan, corrupt /
     * unsupported / NULL payloads QUARANTINED as ok=false rows, never
     * thrown; decode memory is O(width·channels) per task regardless of
     * image height, and `maxPixels` bounds the per-payload work.
@@ -796,7 +794,7 @@ object Multimodal {
   /** dHash of (idCol: long, payloadCol: binary) as real columns — the
     * image-near-dup signature stage of a multimodal corpus pipeline.
     * Same execution contract as [[pngPixelStats]] (typed
-    * `mapPartitions`, streaming-legal, corrupt payloads quarantine as
+    * `mapPartitions`, corrupt payloads quarantine as
     * ok=false). Feed the `dhash` column to
     * [[graft.operators.Dedup.simhashPairs]] for banded
     * Hamming-distance pair generation: visually identical or
@@ -868,7 +866,7 @@ object Multimodal {
 
   /** WAV header fields of (idCol: long, payloadCol: binary) as real
     * columns, corrupt rows quarantined as ok=false — the audio twin of
-    * [[imageHeaders]], equally streaming-legal.
+    * [[imageHeaders]].
     */
   def audioHeaders(df: DataFrame, idCol: String,
                    payloadCol: String): DataFrame = {
@@ -1032,7 +1030,7 @@ object Multimodal {
   /** PCM sample statistics of (idCol: long, payloadCol: binary) as
     * real columns, corrupt rows quarantined as ok=false — the audio
     * twin of [[pngPixelStats]] (typed mapPartitions: linear scan,
-    * streaming-legal, no decoded samples ever leave the accumulator).
+    * no decoded samples ever leave the accumulator).
     */
   def wavPcmStats(df: DataFrame, idCol: String, payloadCol: String,
                   maxSamples: Long = 1L << 28): DataFrame = {
@@ -1254,7 +1252,7 @@ object Multimodal {
 
   /** MP4 movie-header fields of (idCol: long, payloadCol: binary) as
     * real columns, corrupt rows quarantined as ok=false — the video
-    * leg of the container-header family, equally streaming-legal.
+    * leg of the container-header family.
     */
   def videoHeaders(df: DataFrame, idCol: String,
                    payloadCol: String): DataFrame = {

@@ -102,14 +102,15 @@ object Sampling {
       splits)
 
   /** The SRM report from PRE-AGGREGATED (split, n_obs) observation
-    * counts — [[srmCheck]]'s finisher, split out so the streaming
-    * twin ([[graft.streaming.Streams.srmMaintain]]) can sum its
-    * per-batch additive increments and hand the totals here: counts
-    * are additive across batches, the χ² term (which divides by the
-    * grand total N) is not. Same spans, same exact integral term,
-    * same output schema as [[srmCheck]]; splits absent from `counts`
-    * report n_obs = 0 against their span. Counts rows whose split
-    * name is NOT in the span frame (possible for hand-built or
+    * counts — [[srmCheck]]'s finisher, split out so persisted counts
+    * (per-day or per-batch rows summed over any number of runs) can
+    * be checked without rescanning the assigned rows: counts are
+    * additive, the χ² term (which divides by the grand total N) is
+    * not, so it is computed here over the summed counts. Same spans,
+    * same exact integral term, same output schema as [[srmCheck]];
+    * splits absent from `counts` report n_obs = 0 against their span.
+    * Counts rows whose split name is NOT in the span frame (possible
+    * for hand-built or
     * drifted persisted counts) fail LOUDLY: they would otherwise fold
     * silently into the grand total N and deflate every reported
     * split's expected count and χ² term — a skewed SRM verdict with
@@ -460,7 +461,8 @@ object Sampling {
   val WrsKeyScale: Long = 1000000L
 
   /** The UNQUANTIZED exponential key 10⁶·ln(u)/w with the fail-fast
-    * weight guard — shared by [[wrsKey]] and the margin audit. */
+    * weight guard — [[weightedTopK]] floors it into the rank key and
+    * its margin audit reads the fraction. */
   private def wrsRaw(key: Column, weight: Column, salt: String): Column = {
     val w = weight.cast("double")
     val wChecked = when(w.isNotNull && w > 0, w)
@@ -471,17 +473,6 @@ object Sampling {
       lit(BucketSpace.toDouble)
     lit(WrsKeyScale.toDouble) * log(u) / wChecked
   }
-
-  /** The quantized exponential rank key `⌊10⁶ · ln(u)/w⌋` of
-    * [[weightedTopK]] as a standalone Column — content-addressed
-    * (same (salt, key, weight) → same key anywhere), which is what
-    * lets the STREAMING reservoir
-    * ([[graft.streaming.Streams.weightedReservoir]]) converge to the
-    * batch sample regardless of arrival order. Raises on NULL or
-    * non-positive weights.
-    */
-  def wrsKey(key: Column, weight: Column, salt: String): Column =
-    floor(wrsRaw(key, weight, salt)).cast("long")
 
   /** Weighted sampling WITHOUT replacement (the Efraimidis–Spirakis
     * exponential-key scheme, A-ES: draw k rows with inclusion

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * Both steps are window functions over ONE hash partitioning of the
   * key: lag → new-session flag, running sum → session ordinal. No
   * self-join, no state on the driver; at 100 TB the single shuffle on
-  * the key is the floor for any per-key ordering. The batch twin of
-  * `streaming.Streams`' watermarked windows.
+  * the key is the floor for any per-key ordering.
   *
   * Hot keys: [[AsofJoin.backwardSalted]]'s salt-and-replicate trick
   * does NOT transfer here, deliberately. The session ordinal is a
@@ -23,13 +22,11 @@ import org.apache.spark.sql.functions._
   * them the answer (as-of could replicate the small side; sessions
   * have no small side to replicate). AQE can't help either: skew-join
   * splitting does not apply to a single window partition. The scale
-  * paths, in preference order: (1) [[assignStitched]] — the same
-  * answer computed within (key, bucket) partitions plus a boundary
-  * stitch, bounding any reducer at one key-bucket of events; (2) the
-  * streaming twin (`Streams.sessionWindows`), whose watermark keeps
-  * per-key state bounded regardless of history length. A key hot
-  * enough to stall even a single key-day is a data-model smell (a
-  * bot or a default id), not a partitioning bug.
+  * path is [[assignStitched]] — the same answer computed within
+  * (key, bucket) partitions plus a boundary stitch, bounding any
+  * reducer at one key-bucket of events. A key hot enough to stall
+  * even a single key-day is a data-model smell (a bot or a default
+  * id), not a partitioning bug.
   */
 object Sessionize {
 

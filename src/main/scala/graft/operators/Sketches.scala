@@ -141,14 +141,13 @@ object Sketches {
         col("res_ppm"))
   }
 
-  /** The ONE (bucket, rho) convention [[hllRegisters]] and the
-    * streaming [[graft.streaming.Streams.hllMaintain]] twin share —
-    * and the q108 oracle mirrors. Bucket: first 16 hash bits mod 2^p;
+  /** The ONE (bucket, rho) convention of [[hllRegisters]], which the
+    * q108 oracle mirrors. Bucket: first 16 hash bits mod 2^p;
     * rho: leading-zero count of an independent 48-bit hash, + 1, by
     * hex-char CASE arithmetic.
     */
-  private[graft] def hllBucketRho(key: Column, p: Int,
-                                  salt: String): (Column, Column) = {
+  private def hllBucketRho(key: Column, p: Int,
+                           salt: String): (Column, Column) = {
     val m = 1L << p
     val bucket = pmod(Sampling.hashBucket(key, s"$salt:b",
       hexChars = 4), lit(m))
@@ -168,8 +167,8 @@ object Sketches {
 
   /** HyperLogLog register relation (Flajolet et al. 2007) — the
     * distinct sketch whose STATE is 2^p bytes per group versus KMV's
-    * k longs: registers merge by `max`, so shards, days, or streaming
-    * micro-batches combine with one grouped aggregate and the sketch
+    * k longs: registers merge by `max`, so shards, days, or ingest
+    * batches combine with one grouped aggregate and the sketch
     * never revisits data. Unlike `approx_count_distinct` (whose
     * HLL++ register layout is Spark-private and unverifiable), every
     * piece here is the engine's portable md5 algebra: bucket = first

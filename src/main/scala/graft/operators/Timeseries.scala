@@ -105,25 +105,6 @@ object Timeseries {
         coalesce(col("__n"), lit(0L)).cast("long").as("n"))
   }
 
-  /** [[dailyCountsFilled]] from PRE-AGGREGATED (day, n) counts — the
-    * finisher the streaming twin
-    * ([[graft.streaming.Streams.bucketCountsMaintain]]) hands its
-    * summed per-batch increments to: counts are additive across
-    * batches, the spine (which needs the global min/max) is not.
-    * Same output contract as [[dailyCountsFilled]].
-    */
-  def dailyCountsFilledFromCounts(counts: DataFrame): DataFrame = {
-    val cnt = counts.groupBy(col("day"))
-      .agg(sum(col("n")).as("__n"))
-    val bounds = cnt.agg(min(col("day")).as("__lo"),
-      max(col("day")).as("__hi"))
-    bounds.filter(col("__lo").isNotNull)
-      .select(explode(sequence(col("__lo"), col("__hi"))).as("day"))
-      .join(cnt, Seq("day"), "left")
-      .select(col("day").cast("long").as("day"),
-        coalesce(col("__n"), lit(0L)).cast("long").as("n"))
-  }
-
   /** CUSUM change detection over daily row counts (Page 1954): the
     * upper cumulative sum s_d = max(0, s_{d−1} + x_d − μ − slack)
     * with μ = ⌊total/days⌋ derived from the series itself and an

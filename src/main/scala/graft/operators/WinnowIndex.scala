@@ -150,21 +150,11 @@ object WinnowIndex {
     */
   def screen(store: TableStore, indexTable: String, batch: DataFrame,
              idCol: String, textCol: String, minShared: Long = 1L,
-             maxDf: Int = 64, maxPrunedFps: Int = 65536): DataFrame =
-    screenWith(params(store, indexTable), store, indexTable, batch,
-      idCol, textCol, minShared, maxDf, maxPrunedFps)
-
-  /** [[screen]] with the stats row already read — [[admit]] passes
-    * its one params read through instead of re-collecting per stage.
-    */
-  private def screenWith(p: (Int, Int, String, Long), store: TableStore,
-             indexTable: String, batch: DataFrame,
-             idCol: String, textCol: String, minShared: Long,
-             maxDf: Int, maxPrunedFps: Int = 65536): DataFrame = {
+             maxDf: Int = 64, maxPrunedFps: Int = 65536): DataFrame = {
     require(minShared >= 1L,
       s"winnow screen: minShared must be >= 1, got $minShared")
     require(maxDf >= 1, s"winnow screen: maxDf must be >= 1, got $maxDf")
-    val (k, w, salt, _) = p
+    val (k, w, salt, _) = params(store, indexTable)
     val bb = fpFrame(batch, idCol, textCol, k, w, salt)
       .select(col("doc_id").as("id_b"), col("fp"))
     val fpKeys = bb.select(col("fp")).distinct()
@@ -221,30 +211,5 @@ object WinnowIndex {
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-  }
-
-  /** The ADMISSION decision for an ingest batch — [[screen]] turned
-    * into a filter ([[DedupIndex.admit]]'s policy for passages): drop
-    * every batch doc sharing ≥ `minShared` fingerprints with the
-    * standing corpus, and of the WITHIN-BATCH pairs
-    * ([[Dedup.winnowPairs]] with the index's pinned parameters) drop
-    * every doc with a SMALLER-id match — deterministic, conservative
-    * (a doc whose only match was itself dropped still drops). Returns
-    * the surviving batch rows UNCHANGED (original schema). Batch ids
-    * must be new (id-disjoint from the corpus).
-    */
-  def admit(store: TableStore, indexTable: String, batch: DataFrame,
-            idCol: String, textCol: String, minShared: Long = 1L,
-            maxDf: Int = 64): DataFrame = {
-    val p = params(store, indexTable) // ONE stats read for all stages
-    val (k, w, salt, _) = p
-    val vsCorpus = screenWith(p, store, indexTable, batch, idCol,
-      textCol, minShared, maxDf).select(col("id_b").as("__dup"))
-    val withinB = Dedup.winnowPairs(
-        batch.select(col(idCol).cast("long").as(idCol), col(textCol)),
-        idCol, textCol, k, w, minShared, maxDf, salt)
-      .select(col("id_b").as("__dup")) // id_a < id_b: drop the larger
-    batch.join(vsCorpus.unionByName(withinB).distinct(),
-      batch(idCol).cast("long") === col("__dup"), "left_anti")
   }
 }

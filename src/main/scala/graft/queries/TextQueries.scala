@@ -1988,8 +1988,7 @@ object TextQueries {
     Some(incrementalDedupOracleSql))
 
   /** q139 — the ADMISSION decision ([[graft.operators.DedupIndex
-    * .admit]], the batch form of `Streams.dedupIndexMaintain`'s
-    * per-micro-batch filter): batch docs surviving BOTH the
+    * .admit]], the ingest-batch filter): batch docs surviving BOTH the
     * served-index corpus screen and the greedy within-batch dedup
     * (drop any doc with a smaller-id verified dup). Oracle replays the
     * exact-Jaccard admission over ALL shingle-sharing pairs — cross

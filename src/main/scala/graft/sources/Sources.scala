@@ -53,23 +53,18 @@ object Sources {
     (good, quarantine)
   }
 
-  /** CSV counterpart of [[jsonTable]]: headerless, schema-declared
-    * delimited files (the splittable, scale-correct layout — a header
-    * row per file is a driver-side convenience the declared schema
-    * replaces, and headerless parts concatenate/split cleanly).
-    */
-  def csvTable(spark: SparkSession, schema: StructType,
-               pathGlob: String, sep: String = ","): DataFrame =
-    spark.read.schema(schema).option("sep", sep).csv(pathGlob)
-
-  /** [[csvTable]] with the [[jsonTableQuarantined]] dead-letter
-    * contract: malformed lines (type mismatches, extra columns,
-    * unterminated quotes) come back raw in the quarantine frame
-    * instead of silently nulling into the data (PERMISSIVE default)
-    * or vanishing (DROPMALFORMED). Same one-splittable-text-scan
-    * trick — `from_csv` in a projection dodges the reader's
-    * corrupt-column-only restriction and serves both halves from one
-    * scan. NOTE `from_csv` is stricter than the file reader: a SHORT
+  /** CSV counterpart of [[jsonTableQuarantined]]: headerless,
+    * schema-declared delimited files (the splittable, scale-correct
+    * layout — a header row per file is a driver-side convenience the
+    * declared schema replaces, and headerless parts concatenate/split
+    * cleanly) under the same dead-letter contract: malformed lines
+    * (type mismatches, extra columns, unterminated quotes) come back
+    * raw in the quarantine frame instead of silently nulling into the
+    * data (PERMISSIVE default) or vanishing (DROPMALFORMED). Same
+    * one-splittable-text-scan trick — `from_csv` in a projection
+    * dodges the reader's corrupt-column-only restriction and serves
+    * both halves from one scan. NOTE `from_csv` is stricter than the
+    * file reader: a SHORT
     * row (missing trailing fields) quarantines too, where the file
     * reader would pad with nulls — a schema-width mismatch is treated
     * as evidence, not data (spec-pinned).

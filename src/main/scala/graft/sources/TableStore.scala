@@ -684,18 +684,18 @@ final class TableStore(spark: SparkSession, root: String,
     readManifest(table).flatMap(_.txns.get(streamId)).getOrElse(-1L)
 
   /** EXACTLY-ONCE idempotent append — the Delta txn-version pattern
-    * for `foreachBatch` sinks: the (streamId, batchId) fence rides the
-    * SAME commit manifest as the append (one atomic CAS commits data +
-    * fence together), and a replayed batch whose id is ≤ the recorded
-    * fence is SKIPPED. A crash between the sink commit and the
-    * checkpoint advance therefore cannot duplicate the batch: the
-    * restarted query re-delivers it, the fence rejects it. Fences are
+    * for replayable writers (a retried batch job, a `foreachBatch`
+    * sink): the (streamId, batchId) fence rides the SAME commit
+    * manifest as the append (one atomic CAS commits data + fence
+    * together), and a replayed batch whose id is ≤ the recorded fence
+    * is SKIPPED. A crash between the commit and the writer's own
+    * progress record therefore cannot duplicate the batch: the
+    * restarted writer re-delivers it, the fence rejects it. Fences are
     * carried forward across every other writer's commits (every
     * manifest copies the head's `txn=` records), so interleaved
-    * non-streaming mutations never re-open the replay window. Batch ids
-    * must be monotonically increasing per stream (the Structured
-    * Streaming contract). Returns true when the batch appended, false
-    * when the fence skipped a replay.
+    * unfenced mutations never re-open the replay window. Batch ids
+    * must be monotonically increasing per stream id. Returns true when
+    * the batch appended, false when the fence skipped a replay.
     */
   def appendExactlyOnce(table: String, df: DataFrame, streamId: String,
                         batchId: Long,
@@ -747,9 +747,8 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** Exact-dedup append: insert only batch rows whose normalized-text
     * fingerprint has never been stored — cross-batch dedup backed by
-    * the store (the batch analogue of streaming corpus-ingest's
-    * dropDuplicatesWithinWatermark, for corpora that grow by bulk
-    * drops rather than streams). The survivor table carries the batch
+    * the store, for corpora that grow by bulk drops. The survivor
+    * table carries the batch
     * columns plus `fp`. The anti-join needs only the store's fp column
     * (column pruning reaches the parquet scan), so a daily drop against
     * a 100 TB corpus store shuffles one fingerprint column, not the
@@ -899,9 +898,9 @@ final class TableStore(spark: SparkSession, root: String,
     * rejected (schema drift — use [[appendEvolve]] deliberately).
     *
     * `txn = Some(streamId -> batchId)` makes the merge EXACTLY-ONCE
-    * for streaming `foreachBatch` upserts (the [[appendExactlyOnce]]
-    * fence riding this merge's own commit CAS): a replayed batch id
-    * at-or-below the fence returns −1 and changes nothing.
+    * for replayed upserts (the [[appendExactlyOnce]] fence riding
+    * this merge's own commit CAS): a replayed batch id at-or-below the
+    * fence returns −1 and changes nothing.
     */
   def merge(table: String, source: DataFrame, keyCol: String,
             whenMatched: MergeAction,

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions.col
   * parsers, applied to a container of many records: a corrupt tail
   * costs the tail, never the stage. [[records]] is the operator form:
   * one output row per parsed record, typed `mapPartitions` (no
-  * `.rdd`), so it runs in batch and Structured Streaming alike.
+  * `.rdd`).
   *
   * The reference has no archive ingestion (its sources are REST/HTML,
   * SURVEY.md §2.1); this is a north-star addition like the rest of the

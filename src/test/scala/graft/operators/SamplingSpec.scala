@@ -481,6 +481,25 @@ class SamplingSpec extends SparkSpec {
       s"dropped rows must inflate chi2: $bad vs $got")
   }
 
+  test("srmFromCounts refuses counts with unknown split names") {
+    val splits = Seq("train" -> 0.6, "test" -> 0.3)
+    // a drifted persisted counts table: a renamed split would
+    // otherwise fold silently into N and deflate every chi2 term
+    val counts = Seq(("train", 100L), ("validation", 40L),
+      ("test", 50L)).toDF("split", "n_obs")
+    val e = intercept[IllegalArgumentException] {
+      Sampling.srmFromCounts(counts, splits)
+    }
+    assert(e.getMessage.contains("validation"), e.getMessage)
+    // null split names are reported too, not swallowed
+    val withNull = Seq((Some("train"), 100L), (None, 7L))
+      .toDF("split", "n_obs")
+    val e2 = intercept[IllegalArgumentException] {
+      Sampling.srmFromCounts(withNull, splits)
+    }
+    assert(e2.getMessage.contains("[NULL]"), e2.getMessage)
+  }
+
   test("essWeights: equal weights are free, one heavy row collapses") {
     import spark.implicits._
     // equal weights: ESS == n exactly, ppm == 10^6
