@@ -45,16 +45,6 @@ object GeoFunctions {
   def distSq(x1: Column, y1: Column, x2: Column, y2: Column): Column =
     (x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2)
 
-  /** Haversine great-circle distance in meters over WGS84 lat/lon. */
-  def haversineM(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    val toRad = math.Pi / 180.0
-    val dLat = (lat2 - lat1) * toRad
-    val dLon = (lon2 - lon1) * toRad
-    val h = pow(sin(dLat / 2), 2) +
-      cos(lat1 * toRad) * cos(lat2 * toRad) * pow(sin(dLon / 2), 2)
-    lit(2 * 6371008.8) * asin(sqrt(h))
-  }
-
   /** WGS84 lon/lat (degrees) -> UTM easting/northing for a fixed zone
     * (reference uses zone 12N / EPSG:32612). Krüger series to n^3 —
     * sub-meter vs geodetic libraries, matching the reference's use
@@ -118,15 +108,5 @@ object GeoFunctions {
         acc + when(straddles && px < xInt, 1L).otherwise(0L)
       })
     crossings % 2 === 1
-  }
-
-  /** Centroid of a ring (arithmetic mean of vertices — matches the
-    * reference's use on small convex footprints, get_osm_data.py:100-108).
-    */
-  def ringCentroid(ring: Column): Column = {
-    val n = size(ring).cast("double")
-    val sx = aggregate(ring, lit(0.0), (acc, p) => acc + p.getField("x"))
-    val sy = aggregate(ring, lit(0.0), (acc, p) => acc + p.getField("y"))
-    struct((sx / n).as("x"), (sy / n).as("y"))
   }
 }

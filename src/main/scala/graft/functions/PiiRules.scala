@@ -51,21 +51,6 @@ object PiiRules {
       s"n_$n" -> size(regexp_extract_all(c, lit(p), lit(0))).cast("long")
     }
 
-  /** LITERAL-term companion to the pattern rules: redact a blocklist
-    * of exact terms (names, addresses, project codewords — the
-    * thousands-of-literals case where a regex alternation is both
-    * slow and order-sensitive) via the Aho–Corasick kernel
-    * ([[TextFunctions.redactTerms]]): ONE automaton pass regardless
-    * of term count, and the UNION of match intervals is cut — so
-    * overlapping/nested/adjacent terms can never re-expose a partial
-    * term the way a sequential per-term replace cascade can. Run it
-    * BEFORE [[redact]] when composing (a literal term containing an
-    * `@` must not be half-eaten by the email rule first).
-    */
-  def redactBlocklist(c: Column, terms: Seq[String],
-                      placeholder: String = "[REDACTED]"): Column =
-    TextFunctions.redactTerms(c, terms, placeholder)
-
   // ------------------------------------------- Luhn-validated cards
 
   /** Candidate runs are MAXIMAL digit sequences (single space/dash

@@ -136,26 +136,6 @@ object TextFunctions {
     when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
   }
 
-  /** Quality-score features: length, alpha ratio, punctuation density,
-    * stopword ratio, mean word length — the usual pretraining-filter
-    * signals, as one struct column.
-    */
-  def qualityFeatures(c: Column): Column = {
-    val len = length(c).cast("double")
-    val alpha = length(regexp_replace(c, "[^a-zA-Z]", "")).cast("double")
-    val punct = length(regexp_replace(c, "[^.,;:!?]", "")).cast("double")
-    val nTok = tokenCount(c).cast("double")
-    val stop = markerHits(c, "en").cast("double")
-    struct(
-      len.as("n_chars"),
-      nTok.as("n_tokens"),
-      when(len > 0, alpha / len).otherwise(lit(0.0)).as("alpha_ratio"),
-      when(len > 0, punct / len).otherwise(lit(0.0)).as("punct_ratio"),
-      when(nTok > 0, stop / nTok).otherwise(lit(0.0)).as("stopword_ratio"),
-      when(nTok > 0, length(regexp_replace(normalizeText(c), " ", ""))
-        .cast("double") / nTok).otherwise(lit(0.0)).as("mean_word_len"))
-  }
-
   /** HTML → text (reference F9: BeautifulSoup.get_text on fixture HTML —
     * regex strip is the documented stand-in, SURVEY.md §2.7).
     */

@@ -431,47 +431,6 @@ object AnnIndex {
     Similarity.pqRank(scored, k)
   }
 
-  /** k-NN majority-vote classification SERVED from persisted IVF-PQ
-    * codes — [[Similarity.knnClassify]]'s steady-state query path:
-    * neighbors come from [[ivfPqTopKOnCodes]] (probe-routed ADC over
-    * the saved codes relation — corpus vectors never read), labels
-    * ride a hash join against the ≤ |queries|·k winner frame, and the
-    * vote is [[Similarity.knnClassify]]'s exact argmax (votes desc,
-    * smallest label on ties). `excludeSelf` ranks k+1 then drops
-    * qid == id so the self slot cannot starve the vote (the quantized
-    * self-distance usually — not provably — ranks first). Approximate
-    * exactly where IVF-PQ is; the spec bounds prediction agreement
-    * against the brute-force form on clustered data.
-    */
-  def knnClassifyOnCodes(queries: DataFrame, codes: DataFrame,
-                         labels: DataFrame, qidCol: String,
-                         vecCol: String, idCol: String,
-                         labelCol: String, k: Int, nprobe: Int,
-                         index: AnnIndex,
-                         excludeSelf: Boolean = true): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val lab = labels.filter(col(labelCol).isNotNull)
-      .select(col(idCol).as("id"),
-        col(labelCol).cast("long").as("label"))
-    // unlabeled corpus rows are excluded BEFORE ranking (the
-    // knnClassifyIvf contract: corpus.filter(labelCol.isNotNull)) —
-    // ranking the full codes relation and label-joining afterwards
-    // would let unlabeled rows occupy neighbor slots and then be
-    // silently dropped, starving the vote below k voters
-    val labeledCodes = codes.join(lab.select(col("id")), Seq("id"),
-      "left_semi")
-    val kk = if (excludeSelf) k + 1 else k
-    val ranked = ivfPqTopKOnCodes(queries, labeledCodes, qidCol, vecCol,
-      kk, nprobe, index)
-    val noSelf =
-      if (excludeSelf) ranked.filter(col("qid") =!= col("id"))
-      else ranked
-    val rek = TopK.perGroup(
-      noSelf.select(col("qid"), col("id"), col("dist")),
-      Seq(col("qid")), Seq(col("dist").asc, col("id")), k, "rk2")
-    Similarity.voteOf(rek.join(lab, Seq("id")))
-  }
-
   /** [[ivfPqTopKOnCodes]] for a RESIDUAL index: saved codes encode
     * v − centroid, so each query carries one distance table per
     * probed cell (computed on its own residual against that cell).

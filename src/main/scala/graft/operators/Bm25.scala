@@ -141,116 +141,4 @@ object Bm25 {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
       top.schema)
   }
-
-  /** [[topK]] with the QUERY BATCH as a DataFrame — the batch
-    * re-scoring shape (10⁵⁺ queries), where a driver-resident `Seq`
-    * and a driver result collect are the wrong contract. Queries
-    * tokenize in-engine under the same normalization as the corpus;
-    * the query vocabulary rides as a BROADCAST relation into the
-    * corpus term filter (replacing the Seq form's `isin` literal, so
-    * the filter no longer builds a |vocab|-ary expression tree);
-    * idf is a vocab-bounded relation joined broadcast into scoring
-    * instead of a driver map literal. N/Σdl stay the two-long
-    * metadata collect; the quantization margin audit becomes one
-    * vocab-bounded aggregate. Differentially spec-pinned to [[topK]]
-    * (same JVM `Math.log` on both paths, so the quantized idf is
-    * bit-identical).
-    *
-    * Returns the per-query top-k as an EAGER PERSISTED SNAPSHOT (the
-    * `temperatureMix` persistUpstream handle contract): the internal
-    * tf pin is released before returning, and the caller `unpersist()`s
-    * the ≤ |queries|·k-row result when consumed — no driver round-trip,
-    * no single-partition result frame.
-    */
-  def topKBatch(corpus: DataFrame, idCol: String, textCol: String,
-                queries: DataFrame, qidCol: String, qTextCol: String,
-                k: Int, k1: Double = 1.2, b: Double = 0.75,
-                minQuantMargin: Option[Double] = None): DataFrame = {
-    require(k >= 1, s"k >= 1, got $k")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-
-    // query term sets under the corpus tokenization (dedup within
-    // query); pinned — it feeds the vocab filter AND the scoring join
-    // drop normalization-empty tokens (the Seq form's filter(_.nonEmpty))
-    val qTerms = queries.select(col(qidCol).cast("long").as("qid"),
-        explode(array_distinct(
-          TextFunctions.tokens(col(qTextCol)))).as("term"))
-      .filter(length(col("term")) > 0)
-      .persist()
-    val vocabDf = qTerms.select(col("term")).distinct()
-    require(!vocabDf.isEmpty,
-      "no query term survives normalization - queries must contain " +
-        "at least one alphanumeric token")
-
-    val toks = corpus.repartition(graft.Par.n, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        TextFunctions.tokens(col(textCol)).as("__toks"),
-        TextFunctions.tokenCount(col(textCol)).as("dl"))
-
-    // vocabulary restriction as a broadcast SEMI join: map-side drop of
-    // every corpus term no query asks for, same exchange bound as the
-    // Seq form (|vocab| + |matching docs|), without a literal list
-    val tf = toks
-      .select(col("doc_id"), col("dl"), explode(col("__toks")).as("term"))
-      .join(broadcast(vocabDf), Seq("term"), "left_semi")
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
-
-    try {
-      val Seq((nDocs, sumDl)) = toks
-        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
-        .as[(Long, Long)].collect().toSeq
-      require(nDocs > 0, "empty corpus")
-      val avgdl = sumDl.toDouble / nDocs.toDouble
-
-      // vocab-bounded idf RELATION (terms with at least one corpus
-      // match; a df=0 term has no tf rows and contributes nothing in
-      // either form). Same expression order as the Seq form; Spark's
-      // log and the driver's math.log are both java.lang.Math.log, so
-      // the floors agree bit-for-bit.
-      val idfDf = tf.groupBy(col("term"))
-        .agg(count(lit(1)).as("__df"))
-        .withColumn("__idf_raw", lit(1000000.0) * log(
-          (lit(nDocs.toDouble) - col("__df").cast("double") + lit(0.5)) /
-            (col("__df").cast("double") + lit(0.5))))
-      minQuantMargin.foreach { threshold =>
-        val frac = col("__idf_raw") - floor(col("__idf_raw"))
-        val row = idfDf
-          .select(min(least(frac, lit(1.0) - frac)).as("m")).head()
-        if (!row.isNullAt(0)) {
-          val m = row.getDouble(0)
-          if (m < threshold) throw new IllegalStateException(
-            f"BM25 idf quantization margin $m%.3e below $threshold%.3e: " +
-              "cross-engine ln drift could flip a floor - re-audit the " +
-              "fixture before trusting a hash-compared oracle")
-        }
-      }
-      val idfQ = idfDf.select(col("term"),
-        floor(col("__idf_raw")).cast("long").as("__idf_q"))
-
-      val contrib = tf
-        .join(broadcast(qTerms), Seq("term"))
-        .join(broadcast(idfQ), Seq("term"))
-        .withColumn("__tfn",
-          (col("tf").cast("double") * lit(k1 + 1.0)) /
-            (col("tf").cast("double") + lit(k1) *
-              (lit(1.0 - b) + lit(b) *
-                col("dl").cast("double") / lit(avgdl))))
-        .withColumn("__c",
-          floor(col("__idf_q").cast("double") * col("__tfn")))
-      val scores = contrib.groupBy(col("qid"), col("doc_id"))
-        .agg(sum(col("__c")).as("score_q"))
-      val top = TopK.perGroup(scores, Seq(col("qid")),
-        Seq(col("score_q").desc, col("doc_id")), k)
-        .select(col("qid"), col("doc_id"), col("score_q"), col("rk"))
-      // eager handle: result materializes from the warm tf pin, then
-      // both internal pins release before control returns
-      graft.sources.TableStore.eagerSnapshot(top)
-    } finally {
-      tf.unpersist(blocking = false)
-      qTerms.unpersist(blocking = false)
-    }
-  }
 }

@@ -216,122 +216,6 @@ object Classifier {
         hardSigmoid(col("z"), cfg.scale).as("p"))
       .withColumn("pred", (col("p") * 2 > cfg.scale).cast("long"))
 
-  // ---------------------------------------------------- persistence
-
-  /** Persist a trained model as TableStore table `table` — the same
-    * train-once / serve-many contract as [[AnnIndex.save]]: the
-    * artifact inherits OCC commits, generations and time travel, so a
-    * serving fleet pins the generation this returns and
-    * [[loadModelAt]] re-serves identical scores after any number of
-    * retrains. Weights are stored SPARSE (nonzero buckets only — at
-    * dim 2^18 most cells never see a feature), bias as bucket −1; the
-    * meta row pins (dim, scaleShift, salt, iters) so serving can't
-    * silently hash into a different feature space.
-    */
-  def saveModel(store: graft.sources.TableStore, table: String,
-                weights: Array[Long], bias: Long,
-                cfg: Config = Config()): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    val metaRow = Seq(("meta", -1L, 0L,
-        AnnIndex.jsonOf(Map("dim" -> cfg.dim.toString,
-          "scaleShift" -> cfg.scaleShift.toString,
-          "salt" -> cfg.salt, "iters" -> cfg.iters.toString))))
-      .toDF("component", "bucket", "w", "meta")
-    val rows = weights.zipWithIndex
-      .collect { case (w, b) if w != 0L =>
-        ("weight", b.toLong, w, null: String) } :+
-      (("weight", -1L, bias, null: String))
-    val df = metaRow.unionByName(
-      rows.toSeq.toDF("component", "bucket", "w", "meta"))
-    // generation from this commit's CAS, not a racy generations().last
-    if (store.exists(table)) store.rewrite(table, df)
-    else store.append(table, df)
-  }
-
-  /** Load the LIVE model generation: (weights, bias, cfg). */
-  def loadModel(store: graft.sources.TableStore, table: String)
-      : (Array[Long], Long, Config) = fromRows(store.read(table))
-
-  /** Load a PINNED model generation (time travel) — the serving
-    * reproducibility anchor.
-    */
-  def loadModelAt(store: graft.sources.TableStore, table: String,
-                  gen: Long): (Array[Long], Long, Config) =
-    fromRows(store.readAt(table, gen))
-
-  private def fromRows(rows: DataFrame): (Array[Long], Long, Config) = {
-    val meta = rows.filter(col("component") === "meta")
-      .select(col("meta")).collect()
-    require(meta.length == 1,
-      s"Classifier model table: expected one meta row, got ${meta.length}")
-    val p = AnnIndex.parseJson(meta(0).getString(0))
-    val cfg = Config(dim = p("dim").toInt, iters = p("iters").toInt,
-      scaleShift = p("scaleShift").toInt, salt = p("salt"))
-    val weights = Array.fill(cfg.dim)(0L)
-    var bias = 0L
-    // dim-bounded collect, same contract as the training loop's
-    rows.filter(col("component") === "weight")
-      .select(col("bucket"), col("w")).collect()
-      .foreach { r =>
-        val b = r.getLong(0)
-        if (b < 0) bias = r.getLong(1)
-        else weights(b.toInt) = r.getLong(1)
-      }
-    (weights, bias, cfg)
-  }
-
-  /** Materialize model scores over the full corpus as TableStore table
-    * `scoresTable` — the batch anchor [[refreshScores]] maintains
-    * incrementally. Labels are not needed for serving; the scores
-    * schema is (id, z, p, pred).
-    */
-  def scoreAndSave(store: graft.sources.TableStore, scoresTable: String,
-                   docs: DataFrame, idCol: String, textCol: String,
-                   weights: Array[Long], bias: Long,
-                   cfg: Config = Config()): Long = {
-    val scores = scoreDocs(docs, idCol, textCol, weights, bias, cfg)
-    // generation from this commit's CAS, not a racy generations().last
-    if (store.exists(scoresTable)) store.rewrite(scoresTable, scores)
-    else store.append(scoresTable, scores)
-  }
-
-  /** INCREMENTAL score maintenance from a corpus change feed
-    * ([[graft.sources.TableStore.changesBetween]] output) — the
-    * [[AnnIndex.refreshCodes]] contract for classifier scores: deleted
-    * ids leave the scores table, inserted rows are scored and
-    * appended. Cost scales with the churn, never the corpus; a corpus
-    * compaction feeds nothing and this is a no-op. Invariant
-    * (spec-gated): after a refresh the scores table equals a full
-    * [[scoreAndSave]] of the live corpus under the same model.
-    */
-  def refreshScores(store: graft.sources.TableStore, scoresTable: String,
-                    changes: DataFrame, idCol: String, textCol: String,
-                    weights: Array[Long], bias: Long,
-                    cfg: Config = Config()): Unit = {
-    // delete BOTH churned id sets (deletes AND inserts): updates ride
-    // the feed as delete+insert pairs, and deleting insert ids too
-    // makes the refresh IDEMPOTENT under at-least-once replays (a
-    // crash-retry re-runs cleanly instead of duplicating score rows)
-    val del = changes
-      .filter(col("__change_type").isin("delete", "insert"))
-      .select(col(idCol).as("id")).distinct()
-    val ins = changes.filter(col("__change_type") === "insert")
-    store.deleteByKeys(scoresTable, del, Seq("id"))
-    store.append(scoresTable,
-      scoreDocs(ins, idCol, textCol, weights, bias, cfg))
-  }
-
-  /** [[score]] straight from documents (labels not required — serving
-    * path): features built with the one-exchange shape, scored, label
-    * column dropped.
-    */
-  def scoreDocs(docs: DataFrame, idCol: String, textCol: String,
-                weights: Array[Long], bias: Long,
-                cfg: Config = Config()): DataFrame =
-    score(hashedFeatures(docs, idCol, textCol, lit(0L), cfg),
-      weights, bias, cfg).drop("y")
-
   /** Train-then-score in one call — the q122 surface. Builds and
     * PINS the feature frame (it feeds every GD round and the final
     * scoring); the pin is registered with the engine release point and

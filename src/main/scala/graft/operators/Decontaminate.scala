@@ -80,45 +80,4 @@ object Decontaminate {
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits"), max(col("__sim")).as("max_sim"))
   }
-
-  /** [[semanticOverlap]]'s banded-LSH form — the path once the
-    * benchmark outgrows the broadcast-BNLJ envelope (~10⁴ rows):
-    * hyperplane-signature bands on BOTH sides, candidates = band-key
-    * join of bare (id, band) rows (a plain shuffle join — neither side
-    * broadcasts, neither side is quadratic), exact cosine once per
-    * distinct candidate pair, same (idCol, n_hits, max_sim) output.
-    * Approximate where [[semanticOverlap]] is exhaustive: no false
-    * positives (every hit is exact-verified), recall set by bands ×
-    * bandBits — `bandBits` self-sizes from the corpus count
-    * ([[Similarity.sizedBandBits]]) so candidate volume stays linear
-    * (differential + recall spec; the q38 sizing story).
-    */
-  def semanticOverlapLsh(corpus: DataFrame, bench: DataFrame, idCol: String,
-                         benchIdCol: String, vecCol: String,
-                         threshold: Double, dim: Int,
-                         nBands: Int = 4, targetBucketSize: Int = 64,
-                         seed: Long = 42L,
-                         corpusCount: Option[Long] = None): DataFrame = {
-    import graft.functions.VectorFunctions
-    val n = Similarity.countOf(corpus, idCol, corpusCount)
-    val bb = Similarity.sizedBandBitsFor(n, nBands, targetBucketSize)
-    val hp = Similarity.hyperplanes(nBands * bb, dim, seed)
-    def banded(df: DataFrame, id: String, v: String): DataFrame =
-      df.withColumn("__sig", Similarity.planeSignature(col(v), hp))
-        .withColumn("__band",
-          explode(Similarity.bandKeys(col("__sig"), nBands, bb)))
-        .select(col(id), col("__band"))
-    val c = corpus.select(col(idCol), col(vecCol).as("__cv"))
-    val b = bench.select(col(benchIdCol).as("__bid"),
-      col(vecCol).as("__bv"))
-    val candIds = banded(c, idCol, "__cv")
-      .join(banded(b, "__bid", "__bv"), Seq("__band"))
-      .select(col(idCol), col("__bid")).distinct()
-    graft.plans.PlanShape.filterOnce(
-        candIds.join(c, Seq(idCol)).join(b, Seq("__bid")),
-        "__sim", VectorFunctions.cosine(col("__cv"), col("__bv")),
-        _ >= threshold)
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_hits"), max(col("__sim")).as("max_sim"))
-  }
 }

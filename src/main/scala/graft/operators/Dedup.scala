@@ -236,41 +236,6 @@ object Dedup {
   // -------------------------------------------------------------- minhash
 
 
-  /** The banded-LSH S-curve: probability two sets of Jaccard
-    * similarity `sim` share at least one band bucket under `bands`
-    * bands of `rowsPerBand` MinHash rows —
-    * `1 − (1 − sim^r)^b` (Leskovec/Rajaraman/Ullman, MMDS ch. 3).
-    * The planning primitive behind [[lshCandidatePairs]]' parameters.
-    */
-  def lshCollisionProb(sim: Double, bands: Int,
-                       rowsPerBand: Int): Double = {
-    require(sim >= 0.0 && sim <= 1.0, s"sim in [0,1], got $sim")
-    require(bands >= 1 && rowsPerBand >= 1, "bands, rowsPerBand >= 1")
-    1.0 - math.pow(1.0 - math.pow(sim, rowsPerBand), bands)
-  }
-
-  /** Choose (bands, rowsPerBand) for a signature of `k` MinHash rows
-    * so the S-curve threshold `(1/b)^(1/r)` — the similarity where
-    * collision probability crosses ~1/2 — lands closest to the target:
-    * the "how do I set b and r" answer every LSH deployment needs.
-    * Candidates are the exact divisor splits b·r = k; ties prefer MORE
-    * bands (recall-leaning: candidate pairs are verified exactly
-    * downstream, so extra candidates cost I/O, missed ones cost
-    * recall). Returns (bands, rowsPerBand).
-    */
-  def lshPlan(k: Int, threshold: Double): (Int, Int) = {
-    require(k >= 1, s"k >= 1, got $k")
-    require(threshold > 0.0 && threshold < 1.0,
-      s"threshold in (0,1), got $threshold")
-    val splits = (1 to k).filter(k % _ == 0)
-      .map(b => (b, k / b))
-    splits.minBy { case (b, r) =>
-      val t = math.pow(1.0 / b, 1.0 / r)
-      // distance first, then recall-leaning tie-break on fewer rows
-      (math.abs(t - threshold), r)
-    }
-  }
-
   /** MinHash signature: k independent minima of seeded 64-bit hashes of
     * the shingle set. Narrow projection; k×|shingles| hashes per row.
     * Native expression (bit-equal to [[minhashSignatureHof]]).
@@ -462,59 +427,12 @@ object Dedup {
     // salts into 32 hash partitions left 2-3x stragglers). NOTE: the
     // salt replicates the probes side ×salts — acceptable for THIS
     // oracle form's contract (small fixtures; the Θ(n²) verify
-    // dominates anyway); the corpus-scale path is
-    // [[editDistancePairsLsh]], whose band join is not salted
+    // dominates anyway)
     Skew.saltedJoin(
       t.select(col("id").as("id_a"), col("s").as("sa"), col("b")),
       probes, Seq("b"), saltBy = Seq(col("id_a")), salts = 128)
       .filter(col("id_a") < col("id_b") &&
         abs(length(col("sa")) - length(col("sb"))) <= maxDist)
-      .withColumn("dist", levenshtein(col("sa"), col("sb"), maxDist))
-      .filter(col("dist") >= 0 && col("dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("dist"))
-  }
-
-  /** PRODUCTION form of [[editDistancePairs]]: LSH-banded candidate
-    * generation over CHARACTER n-grams, then the same thresholded
-    * Levenshtein verify. At corpus scale string length is a weak
-    * discriminator (the length-banded oracle form degenerates toward
-    * all-pairs when lengths concentrate — exactly what happened on the
-    * q107 suffix fixture), while two strings within edit distance d
-    * share all but ≤ d·gramN of their character n-grams, so minhash
-    * banding over those grams routes near-pairs into shared buckets
-    * with the one-band-shuffle cost profile of [[lshCandidatePairs]].
-    *
-    * Semantics: PRECISION is exact (every emitted pair is verified by
-    * the thresholded DP, distances bit-identical to the oracle form);
-    * RECALL is the banding's — a pair sharing no band is not seen
-    * (tune k/bands; bands = k gives the highest recall at k times the
-    * band fan-out). The differential spec pins LSH == oracle form on
-    * the near-dup fixture at bands = k.
-    */
-  def editDistancePairsLsh(df: DataFrame, idCol: String, strCol: String,
-                           maxDist: Int, gramN: Int = 3, k: Int = 24,
-                           bands: Int = 24): DataFrame = {
-    require(maxDist >= 0, s"maxDist >= 0, got $maxDist")
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val grams = array_distinct(filter(
-      transform(
-        sequence(lit(1), greatest(length(col("s")) - (gramN - 1), lit(1))),
-        i => substr(col("s"), i, lit(gramN))),
-      g => length(g) > 0))
-    val sigs = track(df
-      .filter(col(strCol).isNotNull)
-      .repartition(graft.Par.n, col(idCol))
-      .select(col(idCol).as("id"), col(strCol).as("s"))
-      .withColumn("sig", minhashSignature(grams, k))
-      .withColumn("band", explode(lshBandKeys(col("sig"), bands, k / bands)))
-      .drop("sig")
-      .persist())
-    val a = sigs.select(col("band"), col("id").as("id_a"), col("s").as("sa"))
-    val b = sigs.select(col("band"), col("id").as("id_b"), col("s").as("sb"))
-    a.join(b, Seq("band"))
-      .filter(col("id_a") < col("id_b") &&
-        abs(length(col("sa")) - length(col("sb"))) <= maxDist)
-      .select(col("id_a"), col("id_b"), col("sa"), col("sb")).distinct()
       .withColumn("dist", levenshtein(col("sa"), col("sb"), maxDist))
       .filter(col("dist") >= 0 && col("dist") <= maxDist)
       .select(col("id_a"), col("id_b"), col("dist"))
@@ -779,7 +697,6 @@ object Dedup {
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
                               maxIter: Int = 30): DataFrame = {
-    val spark0 = pairs.sparkSession
     def dedup(e: DataFrame): DataFrame =
       e.filter(col("src") =!= col("dst")).distinct()
     def largeStar(e: DataFrame): DataFrame = {

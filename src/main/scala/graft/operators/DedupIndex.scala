@@ -160,10 +160,9 @@ object DedupIndex {
     screenWith(params(store, indexTable), store, indexTable, batch,
       idCol, textCol, maxPrunedBands)
 
-  /** [[screen]] with the stats row already read — [[screenVerified]]
-    * and [[admit]] pass their one params read through instead of
-    * re-collecting the stats row per stage (one driver job + one
-    * pruned index open each).
+  /** [[screen]] with the stats row already read — [[admit]] passes
+    * its one params read through instead of re-collecting the stats
+    * row per stage (one driver job + one pruned index open each).
     */
   private def screenWith(p: (Int, Int, Int, Long), store: TableStore,
                          indexTable: String, batch: DataFrame,
@@ -186,28 +185,14 @@ object DedupIndex {
       .select(col("id_a"), col("id_b")).distinct()
   }
 
-  /** [[screen]] + exact-Jaccard verification in one call, with the
-    * verify stage's shingle width taken from the INDEX's pinned
-    * parameters (a caller-supplied width could silently verify in a
-    * different shingle space than the bands were built in). Texts come
-    * from the corpus TABLE for the corpus side and the batch frame for
-    * the batch side; the corpus side is SEMI-JOINED down to the ids the
-    * band screen actually surfaced before any tokenization, so the
-    * verify cost is candidate-bounded — the standing corpus is never
-    * re-shingled wholesale. Returns (id_a corpus, id_b batch, inter,
-    * n_a, n_b, jaccard) at `jaccard >= threshold`, i.e.
-    * [[Dedup.verifyJaccard]]'s schema. Sides must be id-disjoint (the
-    * [[Dedup.lshCandidatePairsAgainst]] contract — ingest screens NEW
-    * docs); a batch id already in the corpus would feed both texts
-    * into the verify join and double its pairs.
+  /** [[screen]] + exact-Jaccard verification, with the verify stage's
+    * shingle width taken from the INDEX's pinned parameters (a
+    * caller-supplied width could silently verify in a different
+    * shingle space than the bands were built in). The corpus side is
+    * SEMI-JOINED down to the ids the band screen surfaced before any
+    * tokenization, so the verify cost is candidate-bounded. Returns
+    * (id_a corpus, id_b batch, …) in [[Dedup.verifyJaccard]]'s schema.
     */
-  def screenVerified(store: TableStore, indexTable: String,
-                     corpusTable: String, batch: DataFrame,
-                     idCol: String, textCol: String,
-                     threshold: Double): DataFrame =
-    screenVerifiedWith(params(store, indexTable), store, indexTable,
-      corpusTable, batch, idCol, textCol, threshold)
-
   private def screenVerifiedWith(p: (Int, Int, Int, Long),
                      store: TableStore, indexTable: String,
                      corpusTable: String, batch: DataFrame,
@@ -227,18 +212,19 @@ object DedupIndex {
 
   /** The ADMISSION decision for an ingest batch — the screen turned
     * into a filter: drop every batch doc with a verified near-dup in
-    * the standing corpus ([[screenVerified]]), and of the verified
+    * the standing corpus (the band screen, exact-Jaccard verified at
+    * the index's pinned shingle width), and of the verified
     * WITHIN-BATCH dup pairs (banded with the same pinned parameters
     * via [[Dedup.lshCandidatePairs]]) drop every doc that has a
     * SMALLER-id verified dup — the standard greedy MinHash-dedup
     * policy: deterministic, keeps each dup component's min id (it has
     * no smaller dup), and may drop a transitive member whose only dup
     * was itself dropped (by design — admission is conservative;
-    * component-exact survivor election is [[Dedup.nearDupComponents]]
+    * component-exact survivor election is [[Dedup.connectedComponents]]
     * + [[Dedup.electSurvivorsByQuality]] on the batch path). Returns
     * the surviving batch rows UNCHANGED (original schema). Batch ids
-    * must be new (id-disjoint from the corpus — [[screenVerified]]'s
-    * contract).
+    * must be new (id-disjoint from the corpus — the
+    * [[Dedup.lshCandidatePairsAgainst]] contract).
     */
   def admit(store: TableStore, indexTable: String, corpusTable: String,
             batch: DataFrame, idCol: String, textCol: String,

@@ -241,7 +241,7 @@ object Eval {
     * all.
     *
     * Scores must be integers (fixed-point quantized upstream — the
-    * [[Classifier.scoreDocs]] `z` contract); labels are 0/1. Scale
+    * [[Classifier.score]] `z` contract); labels are 0/1. Scale
     * shape: one (score)-keyed exact aggregate with map-side partials,
     * then a TWO-PASS running sum over the DISTINCT-SCORE relation
     * ([[Ranks.twoPass]] — a near-unique raw score no longer funnels

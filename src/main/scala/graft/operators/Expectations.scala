@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Declarative write expectations — data-quality constraints enforced
   * at ingestion (the Delta-Live-Tables / Great-Expectations pattern):
-  * every batch row either satisfies ALL declared rules and is
-  * admitted, or is routed to a quarantine table carrying the names of
-  * the rules it violated. The pipeline never silently drops a row and
-  * never admits a bad one; the accounting frame is the audit record.
+  * [[annotate]] tags every batch row with the names of the rules it
+  * violates, so a row is admissible exactly when it satisfies ALL
+  * declared rules; the accounting frames are the audit record.
   *
   * Null semantics are pinned: a rule whose predicate evaluates to
   * NULL is VIOLATED (`coalesce(cond, false)`) — expectations assert
@@ -87,32 +86,6 @@ object Expectations {
         Seq(sum(when(viol.reduce(_ + _) === 0L, 1L).otherwise(0L))
           .cast("long").as("admitted"))
     df.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Split-and-write: admissible rows append to `table`, violating
-    * rows (with `__violations` joined to a comma string) append to
-    * `quarantine`. Returns (admitted, quarantined) exact counts.
-    * Ordering contract: the admission commit lands FIRST; a crash
-    * between the two appends can lose quarantine rows but can never
-    * admit a violating row or double-admit (append's crash fencing).
-    * Both writes are one annotated pass each over the batch — at
-    * ingestion scale persist the annotated frame upstream if the
-    * batch is expensive to recompute.
-    */
-  def appendExpect(store: graft.sources.TableStore, table: String,
-                   quarantine: String, df: DataFrame, rules: Seq[Rule],
-                   partitionBy: Seq[String] = Nil): (Long, Long) = {
-    val ann = annotate(df, rules)
-    val good = ann.filter(size(col("__violations")) === 0)
-      .drop("__violations")
-    val bad = ann.filter(size(col("__violations")) > 0)
-      .withColumn("__violations",
-        array_join(col("__violations"), ","))
-    store.append(table, good, partitionBy)
-    val admitted = good.count()
-    val quarantined = bad.count()
-    if (quarantined > 0) store.append(quarantine, bad, Nil)
-    (admitted, quarantined)
   }
 
   /** Referential-integrity audit of one foreign-key relation: how

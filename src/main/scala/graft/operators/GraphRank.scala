@@ -22,14 +22,6 @@ object GraphRank {
   // one-line enrollment in the engine-wide release point
   graft.Engine.register("GraphRank")(() => releaseIntermediates())
 
-  // loop rounds unpersist their predecessor inline: drop it from the
-  // registry too (the Dedup discipline), so a crashed round leaves
-  // nothing unreleasable
-  private def release(df: DataFrame): Unit = synchronized {
-    df.unpersist(blocking = false)
-    pinned.filterInPlace(_ ne df)
-  }
-
   /** Unpersist every frame PageRank runs have pinned. */
   def releaseIntermediates(): Unit = synchronized {
     pinned.foreach(_.unpersist(blocking = false))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -13,7 +13,7 @@ import graft.sources.TableStore
   * table is the classic public IR design, Robertson/Spärck Jones BM25
   * over Zobel & Moffat-style postings).
   *
-  * [[Bm25.topK]]/[[Bm25.topKBatch]] tokenize the WHOLE corpus per call
+  * [[Bm25.topK]] tokenizes the WHOLE corpus per call
   * (two corpus scans): correct for the oracle gates, wrong at 100 TB
   * where the same corpus serves thousands of query batches. This
   * module materializes the term statistics as first-class data in ONE

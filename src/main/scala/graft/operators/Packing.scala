@@ -74,17 +74,4 @@ object Packing {
         (col("__start") - col("block_id") * capacity).as("block_off"),
         (col("__stop") - col("__start")).as("len"))
   }
-
-  /** Per-block fill audit over [[packConcat]] output: one row per
-    * (shard, block) with its document count and filled token count —
-    * the waste report (only each shard's LAST block may be under
-    * `capacity`, so total waste ≤ shards · capacity tokens, an
-    * audited upper bound a padding-based packer cannot give). Bounded
-    * output (blocks, not tokens); reuses the placement frame's
-    * (shard) partitioning when chained directly after packConcat.
-    */
-  def packFill(packed: DataFrame, shardCol: String): DataFrame =
-    packed.groupBy(col(shardCol), col("block_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("len")).cast("long").as("n_tokens"))
 }

@@ -1,39 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
-/** Corpus profiling at scale. The exact rank-based token quantiles
-  * (q47's oracle form, `graft.queries.TextQueries`) sort every document
-  * of a source inside ONE window partition — correct and portable, but
-  * a giant source serializes a single reducer's sort at 100 TB. This is
-  * the production path: Spark's Greenwald-Khanna `percentile_approx`
-  * aggregate, which combines map-side partial sketches through one
-  * ordinary aggregation exchange — no window, no per-source sort, error
-  * bounded by `accuracy` (1/accuracy relative rank error).
-  *
-  * The exact form stays as the oracle/audit twin (same split as
-  * `Sketches.kmvDistinct` vs `kmvEstimate`); the spec bounds the
-  * approx path against the exact answers on test data.
+/** Corpus and column profiling: quantile trims and bands, drift
+  * statistics (χ², KS, PSI), robust outlier accounting, concentration
+  * and rank-correlation measures. Each operator is the exact form its
+  * query gates against the DuckDB oracle: discrete rank-based
+  * quantiles (q47's convention — never interpolated, ties broken on an
+  * id or tie column) and integer or decimal(38,0) arithmetic, so the
+  * results are engine-portable. A rank window partitions by group, so
+  * a giant group costs one reducer's sort; each operator's Scale note
+  * says what it shuffles.
   */
 object Profile {
-
-  /** Per-group approximate quantiles of the token count:
-    * (groupCol, n_docs, q_<p> per requested probability).
-    */
-  def tokenQuantilesApprox(df: DataFrame, groupCol: String, textCol: String,
-                           probs: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.95),
-                           accuracy: Int = 10000): DataFrame = {
-    val base = df.select(col(groupCol),
-      TextFunctions.tokenCount(col(textCol)).as("__n_tok"))
-    val qCols: Seq[Column] = probs.map { p =>
-      percentile_approx(col("__n_tok"), lit(p), lit(accuracy))
-        .as(s"p${(p * 100).round}")
-    }
-    base.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"), qCols: _*)
-  }
 
   /** Per-group quantile-band trim: keep rows whose `valCol` rank within
     * `groupCol` lies in [ceil(lo·n), floor(hi·n)] — adaptive outlier
@@ -61,29 +42,6 @@ object Profile {
       .filter(col("__rn") >= ceil(lit(lo) * col("__n")) &&
         col("__rn") <= floor(lit(hi) * col("__n")))
       .drop("__rn", "__n")
-  }
-
-  /** [[quantileTrim]]'s production twin: threshold VALUES from
-    * Greenwald-Khanna `percentile_approx` (one ordinary aggregation
-    * exchange, map-side partial sketches), broadcast back onto the
-    * data, value-band filter. No window, no per-group sort — a giant
-    * source never serializes one reducer. Semantics differ from the
-    * exact form at the edges: rank ties at a band boundary are kept
-    * here and cut by rank there; tiny groups (n·(hi−lo) < 1, e.g.
-    * singletons) are dropped entirely by the rank band but kept by the
-    * value band; rows with a NULL group key pass the exact form's
-    * window but are dropped by this join. At corpus scale none of the
-    * three occurs off pathological inputs.
-    */
-  def quantileTrimApprox(df: DataFrame, groupCol: String, valCol: String,
-                         lo: Double, hi: Double,
-                         accuracy: Int = 10000): DataFrame = {
-    val th = df.groupBy(col(groupCol)).agg(
-      percentile_approx(col(valCol), lit(lo), lit(accuracy)).as("__lo"),
-      percentile_approx(col(valCol), lit(hi), lit(accuracy)).as("__hi"))
-    df.join(broadcast(th), Seq(groupCol))
-      .filter(col(valCol) >= col("__lo") && col(valCol) <= col("__hi"))
-      .drop("__lo", "__hi")
   }
 
   /** EXACT φ-heavy hitters (items with count ≥ ceil(φ·n)) without ever
@@ -536,11 +494,9 @@ object Profile {
     * `idCol`, making the whole computation deterministic. Returns
     * (groupCol, n_rows, med, mad, n_outliers).
     *
-    * Exact audit form: two group-partitioned rank windows (value
-    * order, then deviation order) — correct and gate-able, but a
-    * giant group serializes its reducer's sort; at corpus scale
-    * [[madOutliersApprox]] is the production twin (GK median/MAD
-    * sketches, no window anywhere).
+    * Scale: two group-partitioned rank windows (value order, then
+    * deviation order) — correct and gate-able; a giant group
+    * serializes its reducer's sort.
     */
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
                   idCol: String, k: Long = 3L): DataFrame = {
@@ -573,45 +529,6 @@ object Profile {
         col("mad"), col("n_outliers"))
   }
 
-  /** [[madOutliers]]'s production twin: median and MAD from
-    * Greenwald–Khanna `percentile_approx` sketches (two ordinary
-    * aggregation exchanges with map-side partials — one for the
-    * median, one for the deviation median — each broadcast back),
-    * outlier filter unchanged. No window, no per-group sort: a giant
-    * group never serializes one reducer. The sketch returns an ACTUAL
-    * data value (GK keeps samples, never interpolates), so med/mad
-    * stay integral; rank error is bounded by 1/accuracy relative
-    * rank, and the exact twin stays the oracle/audit form
-    * ([[quantileTrimApprox]]'s split). Tie-break differences at the
-    * median rank can shift med/mad by one neighboring VALUE — the
-    * spec bounds both against the exact answers.
-    */
-  def madOutliersApprox(df: DataFrame, groupCol: String,
-                        valueCol: String, k: Long = 3L,
-                        accuracy: Int = 10000): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val base = df.filter(col(valueCol).isNotNull)
-      .select(col(groupCol).as("grp"),
-        col(valueCol).cast("long").as("v"))
-    val med = base.groupBy(col("grp"))
-      .agg(percentile_approx(col("v"), lit(0.5), lit(accuracy))
-        .as("med"))
-    val dev = base.join(broadcast(med), Seq("grp"))
-      .withColumn("d", abs(col("v") - col("med")))
-    val mad = dev.groupBy(col("grp"))
-      .agg(percentile_approx(col("d"), lit(0.5), lit(accuracy))
-        .as("mad"))
-    dev.join(broadcast(mad), Seq("grp"))
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        max(col("med")).cast("long").as("med"),
-        max(col("mad")).cast("long").as("mad"),
-        sum(when(col("d") > lit(k) * col("mad"), 1L).otherwise(0L))
-          .cast("long").as("n_outliers"))
-      .select(col("grp").as(groupCol), col("n_rows"), col("med"),
-        col("mad"), col("n_outliers"))
-  }
-
   /** Exact two-sample Kolmogorov–Smirnov drift: for every group, the
     * KS statistic D = max_v |F_g(v) − F_rest(v)| between the group's
     * distribution of an integral `valueCol` and the REST of the
@@ -629,11 +546,11 @@ object Profile {
     *
     * `valueCol` must be discrete (integral or pre-quantized): the
     * evaluation grid is (distinct groups) × (distinct values), one
-    * bounded frame — bucket continuous metrics first (the
-    * [[tokenQuantilesApprox]] output, a `div`-bucketed score, …). The
-    * global value-CDF window is a single-task sort over that bounded
-    * distinct-value frame, never over the corpus; the corpus itself
-    * is touched by exactly ONE (group, value) counting exchange.
+    * bounded frame — bucket continuous metrics first (a token count,
+    * a `div`-bucketed score, …). The global value-CDF window is a
+    * single-task sort over that bounded distinct-value frame, never
+    * over the corpus; the corpus itself is touched by exactly ONE
+    * (group, value) counting exchange.
     */
   def ksDrift(df: DataFrame, groupCol: String, valueCol: String,
               scale: Long = 1000000L): DataFrame = {
@@ -1047,11 +964,8 @@ object Profile {
     * integer value column (cents, micros); rank cut-points are exact
     * `div` expressions.
     *
-    * Scale: this is the exact audit form — one rank window per group
-    * (a giant group costs one sort run) + a broadcast bounds join; at
-    * billions of rows per group [[winsorizedStatsApprox]] is the
-    * production twin (GK-sketch bounds into the same
-    * clip-and-aggregate, no window at all). The final stats aggregate
+    * Scale: one rank window per group (a giant group costs one sort
+    * run) + a broadcast bounds join. The final stats aggregate
     * map-side combines; sums ride decimal(38,0).
     */
   def winsorizedStats(df: DataFrame, groupCol: String, valueCol: String,
@@ -1078,43 +992,6 @@ object Profile {
     v.join(b, Seq("grp"))
       .groupBy(col("grp"))
       .agg(max(col("__n")).cast("long").as("n"),
-        max(col("__lo")).cast("long").as("lo"),
-        max(col("__hi")).cast("long").as("hi"),
-        sum(least(greatest(col("__c"), col("__lo")), col("__hi"))
-          .cast("decimal(38,0)")).cast("long").as("sum_wins"),
-        sum(when(col("__c") < col("__lo"), 1L).otherwise(0L))
-          .cast("long").as("n_clip_lo"),
-        sum(when(col("__c") > col("__hi"), 1L).otherwise(0L))
-          .cast("long").as("n_clip_hi"))
-      .select(col("grp").as(groupCol), col("n"), col("lo"), col("hi"),
-        col("sum_wins"), col("n_clip_lo"), col("n_clip_hi"))
-  }
-
-  /** [[winsorizedStats]]'s production twin: clip bounds from one
-    * Greenwald–Khanna `percentile_approx` aggregate per group (map-
-    * side partial sketches, one exchange), broadcast back, then the
-    * identical clip-and-aggregate. No window, no per-group sort.
-    * Bounds are actual data values with rank error ≤ n/accuracy, so
-    * the clipped sum differs from the exact form only by values
-    * between the exact and sketched bounds (the spec bounds both);
-    * the exact twin stays the oracle/audit form.
-    */
-  def winsorizedStatsApprox(df: DataFrame, groupCol: String,
-                            valueCol: String, loPpm: Long = 50000L,
-                            hiPpm: Long = 950000L,
-                            accuracy: Int = 10000): DataFrame = {
-    require(loPpm >= 0 && hiPpm <= 1000000L && loPpm < hiPpm,
-      s"need 0 <= loPpm < hiPpm <= 1000000, got ($loPpm, $hiPpm)")
-    val v = df.select(col(groupCol).as("grp"),
-      col(valueCol).cast("long").as("__c"))
-    val b = v.groupBy(col("grp")).agg(
-      percentile_approx(col("__c"), lit(loPpm / 1e6), lit(accuracy))
-        .as("__lo"),
-      percentile_approx(col("__c"), lit(hiPpm / 1e6), lit(accuracy))
-        .as("__hi"))
-    v.join(broadcast(b), Seq("grp"))
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).cast("long").as("n"),
         max(col("__lo")).cast("long").as("lo"),
         max(col("__hi")).cast("long").as("hi"),
         sum(least(greatest(col("__c"), col("__lo")), col("__hi"))
@@ -1187,10 +1064,7 @@ object Profile {
     * `tieCol` pin the cross-engine order. Returns
     * (grp, n, total_w, wmedian).
     *
-    * Scale: one cumulative window per group over the grouped frame —
-    * the exact audit form; [[weightedMedianBucketed]] is the
-    * production twin (same answer, window over the DISTINCT-value
-    * frame instead of the row frame).
+    * Scale: one cumulative window per group over the grouped frame.
     */
   def weightedMedian(df: DataFrame, grpCol: String, valueCol: String,
                      weightCol: String, tieCol: String): DataFrame = {
@@ -1212,46 +1086,6 @@ object Profile {
         Window.partitionBy(col("grp"))))
       .groupBy(col("grp"))
       .agg(count(lit(1)).cast("long").as("n"),
-        max(col("__totw")).cast("long").as("total_w"),
-        min(when(lit(2) * col("__cumw") >= col("__totw"),
-          col("__v"))).cast("long").as("wmedian"))
-  }
-
-  /** [[weightedMedian]]'s production twin — and EXACTLY the same
-    * answer: the weighted median (smallest v with 2·cumw(≤v) ≥ totw)
-    * depends only on the per-VALUE weight totals, never on the order
-    * within a value tie, so pre-aggregating to (group, value, Σw)
-    * first (one map-side-combined exchange) and running the
-    * cumulative window over that DISTINCT-VALUE frame is a pure plan
-    * change. The window's partitions are groups and its rows are
-    * distinct values — bounded by the value domain (the engine's
-    * integral-value contract: cents, micros, token counts), not by
-    * corpus rows, so a billion-row group with a few thousand distinct
-    * values sorts a few thousand rows. The spec asserts bit-equality
-    * with the exact row-frame form; `n` counts rows (not distinct
-    * values), matching the exact twin.
-    */
-  def weightedMedianBucketed(df: DataFrame, grpCol: String,
-                             valueCol: String,
-                             weightCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val D = "decimal(38,0)"
-    val grouped = df.filter(col(grpCol).isNotNull &&
-        col(valueCol).isNotNull && col(weightCol).isNotNull &&
-        col(weightCol) > 0)
-      .select(col(grpCol).as("grp"),
-        col(valueCol).cast("long").as("__v"),
-        col(weightCol).cast("long").cast(D).as("__w"))
-      .groupBy(col("grp"), col("__v"))
-      .agg(count(lit(1)).as("__c"), sum(col("__w")).as("__wv"))
-    val ord = Window.partitionBy(col("grp")).orderBy(col("__v"))
-    grouped
-      .withColumn("__cumw", sum(col("__wv")).over(
-        ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__totw", sum(col("__wv")).over(
-        Window.partitionBy(col("grp"))))
-      .groupBy(col("grp"))
-      .agg(sum(col("__c")).cast("long").as("n"),
         max(col("__totw")).cast("long").as("total_w"),
         min(when(lit(2) * col("__cumw") >= col("__totw"),
           col("__v"))).cast("long").as("wmedian"))
@@ -1385,10 +1219,7 @@ object Profile {
     * happens to be exact for those constants, this form is exact for
     * ALL of them). Returns (grp, n, p25, p50, p75, p95).
     *
-    * Scale: one ranked window per group over the grouped frame — the
-    * exact audit form; at billions of rows per group
-    * [[groupQuantilesApprox]] is the production twin (one GK sketch
-    * aggregate, the q157 escape made real).
+    * Scale: one ranked window per group over the grouped frame.
     */
   def groupQuantiles(df: DataFrame, grpCol: String, valueCol: String,
                      tieCols: Seq[String]): DataFrame = {
@@ -1413,31 +1244,6 @@ object Profile {
         q(19, 20).cast("long").as("p95"))
   }
 
-  /** [[groupQuantiles]]'s production twin: all four quantiles from
-    * ONE Greenwald–Khanna `percentile_approx` aggregate per group —
-    * map-side partial sketches through a single ordinary aggregation
-    * exchange, no window, no per-group sort (the
-    * [[tokenQuantilesApprox]] shape applied to a pre-computed value
-    * column). GK returns actual data values (never interpolates), so
-    * the columns stay integral; rank error ≤ n/accuracy per group,
-    * and the exact rank form stays the oracle/audit twin.
-    */
-  def groupQuantilesApprox(df: DataFrame, grpCol: String,
-                           valueCol: String,
-                           accuracy: Int = 10000): DataFrame = {
-    def q(p: Double) =
-      percentile_approx(col("__v"), lit(p), lit(accuracy))
-    df.filter(col(grpCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(grpCol).as("grp"),
-        col(valueCol).cast("long").as("__v"))
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).cast("long").as("n"),
-        q(0.25).cast("long").as("p25"),
-        q(0.50).cast("long").as("p50"),
-        q(0.75).cast("long").as("p75"),
-        q(0.95).cast("long").as("p95"))
-  }
-
   /** Per-group EQUI-DEPTH histogram of an integer column: `bins`
     * buckets of (near-)equal ROW COUNT — the adaptive binning every
     * skewed metric needs (equi-WIDTH bins put 99% of a long-tailed
@@ -1449,9 +1255,7 @@ object Profile {
     * adjacent bins may share a boundary value when ties straddle a
     * cut (rank semantics, the q47 never-interpolate convention).
     *
-    * Scale: one rank window per group — the exact audit form;
-    * [[equiDepthBinsApprox]] is the GK production twin (value-banded
-    * bins, no window).
+    * Scale: one rank window per group.
     */
   def equiDepthBins(df: DataFrame, grpCol: String, valueCol: String,
                     tieCols: Seq[String], bins: Int): DataFrame = {
@@ -1469,44 +1273,6 @@ object Profile {
       .withColumn("__n", count(lit(1)).over(
         Window.partitionBy(col("grp"))))
       .withColumn("bin", expr(s"((__rn - 1) * $bins) div __n"))
-      .groupBy(col("grp"), col("bin"))
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        min(col("__v")).cast("long").as("lo"),
-        max(col("__v")).cast("long").as("hi"))
-  }
-
-  /** [[equiDepthBins]]'s production twin: bin BOUNDARY VALUES from one
-    * Greenwald–Khanna `percentile_approx` aggregate per group
-    * (boundaries at i/B, i = 1..B−1), broadcast back, each row graded
-    * into the first bin whose upper boundary admits it — no window,
-    * no per-group sort. Semantics differ from the rank form exactly
-    * where value grading must: a tie run spanning a rank cut lands
-    * WHOLE in one bin here (bin sizes drift by the tie mass, plus GK
-    * rank error ≤ n/accuracy), and bins emptied by heavy ties are
-    * absent. The spec bounds sizes and boundary ranks against the
-    * exact twin.
-    */
-  def equiDepthBinsApprox(df: DataFrame, grpCol: String,
-                          valueCol: String, bins: Int,
-                          accuracy: Int = 10000): DataFrame = {
-    require(bins >= 1, s"bins must be >= 1, got $bins")
-    val v = df.filter(col(grpCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(grpCol).as("grp"),
-        col(valueCol).cast("long").as("__v"))
-    if (bins == 1)
-      return v.groupBy(col("grp"))
-        .agg(count(lit(1)).cast("long").as("n_rows"),
-          min(col("__v")).cast("long").as("lo"),
-          max(col("__v")).cast("long").as("hi"))
-        .select(col("grp"), lit(0L).as("bin"), col("n_rows"),
-          col("lo"), col("hi"))
-    val ps = (1 until bins).map(_.toDouble / bins)
-    val bd = v.groupBy(col("grp"))
-      .agg(percentile_approx(col("__v"), array(ps.map(lit): _*),
-        lit(accuracy)).as("__b"))
-    v.join(broadcast(bd), Seq("grp"))
-      .withColumn("bin",
-        size(filter(col("__b"), b => b < col("__v"))).cast("long"))
       .groupBy(col("grp"), col("bin"))
       .agg(count(lit(1)).cast("long").as("n_rows"),
         min(col("__v")).cast("long").as("lo"),

@@ -402,14 +402,10 @@ object Sampling {
     * violating row raises rather than silently returning a non-prefix
     * set (negative costs make the running sum non-monotone, so a
     * `cum ≤ budget` filter would skip a higher-ranked row and readmit
-    * later ones; NULL scores would be kept here but silently dropped by
-    * the approx twin's equality semi-join).
+    * later ones; a NULL score has no place in the greedy order).
     *
-    * This exact form is the audit twin (q76): the per-source cumulative
-    * window sorts each source's full history — correct, but a mega
-    * source funnels one task at 100 TB. The production path is
-    * [[budgetSelectApprox]]: same greedy semantics at score-group
-    * granularity with ZERO corpus-side window or shuffle.
+    * Scale: the per-source cumulative window sorts each source's full
+    * history inside one window partition (q76's form).
     */
   def budgetSelect(df: DataFrame, srcCol: String, scoreCol: String,
                    costCol: String, idCol: String,
@@ -422,38 +418,6 @@ object Sampling {
     checkBudgetCols(df, scoreCol, costCol)
       .withColumn("cum_cost", sum(col(costCol)).over(w))
       .filter(col("cum_cost") <= budget)
-  }
-
-  /** Scale-safe twin of [[budgetSelect]]: greedy selection at SCORE-GROUP
-    * granularity. One map-side-combined (src, score) aggregate builds the
-    * per-group cost table — bounded by sources × distinct scores, i.e.
-    * model-scale — the cumulative cut runs over THAT table (window over
-    * bounded rows, partitioned by source), and the kept (src, score)
-    * pairs broadcast back as a semi-join. The corpus is never shuffled
-    * by source and never window-sorted: a mega source costs one partial
-    * aggregate per partition, not one task.
-    *
-    * Selects a SUBSET of [[budgetSelect]]'s rows — identical whenever
-    * the budget boundary falls on a score-group edge (always, when
-    * scores are distinct within a source); otherwise the partial
-    * boundary group is dropped entirely (conservative under-fill, never
-    * over budget). Both proven in SamplingSpec.
-    */
-  def budgetSelectApprox(df: DataFrame, srcCol: String, scoreCol: String,
-                         costCol: String, budget: Long): DataFrame = {
-    require(budget >= 0, s"budget must be >= 0, got $budget")
-    import org.apache.spark.sql.expressions.Window
-    val checked = checkBudgetCols(df, scoreCol, costCol)
-    val w = Window.partitionBy(col(srcCol)).orderBy(col(scoreCol).desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val kept = checked.groupBy(col(srcCol), col(scoreCol))
-      .agg(sum(col(costCol)).as("__gcost"))
-      .withColumn("__cum", sum(col("__gcost")).over(w))
-      .filter(col("__cum") <= budget)
-      .select(col(srcCol).as("__ks"), col(scoreCol).as("__kc"))
-    checked.join(broadcast(kept),
-      col(srcCol) === col("__ks") && col(scoreCol) === col("__kc"),
-      "left_semi")
   }
 
   /** Exponential-key quantization scale for [[weightedTopK]]:
@@ -548,7 +512,7 @@ object Sampling {
   /** Effective sample size of a weighted frame (Kish 1965):
     * ESS = (Σw)²/Σw² — how many EQUAL-weight rows this weighted set
     * is worth; the design-effect diagnostic for every weighted
-    * corpus mix ([[temperatureMix]], [[weightedSample]], DSIR
+    * corpus mix ([[temperatureMix]], [[weightedTopK]], DSIR
     * importance weights): ESS/n near 1 means the weights are doing
     * nothing, near 0 means a few heavy rows dominate and the mix's
     * nominal size is a lie. Exact integers: per group,

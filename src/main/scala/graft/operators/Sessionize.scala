@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -125,7 +125,6 @@ object Sessionize {
                       maxGap: Long, tieCol: String,
                       dayMicros: Long = 86400000000L): DataFrame = {
     require(dayMicros > 0, s"dayMicros must be positive, got $dayMicros")
-    import org.apache.spark.sql.expressions.Window
     val sess = stats(df, keyCol, tsCol, maxGap, tieCol)
     val pts = sess.select(col("start_ts").cast("long").as("__t"),
         lit(1L).as("__d"))
@@ -219,32 +218,5 @@ object Sessionize {
         col(keyCol) <=> col("__sk") && col("__bkt") <=> col("__sb"))
       .withColumn(sessionCol, col("__c") + col("__ord") - col("__m"))
       .drop("__bkt", "__ord", "__m", "__c", "__sk", "__sb")
-  }
-
-  /** Adaptive entry point: pick [[assign]] or [[assignStitched]] from
-    * the data. The measured crossover (PLANS.md sf1 spot check, part 3)
-    * sits around 10⁶ events on one key: below it the plain global-key
-    * window is ~1.2× cheaper (the stitch's extra join and bucket
-    * window buy nothing); above it the global window funnels the hot
-    * key through one sort task while the stitch stays parallel
-    * (measured 4.9× at 50M events on one key). The probe is one
-    * map-side-combined aggregate — (count per key) → max, two exact
-    * longs per partition on the wire — and costs one extra pass over
-    * `df`: callers with an expensive upstream should persist it around
-    * the call (the [[Sampling.temperatureMix]] convention).
-    */
-  def autoStitch(df: DataFrame, keyCol: String, tsCol: String,
-                 maxGap: Long, tieCol: String, bucketWidth: Long,
-                 stitchThreshold: Long = 1000000L,
-                 sessionCol: String = "session_ord"): DataFrame = {
-    require(stitchThreshold > 0,
-      s"stitchThreshold must be positive, got $stitchThreshold")
-    val probe = df.groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
-      .agg(max(col("__n"))).head()
-    val hottest = if (probe.isNullAt(0)) 0L else probe.getLong(0)
-    if (hottest >= stitchThreshold)
-      assignStitched(df, keyCol, tsCol, maxGap, tieCol, bucketWidth,
-        sessionCol)
-    else assign(df, keyCol, tsCol, maxGap, tieCol, sessionCol)
   }
 }

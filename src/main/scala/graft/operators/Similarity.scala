@@ -176,8 +176,7 @@ object Similarity {
     * Exact audit form: [[bruteForceTopK]]'s movement contract — the
     * query batch broadcasts, only (qid, nid, label, sim) enters the
     * per-query top-k window, the vote argmax is a second ≤ k-row
-    * window. At corpus scale use [[knnClassifyIvf]] (probe-routed
-    * candidates, identical vote).
+    * window.
     */
   def knnClassify(queries: DataFrame, corpus: DataFrame,
                   qidCol: String, idCol: String, vecCol: String,
@@ -197,38 +196,6 @@ object Similarity {
       .select(col("qid"), col("nid"), col("label"), col("sim"))
     voteOf(TopK.perGroup(scored, Seq(col("qid")),
       Seq(col("sim").desc, col("nid")), k))
-  }
-
-  /** [[knnClassify]]'s production twin: candidates come from
-    * [[ivfTopK]]'s probed inverted lists instead of the full-corpus
-    * cross join (labels ride a post-rank hash join against the ≤
-    * |queries|·k winner frame), identical vote. Approximate exactly
-    * where IVF is (recall < 1 when a true neighbor lives outside the
-    * probed cells); the spec bounds prediction agreement against the
-    * exact form. `excludeSelf` contract matches [[knnClassify]].
-    */
-  def knnClassifyIvf(queries: DataFrame, corpus: DataFrame,
-                     qidCol: String, idCol: String, vecCol: String,
-                     labelCol: String, k: Int,
-                     centroidEvery: Int = 32, nprobe: Int = 3,
-                     excludeSelf: Boolean = true): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val labeled = corpus.filter(col(labelCol).isNotNull)
-    // rank k+1 then drop self: the self pair (sim = 1) occupies one
-    // slot whenever the query is in the corpus, so k true neighbors
-    // survive; without excludeSelf plain k
-    val kk = if (excludeSelf) k + 1 else k
-    val ranked = ivfTopK(queries, labeled, qidCol, idCol, vecCol,
-      kk, centroidEvery, nprobe)
-    val noSelf =
-      if (excludeSelf) ranked.filter(col("qid") =!= col("nid"))
-      else ranked
-    val rek = TopK.perGroup(
-      noSelf.select(col("qid"), col("nid"), col("sim")),
-      Seq(col("qid")), Seq(col("sim").desc, col("nid")), k, "rk2")
-    val labels = labeled.select(col(idCol).as("nid"),
-      col(labelCol).cast("long").as("label"))
-    voteOf(rek.join(labels, Seq("nid")))
   }
 
   /** The shared majority vote: count labels per query, argmax with

@@ -591,8 +591,7 @@ object Timeseries {
     * |days|²/2 pairwise self-join — the EXACT audit form over the
     * bounded day frame (2 400 days → 2.9M pairs; the [[Profile]]
     * bounded-frame contract). The rank cut is one global ordered
-    * window over those pairs; at 10⁵+ days [[theilSenApprox]] is the
-    * production twin (Sen-style pair subsampling + GK quantiles).
+    * window over those pairs.
     */
   def theilSen(df: DataFrame, tsMicrosCol: String,
                dayMicros: Long = 86400000000L): DataFrame = {
@@ -628,8 +627,7 @@ object Timeseries {
     // concentrate near 0, so equi-width buckets collapse into one
     // skewed reducer while paying an extra full shuffle of the pair
     // frame (62 s vs 2.7 s at sf0.1). The single-partition window over
-    // the BOUNDED day-pair frame stays; long calendars take
-    // [[theilSenApprox]].
+    // the BOUNDED day-pair frame stays.
     slopes
       .crossJoin(broadcast(mRow))
       .withColumn("__r", row_number().over(w))
@@ -646,75 +644,5 @@ object Timeseries {
       .select(col("__nd").cast("long").as("n_days"),
         col("n_pairs"), col("slope_p10_ppm"), col("slope_ppm"),
         col("slope_p90_ppm"))
-  }
-
-  /** [[theilSen]]'s production twin for long calendars: instead of
-    * the |days|²/2 pairwise self-join, run `rounds` deterministic
-    * matching rounds — each round orders the day frame by
-    * `xxhash64(day, round)` and pairs consecutive rows (⌊n/2⌋
-    * disjoint pairs per round, every day used once per round), so the
-    * sample holds rounds·⌊n/2⌋ uniformly-mixed pairs instead of
-    * n(n−1)/2. Slopes quantize exactly as the exact twin (sign split
-    * before the floor); the p10/median/p90 of the SAMPLE come from
-    * one Greenwald–Khanna `percentile_approx` aggregate, so no global
-    * sort touches even the sampled-slope frame. This is Sen's
-    * random-pairing subsample estimator (Sen 1968 §5 notes the
-    * median of any symmetric pair subsample stays consistent;
-    * breakdown degrades gracefully with sample size) made
-    * deterministic: xxhash64 is a pure function of (day, round), so
-    * two runs — and a retry after a lost executor — draw the SAME
-    * pairs. Returns the [[theilSen]] schema with `n_pairs` = the
-    * sample size.
-    *
-    * Scale: one day-keyed map-side count, then per round one
-    * hash-ordered window over the |days| frame (bounded: the frame
-    * is days, not rows) and a self-join on the round-local pair id —
-    * rounds·n rows total ever shuffle, vs n²/2 pairs in the exact
-    * audit form; the quantile extraction is one sketch aggregate.
-    */
-  def theilSenApprox(df: DataFrame, tsMicrosCol: String,
-                     rounds: Int = 32,
-                     dayMicros: Long = 86400000000L,
-                     accuracy: Int = 10000): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    require(dayMicros > 0, s"dayMicros must be positive, got $dayMicros")
-    import org.apache.spark.sql.expressions.Window
-    val D = "decimal(38,0)"
-    val cnt = df
-      .select(expr(s"CAST($tsMicrosCol AS BIGINT) div $dayMicros")
-        .as("__d"))
-      .groupBy(col("__d"))
-      .agg(count(lit(1)).as("__n"))
-    val nDays = cnt.agg(count(lit(1)).as("__nd"))
-    val slopes = (1 to rounds).map { r =>
-      val shuffled = cnt
-        .withColumn("__rn", row_number().over(
-          Window.orderBy(xxhash64(col("__d"), lit(r)), col("__d"))))
-        .withColumn("__pair", expr("(__rn + 1) div 2"))
-        .withColumn("__side", expr("__rn % 2"))
-      val a = shuffled.filter(col("__side") === 1)
-        .select(col("__pair"), col("__d").as("__da"),
-          col("__n").as("__na"))
-      val b = shuffled.filter(col("__side") === 0)
-        .select(col("__pair"), col("__d").as("__db"),
-          col("__n").as("__nb"))
-      a.join(b, Seq("__pair"))
-        .select(
-          expr(s"""(CASE WHEN (__nb - __na) * (__db - __da) >= 0
-              THEN 1 ELSE -1 END)
-            * CAST((CAST(1000000 AS $D) * ABS(__nb - __na))
-              div ABS(__db - __da) AS BIGINT)""").as("__s"))
-    }.reduce(_ unionByName _)
-    slopes
-      .agg(count(lit(1)).cast("long").as("n_pairs"),
-        percentile_approx(col("__s"), lit(0.1), lit(accuracy))
-          .cast("long").as("slope_p10_ppm"),
-        percentile_approx(col("__s"), lit(0.5), lit(accuracy))
-          .cast("long").as("slope_ppm"),
-        percentile_approx(col("__s"), lit(0.9), lit(accuracy))
-          .cast("long").as("slope_p90_ppm"))
-      .crossJoin(broadcast(nDays))
-      .select(col("__nd").cast("long").as("n_days"), col("n_pairs"),
-        col("slope_p10_ppm"), col("slope_ppm"), col("slope_p90_ppm"))
   }
 }

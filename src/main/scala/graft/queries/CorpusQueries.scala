@@ -314,8 +314,7 @@ object CorpusQueries {
     * docs between its own P05 and P95 of `n_chars` — adaptive outlier
     * trimming where every source gets thresholds from its own
     * distribution (fixed global cutoffs misfire across heterogeneous
-    * sources). The oracle replays the rank-band rule; the windowless
-    * `quantileTrimApprox` twin is the audited scale path (ProfileSpec).
+    * sources). The oracle replays the rank-band rule.
     */
   private val q62 = Q("q62_quantile_trim",
     (s, dir) => {

@@ -3161,8 +3161,7 @@ object MiscQueries {
     * the adaptive binning a skewed metric needs (equi-width would pile
     * everything into bucket 0). All-integer rank cuts
     * (⌊(rn−1)·B/n⌋ div-mirrored, non-negative so the div ⇄ //
-    * divergence can't bite); lo/hi are actual data values. The GK
-    * production twin is spec-bounded (ApproxStatsSpec).
+    * divergence can't bite); lo/hi are actual data values.
     */
   private val q248 = Q("q248_equidepth_bins",
     (s, dir) => {

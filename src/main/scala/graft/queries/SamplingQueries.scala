@@ -334,8 +334,7 @@ object SamplingQueries {
     * ([[Sampling.budgetSelect]]): per source, keep the quality-first
     * prefix (stopword-hit score desc, doc_id tiebreak) whose running
     * token cost fits an 800-token budget. Exact-long cumulative sums;
-    * the oracle replays the same window. The windowless production twin
-    * ([[Sampling.budgetSelectApprox]]) is spec-gated.
+    * the oracle replays the same window.
     */
   private val q76 = {
     val budget = 800L

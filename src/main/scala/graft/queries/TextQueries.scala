@@ -1343,13 +1343,12 @@ object TextQueries {
   }
 
   /** q120 — multi-term interval-union redaction
-    * ([[graft.plans.AcRedactExpr]] behind [[TextFunctions.redactTerms]]
-    * / [[graft.functions.PiiRules.redactBlocklist]]): the q118 span
-    * set's UNION of match intervals is cut and replaced — nested
-    * ("art" ⊂ "part") and adjacent matches merge into ONE marker. The
-    * oracle replays interval merging as a gaps-and-islands window
-    * chain (prev-max-end → island ids → per-island [min,max]) and
-    * rebuilds the redacted string with an ordered STRING_AGG of the
+    * ([[graft.plans.AcRedactExpr]] behind [[TextFunctions.redactTerms]]):
+    * the q118 span set's UNION of match intervals is cut and replaced
+    * — nested ("art" ⊂ "part") and adjacent matches merge into ONE
+    * marker. The oracle replays interval merging as a gaps-and-islands
+    * window chain (prev-max-end → island ids → per-island [min,max])
+    * and rebuilds the redacted string with an ordered STRING_AGG of the
     * inter-island segments; n_cuts / cut_chars audit the merged
     * intervals on both sides (Spark derives them from
     * [[TextFunctions.blocklistSpans]] with one aggregate() fold).

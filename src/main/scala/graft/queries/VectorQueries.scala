@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables.t
-import graft.operators.{Dedup, Similarity}
+import graft.operators.Similarity
 import graft.functions.VectorFunctions
 
 /** Similarity-search coverage over the `embeddings` table (north-star
@@ -1117,8 +1117,7 @@ object VectorQueries {
     * BEFORE ranking) vote, ties break to the smallest label. The
     * oracle replays q20's proven bit-equal cosine chain plus the vote
     * argmax; the output adds the truth join and a correctness bit, so
-    * the gate pins prediction AND evaluation accounting. The IVF
-    * production twin is spec-bounded (SimilaritySpec).
+    * the gate pins prediction AND evaluation accounting.
     */
   private val q250 = Q("q250_knn_classify",
     (s, dir) => {

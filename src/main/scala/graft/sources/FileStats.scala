@@ -422,7 +422,7 @@ object FileStats {
                       (mn.startsWith(prefix) || mn.compareTo(prefix) <= 0)
                   case _ => true
                 }
-              case Some(cs) => false // all-null: no string starts with p
+              case Some(_) => false // all-null: no string starts with p
               case None     => true
             }
           case _ => true
@@ -438,7 +438,7 @@ object FileStats {
     * satisfies `pred`? Conservative the other way — `true` only on
     * proof, `false` for any unknown shape — so
     * `allMatch ⇒ the file contributes exactly its row count` to a
-    * predicate COUNT without being read ([[TableStore.countWhere]]).
+    * predicate COUNT without being read ([[TableStore.aggWhere]]).
     * SQL three-valued semantics: a NULL operand makes a comparison
     * non-matching, so every comparison proof also requires nulls == 0.
     */

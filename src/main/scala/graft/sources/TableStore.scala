@@ -92,16 +92,14 @@ final class TableStore(spark: SparkSession, root: String,
     * sequence): the complete live data-file set as (path relative to
     * the table dir, byte length), the partition columns, the read
     * schema (data columns, then partition columns), the exactly-once
-    * stream fences, whether a schema-adding append ever widened the
-    * table, the [[analyze]]d stats of listed files (the raw `r=`/`s=`
-    * lines of [[FileStats.serialize]]) and, for a rollup table, the
-    * source files each `__rollup:<src>` fence has folded.
+    * stream fences, the [[analyze]]d stats of listed files (the raw
+    * `r=`/`s=` lines of [[FileStats.serialize]]) and, for a rollup
+    * table, the source files each `__rollup:<src>` fence has folded.
     */
   private[sources] case class Manifest(seq: Long, schema: StructType,
                                        partitionCols: Seq[String],
                                        files: Seq[(String, Long)],
                                        txns: Map[String, Long],
-                                       evolved: Boolean,
                                        statLines: Seq[String],
                                        folds: Map[String, Set[String]]) {
     def paths: Seq[String] = files.map(_._1)
@@ -215,7 +213,7 @@ final class TableStore(spark: SparkSession, root: String,
       l.take(cut) -> l.drop(cut + 1)
     }.groupMap(_._1)(_._2).map { case (s, fs) => s -> fs.toSet }
     Manifest(seq, DataType.fromJson(vs("schema").head).asInstanceOf[StructType],
-      vs("part"), files, txns, vs("evolved").nonEmpty,
+      vs("part"), files, txns,
       lines.filter(l => l.startsWith("r=") || l.startsWith("s=")), folds)
   }
 
@@ -234,7 +232,6 @@ final class TableStore(spark: SparkSession, root: String,
           m.partitionCols.map("part=" + _) ++
           m.files.map { case (rel, len) => s"f=$len $rel" } ++
           m.txns.toSeq.sortBy(_._1).map { case (s, b) => s"txn=$s:$b" } ++
-          (if (m.evolved) Seq("evolved=true") else Nil) ++
           m.folds.toSeq.sortBy(_._1).flatMap { case (s, fs) =>
             fs.toSeq.sorted.map(f => s"fold=$s\t$f")
           } ++ m.statLines)
@@ -479,7 +476,6 @@ final class TableStore(spark: SparkSession, root: String,
                      files: Seq[(String, Long)], partitionCols: Seq[String],
                      schema: StructType, staged: Seq[(String, Long)],
                      txnUpdate: Option[(String, Long)] = None,
-                     widens: Boolean = false,
                      stats: Map[String, FileStats.PerFile] = Map.empty,
                      fold: Option[(String, Set[String])] = None): Long = {
     val parts =
@@ -492,7 +488,6 @@ final class TableStore(spark: SparkSession, root: String,
       StructType(schema.filterNot(f => partitionCols.contains(f.name)) ++ parts),
       partitionCols, files,
       head0.map(_.txns).getOrElse(Map.empty[String, Long]) ++ txnUpdate,
-      widens || head0.exists(_.evolved),
       head0.toSeq.flatMap(_.statLines)
         .filter(l => keepStats(FileStats.fileOf(l))) ++
         FileStats.serialize(stats).split("\n").filter(_.nonEmpty),
@@ -629,14 +624,8 @@ final class TableStore(spark: SparkSession, root: String,
       if (head0.files.isEmpty) FileScan.nullable(frame.schema)
       else head0.schema)
     commit(table, Some(head0), head0.files ++ incoming, partitionBy, schema,
-      incoming, txnUpdate, widens = widened.nonEmpty)
+      incoming, txnUpdate)
   }
-
-  /** True once a schema-adding append has widened the table: files
-    * written before the widening lack the added columns, which read
-    * back as NULL under the recorded schema.
-    */
-  def isEvolved(table: String): Boolean = readManifest(table).exists(_.evolved)
 
   /** Append with SCHEMA EVOLUTION: batch columns the table lacks are
     * ADDED to the recorded schema (earlier files read them back as
@@ -1583,58 +1572,9 @@ final class TableStore(spark: SparkSession, root: String,
     else scan(table, m, kept).filter(pred)
   }
 
-  /** Predicate COUNT answered from METADATA wherever the file stats
-    * can prove it: each file is classified ALL (every row provably
-    * matches — contributes its recorded row count, zero I/O), NONE
-    * (provably empty under the predicate — contributes 0), or
-    * BOUNDARY (indeterminate — read and counted). At 100 TB a
-    * time-range or partition-key count touches only the files
-    * straddling the range edges; the interior — almost everything —
-    * is settled from the manifest. Exactness is unconditional: the
-    * ALL/NONE proofs are [[FileStats.allMatch]]/[[FileStats.mayMatch]]
-    * (both conservative, SQL null semantics), and stale-stats files
-    * simply classify BOUNDARY and get read. Falls back to a plain
-    * filtered count with no stats, or when the optimizer folds the
-    * predicate away entirely (no Filter conjuncts to prove against —
-    * including a literal-false predicate whose plan collapses to an
-    * empty relation).
-    */
-  def countWhere(table: String, pred: org.apache.spark.sql.Column): Long =
-    countWhereDetail(table, pred)._1
-
-  /** [[countWhere]] + file accounting for audits and specs:
-    * (count, provedAll, provedNone, scanned).
-    */
-  private[graft] def countWhereDetail(
-      table: String, pred: org.apache.spark.sql.Column)
-      : (Long, Int, Int, Int) = {
-    val m = head(table)
-    val plain = scan(table, m, m.paths).filter(pred)
-    def fallback = (plain.count(), 0, 0, -1)
-    val stats = m.stats
-    if (stats.isEmpty) return fallback
-    val files = m.paths
-    if (files.isEmpty) return (0L, 0, 0, 0)
-    val conds = conditions(plain)
-    // no Filter left: the optimizer folded the predicate — true AND
-    // false both land here, so the metadata path cannot distinguish
-    // them; execute the plain count (correctness over cleverness)
-    if (conds.isEmpty) return fallback
-    val (provedAll, rest) = files.partition(rel =>
-      stats.get(rel).exists(pf =>
-        conds.forall(c => FileStats.allMatch(c, pf))))
-    val (scanned, provedNone) = rest.partition(mayMatch(stats, conds))
-    val metaCount = provedAll.map(stats(_).rows).sum
-    val scanCount =
-      if (scanned.isEmpty) 0L
-      else scan(table, m, scanned).filter(pred).count()
-    (metaCount + scanCount, provedAll.size, provedNone.size,
-      scanned.size)
-  }
-
-  /** METADATA-ONLY predicate AGGREGATES — [[countWhere]] extended to
-    * (count, sum, min, max) of an integral/decimal `valueCol`: files
-    * the file stats PROVE all-matching contribute their recorded
+  /** METADATA-ONLY predicate AGGREGATES — (count, sum, min, max) of
+    * an integral/decimal `valueCol` under `pred`: files the file
+    * stats PROVE all-matching contribute their recorded
     * row count, exact column total, and [min,max] with ZERO I/O;
     * provably-empty files are skipped; only BOUNDARY files (range
     * edges) are read, filtered, and aggregated — so a time-window
@@ -1643,9 +1583,10 @@ final class TableStore(spark: SparkSession, root: String,
     * sum field (or whose `valueCol` was not analyzed) is demoted to
     * scanning — staleness degrades I/O, never totals. Falls back to a
     * full filtered aggregate when the table has no stats or
-    * the optimizer folded the predicate (the [[countWhere]]
-    * contract). SUM/MIN/MAX skip NULLs; COUNT counts matching ROWS
-    * (so it always equals [[countWhere]]). Float/double value columns
+    * the optimizer folded the predicate away (no Filter conjuncts to
+    * prove against — a literal-true and a literal-false predicate
+    * both land there). SUM/MIN/MAX skip NULLs; COUNT counts matching
+    * ROWS. Float/double value columns
     * are rejected loudly: their sum is order-dependent, a metadata
     * total could not be certified against a scan.
     */

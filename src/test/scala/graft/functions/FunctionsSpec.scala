@@ -79,14 +79,6 @@ class TextFunctionsSpec extends SparkSpec {
       TextFunctions.safeCast($"b", "int", lit(0))).head()
     assert(a == 12 && b == 0)
   }
-
-  test("qualityFeatures basic sanity") {
-    val Row(r: Row) = Seq("The quick brown fox, it jumps!").toDF("t")
-      .select(TextFunctions.qualityFeatures($"t").as("q")).head()
-    assert(r.getAs[Double]("n_tokens") == 6.0)
-    assert(r.getAs[Double]("alpha_ratio") > 0.7)
-    assert(r.getAs[Double]("punct_ratio") > 0.0)
-  }
 }
 
 class VectorFunctionsSpec extends SparkSpec {

@@ -35,14 +35,6 @@ class GeoFunctionsSpec extends SparkSpec {
     assert(n > 5900000 && n < 6000000, s"northing $n")
   }
 
-  test("haversine: quarter meridian ~ 10,007.5 km on the sphere") {
-    val Row(d: Double) = Seq((0.0, 0.0, 90.0, 0.0))
-      .toDF("lat1", "lon1", "lat2", "lon2")
-      .select(GeoFunctions.haversineM($"lat1", $"lon1", $"lat2", $"lon2"))
-      .head()
-    assert(math.abs(d - 1.00075e7) < 2e4, s"dist $d")
-  }
-
   test("gridCellId: packs row-major and respects cell bounds") {
     val df = Seq((0.5, 0.5), (1.5, 0.5), (0.5, 1.5), (3.99, 3.99))
       .toDF("x", "y")
@@ -60,15 +52,5 @@ class GeoFunctionsSpec extends SparkSpec {
         "transform(ringRaw, p -> struct(p._1 as x, p._2 as y))"))
       .select(GeoFunctions.pointInPolygon($"px", $"py", $"ring").as("in"))
     assert(df.as[Boolean].collect().toSeq == Seq(true, false, false))
-  }
-
-  test("ringCentroid: mean of vertices") {
-    val square = Seq(Seq((0.0, 0.0), (2.0, 0.0), (2.0, 2.0), (0.0, 2.0)))
-    val Row(Row(cx: Double, cy: Double)) = Seq(Tuple1(square.head))
-      .toDF("ringRaw")
-      .withColumn("ring", expr(
-        "transform(ringRaw, p -> struct(p._1 as x, p._2 as y))"))
-      .select(GeoFunctions.ringCentroid($"ring")).head()
-    assert(cx == 1.0 && cy == 1.0)
   }
 }

@@ -55,7 +55,7 @@ class PiiRulesSpec extends SparkSpec {
       "mail a@b.com about zeus",
       "clean line").toDF("t")
       .withColumn("r", PiiRules.redact(
-        PiiRules.redactBlocklist($"t", terms)))
+        TextFunctions.redactTerms($"t", terms, "[REDACTED]")))
       .select($"r").as[String].collect().toSeq
     assert(got == Seq(
       "about [REDACTED] and [REDACTED] today",

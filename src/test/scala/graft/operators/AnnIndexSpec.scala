@@ -210,7 +210,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(rows(servedR) == rows(inlineR))
   }
 
-  test("knnClassify: clustered truth recovered; IVF twin tracks; self-exclusion bites") {
+  test("knnClassify: clustered truth recovered; self-exclusion bites") {
     import graft.operators.Similarity
     import spark.implicits._
     // deterministic 4-cluster corpus: the label axis dominates, noise
@@ -245,18 +245,6 @@ class AnnIndexSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(again == exact)
-    // the probe-routed production twin recovers the same predictions
-    // (clustered data is the contract IVF serves; on structureless
-    // noise no candidate router can track a brute-force vote)
-    val ivf = Similarity.knnClassifyIvf(qs, rows, "vec_id", "vec_id",
-        "embedding", "label", k = 7, centroidEvery = 16, nprobe = 3)
-      .select(col("qid").cast("long"), col("pred_label"), col("votes"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    assert(ivf.keySet == exact.keySet)
-    val agree = exact.count { case (q, (l, _)) => ivf(q)._1 == l }
-    assert(agree.toDouble >= 0.9 * exact.size,
-      s"IVF twin agrees on only $agree/${exact.size}")
     // self-exclusion bites: with excludeSelf=false every in-corpus
     // query's own label gets a guaranteed vote (sim = 1 ranks first)
     val selfIn = Similarity.knnClassify(qs, rows, "vec_id", "vec_id",
@@ -267,91 +255,6 @@ class AnnIndexSpec extends SparkSpec {
         col("label").cast("long"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(selfIn == truth)
-  }
-
-  test("knnClassifyOnCodes: served vote recovers clustered truth from saved codes") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    // the knnClassify clustered fixture: label axis dominates
-    val cdim = 8
-    val rows = (0L until 200L).map { i =>
-      val label = (i % 4).toInt
-      val v = Array.tabulate(cdim) { d =>
-        val noise = (((i * 31 + d * 17) % 11) - 5).toFloat / 10f
-        if (d == label) 10f + (i % 7).toFloat else noise
-      }
-      (i, v.toSeq, label)
-    }.toDF("vec_id", "embedding", "label")
-    val store = new TableStore(spark,
-      Files.createTempDirectory("graft_knn_codes").toString)
-    val idx = AnnIndex.trainIvfPq(rows, "vec_id", "embedding",
-      dim = cdim, m = 4, ksub = 8, kCoarse = 8)
-    AnnIndex.save(store, "ix", idx)
-    AnnIndex.encodeAndSaveCodes(store, "codes", rows, "vec_id",
-      "embedding", idx)
-    val served = AnnIndex.load(store, "ix")
-    val qs = rows.filter(col("vec_id") % 9 === 0)
-    val pred = AnnIndex.knnClassifyOnCodes(qs,
-        store.read("codes"), rows, "vec_id", "embedding", "vec_id",
-        "label", k = 7, nprobe = 3, served)
-      .select(col("qid").cast("long"), col("pred_label"), col("votes"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    val exact = Similarity.knnClassify(qs, rows, "vec_id", "vec_id",
-        "embedding", "label", k = 7)
-      .select(col("qid").cast("long"), col("pred_label"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pred.keySet == exact.keySet)
-    // quantized + probe-routed serving still recovers the clusters
-    val agree = exact.count { case (q, l) => pred(q)._1 == l }
-    assert(agree.toDouble >= 0.9 * exact.size,
-      s"served vote agrees on only $agree/${exact.size}")
-    assert(pred.values.forall { case (l, v) =>
-      l >= 0 && l <= 3 && v >= 1 && v <= 7 })
-  }
-
-  test("knnClassifyOnCodes: unlabeled corpus rows never occupy neighbor slots") {
-    import spark.implicits._
-    // the knnClassify clustered fixture, but every third row loses its
-    // label — the codes relation still CONTAINS those rows (encoded
-    // from the full corpus), so a rank-then-join serving path would
-    // hand them neighbor slots and silently drop them after the rank,
-    // starving the vote below k voters. The contract (knnClassifyIvf's
-    // corpus.filter(labelCol.isNotNull)) excludes them BEFORE ranking:
-    // every query must get a full 7-voter unanimous cluster vote.
-    val cdim = 8
-    val rows = (0L until 200L).map { i =>
-      val label = (i % 4).toInt
-      val v = Array.tabulate(cdim) { d =>
-        val noise = (((i * 31 + d * 17) % 11) - 5).toFloat / 10f
-        if (d == label) 10f + (i % 7).toFloat else noise
-      }
-      (i, v.toSeq, if (i % 3 == 0) None else Some(label))
-    }.toDF("vec_id", "embedding", "label")
-    val store = new TableStore(spark,
-      Files.createTempDirectory("graft_knn_unlab").toString)
-    val idx = AnnIndex.trainIvfPq(rows, "vec_id", "embedding",
-      dim = cdim, m = 4, ksub = 8, kCoarse = 8)
-    AnnIndex.save(store, "ix", idx)
-    AnnIndex.encodeAndSaveCodes(store, "codes", rows, "vec_id",
-      "embedding", idx)
-    val served = AnnIndex.load(store, "ix")
-    val qs = rows.filter(col("vec_id") % 9 === 0)
-    val pred = AnnIndex.knnClassifyOnCodes(qs,
-        store.read("codes"), rows, "vec_id", "embedding", "vec_id",
-        "label", k = 7, nprobe = 3, served)
-      .select(col("qid").cast("long"), col("pred_label"), col("votes"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    val nQueries = qs.count()
-    assert(pred.size == nQueries)
-    // the label axis dominates, so the 7 surviving voters are all
-    // same-cluster AND all labeled: unanimous full-strength votes
-    pred.foreach { case (q, (l, v)) =>
-      assert(l == q % 4, s"query $q predicted $l")
-      assert(v == 7L, s"query $q got only $v of 7 voters — " +
-        "unlabeled rows are occupying neighbor slots")
-    }
   }
 
   test("params round-trip through the meta row incl. escaping") {

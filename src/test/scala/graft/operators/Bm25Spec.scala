@@ -74,61 +74,4 @@ class Bm25Spec extends SparkSpec {
       Bm25.topK(corpus, "doc_id", "text", Seq.empty, k = 1)
     }
   }
-
-  test("topKBatch (DataFrame queries) == topK (Seq queries), exactly") {
-    val qs = Seq(0L -> "spark fast", 1L -> "unrelated words",
-      2L -> "Loose JOINS!", 3L -> "spark")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select($"qid", $"doc_id", $"score_q", $"rk".cast("long"))
-        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
-    val seqForm = rows(Bm25.topK(corpus, "doc_id", "text", qs, k = 3))
-    val batch = Bm25.topKBatch(corpus, "doc_id", "text",
-      qs.toDF("qid", "qtext"), "qid", "qtext", k = 3)
-    assert(rows(batch) == seqForm)
-    batch.unpersist(blocking = true)
-    // deterministic under repartition of both sides
-    val batch2 = Bm25.topKBatch(corpus.repartition(7), "doc_id", "text",
-      qs.toDF("qid", "qtext").repartition(3), "qid", "qtext", k = 3)
-    assert(rows(batch2) == seqForm)
-    batch2.unpersist(blocking = true)
-    // the margin guard carries over (and trips identically)
-    intercept[IllegalStateException] {
-      Bm25.topKBatch(corpus, "doc_id", "text",
-        Seq(0L -> "spark").toDF("qid", "qtext"), "qid", "qtext",
-        k = 1, minQuantMargin = Some(1.0))
-    }
-    intercept[IllegalArgumentException] {
-      Bm25.topKBatch(corpus, "doc_id", "text",
-        Seq(0L -> "???!!").toDF("qid", "qtext"), "qid", "qtext", k = 1)
-    }
-  }
-
-  test("topKBatch plan: query relation broadcasts; no pins leak") {
-    val qs = Seq(0L -> "spark fast").toDF("qid", "qtext")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = Bm25.topKBatch(corpus, "doc_id", "text", qs,
-      "qid", "qtext", k = 3)
-    // eagerSnapshot pins the RESULT; internal tf/qTerms pins released
-    // (async — poll briefly before asserting)
-    val deadline = System.currentTimeMillis + 10000
-    while (System.currentTimeMillis < deadline &&
-      (spark.sparkContext.getPersistentRDDs.keySet -- before).size > 1)
-      Thread.sleep(50)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size <= 1, s"internal pins leaked: $added")
-    out.unpersist(blocking = true)
-    // plan check runs on a fresh (un-snapshotted) build of the same
-    // pipeline: rebuild and inspect before materialization
-    val qt = qs.select($"qid",
-      org.apache.spark.sql.functions.explode(
-        org.apache.spark.sql.functions.array_distinct(
-          graft.functions.TextFunctions.tokens($"qtext"))).as("term"))
-    val probe = corpus
-      .select($"doc_id",
-        org.apache.spark.sql.functions.explode(
-          graft.functions.TextFunctions.tokens($"text")).as("term"))
-      .join(org.apache.spark.sql.functions.broadcast(qt), Seq("term"))
-    val probePlan = probe.queryExecution.executedPlan.toString
-    assert(probePlan.contains("BroadcastHashJoin"), probePlan)
-  }
 }

@@ -92,67 +92,6 @@ class ClassifierSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("model persistence: save/load round-trip, pinned generation survives retrain") {
-    val store = new graft.sources.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_clf").toString,
-      retainGenerations = 10)
-    val feats = Classifier.hashedFeatures(docs, "doc_id", "text",
-      $"y" === 1L, cfg)
-    val (w, b) = Classifier.train(feats, cfg)
-    val g1 = Classifier.saveModel(store, "model", w, b, cfg)
-    val (w2, b2, cfg2) = Classifier.loadModelAt(store, "model", g1)
-    assert(w2.toSeq == w.toSeq && b2 == b && cfg2 == cfg)
-    // retrain on flipped labels commits a NEW generation; the pinned
-    // one still re-serves the original scores
-    val (wFlip, bFlip) = Classifier.train(
-      Classifier.hashedFeatures(docs, "doc_id", "text", $"y" === 0L, cfg),
-      cfg)
-    Classifier.saveModel(store, "model", wFlip, bFlip, cfg)
-    val (wLive, _, _) = Classifier.loadModel(store, "model")
-    assert(wLive.toSeq != w.toSeq)
-    val (wPin, bPin, _) = Classifier.loadModelAt(store, "model", g1)
-    val pinScores = Classifier.score(feats, wPin, bPin, cfg)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val origScores = Classifier.score(feats, w, b, cfg)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(pinScores == origScores)
-  }
-
-  test("refreshScores: change-feed refresh == full rescore of the live corpus") {
-    val store = new graft.sources.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_clfs").toString,
-      retainGenerations = 10)
-    val corpus = docs.select($"doc_id", $"text")
-    store.append("corpus", corpus.filter($"doc_id" <= 4))
-    val g1 = store.generations("corpus").last
-    val (w, b) = Classifier.train(
-      Classifier.hashedFeatures(docs, "doc_id", "text", $"y" === 1L, cfg),
-      cfg)
-    Classifier.scoreAndSave(store, "scores", store.read("corpus"),
-      "doc_id", "text", w, b, cfg)
-    // churn: insert docs 5-6, delete 1, update 2's text
-    store.append("corpus", corpus.filter($"doc_id".isin(5L, 6L)))
-    store.deleteByKeys("corpus", Seq(1L).toDF("doc_id"), Seq("doc_id"))
-    store.merge("corpus",
-      Seq((2L, "the new cat sat with the old hat")).toDF("doc_id", "text"),
-      "doc_id", graft.sources.TableStore.MergeUpdate(Seq("text")))
-    val g2 = store.generations("corpus").last
-    Classifier.refreshScores(store, "scores",
-      store.changesBetween("corpus", g1, g2), "doc_id", "text", w, b, cfg)
-    val got = store.read("scores")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val want = Classifier.scoreDocs(store.read("corpus"), "doc_id",
-      "text", w, b, cfg)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(got == want, s"\ngot  $got\nwant $want")
-    // at-least-once replay: the SAME feed re-applied (crash-retry)
-    // leaves the scores table unchanged, never duplicated
-    Classifier.refreshScores(store, "scores",
-      store.changesBetween("corpus", g1, g2), "doc_id", "text", w, b, cfg)
-    assert(store.read("scores").count() == want.size,
-      "replayed refresh duplicated score rows")
-  }
-
   test("scale shape: broadcast weights, id-partitioned feats, no window") {
     // fresh values so test 1's persisted frame can't be cache-reused
     // into this plan (InMemoryRelation would hide the exchange shape)

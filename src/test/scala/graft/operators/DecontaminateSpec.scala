@@ -99,62 +99,4 @@ class DecontaminateSpec extends SparkSpec {
     // rerouted off the native expression entirely
     assert("graft_cosine".r.findAllIn(plan).size == 1, plan)
   }
-
-  test("semanticOverlapLsh ⊆ exhaustive; high recall on true contamination; no BNLJ") {
-    // the operator's regime: contaminated docs are PERTURBED COPIES of
-    // benchmark rows (cos ≈ 0.97), not weakly-similar strangers —
-    // banded LSH recall is a function of similarity, so the gate runs
-    // at the near-duplicate threshold the operator exists for
-    val dim = 16
-    val rnd = new scala.util.Random(73L)
-    def unit(): Array[Double] = {
-      val raw = Array.fill(dim)(rnd.nextGaussian())
-      val n = math.sqrt(raw.map(x => x * x).sum)
-      raw.map(_ / n)
-    }
-    val benchVecs = (0 until 20).map(i => (1000L + i, unit()))
-    val clean = (0 until 100).map(i => (i.toLong, unit()))
-    val contaminated = (0 until 30).map { i =>
-      val src = benchVecs(rnd.nextInt(benchVecs.size))._2
-      val noisy = src.map(_ + rnd.nextGaussian() * 0.05)
-      val n = math.sqrt(noisy.map(x => x * x).sum)
-      (200L + i, noisy.map(_ / n))
-    }
-    val corpus = (clean ++ contaminated)
-      .map { case (id, v) => (id, v.map(_.toFloat).toSeq) }
-      .toDF("vec_id", "embedding")
-    val bench = benchVecs
-      .map { case (id, v) => (id, v.map(_.toFloat).toSeq) }
-      .toDF("vec_id", "embedding")
-    val thr = 0.8
-    val exhaustive = Decontaminate
-      .semanticOverlap(corpus, bench, "vec_id", "embedding", thr)
-      .as[(Long, Long, Double)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    assert(exhaustive.size >= 25, "fixture must actually contaminate")
-    val banded = Decontaminate.semanticOverlapLsh(corpus, bench,
-        "vec_id", "vec_id", "embedding", threshold = thr, dim = dim)
-      .as[(Long, Long, Double)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    // verification admits no false positives: every flagged doc is a
-    // real hit, its hit count never exceeds the exhaustive count, and
-    // max_sim never exceeds the exhaustive max
-    assert(banded.keySet.subsetOf(exhaustive.keySet))
-    banded.foreach { case (id, (n, s)) =>
-      assert(n <= exhaustive(id)._1, s"vec $id overcounts")
-      assert(s <= exhaustive(id)._2 + 1e-12, s"vec $id max_sim high")
-    }
-    val recall = banded.size.toDouble / exhaustive.size
-    info(s"banded semantic-decontamination recall = $recall " +
-      s"over ${exhaustive.size} flagged docs")
-    assert(recall >= 0.8, s"recall $recall too low")
-    // the scale shape: NO broadcast nested loop, no cartesian — band
-    // join + verify joins only
-    val plan = Decontaminate.semanticOverlapLsh(corpus, bench,
-        "vec_id", "vec_id", "embedding", thr, dim = dim,
-        corpusCount = Some(130L))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"), plan)
-  }
 }

@@ -113,30 +113,35 @@ class DedupIndexSpec extends SparkSpec {
     assert(pairs(pruned) == pairs(full))
   }
 
-  test("screenVerified == verifyJaccard over the full doc set") {
+  test("admit == inline verify over the full doc set, at the pinned width") {
     val store = freshStore()
     val corpus = docs.filter(col("doc_id") < 35)
     val batch = docs.filter(col("doc_id") >= 35)
     store.append("corpus", corpus)
     DedupIndex.buildFromCorpus(store, "corpus", "lsh", "doc_id", "text",
       shingleN = 2, k = 32, bands = 8)
-    val served = DedupIndex.screenVerified(store, "lsh", "corpus",
-        batch, "doc_id", "text", threshold = 0.2)
-      .select(col("id_a").cast("long"), col("id_b").cast("long"),
-        col("jaccard"))
-      .as[(Long, Long, Double)].collect().toSet
+    val kept = DedupIndex.admit(store, "lsh", "corpus", batch,
+        "doc_id", "text", threshold = 0.2)
+      .select(col("doc_id").cast("long")).as[Long].collect().toSet
     // reference: verify EVERY inline candidate over all texts — the
-    // semi-join narrowing in screenVerified must not change results,
-    // and the shingle width must come from the pinned stats row (2,
-    // not the default 3)
-    val inline = Dedup.verifyJaccard(
-        Dedup.lshCandidatePairsAgainst(corpus, batch, "doc_id", "text",
-          shingleN = 2, k = 32, bands = 8),
-        docs, "doc_id", "text", shingleN = 2, threshold = 0.2)
-      .select(col("id_a").cast("long"), col("id_b").cast("long"),
-        col("jaccard"))
-      .as[(Long, Long, Double)].collect().toSet
-    assert(served == inline && served.nonEmpty)
+    // corpus-side semi-join narrowing must not change the verdict, and
+    // the shingle width must come from the pinned stats row (2, not
+    // the default 3)
+    def dups(p: org.apache.spark.sql.DataFrame) =
+      p.select(col("id_b").cast("long")).as[Long].collect().toSet
+    val vsCorpus = dups(Dedup.verifyJaccard(
+      Dedup.lshCandidatePairsAgainst(corpus, batch, "doc_id", "text",
+        shingleN = 2, k = 32, bands = 8),
+      docs, "doc_id", "text", shingleN = 2, threshold = 0.2))
+    val withinBatch = dups(Dedup.verifyJaccard(
+      Dedup.lshCandidatePairs(batch, "doc_id", "text",
+        shingleN = 2, k = 32, bands = 8),
+      batch, "doc_id", "text", shingleN = 2, threshold = 0.2))
+    val all = batch.select(col("doc_id").cast("long")).as[Long]
+      .collect().toSet
+    assert(vsCorpus.nonEmpty, "fixture must hold corpus near-dups")
+    assert(kept == all -- vsCorpus -- withinBatch)
+    Dedup.releaseIntermediates()
   }
 
   test("admit: corpus dups and larger-id within-batch dups drop") {

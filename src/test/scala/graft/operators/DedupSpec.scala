@@ -76,35 +76,6 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect().toSet == Set((1L, 8L, 0)))
   }
 
-
-  test("editDistancePairsLsh: production twin matches the oracle form at bands=k") {
-    val rows = Seq(
-      (1L, "the quick brown fox jumps"),
-      (2L, "the quick brown fox jumped"),
-      (3L, "the quick brawn fox jumps"),
-      (4L, "completely different string"),
-      (5L, "completely different strings"),
-      (6L, "unrelated zebra text"),
-      (7L, null.asInstanceOf[String]),
-      (8L, "the quick brown fox jumps")
-    ).toDF("id", "s")
-    val oracle = Dedup.editDistancePairs(rows, "id", "s", 3)
-      .as[(Long, Long, Int)].collect().toSet
-    val lsh = Dedup.editDistancePairsLsh(rows, "id", "s", 3)
-      .as[(Long, Long, Int)].collect().toSet
-    // the fixture's near-dups share most character grams, so bands=k
-    // banding finds every oracle pair — and the verify stage makes the
-    // two forms emit IDENTICAL (id_a, id_b, dist) rows
-    assert(oracle.nonEmpty && lsh == oracle)
-    // every distance class 0..3 is exercised
-    assert(Set(0, 1).subsetOf(oracle.map(_._3)))
-    // coarser banding can only lose candidates, never invent pairs
-    val coarse = Dedup.editDistancePairsLsh(rows, "id", "s", 3,
-      gramN = 3, k = 24, bands = 4).as[(Long, Long, Int)].collect().toSet
-    assert(coarse.subsetOf(oracle))
-    Dedup.releaseIntermediates()
-  }
-
   test("containmentPairs: embedded doc scores ~1.0 where Jaccard misses it") {
     // doc 11 = 6 tokens fully embedded in doc 12's 40: containment 1.0,
     // Jaccard small — the asymmetric class jaccardPairs can't threshold
@@ -452,34 +423,6 @@ class DedupSpec extends SparkSpec {
     // RELEASED labeling is gone rather than recomputable — consuming
     // it fails loudly instead of silently recomputing rounds
     intercept[Exception] { labels.count() }
-  }
-
-  // ------------------------------------------------- LSH planning
-
-  test("lshPlan: divisor splits, threshold placement, recall-leaning ties") {
-    // MMDS worked example: k=100, t=0.8 -> the curve threshold
-    // (1/b)^(1/r) should land near 0.8
-    val (b, r) = Dedup.lshPlan(100, 0.8)
-    assert(b * r == 100)
-    val t = math.pow(1.0 / b, 1.0 / r)
-    assert(math.abs(t - 0.8) < 0.1, s"b=$b r=$r t=$t")
-    // exhaustive optimality: no other divisor split lands closer
-    (1 to 100).filter(100 % _ == 0).foreach { bb =>
-      val tt = math.pow(1.0 / bb, 1.0 / (100 / bb))
-      assert(math.abs(t - 0.8) <= math.abs(tt - 0.8) + 1e-12)
-    }
-    // low threshold -> many bands; high threshold -> many rows
-    val (bLow, _) = Dedup.lshPlan(64, 0.2)
-    val (bHigh, _) = Dedup.lshPlan(64, 0.95)
-    assert(bLow > bHigh, s"$bLow vs $bHigh")
-    // the S-curve is monotone in sim and hits the endpoints
-    assert(Dedup.lshCollisionProb(0.0, 8, 8) == 0.0)
-    assert(Dedup.lshCollisionProb(1.0, 8, 8) == 1.0)
-    val probs = (0 to 10).map(i => Dedup.lshCollisionProb(i / 10.0, 8, 8))
-    assert(probs == probs.sorted, probs.toString)
-    // collision prob at the planned threshold is mid-curve
-    val p = Dedup.lshCollisionProb(t, b, r)
-    assert(p > 0.3 && p < 0.8, s"p($t)=$p")
   }
 
   // ------------------------------------------ content-defined chunks

@@ -2,9 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.operators.Expectations.Rule
-import graft.sources.TableStore
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class ExpectationsSpec extends SparkSpec {
   import spark.implicits._
@@ -65,28 +63,6 @@ class ExpectationsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Expectations.accountingBy(grouped, "day", Seq.empty)
     }
-  }
-
-  test("appendExpect: admits clean rows, quarantines the rest") {
-    val store =
-      new TableStore(spark, Files.createTempDirectory("graft_ex").toString)
-    val (adm, quar) =
-      Expectations.appendExpect(store, "docs", "docs_bad", batch, rules)
-    assert((adm, quar) == ((1L, 4L)))
-    val good = store.read("docs").select($"id").as[Long].collect().toSeq
-    assert(good == Seq(1L))
-    val bad = store.read("docs_bad")
-      .select($"id", $"__violations")
-      .as[(Long, String)].collect().toMap
-    assert(bad.keySet == Set(2L, 3L, 4L, 5L))
-    assert(bad(4L) == "chars_min,lang_allowed")
-    // second batch appends; a fully-clean batch leaves quarantine alone
-    val clean = Seq((6L, "fr", 300L)).toDF("id", "lang", "n")
-    val (a2, q2) =
-      Expectations.appendExpect(store, "docs", "docs_bad", clean, rules)
-    assert((a2, q2) == ((1L, 0L)))
-    assert(store.read("docs").count() == 2L)
-    assert(store.read("docs_bad").count() == 4L)
   }
 
   test("riAudit: planted orphans, null keys, duplicate parents") {

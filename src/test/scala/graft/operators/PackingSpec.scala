@@ -102,18 +102,6 @@ class PackingSpec extends SparkSpec {
       s"packing must not join:\n$plan")
   }
 
-  test("packFill audit matches placements; waste bounded to last blocks") {
-    val fill = Packing.packFill(packed, "shard")
-    val byHand = packed.groupBy($"shard", $"block_id")
-      .agg(count(lit(1)).as("n_docs"), sum($"len").as("n_tokens"))
-    assert(fill.select($"shard", $"block_id", $"n_docs",
-        $"n_tokens".cast("long"))
-      .except(byHand.select($"shard", $"block_id", $"n_docs",
-        $"n_tokens".cast("long"))).isEmpty)
-    val under = fill.filter($"n_tokens" < C).count()
-    assert(under <= 3L, s"more under-full blocks than shards: $under")
-  }
-
   test("capacity must be positive") {
     intercept[IllegalArgumentException] {
       Packing.packConcat(fixture, "id", "n", "shard", 0L)

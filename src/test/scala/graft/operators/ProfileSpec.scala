@@ -9,42 +9,6 @@ class ProfileSpec extends SparkSpec {
   private lazy val docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")
 
-  test("approx quantiles track the exact rank-based answers") {
-    // exact discrete quantiles per source (q47's definition: value at
-    // rank ceil(q*n) in (n_tok, doc_id) order)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"source").orderBy($"n_tok", $"doc_id")
-    val exact = docs
-      .select($"source", $"doc_id",
-        graft.functions.TextFunctions.tokenCount($"text").as("n_tok"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"source")))
-      .groupBy($"source")
-      .agg(max(when($"rn" === ceil($"n" * 0.5).cast("long"), $"n_tok"))
-        .as("p50"))
-      .as[(String, Long)].collect().toMap
-    val approx = Profile.tokenQuantilesApprox(docs, "source", "text")
-      .select($"source", $"p50").as[(String, Long)].collect().toMap
-    assert(approx.keySet == exact.keySet)
-    // GK sketch at accuracy 10k on ~25-doc groups is exact up to the
-    // discrete-definition off-by-one (ceil vs interpolation-free pick)
-    approx.foreach { case (src, v) =>
-      assert(math.abs(v - exact(src)) <= math.max(1L, exact(src) / 10),
-        s"$src: approx $v vs exact ${exact(src)}")
-    }
-  }
-
-  test("plan: one aggregation exchange, no window, no per-group sort") {
-    val plan = Profile.tokenQuantilesApprox(docs, "source", "text")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), plan)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges == 1, s"expected 1 exchange:\n$plan")
-    // partial sketches combine map-side (ObjectHashAggregate partial)
-    assert(plan.contains("partial_percentile_approx"), plan)
-  }
-
   test("quantileTrim: rank band is exact, deterministic, per group") {
     val df = Seq.tabulate(40)(i => (i.toLong, if (i < 20) "a" else "b",
       (i % 20).toLong * 10)).toDF("id", "src", "v")
@@ -65,23 +29,6 @@ class ProfileSpec extends SparkSpec {
     val kept = Profile.quantileTrim(df, "src", "v", "id", 0.0, 0.8)
       .select($"id").as[Long].collect().toSet
     assert(kept == Set(1L, 2L, 3L, 5L))
-  }
-
-  test("quantileTrimApprox: windowless plan, agrees with exact off ties") {
-    val trimmed = Profile.quantileTrimApprox(docs
-      .select($"doc_id", $"source", $"n_chars"),
-      "source", "n_chars", 0.05, 0.95)
-    val plan = trimmed.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), plan)
-    assert(plan.contains("BroadcastExchange"), plan) // thresholds, not data
-    val exact = Profile.quantileTrim(docs
-      .select($"doc_id", $"source", $"n_chars"),
-      "source", "n_chars", "doc_id", 0.05, 0.95)
-    val nA = trimmed.count()
-    val nE = exact.count()
-    // value-band vs rank-band differ only within boundary ties
-    assert(math.abs(nA - nE) <= docs.count() / 20,
-      s"approx kept $nA vs exact $nE")
   }
 
   test("tokenDriftChi2 == BigInt driver reference on real docs") {

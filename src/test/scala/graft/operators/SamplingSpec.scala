@@ -261,35 +261,6 @@ class SamplingSpec extends SparkSpec {
       ("b", 5L, 400L), ("b", 6L, 700L), ("b", 7L, 1000L)))
   }
 
-  test("budgetSelectApprox: subset, never over budget, exact on group edges") {
-    val exact = Sampling.budgetSelect(budgetFixture, "src", "score",
-        "cost", "id", 1000L)
-      .select($"src", $"id").as[(String, Long)].collect().toSet
-    val approx = Sampling.budgetSelectApprox(budgetFixture, "src", "score",
-        "cost", 1000L)
-      .select($"src", $"id").as[(String, Long)].collect().toSet
-    // srcA boundary is a group edge → identical; srcB's tied group 5
-    // (total 900 > 1000-400 remaining) is dropped wholly → only id 5
-    assert(approx == Set(("a", 1L), ("a", 2L), ("a", 3L), ("b", 5L)))
-    assert(approx.subsetOf(exact))
-    // never over budget per source
-    val spent = Sampling.budgetSelectApprox(budgetFixture, "src", "score",
-        "cost", 1000L)
-      .groupBy($"src").agg(sum($"cost").as("s"))
-      .as[(String, Long)].collect().toMap
-    assert(spent.values.forall(_ <= 1000L), spent.toString)
-    // distinct scores within every source → the twins agree exactly
-    val dA = Sampling.budgetSelect(docs
-        .select($"source", $"doc_id", $"doc_id".as("score"),
-          lit(100L).as("cost")), "source", "score", "cost", "doc_id", 1000L)
-      .select($"doc_id").as[Long].collect().toSet
-    val dB = Sampling.budgetSelectApprox(docs
-        .select($"source", $"doc_id", $"doc_id".as("score"),
-          lit(100L).as("cost")), "source", "score", "cost", 1000L)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(dA == dB && dA.nonEmpty)
-  }
-
   test("budget selection fails fast on NULL score or NULL/negative cost") {
     val negCost = Seq(("a", 1L, 9L, 600L), ("a", 2L, 8L, 600L),
       ("a", 3L, 7L, -300L)).toDF("src", "id", "score", "cost")
@@ -302,29 +273,11 @@ class SamplingSpec extends SparkSpec {
     val nullScore = Seq(("a", 1L, Some(9L), 600L), ("a", 2L, None, 600L))
       .toDF("src", "id", "score", "cost")
     val e2 = intercept[Exception] {
-      Sampling.budgetSelectApprox(nullScore, "src", "score", "cost", 1000L)
+      Sampling.budgetSelect(nullScore, "src", "score", "cost", "id", 1000L)
         .collect()
     }
     assert((e2.getMessage + Option(e2.getCause).map(_.getMessage)
       .getOrElse("")).contains("non-null"), e2.toString)
-  }
-
-  test("budgetSelectApprox plan: no corpus window; one group agg + broadcast semi") {
-    val out = Sampling.budgetSelectApprox(docs
-      .select($"source", $"doc_id", pmod($"doc_id", lit(7)).as("score"),
-        lit(100L).as("cost")), "source", "score", "cost", 1000L)
-    val plan = out.queryExecution.executedPlan.toString
-    // the only window runs over the bounded (src, score) stats frame —
-    // which sits BELOW the broadcast exchange; the corpus side reaching
-    // the semi-join is window-free
-    assert(plan.contains("BroadcastHashJoin") &&
-      plan.contains("LeftSemi"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
-    // corpus never exchanges: both source-keyed exchanges belong to the
-    // bounded stats side — the (source, score) group agg and the stats
-    // window's source repartition
-    assert("hashpartitioning\\(source".r.findAllIn(plan).size == 2,
-      s"only the two bounded stats-side exchanges:\n$plan")
   }
 
   test("epochExpand: full copies exact, fraction hash-keyed, 0 drops, no exchange") {

@@ -59,31 +59,6 @@ class SessionizeSpec extends SparkSpec {
     assert(out(6L) == 1L && out(7L) == 1L)
   }
 
-  test("autoStitch picks the stitched plan for a mega-key, plain otherwise") {
-    // mega-key fixture: one key holds most of the events
-    val mega = (0L until 500L).map(i => ("hot", i, i * 10L)) ++
-      Seq(("cold", 900L, 5L), ("cold", 901L, 25L))
-    val df = mega.toDF("k", "id", "ts")
-    def planOf(out: org.apache.spark.sql.DataFrame) =
-      out.queryExecution.optimizedPlan.toString
-    // hottest key (500 events) >= threshold: the (key, bucket) stitch
-    val stitched = Sessionize.autoStitch(df, "k", "ts", maxGap = 50L,
-      tieCol = "id", bucketWidth = 1000L, stitchThreshold = 400L)
-    assert(planOf(stitched).contains("__bkt"),
-      "expected the stitched plan for a mega-key")
-    // below the threshold: the plain global-key window
-    val plain = Sessionize.autoStitch(df, "k", "ts", maxGap = 50L,
-      tieCol = "id", bucketWidth = 1000L, stitchThreshold = 1000L)
-    assert(!planOf(plain).contains("__bkt"),
-      "expected the plain window below the crossover")
-    // both paths agree (the assignStitched differential, via the picker)
-    val a = stitched.select($"id", $"session_ord")
-      .as[(Long, Long)].collect().toMap
-    val b = plain.select($"id", $"session_ord")
-      .as[(Long, Long)].collect().toMap
-    assert(a == b)
-  }
-
   test("assignStitched == assign (differential on the events table)") {
     val gapUs = 1800000000L   // 30 min
     val dayUs = 86400000000L  // 1 day

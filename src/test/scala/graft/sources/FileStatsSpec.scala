@@ -408,41 +408,6 @@ class FileStatsSpec extends SparkSpec {
     assert(allMatch(EqualTo(k, Literal(1)), PerFile(0, Map.empty)))
   }
 
-  test("countWhere: interior files settle from metadata, boundaries scan") {
-    val ts = freshStore()
-    ts.rewrite("t", spark.range(400).toDF("k")
-      .withColumn("s", concat(lit("u"), format_string("%03d", $"k")))
-      .repartitionByRange(4, $"k"))
-    ts.analyze("t", Seq("k", "s"))
-    def check(pred: org.apache.spark.sql.Column): (Long, Int, Int, Int) = {
-      val d = ts.countWhereDetail("t", pred)
-      assert(d._1 == ts.read("t").filter(pred).count(), s"count for $pred")
-      d
-    }
-    // range straddling one file boundary: 2 interior proofs, ≤2 scans
-    val r = check($"k" >= 50 && $"k" < 350)
-    assert(r._2 >= 2 && r._4 <= 2, r.toString)
-    // whole-table predicate: pure metadata, zero files read
-    val all = check($"k" >= 0)
-    assert(all == ((400L, 4, 0, 0)), all.toString)
-    // provably-empty: zero everything
-    val none = check($"k" === -5)
-    assert(none == ((0L, 0, 4, 0)), none.toString)
-    // point predicate: one boundary file scanned
-    val pt = check($"k" === 123)
-    assert(pt._1 == 1L && pt._4 == 1, pt.toString)
-    // un-analyzed shape: falls back to a correct full count
-    assert(ts.countWhere("t", $"s".contains("39")) ==
-      ts.read("t").filter($"s".contains("39")).count())
-    // stale stats: appended file has no stats, classifies BOUNDARY
-    ts.append("t", Seq((1001L, "zz")).toDF("k", "s"))
-    val stale = check($"k" >= 1000)
-    assert(stale._1 == 1L, stale.toString)
-    // literal-false predicate folds away -> plain fallback, still 0
-    assert(ts.countWhere("t", lit(false)) == 0L)
-    assert(ts.countWhere("t", lit(true)) == 401L)
-  }
-
   test("aggWhere: exact sum/min/max from metadata, boundaries scan") {
     import graft.sources.TableStore.AggWhere
     val ts = freshStore()

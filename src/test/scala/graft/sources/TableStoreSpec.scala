@@ -464,10 +464,8 @@ class TableStoreSpec extends SparkSpec with StoreCrashChecks {
     val root = Files.createTempDirectory("graft_evo").toString
     val ts = new TableStore(spark, root)
     ts.append("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    assert(!ts.isEvolved("t"))
     // batch carries a NEW column -> widened; earlier rows read NULL
     ts.appendEvolve("t", Seq((3L, "c", 0.9)).toDF("k", "v", "score"))
-    assert(ts.isEvolved("t"))
     val rows = ts.read("t").select($"k", $"v", $"score")
       .as[(Long, String, Option[Double])].collect().toSet
     assert(rows == Set((1L, "a", None), (2L, "b", None),
@@ -490,6 +488,40 @@ class TableStoreSpec extends SparkSpec with StoreCrashChecks {
     ts.appendEvolve("t", Seq((6L, "f")).toDF("k", "v"))
     assert(ts.read("t").filter($"k" === 6L).select($"score")
       .as[Option[Double]].collect().toSeq == Seq(None))
+  }
+
+  test("legacy manifest: an evolved=true line still reads; the next commit drops it") {
+    // manifests once flagged a widened table with an `evolved=true`
+    // line after the fence lines; nothing reads the flag any more, so
+    // the parser skips it like any key it does not know
+    val root = Files.createTempDirectory("graft_evo_legacy").toString
+    val ts = new TableStore(spark, root)
+    ts.append("t", Seq((1L, "a")).toDF("k", "v"))
+    ts.appendEvolve("t", Seq((2L, "b", 0.5)).toDF("k", "v", "score"))
+    def manifest(seq: Long) = scala.io.Source.fromFile(
+      s"$root/t._graft_commit.$seq").mkString.split("\n").toSeq
+    val seq = ts.generations("t").last
+    val current = manifest(seq)
+    // the legacy head, written by hand: schema, files, then the flag
+    val legacy = current.filter(_.startsWith("schema=")) ++
+      current.filter(_.startsWith("f=")) :+ "evolved=true"
+    Files.write(java.nio.file.Paths.get(root, s"t._graft_commit.${seq + 1}"),
+      legacy.mkString("", "\n", "\n").getBytes("UTF-8"))
+    assert(ts.generations("t").last == seq + 1)
+    val read = ts.read("t")
+    assert(read.columns.toSeq == Seq("k", "v", "score"))
+    assert(read.select($"k", $"v", $"score")
+      .as[(Long, String, Option[Double])].collect().toSet ==
+      Set((1L, "a", None), (2L, "b", Some(0.5))))
+    // the next commit builds on the legacy head and writes no flag
+    ts.append("t", Seq((3L, "c", 0.7)).toDF("k", "v", "score"))
+    assert(ts.generations("t").last == seq + 2)
+    val next = manifest(seq + 2)
+    assert(!next.exists(_.startsWith("evolved=")), next.mkString("\n"))
+    assert(next.exists(_.startsWith("schema=")))
+    assert(ts.read("t").select($"k", $"score")
+      .as[(Long, Option[Double])].collect().toSet ==
+      Set((1L, None), (2L, Some(0.5)), (3L, Some(0.7))))
   }
 
   test("appendExactlyOnce: fence skips replays; survives interleaved writers and crashes") {
