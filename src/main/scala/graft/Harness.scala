@@ -27,10 +27,13 @@ object Harness {
     spark
   }
 
-  /** Drop the cached and localCheckpoint blocks a query left behind, so
-    * one long run doesn't accumulate storage-memory pressure.
+  /** Drop the operator pin registries ([[Engine.releaseAll]]) and the
+    * cached and localCheckpoint blocks a query left behind, so one long
+    * run accumulates neither storage-memory pressure nor registry
+    * entries holding every pinned frame and its plan.
     */
   def releaseCaches(spark: SparkSession): Unit = {
+    Engine.releaseAll()
     spark.sqlContext.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

@@ -17,12 +17,12 @@ import graft.sources.TableStore
   *    codebooks, LSH band planes) plus a string-keyed param map
   *    (dim/m/ksub/…) that serving validates against.
   *  - [[AnnIndex.save]]/[[AnnIndex.load]] round-trip the artifact
-  *    through a [[TableStore]] table (one narrow unified schema, a few
-  *    KB-MB at any corpus size), so the index inherits the store's
-  *    OCC commits, generations, and time travel: [[AnnIndex.loadAt]]
-  *    of a pinned generation re-serves IDENTICAL results no matter
-  *    how many retrains have been committed since — the
-  *    reproducible-corpus contract extended to the serving path.
+  *    through a [[graft.sources.TableStore]] table (one narrow
+  *    unified schema, a few KB-MB at any corpus size), so the index
+  *    inherits the store's OCC commits, generations, and time travel:
+  *    [[AnnIndex.loadAt]] of a pinned generation re-serves IDENTICAL
+  *    results no matter how many retrains have been committed since —
+  *    the reproducible-corpus contract extended to the serving path.
   *  - The `*TopK` serving overloads run the exact inline plans with
   *    training skipped; the differential contract (AnnIndexSpec) is
   *    save→load→serve ≡ the inline-trained call on the same fixture.
@@ -159,7 +159,7 @@ object AnnIndex {
       .map(_.sparkSession).getOrElse(SparkSession.active)
     import spark.implicits._
     val metaRow = Seq(("meta", -1, -1L, null: Seq[Double],
-        jsonOf(index.params + ("method" -> index.method))))
+        CorpusIndex.jsonOf(index.params + ("method" -> index.method))))
       .toDF("component", "sub", "cid", "vec", "meta")
     val cents = index.centroids.map(_.select(lit("centroid"),
       lit(-1).cast("int"), col("cent_id").cast("long"),
@@ -177,7 +177,7 @@ object AnnIndex {
     // generations().last could race a concurrent writer and pin a
     // later generation as the reproducibility anchor
     store.rewrite(table, df) // layout-preserving even first-time
-    // (see LexIndex.buildFrom)
+    // (see CorpusIndex.write)
   }
 
   /** Load the LIVE index generation. */
@@ -206,7 +206,7 @@ object AnnIndex {
     val meta = all.filter(_.getString(0) == "meta")
     require(meta.length == 1,
       s"AnnIndex table: expected exactly one meta row, got ${meta.length}")
-    val params = parseJson(meta(0).getString(4))
+    val params = CorpusIndex.parseJson(meta(0).getString(4))
     val method = params.getOrElse("method",
       throw new IllegalArgumentException("AnnIndex meta: no method"))
     // component relations become LocalRelations: serving's bcast
@@ -357,35 +357,27 @@ object AnnIndex {
     val codes = encodeFor(corpus, idCol, vecCol, index)
     // generation from this commit's CAS, not a racy generations().last
     store.rewrite(codesTable, codes) // layout-preserving even
-    // first-time (see LexIndex.buildFrom)
+    // first-time (see CorpusIndex.write)
   }
 
   /** INCREMENTAL code maintenance from a corpus CHANGE FEED
-    * ([[TableStore.changesBetween]] output: rows + `__change_type`):
-    * deleted ids leave the codes table, inserted rows are encoded and
-    * appended — cost scales with the CHURN, never the corpus (an
-    * update re-encodes exactly its one row via its delete+insert
-    * pair; a corpus compaction feeds nothing and this is a no-op).
+    * ([[graft.sources.TableStore.changesBetween]] output: rows +
+    * `__change_type`) — [[CorpusIndex]]'s churn step: deleted ids
+    * leave the codes table, inserted rows are encoded and appended —
+    * cost scales with the CHURN, never the corpus (an update re-encodes
+    * exactly its one row via its delete+insert pair; a corpus
+    * compaction feeds nothing and this is a no-op). Insert ids are
+    * deleted too, so an at-least-once replay never duplicates a code
+    * row (which would surface one doc at two ranks in *TopKOnCodes).
     * The invariant (spec-gated): after a refresh, the codes table
     * equals a full [[encodeAndSaveCodes]] of the live corpus.
     * Corpus ids must be unique (the store's upsert-key convention).
     */
   def refreshCodes(store: TableStore, codesTable: String,
                    changes: DataFrame, idCol: String, vecCol: String,
-                   index: AnnIndex): Unit = {
-    // delete BOTH churned id sets (deletes AND inserts): an updated id
-    // rides the feed as delete+insert so its stale code row must leave
-    // first — and deleting insert ids too makes the refresh IDEMPOTENT
-    // under at-least-once replays (a crash between the delete and the
-    // append re-runs cleanly instead of duplicating code rows, which
-    // would surface one doc at two ranks in *TopKOnCodes)
-    val del = changes
-      .filter(col("__change_type").isin("delete", "insert"))
-      .select(col(idCol).as("id")).distinct()
-    val ins = changes.filter(col("__change_type") === "insert")
-    store.deleteByKeys(codesTable, del, Seq("id"))
-    store.append(codesTable, encodeFor(ins, idCol, vecCol, index))
-  }
+                   index: AnnIndex): Unit =
+    CorpusIndex.churn(store, codesTable, changes, col(idCol), "id")(
+      encodeFor(_, idCol, vecCol, index))
 
   /** Serve PQ top-k from PERSISTED codes — no per-call encode: the
     * steady-state query path ([[Similarity.pqTopK]] over the codes
@@ -527,48 +519,5 @@ object AnnIndex {
     val rows = df.collect().toSeq
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), df.schema)
-  }
-
-  /** Minimal flat string-map JSON (sorted keys) — the meta row's
-    * payload. Keys/values here are alphanumeric params; escaping
-    * covers the JSON metachars for safety.
-    */
-  private[operators] def jsonOf(m: Map[String, String]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) =>
-      s""""${esc(k)}":"${esc(v)}""""
-    }.mkString("{", ",", "}")
-
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private[operators] def parseJson(s: String): Map[String, String] = {
-    // flat {"k":"v",...} reader for [[jsonOf]]'s own output
-    val pair = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-    pair.findAllMatchIn(s).map { mm =>
-      unesc(mm.group(1)) -> unesc(mm.group(2))
-    }.toMap
-  }
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16)
-              .toChar)
-            i += 6
-          case e => sb.append(e); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 }

@@ -50,15 +50,12 @@ object Classifier {
   // pin is a [[Loops.truncate]] checkpoint (release closures, not
   // Dataset.unpersist) — a released score plan no longer recomputes,
   // consume it before releasing.
-  private val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
   private val pinnedReleases =
     scala.collection.mutable.ListBuffer.empty[() => Unit]
   graft.Engine.register("Classifier")(() => releaseIntermediates())
 
   /** Release every feature frame pinned so far. */
   def releaseIntermediates(): Unit = synchronized {
-    pinned.foreach(_.unpersist(blocking = false))
-    pinned.clear()
     pinnedReleases.foreach(f => f())
     pinnedReleases.clear()
   }

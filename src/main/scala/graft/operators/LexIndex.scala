@@ -17,7 +17,7 @@ import graft.sources.TableStore
   * (two corpus scans): correct for the oracle gates, wrong at 100 TB
   * where the same corpus serves thousands of query batches. This
   * module materializes the term statistics as first-class data in ONE
-  * [[TableStore]] table, so the index inherits OCC commits,
+  * [[graft.sources.TableStore]] table, so the index inherits OCC commits,
   * generations, and time travel, and each query batch touches only
   * the postings its vocabulary asks for.
   *
@@ -39,7 +39,7 @@ import graft.sources.TableStore
   *
   * Scale shape (the 100 TB contract):
   *  - build writes postings RANGE-CLUSTERED by (component, term) and
-  *    runs [[TableStore.analyze]], so a serve-time
+  *    runs `TableStore.analyze`, so a serve-time
   *    `readWhere(component = 'posting' AND term IN vocab)` prunes at
   *    the FILE level (and parquet row-group stats prune inside kept
   *    files) — query I/O is proportional to the vocabulary's postings
@@ -47,11 +47,13 @@ import graft.sources.TableStore
   *  - N/avgdl are ONE precomputed stats row (no corpus-scale aggregate
   *    on the serve path); df derives from the vocab-filtered postings
   *    (vocab-bounded);
-  *  - [[refresh]] consumes a [[TableStore.changesBetween]] corpus feed:
-  *    churned doc ids delete by key, inserted docs tokenize and append
-  *    — cost scales with the CHURN (a corpus compaction feeds nothing),
-  *    and the stats row recomputes from the narrow doclen component,
-  *    never the corpus text.
+  *  - [[refresh]] consumes a
+  *    [[graft.sources.TableStore.changesBetween]] corpus feed through
+  *    [[CorpusIndex]]'s doc-keyed refresh: churned doc ids delete by
+  *    key, inserted docs tokenize and append — cost scales with the
+  *    CHURN (a corpus compaction feeds nothing), and the stats row
+  *    recomputes from the narrow doclen component, never the corpus
+  *    text.
   *
   * Determinism contract: serving mirrors [[Bm25.topK]]'s expression
   * order exactly — tf/df/dl/N are exact integers persisted losslessly,
@@ -63,97 +65,60 @@ import graft.sources.TableStore
   */
 object LexIndex {
 
+  private val Layout = CorpusIndex.Layout(
+    "component STRING, term STRING, doc_id BIGINT, tf BIGINT, " +
+      "dl BIGINT, n_docs BIGINT, sum_dl BIGINT, corpus_gen BIGINT",
+    key = "doc_id", cluster = Seq("component", "term"),
+    stats = Seq("component", "term", "doc_id"), bloom = Seq("term"))
+
   /** Tokenize `corpus` and persist the full index (postings + doclen +
     * stats) into `store.table`, replacing any previous build; returns
-    * the generation of the build's [[TableStore.analyze]] commit (pin
-    * it for reproducible serving via [[topKAt]]; the pin covers the
-    * stats too). One corpus scan; the posting aggregate is the same
-    * (doc, term) exchange [[Bm25.topK]] runs per call, paid once.
+    * the generation of the build's `TableStore.analyze`
+    * commit (pin it for reproducible serving via [[topKAt]]; the pin
+    * covers the stats too). One corpus scan; the posting aggregate is
+    * the same (doc, term) exchange [[Bm25.topK]] runs per call, paid
+    * once. Postings are range-clustered by (component, term): tight
+    * per-file term windows make the analyze() file stats (and parquet
+    * row-group stats) selective for term-IN-vocab serving reads.
+    * `clusterFiles` pins the file count (default: AQE's).
     */
   def buildAndSave(store: TableStore, table: String, corpus: DataFrame,
                    idCol: String, textCol: String,
                    clusterFiles: Option[Int] = None): Long =
-    buildAndSave(store, table, corpus, idCol, textCol, clusterFiles,
-      corpusGen = None)
+    CorpusIndex.buildFrom(store, corpus, None, table, Layout,
+      clusterFiles, tokens(idCol, textCol))(indexRows)
 
-  /** [[buildAndSave]] over a CORPUS TABLE in the same store, recording
-    * the corpus generation the build consumed in the stats row — the
-    * anchor [[refreshFromCorpus]] resumes from.
+  /** [[buildAndSave]] over a CORPUS TABLE in the same store at its
+    * head generation, recording that generation in the stats row —
+    * the anchor [[refreshFromCorpus]] resumes from.
     */
   def buildFromCorpus(store: TableStore, corpusTable: String,
                       lexTable: String, idCol: String, textCol: String,
-                      clusterFiles: Option[Int] = None): Long = {
-    val gen = store.generations(corpusTable).last
-    // readAt(gen), not read(): a corpus commit between the two calls
-    // would otherwise index NEWER data than the anchor claims — the
-    // pinned read makes consumed-data == anchored-generation exact
-    buildAndSave(store, lexTable, store.readAt(corpusTable, gen), idCol,
-      textCol, clusterFiles, corpusGen = Some(gen))
-  }
-
-  private def buildAndSave(store: TableStore, table: String,
-                           corpus: DataFrame, idCol: String,
-                           textCol: String, clusterFiles: Option[Int],
-                           corpusGen: Option[Long]): Long = {
-    // the shared token frame pins so the three components (postings,
-    // doclen, stats) tokenize the corpus exactly ONCE
-    val tf = tokFrame(corpus, idCol, textCol).persist()
-    try { buildFrom(store, table, tf, clusterFiles, corpusGen) }
-    finally tf.unpersist(blocking = false)
-  }
-
-  private def buildFrom(store: TableStore, table: String, tf: DataFrame,
-                        clusterFiles: Option[Int],
-                        corpusGen: Option[Long]): Long = {
-    val df = indexRows(tf, corpusGen)
-    // range-cluster by (component, term): tight per-file term windows
-    // make the analyze() file stats (and parquet row-group stats)
-    // actually selective for term-IN-vocab serving reads. Default file
-    // count is AQE's (coalesces a small build, splits a 100 TB one);
-    // clusterFiles pins it (an explicit count bypasses AQE coalescing)
-    val ranged = clusterFiles match {
-      case Some(n) => df.repartitionByRange(n,
-        col("component"), col("term"))
-      case None => df.repartitionByRange(col("component"), col("term"))
-    }
-    val clustered = ranged
-      .sortWithinPartitions(col("component"), col("term"), col("doc_id"))
-    store.rewrite(table, clustered) // rewrite even first-time:
-    // the caller OWNS this range-clustered layout (rewrite is the
-    // layout-preserving op; a first-time append would compact it)
-    // pin the generation the stats commit returns — a post-commit
-    // generations().last could observe a concurrent writer's LATER
-    // generation and anchor the wrong snapshot, and the rewrite's own
-    // generation retires once analyze commits past it
-    store.analyze(table, Seq("component", "term", "doc_id"),
-      bloomCols = Seq("term"))
-  }
+                      clusterFiles: Option[Int] = None): Long =
+    CorpusIndex.build(store, corpusTable, lexTable, Layout, clusterFiles,
+      tokens(idCol, textCol))(indexRows)
 
   /** INCREMENTAL index maintenance from a corpus CHANGE FEED
-    * ([[TableStore.changesBetween]] output: full rows +
-    * `__change_type`): deleted doc ids drop their postings + doclen
-    * rows by key, inserted docs tokenize and append (an update re-
-    * indexes exactly its one doc via its delete+insert pair), then the
-    * stats row recomputes from the updated doclen component — narrow
-    * (doc_id, dl) rows, the corpus text is never re-read. The
-    * invariant (spec-gated): after a refresh the index CONTENT equals
-    * a fresh [[buildAndSave]] of the live corpus.
-    *
-    * Crash contract: the churn application (delete + append) is
-    * IDEMPOTENT and the stats row + generation anchor advance in ONE
-    * final `updateWhere` commit — a crash anywhere mid-refresh leaves
-    * a complete OLD stats row, and re-running the refresh (or
-    * [[refreshFromCorpus]]) heals. Not one atomic commit overall:
-    * concurrent readers wanting a consistent view pin a generation.
+    * ([[graft.sources.TableStore.changesBetween]] output: full rows +
+    * `__change_type`) — [[CorpusIndex]]'s doc-keyed refresh: deleted
+    * doc ids drop their postings + doclen rows by key, inserted docs
+    * tokenize and append (an update re-indexes exactly its one doc via
+    * its delete+insert pair), then the stats row recomputes n_docs and
+    * sum_dl from the updated doclen component — narrow (doc_id, dl)
+    * rows, the corpus text is never re-read. The invariant
+    * (spec-gated): after a refresh the index CONTENT equals a fresh
+    * [[buildAndSave]] of the live corpus. Not one atomic commit
+    * overall: concurrent readers wanting a consistent view pin a
+    * generation.
     *
     * Known layout trade-off: postings are TERM-clustered for the read
     * path, so a doc-keyed delete cannot file-target (every term file
-    * may hold the doc) — [[TableStore.deleteByKeys]] rewrites via one
-    * anti-join pass, the [[AnnIndex.refreshCodes]] contract. Tokenize
-    * cost IS churn-scaled; the delete pass is index-table-scaled
-    * (postings are a compressed fraction of corpus text). Merge-on-
-    * read delete bitmaps would remove that pass and are the store's
-    * next step, not this operator's.
+    * may hold the doc) — [[graft.sources.TableStore.deleteByKeys]]
+    * rewrites via one anti-join pass, the [[AnnIndex.refreshCodes]]
+    * contract. Tokenize cost IS churn-scaled; the delete pass is
+    * index-table-scaled (postings are a compressed fraction of corpus
+    * text). Merge-on-read delete bitmaps would remove that pass and
+    * are the store's next step, not this operator's.
     *
     * On an index built via [[buildFromCorpus]], the corpus-generation
     * anchor is PRESERVED (not advanced, never nulled): this overload
@@ -163,89 +128,35 @@ object LexIndex {
     */
   def refresh(store: TableStore, table: String, changes: DataFrame,
               idCol: String, textCol: String): Unit =
-    refresh(store, table, changes, idCol, textCol, corpusGen = None)
+    refresh(store, table, changes, idCol, textCol, anchor = None)
 
   private def refresh(store: TableStore, table: String,
                       changes: DataFrame, idCol: String, textCol: String,
-                      corpusGen: Option[Long]): Unit = {
-    // delete BOTH churned id sets (deletes AND inserts): for an update
-    // pair they're the same id anyway, and deleting insert ids first
-    // makes the whole refresh IDEMPOTENT — re-running after a crash
-    // between the postings append and the stats swap removes the first
-    // attempt's rows before re-appending identical content
-    val del = changes
-      .filter(col("__change_type").isin("delete", "insert"))
-      .select(col(idCol).cast("long").as("doc_id")).distinct()
-    // stats row has doc_id NULL: never equal to a key, always survives
-    store.deleteByKeys(table, del, Seq("doc_id"))
-    val ins = changes.filter(col("__change_type") === "insert")
-    val tf = tokFrame(ins, idCol, textCol).persist()
-    try {
-      store.append(table,
-        postingRowsOf(tf).unionByName(doclenRowsOf(tf)))
-    } finally tf.unpersist(blocking = false)
-    // stats swap LAST and in ONE commit (updateWhere of the existing
-    // row — never a delete+append pair, whose crash window would leave
-    // ZERO stats rows and break serving unrecoverably): the recount is
-    // two bounded longs off the narrow doclen component, and the new
-    // corpus_gen anchor rides the same commit — a crash ANYWHERE
-    // earlier leaves the OLD complete stats row + anchor, and the next
-    // refreshFromCorpus re-applies the same (idempotent) churn
-    val Seq((n, sumdl)) = {
-      val spark = changes.sparkSession
-      import spark.implicits._
-      store.readWhere(table, col("component") === "doclen")
-        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
-        .as[(Long, Long)].collect().toSeq
-    }
-    // corpus_gen is assigned ONLY when this refresh carries an anchor
-    // (refreshFromCorpus): a public refresh() on an index built via
-    // buildFromCorpus must PRESERVE the existing anchor, not null it —
-    // the anchor may then lag the out-of-band churn just applied, but
-    // replaying an already-applied span is idempotent by design, so a
-    // stale anchor is safe while a destroyed one breaks
-    // refreshFromCorpus unrecoverably
-    store.updateWhere(table, col("component") === "stats",
-      Seq("n_docs" -> lit(n), "sum_dl" -> lit(sumdl)) ++
-        corpusGen.map(g => "corpus_gen" -> lit(g).cast("long")))
-    // keep serve-path file pruning live for the churned files
-    store.analyzeIncremental(table, Seq("component", "term", "doc_id"),
-      bloomCols = Seq("term"))
-  }
+                      anchor: Option[Long]): Unit =
+    CorpusIndex.refreshDocs(store, table, Layout, changes, idCol, anchor,
+      tokens(idCol, textCol), restats = () => {
+        val r = store.readWhere(table, col("component") === "doclen")
+          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+        Seq("n_docs" -> lit(r.getLong(0)), "sum_dl" -> lit(r.getLong(1)))
+      })(docRows)
 
   /** Catch the index up to the corpus table's CURRENT generation,
     * resuming from the generation anchor the stats row recorded at
     * [[buildFromCorpus]] / the last refresh — the complete incremental
     * serving loop (ingest → `refreshFromCorpus` → [[topKServed]]) with
-    * no full rebuilds and no external bookkeeping. Crash-safe: the
-    * anchor advances in the LAST commit of the refresh and the churn
-    * application is idempotent, so a crash anywhere mid-refresh is
-    * healed by simply calling this again. No-op when the index is
-    * already current. Returns the corpus generation the index now
-    * reflects.
+    * no full rebuilds and no external bookkeeping. Crash-safe, no-op
+    * when current (see [[CorpusIndex]]). Returns the corpus generation
+    * the index now reflects.
     */
   def refreshFromCorpus(store: TableStore, corpusTable: String,
                         lexTable: String, idCol: String,
-                        textCol: String): Long = {
-    val statRows = store.readWhere(lexTable, col("component") === "stats")
-      .select(col("corpus_gen")).collect()
-    require(statRows.length == 1,
-      s"index $lexTable must hold exactly ONE stats row, " +
-        s"found ${statRows.length}")
-    require(!statRows.head.isNullAt(0),
-      s"index $lexTable has no corpus generation anchor - it was built " +
-        "from a plain DataFrame; build with buildFromCorpus to enable " +
-        "refreshFromCorpus")
-    val from = statRows.head.getLong(0)
-    val to = store.generations(corpusTable).last
-    if (to != from) refresh(store, lexTable,
-      store.changesBetween(corpusTable, from, to), idCol, textCol,
-      corpusGen = Some(to))
-    to
-  }
+                        textCol: String): Long =
+    CorpusIndex.catchUp(store, corpusTable, lexTable, Layout) {
+      (ch, _, to) => refresh(store, lexTable, ch, idCol, textCol, Some(to))
+    }
 
   /** Serve BM25 top-k from the LIVE index with FILE-LEVEL pruning:
-    * postings read through [[TableStore.readWhere]] under a
+    * postings read through [[graft.sources.TableStore.readWhere]] under a
     * `term IN vocab` predicate, so the analyze() stats drop every
     * file whose term range misses the query vocabulary. Output
     * matches [[Bm25.topK]] on the indexed corpus bit-for-bit.
@@ -261,9 +172,10 @@ object LexIndex {
     score(postings, stats, queries, vocab, k, k1, b, minQuantMargin)
   }
 
-  /** Serve from a PINNED generation ([[TableStore.readAt]]): the
-    * reproducible-serving path — re-runs months later return identical
-    * results no matter how many refreshes have committed since.
+  /** Serve from a PINNED generation
+    * ([[graft.sources.TableStore.readAt]]): the reproducible-serving
+    * path — re-runs months later return identical results no matter
+    * how many refreshes have committed since.
     * (Generation reads are plain file unions; pruning here is
     * parquet row-group stats under the pushed `term IN vocab` filter
     * rather than the manifest's file stats.)
@@ -277,7 +189,8 @@ object LexIndex {
   }
 
   /** Serve from any frame of the unified index schema (a
-    * [[TableStore.read]]/[[TableStore.readAt]] result). */
+    * [[graft.sources.TableStore.read]] or
+    * [[graft.sources.TableStore.readAt]] result). */
   def topK(index: DataFrame, queries: Seq[(Long, String)], k: Int,
            k1: Double = 1.2, b: Double = 0.75,
            minQuantMargin: Option[Double] = None): DataFrame = {
@@ -290,54 +203,35 @@ object LexIndex {
 
   // ----------------------------------------------------------- build
 
-  private def tokFrame(corpus: DataFrame, idCol: String,
-                       textCol: String): DataFrame =
+  /** The token frame a build or refresh shares (persisted by
+    * [[CorpusIndex]]), so its components tokenize the input once.
+    */
+  private def tokens(idCol: String, textCol: String)
+      : Option[DataFrame => DataFrame] = Some(corpus =>
     corpus.repartition(graft.Par.n, col(idCol))
       .select(col(idCol).cast("long").as("doc_id"),
         TextFunctions.tokens(col(textCol)).as("__toks"),
-        TextFunctions.tokenCount(col(textCol)).as("dl"))
+        TextFunctions.tokenCount(col(textCol)).as("dl")))
 
-  /** Components off a SHARED (persisted) token frame, so one build or
-    * refresh tokenizes its input exactly once.
-    */
   private def postingRowsOf(tf: DataFrame): DataFrame =
     tf.select(col("doc_id"), col("dl"), explode(col("__toks")).as("term"))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .select(lit("posting").as("component"), col("term"),
-        col("doc_id"), col("tf"), col("dl"),
-        lit(null).cast("long").as("n_docs"),
-        lit(null).cast("long").as("sum_dl"),
-        lit(null).cast("long").as("corpus_gen"))
+      .withColumn("component", lit("posting"))
 
   private def doclenRowsOf(tf: DataFrame): DataFrame =
-    tf.select(lit("doclen").as("component"),
-        lit(null).cast("string").as("term"), col("doc_id"),
-        lit(null).cast("long").as("tf"), col("dl"),
-        lit(null).cast("long").as("n_docs"),
-        lit(null).cast("long").as("sum_dl"),
-        lit(null).cast("long").as("corpus_gen"))
+    tf.select(lit("doclen").as("component"), col("doc_id"), col("dl"))
 
-  private def statsRowsFromDoclen(doclen: DataFrame,
-                                  corpusGen: Option[Long]): DataFrame =
-    doclen.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-      .select(lit("stats").as("component"),
-        lit(null).cast("string").as("term"),
-        lit(null).cast("long").as("doc_id"),
-        lit(null).cast("long").as("tf"),
-        lit(null).cast("long").as("dl"),
-        col("n_docs"), col("sum_dl"),
-        corpusGen.map(lit(_)).getOrElse(lit(null)).cast("long")
-          .as("corpus_gen"))
+  private def docRows(tf: DataFrame): DataFrame =
+    postingRowsOf(tf).unionByName(doclenRowsOf(tf),
+      allowMissingColumns = true)
 
-  private def indexRows(tf: DataFrame,
-                        corpusGen: Option[Long]): DataFrame = {
-    val dlr = doclenRowsOf(tf)
-    postingRowsOf(tf)
-      .unionByName(dlr)
-      .unionByName(statsRowsFromDoclen(dlr, corpusGen))
-  }
+  /** Postings + doclen rows, and the stats columns off the doclen
+    * component.
+    */
+  private def indexRows(tf: DataFrame): (DataFrame, DataFrame) =
+    (docRows(tf), doclenRowsOf(tf).agg(count(lit(1)).as("n_docs"),
+      coalesce(sum(col("dl")), lit(0L)).as("sum_dl")))
 
   // ----------------------------------------------------------- serve
 
@@ -387,11 +281,8 @@ object LexIndex {
         .agg(count(lit(1)).cast("long").as("a"))
         .select(col("term"), col("a"), lit(-1L).as("b")))
       .as[(Option[String], Long, Long)].collect()
-    val statRows = hdr.collect { case (None, a, b) => (a, b) }.toSeq
-    require(statRows.size == 1,
-      s"index must hold exactly ONE stats row, found ${statRows.size} " +
-        "- was the table built by LexIndex.buildAndSave?")
-    val Seq((nDocs, sumDl)) = statRows
+    val (nDocs, sumDl) = CorpusIndex.theStatsRow(
+      hdr.collect { case (None, a, b) => (a, b) }.toSeq, "(LexIndex serve)")
     require(nDocs > 0, "empty corpus")
     val dfByTerm: Map[String, Long] =
       hdr.collect { case (Some(t), a, _) => t -> a }.toMap

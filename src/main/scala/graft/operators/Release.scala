@@ -16,7 +16,7 @@ import graft.sources.TableStore
   * is a table lookup, not archaeology. The reference pipeline
   * re-materializes tables per DAG run with no provenance at all
   * (SURVEY §3); this is the missing audit trail, built on
-  * [[TableStore.readAt]] time travel.
+  * [[graft.sources.TableStore.readAt]] time travel.
   *
   * Consistency stance: [[record]] pins each table's CURRENT head at
   * its own read — under concurrent writers the pins are per-table
@@ -48,7 +48,7 @@ object Release {
     }
     val spark = store.read(tables.head).sparkSession
     import spark.implicits._
-    val metaJson = AnnIndex.jsonOf(meta)
+    val metaJson = CorpusIndex.jsonOf(meta)
     val rows = pins.toDF("table", "generation")
       .select(lit(name).as("release"), col("table"), col("generation"),
         lit(metaJson).as("meta"))
@@ -80,8 +80,8 @@ object Release {
   }
 
   /** A pinned table exactly as the release saw it
-    * ([[TableStore.readAt]] time travel; requires the generation to
-    * still be within the store's retention).
+    * ([[graft.sources.TableStore.readAt]] time travel; requires the
+    * generation to still be within the store's retention).
     */
   def readPinned(store: TableStore, releaseTable: String, name: String,
                  table: String): DataFrame = {

@@ -141,12 +141,12 @@ final class PropertyListings(spark: SparkSession, store: TableStore) {
     store.upsert("property_listings", current, keys, Seq("uuid"))
     // delisting: rows in the table whose key no longer appears in feed
     val existing = store.read("property_listings")
-    // RDD snapshot ([[TableStore.snapshot]]): evaluated 3× below and
-    // must survive the table rewrite in deleteByKeys. The archive
-    // append runs first, filling the cache while the pre-rewrite files
-    // are still live; nothing escapes this method, so the persist is
-    // scoped — and recomputable on executor loss, unlike the
-    // localCheckpoint it replaced.
+    // RDD snapshot ([[graft.sources.TableStore.snapshot]]): evaluated
+    // 3× below and must survive the table rewrite in deleteByKeys. The
+    // archive append runs first, filling the cache while the
+    // pre-rewrite files are still live; nothing escapes this method, so
+    // the persist is scoped — and recomputable on executor loss, unlike
+    // the localCheckpoint it replaced.
     val delisted = TableStore.snapshot(
       graft.operators.Upsert.delisted(existing, current, keys))
     try {

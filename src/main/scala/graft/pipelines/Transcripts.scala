@@ -42,12 +42,13 @@ final class Transcripts(spark: SparkSession, store: TableStore,
     val chunks = Chunker.slidingChunks(snippets, "video_url",
       Seq("ts"), "text", n, overlap)
       .withColumnRenamed("text", "chunk_text")
-    // RDD snapshot ([[TableStore.snapshot]]): survives the flag-flip
-    // rewrite below without re-reading replaced parquet, and — unlike
-    // the localCheckpoint this replaced — stays recomputable from the
-    // pre-rewrite files if an executor dies mid-pipeline. The append
-    // runs first so its job fills the cache while those files are
-    // still live. The returned frame is the caller's release handle.
+    // RDD snapshot ([[graft.sources.TableStore.snapshot]]): survives
+    // the flag-flip rewrite below without re-reading replaced parquet,
+    // and — unlike the localCheckpoint this replaced — stays
+    // recomputable from the pre-rewrite files if an executor dies
+    // mid-pipeline. The append runs first so its job fills the cache
+    // while those files are still live. The returned frame is the
+    // caller's release handle.
     val vectors = TableStore.snapshot(chunks.select(
       md5(concat(col("video_url"), lit("#"), col("chunk_id"))).as("id"),
       col("video_url"), col("chunk_id"), col("n_items"), col("chunk_text"),
@@ -79,12 +80,12 @@ final class Transcripts(spark: SparkSession, store: TableStore,
       .filter(col("sim").isNotNull)
     val topk = TopK.perGroup(scored, Seq(col("video_url")),
       Seq(col("sim").desc, col("chunk_id")), k)
-    // two RDD snapshots ([[TableStore.snapshot]]), replacing the old
-    // localCheckpoint barrier: `produced` (every processed meeting,
-    // sentinels included — the flag-flip key set) is scoped to this
-    // call; `summaries` (the kept rows) goes back to the caller as its
-    // own release handle. The append runs first so both caches fill
-    // while the pre-rewrite table files are still live.
+    // two RDD snapshots ([[graft.sources.TableStore.snapshot]]),
+    // replacing the old localCheckpoint barrier: `produced` (every
+    // processed meeting, sentinels included — the flag-flip key set) is
+    // scoped to this call; `summaries` (the kept rows) goes back to the
+    // caller as its own release handle. The append runs first so both
+    // caches fill while the pre-rewrite table files are still live.
     val produced = TableStore.snapshot(topk.groupBy(col("video_url"))
       .agg(concat_ws(" ", array_sort(collect_list(
         struct(col("rk"), col("chunk_text"))).getField("chunk_text")))
@@ -122,9 +123,10 @@ final class Transcripts(spark: SparkSession, store: TableStore,
   def reconcile(): DataFrame = {
     val flagged = store.read("council_transcripts")
       .filter(col("vectorized") === 1).select(col("video_url"))
-    // RDD snapshot ([[TableStore.snapshot]]): survives the flag rewrite
-    // below, recomputable from pre-rewrite files on executor loss; the
-    // returned key frame is the caller's release handle
+    // RDD snapshot ([[graft.sources.TableStore.snapshot]]): survives
+    // the flag rewrite below, recomputable from pre-rewrite files on
+    // executor loss; the returned key frame is the caller's release
+    // handle
     val orphans = TableStore.snapshot(
       if (!store.exists("transcript_vectors")) flagged
       else Upsert.antiDelete(flagged,

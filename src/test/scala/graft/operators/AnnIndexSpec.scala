@@ -259,7 +259,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("params round-trip through the meta row incl. escaping") {
     val m0 = Map("dim" -> "64", "note" -> "a\"b\\c\nd", "z" -> "")
-    assert(AnnIndex.parseJson(AnnIndex.jsonOf(m0)) == m0)
+    assert(CorpusIndex.parseJson(CorpusIndex.jsonOf(m0)) == m0)
   }
 
   test("serving a mismatched method fails loudly") {

@@ -49,7 +49,7 @@ class DedupIndexSpec extends SparkSpec {
     // the stats row pins the build's parameters (the screen equality
     // above used them; both param sets happen to find the same pairs
     // on this small fixture, so assert the pin itself)
-    val meta = AnnIndex.parseJson(
+    val meta = CorpusIndex.parseJson(
       store.readWhere("lsh", col("component") === "stats")
         .select(col("meta")).as[String].collect().head)
     assert(meta == Map("shingleN" -> "2", "k" -> "32", "bands" -> "8"),

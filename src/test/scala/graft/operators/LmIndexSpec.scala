@@ -83,7 +83,7 @@ class LmIndexSpec extends SparkSpec {
     val (n, v) = store.read("lm")
       .filter(col("component") === "uni" && col("cnt") > 0L)
       .agg(sum(col("cnt")), count(lit(1))).as[(Long, Long)].head()
-    val meta = AnnIndex.parseJson(
+    val meta = CorpusIndex.parseJson(
       store.read("lm").filter(col("component") === "stats")
         .select(col("meta")).as[String].head())
     assert(meta("n").toLong == n && meta("v").toLong == v)

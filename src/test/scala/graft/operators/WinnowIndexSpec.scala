@@ -64,7 +64,7 @@ class WinnowIndexSpec extends SparkSpec {
       minShared = 1L, maxDf = 16))
     assert(served == inline, "served screen drifted from inline")
     assert(served.nonEmpty, "fixture found no shared passages at all")
-    val meta = AnnIndex.parseJson(
+    val meta = CorpusIndex.parseJson(
       store.readWhere("wix", col("component") === "stats")
         .select(col("meta")).as[String].collect().head)
     assert(meta == Map("k" -> "3", "w" -> "4", "salt" -> "winnow"),
