@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import graft.sources.FileScan
+import graft.sources.FileScan.{listed, summary}
 
 /** Loaders for the driver's synthetic TPC-H-ish testdata (TESTDATA.md).
   * A "table" is `<name>.parquet` under the scale-factor directory: one
@@ -83,16 +84,6 @@ object Tables {
       .filter(ks => ks.forall(_.isFile) && ks.exists(k => !summary(k.getName)))
       .map(_.map(k => (k.getName, k.length, k.lastModified)).sortBy(_._1))
   }
-
-  /** What a Spark listing keeps and reads: the parquet summary files,
-    * and data files (not `_`/`.`-prefixed, not `._COPYING_`).
-    */
-  private def listed(name: String): Boolean = summary(name) ||
-    !((name.startsWith("_") && !name.contains("=")) ||
-      name.startsWith(".") || name.endsWith("._COPYING_"))
-
-  private def summary(name: String): Boolean =
-    name == "_common_metadata" || name == "_metadata"
 
   /** Resolve the table at `path` as Spark's inference does with
     * `mergeSchema` off: list it as Spark's file index would, read the

@@ -41,8 +41,9 @@ object Digest {
 
   /** The 60-bit per-row hash: md5 over "salt:" + the -joined
     * canonical column values, each NULL-coalesced to the
-    * [[Sampling.NullKey]] sentinel BEFORE the join (concat_ws drops
-    * nulls silently — the sentinel keeps (NULL, "x") ≠ ("x", NULL)).
+    * [[graft.operators.Sampling.NullKey]] sentinel BEFORE the join
+    * (concat_ws drops nulls silently — the sentinel keeps (NULL, "x")
+    * ≠ ("x", NULL)).
     */
   def rowHash(cols: Seq[Column], salt: String): Column =
     Sampling.hashBucket(

@@ -306,8 +306,11 @@ object TextFunctions {
   private val sourceLinkPattern =
     """\[\[(\d+)]]\((https?://[^\s)]+?[&?]t=(\d+)s)\)""".r
 
-  /** F17 — per-match source-link rewrite: `[[N]](url...&t=Ss)` becomes
-    * `[[H:MM:SS]](url)` with the timestamp rendered from the url's `t=`
+  /** F17 — per-match source-link rewrite,
+    * {{{
+    * [[N]](url...&t=Ss)  becomes  [[H:MM:SS]](url)
+    * }}}
+    * with the timestamp rendered from the url's `t=`
     * seconds (transcript_summaries.py:151-159). The ONE Scala UDF in
     * the engine: Spark's regexp_replace has no per-match callback and
     * the replacement embeds a computed rendering of a captured group.

@@ -56,7 +56,7 @@ object Bootstrap {
   def uniform(seed: Column, b: Column): Column =
     call_function("graft_splitmix64", seed, b)
 
-  /** HUGEINT mod-2^64 SQL replay of [[graft.plans.NativeExprs]]'
+  /** HUGEINT mod-2^64 SQL replay of [[graft.plans.SplitMix64Expr]]'s
     * splitMix64 (the q51 wrap kit + a split multiply: a 64×64 product
     * overflows INT128, so wrapmul(a, c) = (a_lo·c + ((a_hi·c) mod
     * 2^32)·2^32) mod 2^64). `x`/`b` must render as HUGEINTs.

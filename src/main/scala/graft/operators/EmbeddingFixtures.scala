@@ -12,7 +12,7 @@ package graft.operators
   * mixture-model literature: x = center(z) + σ·noise, coordinates
   * scaled by a decay profile, fixed seed.
   *
-  * [[RecallSpec]] measures recall@k of every prescreen family member
+  * `RecallSpec` measures recall@k of every prescreen family member
   * (binary quantization, Matryoshka prefix, PQ/ADC) against exact
   * brute force on this fixture — the quality claims each operator's
   * scaladoc makes are pinned there with stated targets.

@@ -370,8 +370,8 @@ object Funnel {
   /** Daily user-growth scorecard: active users, NEW users (first day
     * seen), and the running cumulative user count per day — the
     * new-vs-returning split behind every growth chart (and the
-    * denominator sanity for [[retentionCohorts]]: cum_users on day d
-    * = Σ cohort sizes through d). Returns
+    * denominator sanity for [[retentionCohorts]]: cum_users on day
+    * d = Σ cohort sizes through d). Returns
     * (day, n_active, n_new, cum_users).
     *
     * Scale: one (day, user) distinct + one user-keyed min — both

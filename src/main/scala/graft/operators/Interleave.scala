@@ -46,13 +46,13 @@ object Interleave {
 
   /** The schedule: (idCol, sourceCol, src_rank, sched_key), unordered —
     * sort by (sched_key, sourceCol, idCol) to materialize the training
-    * order. `parts` are integer mixture weights (e.g. 3:1 oversampling
-    * = 3 and 1); rows whose source has no part (or a NULL source) are
-    * excluded — compose with [[Sampling.domainMix]] for rate-based
-    * selection first. `idCol` must be unique and non-null: it is the
-    * schedule identity and the deterministic tie-break. Key headroom:
-    * max key ≈ 2·N_s·L/w_s — overflow needs a per-source row count
-    * beyond 2^62/L, unreachable for sane parts.
+    * order. `parts` are integer mixture weights (e.g. 3:1
+    * oversampling = 3 and 1); rows whose source has no part (or a NULL
+    * source) are excluded — compose with [[Sampling.mixDomains]] for
+    * rate-based selection first. `idCol` must be unique and non-null:
+    * it is the schedule identity and the deterministic tie-break. Key
+    * headroom: max key ≈ 2·N_s·L/w_s — overflow needs a per-source row
+    * count beyond 2^62/L, unreachable for sane parts.
     */
   def scheduleMix(df: DataFrame, idCol: String, sourceCol: String,
                   parts: Map[String, Int], salt: String = "interleave",

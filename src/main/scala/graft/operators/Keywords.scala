@@ -13,7 +13,7 @@ object Keywords {
 
   /** Top-k TF-IDF terms per document: tf(term, doc) ·
     * ⌊10⁶·ln(N/df(term))⌋ under the corpus tokenization
-    * ([[TextFunctions.tokens]]), ties broken on the term string.
+    * ([[graft.functions.TextFunctions.tokens]]), ties broken on the term string.
     * Returns (doc_id, term, tf, score_micro) — `score_micro`/10⁶ is
     * the conventional score; a corpus-wide term (df = N) scores 0 but
     * still ranks by the tie order.
@@ -79,8 +79,8 @@ object Keywords {
     * contributes ⌊10⁶·deg/freq⌋ (`div`, never a float ratio), summed
     * as longs, so the ranking is engine-portable. One deviation from
     * the paper is pinned in the contract: the corpus normalization
-    * ([[TextFunctions.normalizeText]]) folds punctuation to spaces
-    * BEFORE phrase splitting, so stopwords are the only phrase
+    * ([[graft.functions.TextFunctions.normalizeText]]) folds punctuation
+    * to spaces BEFORE phrase splitting, so stopwords are the only phrase
     * delimiters (the reference pipelines normalize the same way).
     * Returns (doc_id, phrase, score_micro); duplicate phrases within
     * a doc report once.

@@ -18,7 +18,7 @@ import graft.sources.TableStore
   * serve time (model-scale aggregates, no extra storage). Served
   * scores are BIT-IDENTICAL to inline ones by construction: both
   * paths run [[Lm]]'s shared scoring expressions over
-  * [[Lm.LmFrames]]; only the frame SOURCE differs, and equal exact
+  * `Lm.LmFrames`; only the frame SOURCE differs, and equal exact
   * counts make every double divide equal.
   *
   * Layout: ONE table, rows (mkey, component, gram, cnt, meta,
@@ -123,7 +123,7 @@ object LmIndex {
     CorpusIndex.write(store, modelTable, Layout, None, store.read(modelTable)
       .filter(col("component") === "stats" || col("cnt") > 0L))
 
-  /** [[Lm.LmFrames]] from the persisted components (cnt=0 tombstones
+  /** `Lm.LmFrames` from the persisted components (cnt=0 tombstones
     * filtered; N/V from the stats row as a literal one-row frame).
     */
   private def frames(store: TableStore, modelTable: String)

@@ -724,7 +724,7 @@ object Similarity {
     * Determinism contract (what makes this gateable cross-engine, same
     * kit as q49/q58):
     *  - init = the k smallest-id points (no RNG);
-    *  - assignment argmin compares [[l2Sq]] left-to-right folds, ties
+    *  - assignment argmin compares `l2Sq` left-to-right folds, ties
     *    broken by centroid id via a lexicographic struct min;
     *  - the centroid update is the EXACT fixed-point mean
     *    ([[graft.functions.ExactAgg.avgFx]], quantized long partial
@@ -775,7 +775,7 @@ object Similarity {
     * frame training one INDEPENDENT k-means per group value, all
     * groups in the same pass. Groups never interact (per-group argmin,
     * per-group exact means), so each group's trajectory is bit-equal
-    * to a standalone [[lloyd]] run on its slice — but [[pqTrain]]'s m
+    * to a standalone `lloyd` run on its slice — but [[pqTrain]]'s m
     * sub-block codebooks now cost iters driver round-trips instead of
     * m×iters, the win that motivated the grouping (round 14; a PQ
     * train at m=8 ran 8 sequential single-block loops).
@@ -909,7 +909,7 @@ object Similarity {
   /** Encode every vector as m sub-block centroid ids — the ~(dim·4 →
     * m)-byte compressed representation that makes exhaustive ADC scans
     * affordable. codes[j] = argmin over the block-j codebook of the
-    * left-to-right l2Sq fold, cid tie-break (the [[lloyd]] argmin
+    * left-to-right l2Sq fold, cid tie-break (the `lloyd` argmin
     * contract, so encoding is partitioning-invariant and
     * oracle-replayable). The codebook broadcasts; the argmin groupBy
     * combines map-side (the m per-row slices are generated colocated),
@@ -999,7 +999,7 @@ object Similarity {
     * per query drops from N to ≈ N·nprobe/kCoarse code folds, on top
     * of PQ's m-bytes-per-vector memory. Routing reuses the gated IVF
     * machinery (cosine assignment, max_by argmax, TopK probes);
-    * scoring reuses [[pqEncode]]/[[adcScore]] (codes on RAW vectors,
+    * scoring reuses [[pqEncode]]/`adcScore` (codes on RAW vectors,
     * not residuals — documented simplification; residual PQ needs a
     * second codebook pass). Everything that moves is bare ids, codes,
     * and broadcast kilobyte tables. Exact differential contract (the
@@ -1168,7 +1168,7 @@ object Similarity {
     * Hamming top-`rerank` is a WindowGroupLimit window over
     * (qid, ham, nid), and vectors re-join only for the ≤ rerank
     * finalists. Deterministic end to end: Hamming is integer, ties
-    * break by nid, and the rerank reuses [[rankCandidates]]'s gated
+    * break by nid, and the rerank reuses `rankCandidates`'s gated
     * cosine. Output: (qid, nid, sim, rk).
     */
   def binaryTopK(queries: DataFrame, corpus: DataFrame,
@@ -1206,7 +1206,7 @@ object Similarity {
     * bandwidth), then rerank the top-`rerank` candidates with
     * full-dimension exact cosine. Completes the prescreen-rerank
     * family: [[binaryTopK]] (1 bit/dim), [[pqTopK]] (m codes),
-    * this (prefix dims) — all sharing [[rankCandidates]]'s gated
+    * this (prefix dims) — all sharing `rankCandidates`'s gated
     * exact tail. Both stages are the gated cosine algebra, so the
     * whole path is oracle-replayable. Output: (qid, nid, sim, rk).
     */

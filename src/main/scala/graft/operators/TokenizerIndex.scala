@@ -21,7 +21,7 @@ import graft.sources.TableStore
   *    anchor ride ONE merge CAS). The model (top-V ∪ chars,
   *    quantized-ln costs) derives from the persisted frequencies
   *    through the SAME selection and cost chain as inline training
-  *    ([[Unigram.modelFromFrequencies]]), so served scores are
+  *    (`Unigram.modelFromFrequencies`), so served scores are
   *    bit-identical by construction. The build-time vocabSize is
   *    PINNED in the stats row — a serve can never silently derive a
   *    different vocabulary.
@@ -66,7 +66,7 @@ object TokenizerIndex {
   /** Catch the frequency table up to the corpus head from the change
     * feed — [[CorpusIndex]]'s count-delta refresh, as
     * [[LmIndex.refreshFromCorpus]]: word count deltas (±1 per
-    * occurrence) feed [[Unigram.pieceFreqFromWords]] (piece frequency
+    * occurrence) feed `Unigram.pieceFreqFromWords` (piece frequency
     * is additive), affected pieces re-total against their stored rows,
     * and deltas + anchor land in ONE merge commit. Pieces reaching zero
     * stay as freq=0 tombstones (filtered at model derivation); no-op
@@ -91,7 +91,7 @@ object TokenizerIndex {
 
   /** The unigram model derived from the PERSISTED frequencies with
     * the pinned vocabSize — bit-identical to retraining inline on the
-    * corpus the table reflects ([[Unigram.modelFromFrequencies]] is
+    * corpus the table reflects (`Unigram.modelFromFrequencies` is
     * the shared derivation).
     */
   def unigramModel(store: TableStore, table: String,

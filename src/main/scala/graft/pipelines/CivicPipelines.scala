@@ -23,7 +23,7 @@ final class BuildingPermits(spark: SparkSession, store: TableStore) {
 
   import TextFunctions.safeCast
 
-  /** Server-side date filter (S7 `$where issue_date >= cutoff`) + the
+  /** Server-side date filter (S7 `$$where issue_date >= cutoff`) + the
     * reference's per-field safe_cast defaults + day extraction.
     */
   def normalize(raw: DataFrame, cutoffDate: String): DataFrame = {

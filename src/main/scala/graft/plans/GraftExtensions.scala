@@ -4,12 +4,16 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registers the engine's native expressions with a SparkSession via the
-  * public `SparkSessionExtensions` mechanism — usable both as
+/** Registers the engine's native expressions and its adaptive-execution
+  * rule with a SparkSession via the public `SparkSessionExtensions`
+  * mechanism — usable both as
   * `spark.sql.extensions=graft.plans.GraftExtensions` and through
-  * `SparkSession.builder().withExtensions(...)`. Callers reach them with
-  * `functions.call_function("graft_cosine", ...)` (keeps the engine on
-  * public API only).
+  * `SparkSession.builder().withExtensions(...)`. Callers reach the
+  * expressions with `functions.call_function("graft_cosine", ...)`
+  * (keeps the engine on public API only). The rule, [[SmallSort]], runs
+  * when adaptive execution re-optimizes a query: a global sort whose
+  * measured input is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  * sorts in one partition, with no range exchange and no sampling job.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -86,8 +90,10 @@ object GraftExtensions {
         org.apache.spark.sql.catalyst.expressions
           .BloomFilterMightContain(c(0), c(1))))
 
-  def install(ext: SparkSessionExtensions): Unit =
+  def install(ext: SparkSessionExtensions): Unit = {
     functions.foreach(ext.injectFunction)
+    ext.injectRuntimeOptimizerRule(_ => SmallSort)
+  }
 
   /** Entries of Spark's generated-class cache (default 100). One
     * benchmark pass of the three lifecycle queries generates about 92

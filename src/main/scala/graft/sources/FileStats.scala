@@ -6,8 +6,10 @@ import org.apache.spark.sql.types._
 import java.math.{BigDecimal => JBigDecimal}
 
 /** Per-file column statistics and the conservative file-skipping
-  * evaluator behind [[TableStore.analyze]] / [[TableStore.readWhere]] —
-  * the Delta/Iceberg data-skipping shape on the store's own manifest
+  * evaluator behind
+  * [[TableStore.analyze(table:String,statsCols:Seq[String])* TableStore.analyze]] /
+  * [[TableStore.readWhere]] — the Delta/Iceberg data-skipping shape on
+  * the store's own manifest
   * machinery. At 100 TB the scan a predicate CAN'T skip is the whole
   * job: parquet row-group stats prune within a file the scheduler
   * already opened, but only FILE-level stats prune the listing itself —
@@ -19,7 +21,7 @@ import java.math.{BigDecimal => JBigDecimal}
   * err toward `true`; the caller re-applies the full predicate to the
   * surviving files, so a too-conservative evaluator costs I/O, never
   * rows. Every value comparison is EXACT (integers and decimals via
-  * [[JBigDecimal]]; doubles via the exact binary expansion
+  * `java.math.BigDecimal`; doubles via the exact binary expansion
   * `new JBigDecimal(double)` — never a lossy string round-trip), and
   * anything the evaluator does not understand — an expression shape, a
   * column with no stats, a NaN boundary — keeps the file.
@@ -184,9 +186,11 @@ object FileStats {
   // --------------------------------------------- literal normalization
 
   /** Exact comparable for a literal's Catalyst-internal value, aligned
-    * with the normalization [[TableStore.analyze]] applies before
-    * aggregation (timestamps → micros, dates → days). None ⇒ this
-    * literal kind is outside the evaluator's domain (keep the file).
+    * with the normalization
+    * [[TableStore.analyze(table:String,statsCols:Seq[String])* TableStore.analyze]]
+    * applies before aggregation (timestamps → micros, dates → days).
+    * None ⇒ this literal kind is outside the evaluator's domain (keep
+    * the file).
     */
   private def normLit(v: Any, t: DataType): Option[Any] = {
     if (v == null) return None // null literal comparisons never prune here
@@ -226,9 +230,10 @@ object FileStats {
   val BloomSalt = "graft_bloom2"
 
   /** A predicate literal re-typed exactly as the analyze-side bloom
-    * projection hashes the column ([[TableStore.analyze]]'s `normCol`:
-    * integral → long, float → double, date → Int days, timestamp →
-    * long micros; string/bool/decimal as-is) — the two xxhash64
+    * projection hashes the column
+    * ([[TableStore.analyze(table:String,statsCols:Seq[String])* TableStore.analyze]]'s
+    * `normCol`: integral → long, float → double, date → Int days,
+    * timestamp → long micros; string/bool/decimal as-is) — the two xxhash64
     * streams only agree if the Catalyst input TYPE agrees, not just
     * the value. None ⇒ outside the bloom's domain (keep the file).
     */

@@ -1,15 +1,65 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.FileFormat
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.functions._
 
 /** File-backed sources standing in for the reference's fetch layer
   * (SURVEY.md §2.1 S1-S12). The engine's contract: every external feed
   * lands as files; reading them is a declarative scan so Catalyst can
   * prune columns and push filters.
+  *
+  * A reader's `pathGlob` is resolved on the driver (`scan`): no path is
+  * stat-ed as a literal glob, and more than 32 matched files start no
+  * listing job.
   */
 object Sources {
+
+  /** `format`'s scan with `schema` over the files `pathGlob` matches.
+    * The glob is resolved on the driver with `globStatus`, and the scan
+    * is built from the matched statuses ([[FileScan]]), keeping the files
+    * a Spark listing keeps. A glob that matches a directory (which Spark
+    * lists, discovering `k=v` partitions) or no kept file is left to
+    * `read`, Spark's own reader: it lists and partitions the same, and
+    * fails with PATH_NOT_FOUND when nothing matches.
+    */
+  private def scan(spark: SparkSession, pathGlob: String, format: FileFormat,
+                   schema: StructType,
+                   options: Map[String, String] = Map.empty)(
+                   read: => DataFrame): DataFrame = {
+    val glob = new Path(pathGlob)
+    val fs = glob.getFileSystem(spark.sessionState.newHadoopConf())
+    val matched = Option(fs.globStatus(glob)).toSeq.flatten
+      .filter(s => FileScan.listed(s.getPath.getName))
+    if (matched.isEmpty || matched.exists(_.isDirectory)) read
+    else {
+      // each file named as a listing of it names it (`file:///x`, where
+      // the glob gives `file:/x`), so `inputFiles` and `input_file_name`
+      // read as from Spark's reader
+      val files = matched.map { s =>
+        val f = new FileStatus(s)
+        f.setPath(fs.makeQualified(
+          Path.getPathWithoutSchemeAndAuthority(s.getPath)))
+        f.getPath -> Seq(f)
+      }
+      FileScan.relation(spark, FileScan.index(spark, files, options),
+        format, schema, options = options)
+    }
+  }
+
+  /** The lines of the text files `pathGlob` matches, as `spark.read.text`
+    * reads them: one `value` string per line.
+    */
+  private def lines(spark: SparkSession, pathGlob: String): DataFrame =
+    scan(spark, pathGlob, new TextFileFormat,
+      StructType(Seq(StructField("value", StringType))))(
+      spark.read.text(pathGlob))
 
   /** S10 — the inter-task "table scan": all JSON blobs under a prefix,
     * with a declared schema (never inferred twice; schema drift fails
@@ -19,7 +69,8 @@ object Sources {
     */
   def jsonTable(spark: SparkSession, schema: StructType,
                 pathGlob: String): DataFrame =
-    spark.read.schema(schema).json(pathGlob)
+    scan(spark, pathGlob, new JsonFileFormat, schema)(
+      spark.read.schema(schema).json(pathGlob))
 
   /** [[jsonTable]] with corrupt-record capture — scraped feeds contain
     * malformed rows as a matter of course, and the default PERMISSIVE
@@ -40,9 +91,8 @@ object Sources {
     // the quarantine branch needs — parsing in a projection has no such
     // restriction and keeps both branches on one splittable text scan
     val withCorrupt = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField(corruptCol,
-        org.apache.spark.sql.types.StringType, nullable = true))
-    val parsed = spark.read.text(pathGlob).select(
+      StructField(corruptCol, StringType, nullable = true))
+    val parsed = lines(spark, pathGlob).select(
       col("value"),
       from_json(col("value"), withCorrupt,
         Map("columnNameOfCorruptRecord" -> corruptCol)).as("p"))
@@ -74,9 +124,8 @@ object Sources {
                           corruptCol: String = "_corrupt_record")
       : (DataFrame, DataFrame) = {
     val withCorrupt = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField(corruptCol,
-        org.apache.spark.sql.types.StringType, nullable = true))
-    val parsed = spark.read.text(pathGlob).select(
+      StructField(corruptCol, StringType, nullable = true))
+    val parsed = lines(spark, pathGlob).select(
       col("value"),
       from_csv(col("value"), withCorrupt,
         Map("sep" -> sep, "mode" -> "PERMISSIVE",
@@ -96,19 +145,23 @@ object Sources {
     */
   def orcTable(spark: SparkSession, schema: StructType,
                pathGlob: String): DataFrame =
-    spark.read.schema(schema).orc(pathGlob)
+    scan(spark, pathGlob, new OrcFileFormat, schema)(
+      spark.read.schema(schema).orc(pathGlob))
 
   /** JSON documents where each FILE is one array of records (the
     * reference's GCS blob layout, combine_broker_listings.py:67-75).
     */
   def jsonArrayTable(spark: SparkSession, schema: StructType,
                      pathGlob: String): DataFrame =
-    spark.read.schema(schema).option("multiLine", true).json(pathGlob)
+    scan(spark, pathGlob, new JsonFileFormat, schema,
+      Map("multiLine" -> "true"))(
+      spark.read.schema(schema).option("multiLine", true).json(pathGlob))
 
   /** S12 — binary blob source (PDFs, images): path, length, content. */
   def binaryTable(spark: SparkSession, pathGlob: String,
                   suffix: Option[String] = None): DataFrame = {
-    val df = spark.read.format("binaryFile").load(pathGlob)
+    val df = scan(spark, pathGlob, new BinaryFileFormat,
+      BinaryFileFormat.schema)(spark.read.format("binaryFile").load(pathGlob))
     suffix.fold(df)(s => df.filter(col("path").endsWith(s)))
   }
 
@@ -127,7 +180,7 @@ object Sources {
     val coordsType = feats.select(col("f.geometry.coordinates"))
       .schema.head.dataType
     val coordsJson = coordsType match {
-      case org.apache.spark.sql.types.StringType =>
+      case StringType =>
         col("f.geometry.coordinates")
       case _ => to_json(col("f.geometry.coordinates"))
     }

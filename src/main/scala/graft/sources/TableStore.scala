@@ -45,7 +45,7 @@ final class ConcurrentCommitException(val table: String,
   * the manifest `<table>._graft_commit.<seq+1>` with CREATE-EXCLUSIVE.
   * That one manifest lists the whole live file set (relative path and
   * length), the partition columns, the read schema, the stream fences
-  * and the per-file stats of [[analyze]] — it is the only truth
+  * and the per-file stats of `analyze` — it is the only truth
   * (named [[tag]]s aside). A replaced or deleted file is simply left
   * out of the next list: nothing is ever renamed, moved or rewritten
   * in place. A crash before the CAS leaves only files no manifest
@@ -74,7 +74,7 @@ final class ConcurrentCommitException(val table: String,
   * the last k superseded manifests — and every file they list — stay
   * readable through [[readAt]] and [[changesBetween]]; each commit
   * retires older manifests and deletes the files only they listed. An
-  * [[analyze]] is a commit too (same files, stats attached), so it
+  * `analyze` is a commit too (same files, stats attached), so it
   * uses one retention slot.
   */
 final class TableStore(spark: SparkSession, root: String,
@@ -92,7 +92,7 @@ final class TableStore(spark: SparkSession, root: String,
     * sequence): the complete live data-file set as (path relative to
     * the table dir, byte length), the partition columns, the read
     * schema (data columns, then partition columns), the exactly-once
-    * stream fences, the [[analyze]]d stats of listed files (the raw
+    * stream fences, the `analyze`d stats of listed files (the raw
     * `r=`/`s=` lines of [[FileStats.serialize]]) and, for a rollup
     * table, the source files each `__rollup:<src>` fence has folded.
     */
@@ -802,7 +802,7 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** PREDICATE DELETE with FILE-LEVEL targeting — `DELETE FROM table
     * WHERE pred` that moves only the bytes that might match: files
-    * whose [[analyze]]d [min,max] window provably excludes the
+    * whose `analyze`d [min,max] window provably excludes the
     * predicate are NEVER read or rewritten (the GDPR-delete shape at
     * 100 TB: a keyed compliance delete on a clustered+analyzed table
     * touches the handful of files holding the key range, where
@@ -1126,7 +1126,7 @@ final class TableStore(spark: SparkSession, root: String,
     * Partitioned tables rewrite ONLY the partitions holding more than
     * `maxFiles` part-files (found with one metadata-cheap
     * `input_file_name` aggregation), one output file per partition
-    * value, through [[rewriteAffected]] — contents unchanged,
+    * value, through `rewriteAffected` — contents unchanged,
     * untouched partitions keep their files. Unpartitioned tables
     * rewrite into `targetFiles` files via [[rewrite]].
     *
@@ -1178,7 +1178,7 @@ final class TableStore(spark: SparkSession, root: String,
     * [[ZOrder]]): rewrite the table into `targetFiles` files
     * range-partitioned and sorted on the Morton interleave of
     * `zCols`, so EVERY interleaved dimension gets bounded per-file
-    * [min,max] windows — run [[analyze]] on the same columns after and
+    * [min,max] windows — run `analyze` on the same columns after and
     * [[readWhere]] predicates on any one of them prune files, where a
     * plain `compact(sortBy)` clusters only its leading column. One
     * extra exchange vs `compact`: the range partition on the z-value
@@ -1337,7 +1337,7 @@ final class TableStore(spark: SparkSession, root: String,
   def analyze(table: String, statsCols: Seq[String]): Long =
     analyze(table, statsCols, Nil)
 
-  /** [[analyze]] with per-file BLOOM filters on `bloomCols` (⊆
+  /** `analyze` with per-file BLOOM filters on `bloomCols` (⊆
     * `statsCols`): the equality/IN skipping complement to [min,max]
     * ranges. Interleaved or high-entropy keys give every file the same
     * wide range — no range ever prunes a point lookup — while a bloom
@@ -1367,7 +1367,7 @@ final class TableStore(spark: SparkSession, root: String,
       stats = statsOf(scan(table, m, rels), table, statsCols, bloomCols,
         bloomBits))
 
-  /** The stats aggregation behind [[analyze]]/[[analyzeIncremental]]:
+  /** The stats aggregation behind `analyze`/`analyzeIncremental`:
     * one job over `df` grouped by `_metadata.file_path`, collected as
     * one row per data file.
     */
@@ -1504,11 +1504,11 @@ final class TableStore(spark: SparkSession, root: String,
     stats
   }
 
-  /** INCREMENTAL [[analyze]]: compute stats ONLY for listed files
+  /** INCREMENTAL `analyze`: compute stats ONLY for listed files
     * that have none yet (appended since the last analyze) and commit
     * them — the steady-state maintenance call for an append-heavy
     * corpus: cost scales with the NEW bytes, not the table. With no
-    * stats at all it is a full [[analyze]]. `statsCols` must match the
+    * stats at all it is a full `analyze`. `statsCols` must match the
     * previous analyze's columns for uniform skipping (not enforced —
     * files analyzed with fewer columns simply prune on fewer;
     * correctness is unaffected either way). No-op when nothing is new:
@@ -1517,8 +1517,8 @@ final class TableStore(spark: SparkSession, root: String,
   def analyzeIncremental(table: String, statsCols: Seq[String]): Long =
     analyzeIncremental(table, statsCols, Nil)
 
-  /** [[analyzeIncremental]] with BLOOM filters on `bloomCols` for the
-    * new files (see the bloom [[analyze]] overload); previously
+  /** `analyzeIncremental` with BLOOM filters on `bloomCols` for the
+    * new files (see the bloom `analyze` overload); previously
     * analyzed files keep whatever stats (with or without blooms) they
     * already have — skipping uniformity is per-file, correctness is
     * unaffected either way.
@@ -1558,7 +1558,7 @@ final class TableStore(spark: SparkSession, root: String,
     * [min,max]/null stats prove the predicate empty are excluded from
     * the scan — no task, no footer read — and the full predicate is
     * re-applied to the survivors, so pruning is invisible to results.
-    * Files without stats (appended since the last [[analyze]], or a
+    * Files without stats (appended since the last `analyze`, or a
     * column the analyze didn't cover) are always scanned. With no
     * stats this is exactly `read(table).filter(pred)`.
     */

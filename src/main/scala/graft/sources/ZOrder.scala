@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Morton (Z-order) interleave for multi-dimension file clustering —
-  * the companion to [[TableStore.analyze]]/[[TableStore.readWhere]]:
-  * a single-column sort clusters files tightly on ONE dimension (every
+  * the companion to
+  * [[TableStore.analyze(table:String,statsCols:Seq[String])* TableStore.analyze]]/
+  * [[TableStore.readWhere]]: a single-column sort clusters files tightly
+  * on ONE dimension (every
   * other dimension's per-file [min,max] stays the full domain, so
   * skipping proves nothing); interleaving the bits of each dimension's
   * normalized rank gives every clustered file a bounded window in ALL

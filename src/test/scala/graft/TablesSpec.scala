@@ -2,9 +2,6 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
@@ -40,34 +37,6 @@ class TablesSpec extends SparkSpec {
         new File(dir, s"$n.parquet").toPath)
     }
     dir.toString
-  }
-
-  /** Spark jobs `body` starts on this thread. Events reach listeners
-    * in order, so once a marker job started after `body` is seen, every
-    * job of `body` has been counted.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime}"
-    val counted = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => counted.incrementAndGet()
-          case Some(g) if g == s"$group-marker" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "Tables.t")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "flush")
-      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(30, TimeUnit.SECONDS))
-      counted.get
-    } finally sc.removeSparkListener(listener)
   }
 
   private def rows(df: DataFrame) =

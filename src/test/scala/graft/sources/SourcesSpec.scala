@@ -59,6 +59,67 @@ class SourcesSpec extends SparkSpec {
       "4,\"unterminated,40", "5,delta,50,extra"), q.toString)
   }
 
+  /** The WARN (and worse) messages logged while `body` runs. */
+  private def warnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = scala.collection.mutable.Buffer[String]()
+    val appender = new AbstractAppender("graft-warnings", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.synchronized(seen += e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try body finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+    }
+    seen.synchronized(seen.toList)
+  }
+
+  test("a glob read resolves on the driver: no WARN, no listing job, spark.read's rows") {
+    val dir = Files.createTempDirectory("graft_glob").toString
+    (0 until 40).foreach { i =>
+      Files.write(Paths.get(dir, f"part-$i%02d.txt"),
+        Seq(s"$i,n$i,${i * 10}", s"bad$i").mkString("\n").getBytes)
+    }
+    Files.write(Paths.get(dir, "_hidden.txt"), "99,hidden,990".getBytes)
+    val glob = s"$dir/*.txt"
+    val schema = StructType.fromDDL("id long, name string, cents long")
+
+    // Spark's reader stats the literal glob and logs the miss
+    var text: org.apache.spark.sql.DataFrame = null
+    assert(warnings { text = spark.read.text(glob) }.nonEmpty)
+
+    var jobs = -1
+    var frames: (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame) = null
+    val warns = warnings {
+      jobs = jobsOf { frames = Sources.csvTableQuarantined(spark, schema, glob) }
+      frames._1.collect(); frames._2.collect()
+    }
+    assert(warns.isEmpty, warns.mkString("\n"))
+    assert(jobs == 0)
+
+    val (good, quarantine) = frames
+    assert(good.as[(Long, String, Long)].collect().sorted.toSeq ==
+      (0 until 40).map(i => (i.toLong, s"n$i", i * 10L)))
+    assert(quarantine.as[String].collect().sorted.toSeq ==
+      text.filter(!$"value".contains(",")).as[String].collect().sorted.toSeq)
+    assert(good.inputFiles.sorted.toSeq == text.inputFiles.sorted.toSeq)
+    assert(good.select(input_file_name()).distinct().count() == 40)
+
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Sources.csvTableQuarantined(spark, schema, s"$dir/*.csv"))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+  }
+
   test("geoJsonFeatures: FeatureCollection explodes to one row per feature") {
     val dir = Files.createTempDirectory("graft_geo").toString
     val geojson = """{"type":"FeatureCollection","features":[
